@@ -425,14 +425,13 @@ object Plans {
       df.queryExecution.executedPlan.toString + "```\n"
   }
 
-  /** Round-19 evidence, widened r20: the VECTORIZED connector scan.
-    * A filter-free full-store pass decodes ColumnarBatches
-    * (`batched: true` in the scan description; `ColumnarToRow` feeding
-    * WholeStageCodegen in the plan); since r20 a FILTERED seek is
-    * batched too — the filtering columnar reader re-checks the pushed
-    * predicate exactly against the decoded batch, so seek-shaped
-    * plans (the connector's signature workload) get the vectorized
-    * decode instead of dropping to the parquet-example row reader. */
+  /** The VECTORIZED connector scan: every graftcell read decodes
+    * ColumnarBatches through one reader (`ColumnarToRow` feeding
+    * WholeStageCodegen in the plan). A filter-free full-store pass
+    * hands out the zero-copy projected view; a FILTERED seek re-checks
+    * the pushed predicate exactly against each decoded batch and
+    * compacts the survivors, so seek-shaped plans (the connector's
+    * signature workload) get the same decode. */
   private def columnarScanSection(s: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions._
     import graft.operators.CellConnector
@@ -447,18 +446,18 @@ object Plans {
       .select("rowkey", "value")
     seek.collect()
     val seekPlan = seek.queryExecution.executedPlan.toString
-    "## columnar_scan (r19 — the vectorized connector read path)\n\n" +
-      "Full-store aggregation pass (no residual row-level work): the\n" +
-      "scan decodes ColumnarBatches through Spark's vectorized parquet\n" +
-      "reader — `batched: true`, `ColumnarToRow` into\n" +
-      "WholeStageCodegen — the decode path every compaction read,\n" +
-      "verify_rep side, SPJ fact join and COW DML rewrite now uses:\n\n" +
+    "## columnar_scan (the vectorized connector read path)\n\n" +
+      "Every graftcell read — batch and COW scans, micro-batch\n" +
+      "streams, DML rewrites and region surgery — decodes\n" +
+      "ColumnarBatches through ONE reader over Spark's vectorized\n" +
+      "parquet reader (`ColumnarToRow` into WholeStageCodegen). The\n" +
+      "full-store aggregation pass (no residual row-level work) gets\n" +
+      "the zero-copy projected view:\n\n" +
       "```\n" + fullPlan + "```\n\n" +
-      "The filtered seek is ALSO `batched: true` since r20: pushed\n" +
-      "filters are claimed by the scan, so the filtering columnar\n" +
-      "reader re-checks them exactly per decoded row and compacts the\n" +
-      "survivors into fresh batches — vectorized decode on the\n" +
-      "seek-shaped plans too:\n\n```\n" + seekPlan + "```\n"
+      "The filtered seek takes the same decode: pushed filters are\n" +
+      "claimed by the scan, re-checked exactly per decoded row, and\n" +
+      "the survivors compacted into fresh batches:\n\n" +
+      "```\n" + seekPlan + "```\n"
   }
 
   /** Round-19 evidence: the VALUE BLOOM point probe — membership
@@ -676,9 +675,9 @@ object Plans {
          |SingleColumnValueFilter analog; rowkey completely
          |unconstrained).
          |Round-19: `columnar_scan` — the VECTORIZED connector read
-         |path: filter-free scans decode ColumnarBatches (`batched:
-         |true`, ColumnarToRow into WholeStageCodegen) while filtered
-         |seeks keep the exact row reader (`batched: false`); and
+         |path: every scan decodes ColumnarBatches (ColumnarToRow into
+         |WholeStageCodegen) through one reader, filter-free scans as a
+         |zero-copy view, filtered seeks re-checked exactly per row; and
          |`value_bloom_prune` — a point probe for an absent value plans
          |ZERO region files from the manifest's per-file value bloom
          |even though every file's value [min,max] contains it.

@@ -6,14 +6,10 @@ import scala.collection.JavaConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -45,13 +41,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *     are skipped by their statistics (unsigned-lexicographic UTF8
   *     order — identical to Spark's UTF8String comparison semantics).
   *  3. COLUMN pruning — `SupportsPushDownRequiredColumns` narrows the
-  *     parquet read schema (`ReadSupport.PARQUET_READ_SCHEMA`), so
-  *     unprojected columns are never decoded (real IO pruning, not a
-  *     post-hoc drop).
+  *     requested schema of the vectorized parquet reader (Spark's
+  *     `ParquetReadSupport` requested-schema key), so unprojected
+  *     columns are never decoded (real IO pruning, not a post-hoc drop).
   *
-  * Correctness is layout-independent by construction: every ACCEPTED
-  * filter is also evaluated exactly per row in the reader (UTF8 binary
-  * order via [[UTF8String]]), so footer stats / row-group stats only
+  * Every read decodes columnar through ONE reader
+  * ([[CellColumnarPartitionReader]]). Correctness is layout-independent
+  * by construction: every ACCEPTED filter is also evaluated exactly per
+  * decoded row (UTF8 binary order via [[UTF8String]],
+  * [[CellResidual]]), so footer stats / row-group stats only
   * ever skip data, never decide membership; filters the source does not
   * understand are returned to Spark from `pushFilters` and evaluated
   * above the scan as usual.
@@ -1681,12 +1679,10 @@ class GraftCellCowScan(path: String, required: StructType)
     val fetch = GraftCell.SCHEMA.fields.map(_.name)
       .filter(required.fieldNames.toSet)
     // COW reads carry NO row-level residual work by design (group
-    // pruning only) — always vectorized (r19): the DML rewrite's read
-    // side decodes columnar like any full-file pass
+    // pruning only): the reader hands out its zero-copy projected view
     chosen.map(m =>
       CellInputPartition(m.path, fetch, required.fieldNames,
-                         Array.empty, m.messageType,
-                         columnar = true): InputPartition)
+                         Array.empty): InputPartition)
       .toArray
   }
 
@@ -1893,8 +1889,7 @@ object CellDeleteRewrite {
     // it; name-resolved reads are order-independent).
     val cols = GraftCell.SCHEMA.fieldNames
     val reader = new CellColumnarPartitionReader(
-      CellInputPartition(file, cols, cols, Array.empty, "",
-                         columnar = true))
+      CellInputPartition(file, cols, cols, Array.empty))
     val msgType = {
       import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -2138,8 +2133,7 @@ object CellRegionRewrite {
     * never read a moved cursor. */
   private final class CellRowStream(file: String) {
     private val reader = new CellColumnarPartitionReader(
-      CellInputPartition(file, COLS, COLS, Array.empty, "",
-                         columnar = true))
+      CellInputPartition(file, COLS, COLS, Array.empty))
     private var batch: ColumnarBatch = _
     private var n = 0
     private var r = 0
@@ -4905,23 +4899,7 @@ class GraftCellScan(path: String, pushed: Array[Filter],
     (if (limit >= 0) s"${if (topN) "topN" else "limit"}: $limit, " else "") +
     sample.fold("") { case (f, seed) => s"sample: $f seed=$seed, " } +
     fuzzy.fold("")(p => s"fuzzy: $p, ") +
-    s"batched: $batched, " +
     s"regionFiles: ${selected.size}/${all.size}"
-
-  /** Vectorized (ColumnarBatch) decode — since r20 for EVERY scan
-    * shape: clean partitions take the zero-copy projected view
-    * ([[CellColumnarPartitionReader]]); partitions with residual
-    * row-level work (pushed/runtime filters, fuzzy, sample) take the
-    * filtering columnar reader, which re-checks rows exactly against
-    * the decoded batch ([[CellFilteringColumnarPartitionReader]]) —
-    * r19 dropped seek-shaped plans to the parquet-example row reader,
-    * which is exactly the connector's signature workload.
-    * `spark.graft.cell.vectorized=false` is the operational kill
-    * switch (and the ColumnarScale A/B lever): it restores the exact
-    * row reader for every partition. */
-  private def batched: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.cell.vectorized", "true") != "false"
 
   override def planInputPartitions(): Array[InputPartition] = {
     // fetch set = projected ∪ filter-referenced (store column order);
@@ -4948,9 +4926,9 @@ class GraftCellScan(path: String, pushed: Array[Filter],
         val end = if (i == nSplits - 1) Long.MaxValue
                   else (i + 1) * (m.bytes / nSplits + 1)
         CellInputPartition(m.path, fetch, required.fieldNames, eff.toArray,
-                           m.messageType, limit, start, end,
+                           limit, start, end,
                            sample.fold(-1.0)(_._1), sample.fold(0L)(_._2),
-                           fuzzy.orNull, columnar = batched)
+                           fuzzy.orNull)
       }
     }
     keyedBuckets match {
@@ -4966,7 +4944,7 @@ class GraftCellScan(path: String, pushed: Array[Filter],
             case Some(ps) => ps.map(p =>
               CellBucketInputPartition(p, id): InputPartition)
             case None =>
-              Seq(CellEmptyInputPartition(id, batched): InputPartition)
+              Seq(CellEmptyInputPartition(id): InputPartition)
           }
         }.toArray
       case None => base.map(p => p: InputPartition).toArray
@@ -5115,7 +5093,7 @@ class GraftCellMicroBatchStream(path: String, pushed: Array[Filter],
     newDirs.flatMap(CellFooterCache.filesUnder(path, _))
       .filter(pruner.mayMatch)
       .map(m => CellInputPartition(m.path, fetch, required.fieldNames,
-                                   pushed, m.messageType): InputPartition)
+                                   pushed): InputPartition)
       .toArray
   }
 
@@ -5133,17 +5111,12 @@ class GraftCellMicroBatchStream(path: String, pushed: Array[Filter],
 final case class CellInputPartition(file: String, fetch: Array[String],
                                     project: Array[String],
                                     filters: Array[Filter],
-                                    fileMessageType: String,
                                     limit: Int = -1,
                                     rangeStart: Long = 0L,
                                     rangeEnd: Long = Long.MaxValue,
                                     sampleFrac: Double = -1.0,
                                     sampleSeed: Long = 0L,
-                                    fuzzyPattern: String = null,
-                                    // r19: the SCAN decides columnar
-                                    // mode (it must be uniform across
-                                    // the scan's partitions)
-                                    columnar: Boolean = false)
+                                    fuzzyPattern: String = null)
     extends InputPartition
 
 /** A [[CellInputPartition]] of a BUCKETED store, keyed by its file's
@@ -5162,8 +5135,7 @@ final case class CellBucketInputPartition(base: CellInputPartition,
   * file a RUNTIME filter then pruned: the key must stay in the planned
   * set (Spark validates the key count it was promised), the content is
   * legitimately empty. */
-final case class CellEmptyInputPartition(bucketId: Int,
-                                         columnar: Boolean = false)
+final case class CellEmptyInputPartition(bucketId: Int)
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
@@ -5171,106 +5143,81 @@ final case class CellEmptyInputPartition(bucketId: Int,
 }
 
 class CellPartitionReaderFactory extends PartitionReaderFactory {
-  /** COLUMNAR (vectorized) reads when the SCAN planned them (r19 —
-    * VERDICT r18 #1): Spark's default `Scan.columnarSupportMode` is
-    * PARTITION_DEFINED, which asks this per partition and requires the
-    * answer to be uniform across one scan — so the decision is made
-    * once at planInputPartitions and stamped into every partition. */
+  /** Every graftcell read is columnar: Spark's default
+    * `Scan.columnarSupportMode` is PARTITION_DEFINED, which asks this
+    * per partition and requires one answer across a scan — always yes. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition match {
-      case p: CellInputPartition             => p.columnar
-      case CellBucketInputPartition(base, _) => base.columnar
-      case e: CellEmptyInputPartition        => e.columnar
-      case _                                 => false
-    }
+    true
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case CellBucketInputPartition(base, _) => new CellPartitionReader(base)
-      case CellEmptyInputPartition(_, _) =>
-        new PartitionReader[InternalRow] {
-          override def next(): Boolean = false
-          override def get(): InternalRow =
-            throw new IllegalStateException("empty bucket partition")
-          override def close(): Unit = ()
-        }
-      case p: CellInputPartition => new CellPartitionReader(p)
-      case other => throw new IllegalArgumentException(
-        s"graftcell: unexpected input partition $other")
-    }
-
-  /** r20: the columnar reader VARIANT is a per-partition dispatch —
-    * residual row-level work (pushed/runtime filters, fuzzy, sample)
-    * takes the filtering columnar reader, which re-checks rows exactly
-    * against the decoded batch; a clean partition takes the zero-copy
-    * projected view. Both are ColumnarBatch readers, so the scan-level
-    * columnar answer stays uniform. */
-  private def columnar(p: CellInputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    if (p.filters.nonEmpty || p.fuzzyPattern != null || p.sampleFrac >= 0)
-      new CellFilteringColumnarPartitionReader(p)
-    else new CellColumnarPartitionReader(p)
+    throw new UnsupportedOperationException(
+      "graftcell: reads are columnar only (createColumnarReader)")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     partition match {
-      case CellBucketInputPartition(base, _) => columnar(base)
-      case CellEmptyInputPartition(_, _) =>
+      case CellBucketInputPartition(base, _) =>
+        new CellColumnarPartitionReader(base)
+      case CellEmptyInputPartition(_) =>
         new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
           override def next(): Boolean = false
           override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
             throw new IllegalStateException("empty bucket partition")
           override def close(): Unit = ()
         }
-      case p: CellInputPartition => columnar(p)
+      case p: CellInputPartition => new CellColumnarPartitionReader(p)
       case other => throw new IllegalArgumentException(
         s"graftcell: unexpected input partition $other")
     }
 }
 
-/** VECTORIZED region-file reader (r19 — VERDICT r18's top item): the
-  * full-store passes (major/minor compaction reads, verify_rep, SPJ
-  * fact-fact joins, bucketed aggs, COW DML rewrites) decode parquet
-  * into Spark [[org.apache.spark.sql.vectorized.ColumnarBatch]]es via
-  * Spark's own `VectorizedParquetRecordReader` instead of
-  * materializing parquet-example `Group` objects row by row — the same
-  * columnar decode Spark's native parquet scan uses (`Batched: true`),
-  * including lazy dictionary-backed string vectors, and downstream
-  * operators get whole-stage-codegen `ColumnarToRow` input.
+/** The region-file reader — the ONE decode path of every graftcell
+  * read (batch scans, COW scans, micro-batch streams, the ranged-DELETE
+  * rewrite and split/merge surgery). Parquet decodes into Spark
+  * [[org.apache.spark.sql.vectorized.ColumnarBatch]]es through Spark's
+  * own `VectorizedParquetRecordReader` — the columnar decode Spark's
+  * native parquet scan uses, including lazy dictionary-backed string
+  * vectors — and downstream operators get whole-stage-codegen
+  * `ColumnarToRow` input.
   *
-  * Eligibility is decided by the SCAN (uniform per scan, stamped into
-  * each partition): NO residual row-level work may remain — pushed/
-  * runtime filters, a fuzzy pattern, or a pushed TABLESAMPLE keep the
-  * row reader, which re-checks them exactly ([[CellPartitionReader]]);
-  * those are the seek-shaped plans where pruning, not decode
-  * bandwidth, dominates. A pushed LIMIT stays eligible: the first k
-  * rows of a batch prefix ARE the row reader's answer, enforced by
-  * truncating the final batch (`setNumRows`).
+  * The reader picks its mode ONCE, from the partition:
+  *  - no residual row-level work (no filters, fuzzy pattern or
+  *    sample): each batch is a zero-copy projected VIEW over the
+  *    decoder's reused vectors; a pushed LIMIT truncates the final
+  *    batch (`setNumRows`);
+  *  - residual work: the pushed predicate also rides Hadoop conf into
+  *    parquet's row-group/page-index pruning (stats / dictionary /
+  *    bloom) — which never decides membership — and the partition's
+  *    [[CellResidual]] re-checks every decoded row exactly; survivors
+  *    COMPACT into owned vectors in projected order, and a pushed LIMIT
+  *    counts survivors and stops mid-batch.
   *
   * The hidden `_region_file` column rides Spark's partition-column
-  * mechanism: `initBatch` appends one CONSTANT vector per batch, and a
-  * cheap vector permutation maps (fetch ++ _region_file) order to the
-  * scan's projected order. Byte-range splits map to a `FileSplit`
-  * [start, start+length) with parquet's midpoint row-group rule — the
-  * same split semantics as the row path's `withFileRange`. */
+  * mechanism: `initBatch` appends one CONSTANT vector per batch, and
+  * the projection maps (fetch ++ _region_file) order to the scan's
+  * projected order. Byte-range splits map to a `FileSplit`
+  * [start, start+length) with parquet's midpoint row-group rule. */
 object CellColumnarPartitionReader {
   /** Batch row capacity: Spark's default 4096 doubled — the cell
     * schema is 4 short strings + a long, so 8192-row batches still sit
     * well under exec memory while halving per-batch bookkeeping. */
   private[cell] val CAPACITY = 8192
+}
 
-  /** Shared vectorized-reader construction (r20 — factored so the
-    * filtering columnar reader opens the identical decode). The
-    * optional `rowGroupPred` rides Hadoop conf into parquet's
-    * row-group/page-index pruning (stats / dictionary / bloom) — the
-    * exact skips the row path got from `ParquetReader.withFilter`;
-    * the vectorized reader never evaluates it per record, which is
-    * why the caller must re-check rows exactly. */
-  private[cell] def open(p: CellInputPartition, fetchSchema: StructType,
-                         hasFileCol: Boolean,
-                         rowGroupPred: Option[FilterPredicate])
-      : org.apache.spark.sql.execution.datasources.parquet
-          .VectorizedParquetRecordReader = {
+class CellColumnarPartitionReader(p: CellInputPartition)
+    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import CellColumnarPartitionReader.CAPACITY
+
+  private val residual: Option[CellResidual] =
+    if (p.filters.nonEmpty || p.fuzzyPattern != null || p.sampleFrac >= 0)
+      Some(new CellResidual(p))
+    else None
+
+  private val reader = {
+    val fetchSchema = StructType(
+      p.fetch.map(n => GraftCell.SCHEMA(GraftCell.SCHEMA.fieldIndex(n))))
     val conf = new Configuration()
     // Spark's vectorized reader resolves its catalyst schema from this
     // key (SpecificParquetRecordReaderBase.initialize); the boolean
@@ -5286,7 +5233,7 @@ object CellColumnarPartitionReader {
     conf.setBoolean("spark.sql.caseSensitive", false)
     conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
     conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
-    rowGroupPred.foreach(pred =>
+    GraftCell.parquetPred(p.filters.toSeq).foreach(pred =>
       org.apache.parquet.hadoop.ParquetInputFormat
         .setFilterPredicate(conf, pred))
     val r = new org.apache.spark.sql.execution.datasources.parquet
@@ -5305,7 +5252,7 @@ object CellColumnarPartitionReader {
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
     r.initialize(split, ctx)
-    if (hasFileCol)
+    if (p.project.contains(GraftCell.FILE_COL))
       r.initBatch(
         StructType(Seq(StructField(GraftCell.FILE_COL, StringType, false))),
         new GenericInternalRow(Array[Any](UTF8String.fromString(p.file))))
@@ -5314,28 +5261,43 @@ object CellColumnarPartitionReader {
     r.enableReturningBatches()
     r
   }
-}
 
-class CellColumnarPartitionReader(p: CellInputPartition)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val fetchSchema =
-    StructType(p.fetch.map(n => GraftCell.SCHEMA(GraftCell.SCHEMA.fieldIndex(n))))
-  private val hasFileCol = p.project.contains(GraftCell.FILE_COL)
-
-  private val reader =
-    CellColumnarPartitionReader.open(p, fetchSchema, hasFileCol, None)
-
-  // projected view over the reader's reused batch: fetch columns by
-  // store position, `_region_file` from the appended constant vector —
-  // built once (the reader reuses its vectors across batches)
-  private var out: ColumnarBatch = _
   private val fetchIdx = p.fetch.zipWithIndex.toMap
+  // filtering mode only: owned output vectors in projected order;
+  // project column j reads fetched(outIdx(j)), -1 = the constant
+  // `_region_file` metadata column
+  private val outVectors: Array[OnHeapColumnVector] =
+    if (residual.isEmpty) Array.empty
+    else OnHeapColumnVector.allocateColumns(CAPACITY, StructType(
+      p.project.map(n =>
+        if (n == GraftCell.FILE_COL)
+          StructField(GraftCell.FILE_COL, StringType, nullable = false)
+        else GraftCell.SCHEMA(GraftCell.SCHEMA.fieldIndex(n)))))
+  private val outIdx: Array[Int] =
+    p.project.map(n => if (n == GraftCell.FILE_COL) -1 else fetchIdx(n))
+  private val isVersion = p.fetch.map(_ == "version")
+  private val fileBytes =
+    p.file.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val fetched = new Array[Any](p.fetch.length)
+  private val getField: String => Any = c => fetched(fetchIdx(c))
+
+  // the batch get() hands out: the owned vectors (filtering mode), or
+  // the projected view built on the first decoded batch (view mode)
+  private var out: ColumnarBatch =
+    if (residual.isEmpty) null
+    else new ColumnarBatch(outVectors.map(v => v: ColumnVector))
   private var emitted = 0L
 
-  override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false
+  private val advance: () => Boolean =
+    residual.fold(nextView _)(r => () => nextFiltered(r))
+
+  override def next(): Boolean =
+    !(p.limit >= 0 && emitted >= p.limit) && advance()
+
+  // projected view over the decoder's reused batch: fetch columns by
+  // store position, `_region_file` from the appended constant vector —
+  // built once (the decoder reuses its vectors across batches)
+  private def nextView(): Boolean = {
     var n = 0
     var inner: ColumnarBatch = null
     do {
@@ -5356,6 +5318,54 @@ class CellColumnarPartitionReader(p: CellInputPartition)
     true
   }
 
+  private def nextFiltered(residual: CellResidual): Boolean = {
+    while (reader.nextBatch()) {
+      val inner = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
+      val n = inner.numRows()
+      var kept = 0
+      var j = 0
+      while (j < outVectors.length) { outVectors(j).reset(); j += 1 }
+      var r = 0
+      while (r < n && !(p.limit >= 0 && emitted + kept >= p.limit)) {
+        var i = 0
+        while (i < p.fetch.length) {
+          val c = inner.column(i)
+          fetched(i) =
+            if (c.isNullAt(r)) null
+            else if (isVersion(i)) java.lang.Long.valueOf(c.getLong(r))
+            else c.getUTF8String(r)
+          i += 1
+        }
+        if (residual.ok(getField)) {
+          var k = 0
+          while (k < outIdx.length) {
+            val v = outVectors(k)
+            if (outIdx(k) < 0) {
+              v.putByteArray(kept, fileBytes, 0, fileBytes.length)
+              ()
+            } else fetched(outIdx(k)) match {
+              case null => v.putNull(kept)
+              case l: java.lang.Long => v.putLong(kept, l.longValue())
+              case u: UTF8String =>
+                val b = u.getBytes
+                v.putByteArray(kept, b, 0, b.length)
+                ()
+            }
+            k += 1
+          }
+          kept += 1
+        }
+        r += 1
+      }
+      if (kept > 0) {
+        out.setNumRows(kept)
+        emitted += kept
+        return true
+      }
+    }
+    false
+  }
+
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = out
   override def close(): Unit = reader.close()
 }
@@ -5364,8 +5374,8 @@ class CellColumnarPartitionReader(p: CellInputPartition)
   * filters (precompiled once: IN-lists become hash sets, so a 100k-key
   * runtime DPP list costs O(1) per row), fuzzy rowkey patterns, and
   * the deterministic TABLESAMPLE membership rule — in ONE place,
-  * shared verbatim by the row reader and the r20 filtering columnar
-  * reader, so the two decode paths can never drift on row semantics.
+  * evaluated by [[CellColumnarPartitionReader]] against every decoded
+  * row of a partition with residual work.
   *
   * Sample rule (see GraftCellScanBuilder.pushTableSample):
   * md5("<seed>:<rk>:<qual>"), first 4 bytes as an unsigned int, mod
@@ -5412,190 +5422,6 @@ private[cell] final class CellResidual(p: CellInputPartition) {
 
   def ok(get: String => Any): Boolean =
     compiled.forall(f => f(get)) && fuzzyOk(get) && sampled(get)
-}
-
-/** r20 — VECTORIZED decode for RESIDUAL-FILTERED scans (VERDICT r19
-  * missing #4: seek-shaped plans — the connector's signature workload —
-  * still decoded row-at-a-time through parquet-example Groups).
-  * Parquet decodes through the same [[CellColumnarPartitionReader]]
-  * machinery as the filter-free path, WITH the pushed predicate set
-  * for parquet row-group/page-index pruning (the exact stats /
-  * dictionary / bloom skips the row path got from
-  * `ParquetReader.withFilter`); the partition's [[CellResidual]] then
-  * evaluates each decoded row against the batch vectors and survivors
-  * COMPACT into a fresh output batch in projected order. A selective
-  * seek copies few rows, so the columnar decode win applies where it
-  * previously did not; a non-selective residual degrades to one extra
-  * batch-local copy. The pushed LIMIT counts SURVIVORS and stops
-  * mid-batch, exactly like the row reader. */
-class CellFilteringColumnarPartitionReader(p: CellInputPartition)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-
-  private val residual = new CellResidual(p)
-  private val fetchSchema =
-    StructType(p.fetch.map(n => GraftCell.SCHEMA(GraftCell.SCHEMA.fieldIndex(n))))
-  private val hasFileCol = p.project.contains(GraftCell.FILE_COL)
-  private val reader = CellColumnarPartitionReader.open(
-    p, fetchSchema, hasFileCol, GraftCell.parquetPred(p.filters.toSeq))
-
-  private val projectSchema = StructType(p.project.map(n =>
-    if (n == GraftCell.FILE_COL)
-      StructField(GraftCell.FILE_COL, StringType, nullable = false)
-    else GraftCell.SCHEMA(GraftCell.SCHEMA.fieldIndex(n))))
-  private val outVectors = OnHeapColumnVector.allocateColumns(
-    CellColumnarPartitionReader.CAPACITY, projectSchema)
-  private val out =
-    new ColumnarBatch(outVectors.map(v => v: ColumnVector).toArray)
-  private val fetchIdx = p.fetch.zipWithIndex.toMap
-  private val isVersion = p.fetch.map(_ == "version")
-  // project column j reads fetched(outIdx(j)); -1 = the constant
-  // `_region_file` metadata column
-  private val outIdx: Array[Int] =
-    p.project.map(n => if (n == GraftCell.FILE_COL) -1 else fetchIdx(n))
-  private val fileBytes =
-    p.file.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  private val fetched = new Array[Any](p.fetch.length)
-  private val getField: String => Any = c => fetched(fetchIdx(c))
-  private var emitted = 0L
-  private var exhausted = false
-
-  override def next(): Boolean = {
-    if (exhausted || (p.limit >= 0 && emitted >= p.limit)) return false
-    while (reader.nextBatch()) {
-      val inner = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
-      val n = inner.numRows()
-      var kept = 0
-      var j = 0
-      while (j < outVectors.length) { outVectors(j).reset(); j += 1 }
-      var r = 0
-      while (r < n && !(p.limit >= 0 && emitted + kept >= p.limit)) {
-        var i = 0
-        while (i < p.fetch.length) {
-          val c = inner.column(i)
-          fetched(i) =
-            if (c.isNullAt(r)) null
-            else if (isVersion(i)) java.lang.Long.valueOf(c.getLong(r))
-            else c.getUTF8String(r)
-          i += 1
-        }
-        if (residual.ok(getField)) {
-          var k = 0
-          while (k < outIdx.length) {
-            val v = outVectors(k)
-            if (outIdx(k) < 0) {
-              v.putByteArray(kept, fileBytes, 0, fileBytes.length)
-              ()
-            } else fetched(outIdx(k)) match {
-              case null => v.putNull(kept)
-              case l: java.lang.Long => v.putLong(kept, l.longValue())
-              case u: UTF8String =>
-                val b = u.getBytes
-                v.putByteArray(kept, b, 0, b.length)
-                ()
-            }
-            k += 1
-          }
-          kept += 1
-        }
-        r += 1
-      }
-      if (kept > 0) {
-        out.setNumRows(kept)
-        emitted += kept
-        return true
-      }
-    }
-    exhausted = true
-    false
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = out
-  override def close(): Unit = reader.close()
-}
-
-class CellPartitionReader(p: CellInputPartition)
-    extends PartitionReader[InternalRow] {
-
-  private val residual = new CellResidual(p)
-
-  // Projection = the fetch-set subset of the FILE's own message type, so
-  // repetition/logical types always match the footer exactly.
-  private val projection = {
-    val fileType = MessageTypeParser.parseMessageType(p.fileMessageType)
-    val keep = p.fetch.toSet
-    val b = org.apache.parquet.schema.Types.buildMessage()
-    fileType.getFields.asScala.foreach { f =>
-      if (keep.contains(f.getName)) b.addField(f)
-    }
-    b.named(fileType.getName)
-  }
-
-  private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val conf = new Configuration()
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    // The pushed predicate exists for ROW-GROUP pruning only (stats /
-    // dictionary / bloom). Parquet's RECORD-level filter is disabled:
-    // membership is already re-checked exactly by the compiled filters
-    // below (hash-set IN), while parquet's record-level In walks the
-    // whole value set PER ROW — a 100k-key runtime DPP IN-list made
-    // that a 50× slowdown (round-15 jstack evidence:
-    // IncrementallyUpdatedFilterPredicateBuilder iterating the HashMap
-    // in every addBinary call).
-    conf.setBoolean("parquet.filter.record-level.enabled", false)
-    val b = ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf)
-      .withFileRange(p.rangeStart, p.rangeEnd)
-    GraftCell.parquetPred(p.filters.toSeq) match {
-      case Some(pred) => b.withFilter(FilterCompat.get(pred)).build()
-      case None       => b.build()
-    }
-  }
-
-  private val fetchIdx = p.fetch.zipWithIndex.toMap
-  // -1 = the `_region_file` metadata column (constant per partition)
-  private val outIdx: Array[Int] =
-    p.project.map(n => if (n == GraftCell.FILE_COL) -1 else fetchIdx(n))
-  private val filePathValue = UTF8String.fromString(p.file)
-  private val fetched = new Array[Any](p.fetch.length)
-  private var row: InternalRow = _
-  private var emitted = 0L
-
-  override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false // pushed limit
-    var g = reader.read()
-    while (g != null) {
-      var i = 0
-      while (i < p.fetch.length) {
-        val name = p.fetch(i)
-        val gi = g.getType.getFieldIndex(name)
-        fetched(i) =
-          if (g.getFieldRepetitionCount(gi) == 0) null
-          else if (name == "version") java.lang.Long.valueOf(g.getLong(gi, 0))
-          else UTF8String.fromBytes(g.getBinary(gi, 0).getBytes)
-        i += 1
-      }
-      val get = (c: String) => fetched(fetchIdx(c))
-      if (residual.ok(get)) {
-        val out = new Array[Any](outIdx.length)
-        var j = 0
-        while (j < outIdx.length) {
-          out(j) = if (outIdx(j) < 0) filePathValue else fetched(outIdx(j))
-          j += 1
-        }
-        row = new GenericInternalRow(out)
-        emitted += 1
-        return true
-      }
-      g = reader.read()
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
 }
 
 // ---------------------------------------------------------------------------

@@ -535,9 +535,12 @@ class CellConnectorSpec extends AnyFunSuite {
     // and the runtime filter is evaluated EXACTLY, not just enveloped
     val reader = new sources.cell.CellPartitionReaderFactory()
     val rows = scan.toBatch.planInputPartitions().flatMap { part =>
-      val r = reader.createReader(part)
+      val r = reader.createColumnarReader(part)
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (r.next()) buf += r.get().getUTF8String(0).toString
+      while (r.next()) {
+        val b = r.get()
+        buf ++= (0 until b.numRows()).map(b.column(0).getUTF8String(_).toString)
+      }
       r.close(); buf
     }
     assert(rows.nonEmpty && rows.toSet == Set("41", "42"),
@@ -1015,7 +1018,8 @@ class CellConnectorSpec extends AnyFunSuite {
     // shared across runs. The sink appends each processed batch, so any
     // replay would surface as duplicate rows in the cumulative set.
     val out = s"$root/out"
-    def drain(): (Seq[(String, String)], Long) = {
+    // (rows, fed micro-batches, columnar flags of the last micro-batch's scans)
+    def drain(): (Seq[(String, String)], Long, Seq[Boolean]) = {
       val q = s.readStream.format("graftcell").load(store)
         .writeStream.format("parquet").option("path", out)
         .outputMode("append").trigger(Trigger.AvailableNow())
@@ -1025,23 +1029,33 @@ class CellConnectorSpec extends AnyFunSuite {
         .select("rowkey", "value").collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
       val fedBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      (rows, fedBatches)
+      val last = q.asInstanceOf[org.apache.spark.sql.execution.streaming
+        .runtime.StreamingQueryWrapper].streamingQuery.lastExecution
+      val columnar = Option(last).toSeq.flatMap(_.executedPlan.collect {
+        case m: org.apache.spark.sql.execution.datasources.v2
+            .MicroBatchScanExec => m.supportsColumnar
+      })
+      (rows, fedBatches, columnar)
     }
     // two committed batches, first run: both delivered, one per micro-batch
     cellDf("a" -> "1", "b" -> "2").write.format("graftcell").mode("append").save(store)
     cellDf("c" -> "3").write.format("graftcell").mode("append").save(store)
-    val (rows1, batches1) = drain()
+    val (rows1, batches1, columnar1) = drain()
     assert(rows1 == Seq("a" -> "1", "b" -> "2", "c" -> "3"))
     assert(batches1 == 2L, s"admission control should pace 2 dirs as 2 micro-batches, saw $batches1")
+    // the micro-batch scan decodes through the same columnar reader as
+    // batch reads
+    assert(columnar1 == Seq(true),
+      s"micro-batch scan should run columnar, saw $columnar1")
     // a third batch commits AFTER the first drain; resume from the same
     // checkpoint must deliver exactly the new batch — nothing replayed
     // (a replay would duplicate a/b/c in the cumulative file-sink set)
     cellDf("d" -> "4").write.format("graftcell").mode("append").save(store)
-    val (rows2, batches2) = drain()
+    val (rows2, batches2, _) = drain()
     assert(rows2 == Seq("a" -> "1", "b" -> "2", "c" -> "3", "d" -> "4"))
     assert(batches2 == 1L, s"resume should feed exactly the 1 new dir, saw $batches2")
     // nothing new: a third resume feeds zero batches and changes nothing
-    val (rows3, batches3) = drain()
+    val (rows3, batches3, _) = drain()
     assert(rows3 == rows2 && batches3 == 0L)
   }
 

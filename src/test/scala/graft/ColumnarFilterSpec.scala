@@ -1,20 +1,25 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.cell.GraftCell
+import graft.sources.cell.{CellFooterCache, GraftCell, GraftCellScan}
 
-/** Gates the r20 FILTERED VECTORIZED read path: every residual scan
-  * shape (pushed range/point/IN filters, filters on non-projected
-  * columns, fuzzy patterns, pushed TABLESAMPLE, pushed LIMIT over a
-  * filter, NULL columns) must decode `batched: true` and return
-  * byte-identical rows to the exact row reader
-  * (`spark.graft.cell.vectorized=false` — the kill switch that is also
-  * the A/B lever). The residual predicate itself is shared code
-  * ([[graft.sources.cell.CellResidual]]), so this suite is the decode
-  * equivalence gate, not a semantics re-derivation. */
-class ColumnarFilterSpec extends AnyFunSuite {
+/** Gates the FILTERED columnar read path: every residual scan shape
+  * (pushed range/point/IN filters, filters on non-projected columns,
+  * fuzzy patterns, pushed TABLESAMPLE, pushed LIMIT over a filter,
+  * runtime DPP filters, NULL columns) must run a columnar graftcell
+  * scan and return exactly the rows of an INDEPENDENT reference:
+  * Spark's own `spark.read.parquet` over the same committed region
+  * files, each predicate written as plain Spark expressions. No
+  * connector code (not even [[graft.sources.cell.CellResidual]]) runs
+  * on the reference side, so this suite checks the residual semantics
+  * as well as the decode. Rows compare as multisets: NULL rowkeys tie
+  * under any ordering. */
+class ColumnarFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val s = SparkFixture.spark
 
   private lazy val store: String = {
@@ -35,78 +40,88 @@ class ColumnarFilterSpec extends AnyFunSuite {
     path
   }
 
-  private def ab(shape: => org.apache.spark.sql.DataFrame,
-                 expectBatched: Boolean = true): Unit = {
-    s.conf.set("spark.graft.cell.vectorized", "true")
-    val vec = shape
-    if (expectBatched)
-      assert(vec.queryExecution.executedPlan.toString
-               .contains("batched: true"),
-        s"expected a vectorized scan:\n${vec.queryExecution.executedPlan}")
-    val vecRows = vec.collect().map(_.toSeq).toSeq
-    s.conf.set("spark.graft.cell.vectorized", "false")
-    try {
-      val rowRows = shape.collect().map(_.toSeq).toSeq
-      assert(vecRows == rowRows,
-        s"vectorized and row decode must agree " +
-        s"(${vecRows.size} vs ${rowRows.size} rows)")
-      assert(vecRows.nonEmpty, "a shape that matches nothing proves nothing")
-    } finally s.conf.set("spark.graft.cell.vectorized", "true")
-  }
-
   private def load() = s.read.format("graftcell").load(store)
 
+  /** The reference: plain parquet over the store's committed files. */
+  private def ref() = s.read.schema(GraftCell.SCHEMA)
+    .parquet(CellFooterCache.filesOf(store).map(_.path): _*)
+
+  private def bag(df: DataFrame): Map[org.apache.spark.sql.Row, Int] =
+    df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  /** `got` must run a columnar graftcell scan and equal `want`. */
+  private def check(got: DataFrame, want: DataFrame): Unit = {
+    val gotRows = bag(got)
+    val scans = collect(got.queryExecution.executedPlan) {
+      case b: BatchScanExec if b.scan.isInstanceOf[GraftCellScan] => b
+    }
+    assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
+      s"expected a columnar graftcell scan:\n${got.queryExecution.executedPlan}")
+    val wantRows = bag(want)
+    val differing = (gotRows.keySet ++ wantRows.keySet)
+      .filter(r => gotRows.get(r) != wantRows.get(r))
+    val agree = differing.isEmpty
+    assert(agree,
+      s"graftcell and the parquet reference must agree " +
+      s"(${gotRows.values.sum} vs ${wantRows.values.sum} rows; " +
+      s"${differing.size} rows differ, e.g. ${differing.take(3)})")
+    assert(gotRows.nonEmpty, "a shape that matches nothing proves nothing")
+  }
+
   test("pushed rowkey range filter decodes vectorized and equals the " +
-       "row reader") {
-    ab(load().filter(col("rowkey") >= "k010000" && col("rowkey") < "k012000")
-         .orderBy("rowkey", "qualifier"))
+       "parquet reference") {
+    val band = col("rowkey") >= "k010000" && col("rowkey") < "k012000"
+    check(load().filter(band), ref().filter(band))
   }
 
   test("pushed IN multiget (incl. a filter column outside the projection)") {
-    ab(load()
-         .filter(col("rowkey").isin("k000006", "k001002", "k029997") &&
-                 col("family") === "f0")
-         .select("qualifier", "version", "value")
-         .orderBy("qualifier", "version"))
+    val p = col("rowkey").isin("k000006", "k001002", "k029997") &&
+            col("family") === "f0"
+    check(load().filter(p).select("qualifier", "version", "value"),
+          ref().filter(p).select("qualifier", "version", "value"))
   }
 
   test("value point filter with NULL rowkeys/versions/values in-stream") {
-    ab(load().filter(col("value") === "v000167")
-         .orderBy("rowkey", "qualifier"))
+    val point = col("value") === "v000167"
+    check(load().filter(point), ref().filter(point))
     // NULL-matching semantics: IsNull is an accepted pushed filter
-    ab(load().filter(col("rowkey").isNull && col("value").isNotNull)
-         .orderBy("value"))
+    val nulls = col("rowkey").isNull && col("value").isNotNull
+    check(load().filter(nulls), ref().filter(nulls))
   }
 
   test("fuzzy rowkey pattern decodes vectorized") {
-    ab(s.read.format("graftcell").option("fuzzy", "k??77??")
-         .load(store).orderBy("rowkey", "qualifier"))
+    check(s.read.format("graftcell").option("fuzzy", "k??77??").load(store),
+          ref().filter(col("rowkey").like("k__77__%")))
   }
 
   test("pushed TABLESAMPLE composes with a pushed filter") {
-    ab(load().sample(0.23, 42L).filter(col("family") === "f1")
-         .orderBy("rowkey", "qualifier"))
+    val (frac, seed) = (0.23, 42L)
+    // the membership rule of CellResidual's doc comment, in plain SQL
+    val member = expr(
+      s"cast(conv(substring(md5(concat('$seed:', coalesce(rowkey, ''), " +
+      s"':', coalesce(qualifier, ''))), 1, 8), 16, 10) as bigint) % 10000 " +
+      s"< ${math.round(frac * 10000)}")
+    check(load().sample(frac, seed).filter(col("family") === "f1"),
+          ref().filter(member && col("family") === "f1"))
   }
 
   test("pushed LIMIT over a filter counts survivors (deterministic " +
        "when matches < limit)") {
     // 'q3' cells of one narrow band: ~40 matches, limit far above —
-    // both paths must return exactly the full match set
-    ab(load().filter(col("rowkey") >= "k005000" &&
-                     col("rowkey") < "k005300" &&
-                     col("qualifier") === "q3")
-         .limit(5000).orderBy("rowkey"))
-    // and a HARD limit returns exactly k rows on both paths
-    s.conf.set("spark.graft.cell.vectorized", "true")
-    val kVec = load().filter(col("family") === "f2").limit(123).count()
-    s.conf.set("spark.graft.cell.vectorized", "false")
-    val kRow = load().filter(col("family") === "f2").limit(123).count()
-    s.conf.set("spark.graft.cell.vectorized", "true")
-    assert(kVec == 123L && kRow == 123L)
+    // the scan must return exactly the full match set
+    val band = col("rowkey") >= "k005000" && col("rowkey") < "k005300" &&
+               col("qualifier") === "q3"
+    check(load().filter(band).limit(5000), ref().filter(band))
+    // and a HARD limit returns exactly k rows, every one a match
+    val f2 = col("family") === "f2"
+    val got = bag(load().filter(f2).limit(123))
+    val want = bag(ref().filter(f2))
+    assert(got.values.sum == 123 &&
+           got.forall { case (r, n) => want.getOrElse(r, 0) >= n })
   }
 
   test("runtime rowkey filter (broadcast-join DPP path) decodes " +
-       "vectorized and equals the row reader") {
+       "vectorized and equals the parquet reference") {
     import scala.jdk.CollectionConverters._
     val dim = s.createDataFrame(
       Seq("k000014", "k000700", "k021000")
@@ -114,9 +129,9 @@ class ColumnarFilterSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k",
           org.apache.spark.sql.types.StringType))))
-    def joined = load().join(broadcast(dim), col("rowkey") === col("k"))
-      .select("rowkey", "family", "qualifier", "version", "value")
-      .orderBy("rowkey", "qualifier")
-    ab(joined)
+    def joined(cells: DataFrame) =
+      cells.join(broadcast(dim), col("rowkey") === col("k"))
+        .select("rowkey", "family", "qualifier", "version", "value")
+    check(joined(load()), joined(ref()))
   }
 }
