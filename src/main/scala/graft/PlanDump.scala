@@ -1,29 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of contract queries to files — the
   * plan evidence for optimization rounds (plans/rNN/<query>_before/
   * _after.txt). Usage:
   * `sbt "runMain graft.PlanDump <outDir> <suffix> <sfDir> <query...>"`
-  * — writes <outDir>/<query>_<suffix>.txt. Same session shape as
-  * Bench (extensions installed, conf from SPARK_GRAFT_CPUS). */
+  * — writes <outDir>/<query>_<suffix>.txt. Same session as Bench
+  * ([[GraftSession.local]]). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: runMain graft.PlanDump <outDir> <suffix> <sfDir> <query...>")
     val (outDir, suffix, sfDir) = (args(0), args(1), args(2))
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -572,13 +572,8 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed local[4], not the host's cores: PLANS.md stays host-independent
+    val spark = GraftSession.local(4)
     val mode = ExplainMode.fromString("formatted")
     val body = headline.map { name =>
       val plan = planDf(spark, name, sfDir)

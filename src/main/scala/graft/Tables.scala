@@ -64,7 +64,7 @@ object Tables {
     * tuned for one deployment). A parquet ROW GROUP is the atomic scan
     * split, so a small fixture (one row group) feeds a ~25-40×
     * expansion (flatten / span posexplode / per-row md5) to a SINGLE
-    * task no matter how many cores exist — RowGroupProbe measured the
+    * task no matter how many cores exist — the round-9 row-group probe measured the
     * unchanged plan 5× faster at 16 splits. When (and only when) the
     * scan yields fewer partitions than the session's parallelism,
     * hash-repartition the NARROW pre-expansion rows on `key` so the

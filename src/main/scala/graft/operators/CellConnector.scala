@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryModule
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.A round-14 addition — the DataSource V2 cell-table
@@ -192,10 +193,6 @@ object CellConnector extends QueryModule {
     val proto = new java.io.File(s"/tmp/graft_proto_$wtag/$tag")
     val marker = new java.io.File(proto, "_PROTO_READY")
     val fp = srcFp(dir)
-    def wipe(f: java.io.File): Unit = {
-      Option(f.listFiles).getOrElse(Array.empty).foreach(wipe)
-      f.delete(); ()
-    }
     def copy(src: java.io.File, dst: java.io.File): Unit = {
       dst.mkdirs()
       Option(src.listFiles).getOrElse(Array.empty).foreach { f =>
@@ -209,7 +206,7 @@ object CellConnector extends QueryModule {
       }
     }
     if (!markerUpToDate(marker, fp)) {
-      wipe(proto); proto.mkdirs()
+      FileUtils.deleteQuietly(proto); proto.mkdirs()
       stage
       tables.foreach(t =>
         copy(new java.io.File(wh, t), new java.io.File(proto, t)))
@@ -217,7 +214,7 @@ object CellConnector extends QueryModule {
     } else {
       tables.foreach { t =>
         val work = new java.io.File(wh, t)
-        wipe(work)
+        FileUtils.deleteQuietly(work)
         copy(new java.io.File(proto, t), work)
         graft.sources.cell.CellFooterCache.invalidate(work.getPath)
       }
@@ -2854,7 +2851,7 @@ object CellConnector extends QueryModule {
       // full scan + row filter. The rule turns it into ONE
       // unterminated rowkey-prefix seek on the index (the index IS
       // value-ordered) feeding the same broadcast semi-join; the
-      // retained LIKE exacts. RouteScale measures this shape flat
+      // retained LIKE exacts. `graft.Scale route` measures this shape flat
       // across store growth while the dropped twin tracks the store.
       // Probe prefix = the first 4 chars of the min indexed value
       // (deterministic; nonempty by fixture).

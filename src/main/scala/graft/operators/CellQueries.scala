@@ -31,7 +31,7 @@ object CellQueries extends QueryModule {
     * Local-bench note: events.parquet is ONE 2 MB row group, and a row
     * group is parquet's atomic split — so without help the ~14-leaf
     * explode runs in a single task here regardless of cores (≈5 s at
-    * sf0.1; RowGroupProbe measured the unchanged plan 5× faster at 16
+    * sf0.1; the round-9 row-group probe (NOISE.md) measured the unchanged plan 5× faster at 16
     * splits). `T.fanout` spreads the NARROW pre-explode rows across
     * the cores only when the scan has fewer splits than parallelism —
     * at 100 TB the scan has thousands of row-group splits and no

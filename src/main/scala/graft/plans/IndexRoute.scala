@@ -34,7 +34,7 @@ import graft.sources.cell.{CellFooterCache, GraftCell, GraftCellMaintenance, Gra
   *         Filter(rowkey startsWith seek, index))) }}}
   *
   * — ONE index prefix-seek, no join, the base store never touched
-  * (RouteScale measures it flat at O(matches) across 32× store
+  * (`graft.Scale route` measures it flat at O(matches) across 32× store
   * growth while the indexless twin tracks the store). Output
   * attributes keep their original exprIds, so parents are untouched,
   * and the FULL original condition re-evaluates on the
@@ -141,7 +141,7 @@ object IndexRoute extends Rule[LogicalPlan] with PredicateHelper {
     *    else prunes a RANGE over a high-cardinality value column —
     *    range stats span, blooms are point-only — so the indexless
     *    plan is a genuine full scan; the index turns it into one
-    *    UNTERMINATED rowkey-prefix seek, exactly IndexScale's
+    *    UNTERMINATED rowkey-prefix seek, exactly `graft.Scale index`'s
     *    measured O(matches) case).
     *
     * Sound as the semi-join build for the WHOLE condition: a row

@@ -3,6 +3,8 @@ package graft.sources.cell
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
+import org.apache.commons.io.FileUtils
+
 /** The HBase ARCHIVE directory (r17 — closes the long-documented
   * "no-archive-dir caveat"): maintenance rewrites that retire region
   * files a snapshot still pins MOVE them under `<store>/_archive/<dir>/`
@@ -317,7 +319,7 @@ object CellArchive {
                 supersededAt: Long = -1L): Unit = {
     if (supersededAt >= 0L) CellTravelLog.retireWhole(store, dir, supersededAt)
     val pinnedDirs = if (pinned != null) pinned else pins(store)
-    if (!pinnedDirs.contains(dir.getName)) { deleteRec(dir); return }
+    if (!pinnedDirs.contains(dir.getName)) { FileUtils.deleteQuietly(dir); return }
     val dst = dirOf(store, dir.getName)
     if (!dst.exists()) {
       root(store).mkdirs()
@@ -333,7 +335,7 @@ object CellArchive {
         Files.createLink(link.toPath, new File(m.path).toPath)
       }
       foldManifest(store, dir.getName, dst, metas)
-      deleteRec(dir)
+      FileUtils.deleteQuietly(dir)
     }
   }
 
@@ -406,11 +408,11 @@ object CellArchive {
             dead.foreach { f => f.delete(); reclaimed += 1 }
             if (dead.nonEmpty)
               CellManifest.applyRewrite(d, dead.map(_.getPath).toSet, Map.empty)
-            if (!hasData(d)) deleteRec(d)
+            if (!hasData(d)) FileUtils.deleteQuietly(d)
           case None =>
             reclaimed += Option(d.listFiles).getOrElse(Array.empty)
               .count(f => f.isFile && f.getName.endsWith(".parquet")).toLong
-            deleteRec(d)
+            FileUtils.deleteQuietly(d)
         }
       }
     if (!hasData(root(store)) &&
@@ -445,9 +447,4 @@ object CellArchive {
     Option(d.listFiles).getOrElse(Array.empty).exists(f =>
       (f.isFile && f.getName.endsWith(".parquet")) ||
       (f.isDirectory && hasData(f)))
-
-  private def deleteRec(f: File): Unit = {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
-  }
 }

@@ -4,6 +4,7 @@ import java.util.{Arrays => JArrays}
 
 import scala.collection.JavaConverters._
 
+import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
@@ -1448,7 +1449,7 @@ object GraftCellSnapshot {
           new java.io.File(liveDir, new java.io.File(m.path).getName).getPath)
         if (!liveDir.isDirectory) {
           val stage = new java.io.File(store, s"_revive_$d")
-          deleteRec(stage)
+          FileUtils.deleteQuietly(stage)
           stage.mkdirs()
           archived.foreach { m =>
             java.nio.file.Files.createLink(
@@ -1491,11 +1492,6 @@ object GraftCellSnapshot {
   /** The dir set a snapshot pinned; error if the snapshot is unknown. */
   def dirs(store: String, name: String): Seq[String] =
     pinned(store, name).keys.toSeq.sorted
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
-  }
 }
 
 /** GROUP-GRANULAR copy-on-write row-level operation (UPDATE / MERGE /
@@ -1767,7 +1763,7 @@ class GraftCellGroupReplaceBatchWrite(path: String, queryId: String,
     // 1. publish the rewritten generation (atomic, manifest included)
     val stage = new java.io.File(path, s"_stage_$queryId")
     val dest = new java.io.File(path, s"batch_$queryId")
-    deleteRec(stage)
+    FileUtils.deleteQuietly(stage)
     stage.mkdirs()
     val metas = messages.collect { case CellFilesCommitted(fs) => fs }.flatten
     metas.foreach { m =>
@@ -1811,24 +1807,19 @@ class GraftCellGroupReplaceBatchWrite(path: String, queryId: String,
         // a dir emptied of data files is retired with its metadata
         val remaining = Option(dir.listFiles).getOrElse(Array.empty)
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        if (remaining.isEmpty && dir.getName != dest.getName) deleteRec(dir)
+        if (remaining.isEmpty && dir.getName != dest.getName) FileUtils.deleteQuietly(dir)
     }
     // retirement complete: drop the intent (batch readers no longer
     // need it — the files are gone)
     CellRetire.clear(dest)
-    deleteRec(tmpDir)
+    FileUtils.deleteQuietly(tmpDir)
     java.nio.file.Files.write(new java.io.File(path, "_SUCCESS").toPath,
                               Array.emptyByteArray)
     CellFooterCache.invalidate(path)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    deleteRec(tmpDir)
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
-  }
+    FileUtils.deleteQuietly(tmpDir)
 }
 
 /** Executor-side single-file DELETE rewrite (see
@@ -2262,7 +2253,7 @@ object GraftCellMaintenance {
     val id = java.util.UUID.randomUUID().toString.replace("-", "")
     val stage = new java.io.File(store, s"_stage_${tag}_$id")
     val dest = new java.io.File(store, s"batch_${tag}_$id")
-    deleteRec(stage)
+    FileUtils.deleteQuietly(stage)
     stage.mkdirs()
     newFiles.foreach { m =>
       val src = new java.io.File(m.path)
@@ -2294,18 +2285,13 @@ object GraftCellMaintenance {
         CellManifest.applyRewrite(dir, files.toSet, Map.empty)
         val remaining = Option(dir.listFiles).getOrElse(Array.empty)
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        if (remaining.isEmpty && dir.getName != dest.getName) deleteRec(dir)
+        if (remaining.isEmpty && dir.getName != dest.getName) FileUtils.deleteQuietly(dir)
     }
     CellRetire.clear(dest)
     java.nio.file.Files.write(new java.io.File(store, "_SUCCESS").toPath,
                               Array.emptyByteArray)
     CellFooterCache.invalidate(store)
     (dest.getName, commitStamp)
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
   }
 
   /** REGION SPLIT as an ADMIN op (r16 — the HBase shell `split 't',
@@ -2345,7 +2331,7 @@ object GraftCellMaintenance {
       .flatMap(f => CellRegionRewrite.splitFile(f, key, tmpPath))
       .collect().toSeq
     publishReplacement(store, metas, victims.map(_.path), "split")
-    deleteRec(tmp)
+    FileUtils.deleteQuietly(tmp)
     (victims.size.toLong, metas.size.toLong)
   }
 
@@ -2399,7 +2385,7 @@ object GraftCellMaintenance {
         CellRegionRewrite.mergeRun(files, f"merged-$i%05d.parquet", tmpPath) }
       .collect().toSeq
     publishReplacement(store, metas, runs.flatten.map(_.path), "merge")
-    deleteRec(tmp)
+    FileUtils.deleteQuietly(tmp)
     (runs.size.toLong, before.size.toLong,
      CellFooterCache.filesOf(store).size.toLong)
   }
@@ -2590,7 +2576,7 @@ object GraftCellMaintenance {
         val adopted = metas.map(m => m.copy(path =
           new java.io.File(tmp, new java.io.File(m.path).getName).getPath))
         publishReplacement(store, adopted, Nil, "bulkload")
-        deleteRec(tmp)
+        FileUtils.deleteQuietly(tmp)
         dirs += 1; files += metas.size; rows += metas.map(_.rowCount).sum
       }
     }
@@ -3274,7 +3260,7 @@ object GraftCellMaintenance {
       .filter(f => f.isDirectory && (f.getName.startsWith("_stage_") ||
                                      f.getName.startsWith("_tmp_") ||
                                      f.getName.startsWith("_revive_")))
-      .foreach { d => deleteRec(d); staleTmp += 1 }
+      .foreach { d => FileUtils.deleteQuietly(d); staleTmp += 1 }
     val droppedSnaps =
       if (!dropInvalidSnapshots) 0L
       else {
@@ -5557,12 +5543,12 @@ class GraftCellStreamingWrite(path: String, queryId: String,
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val dest = new java.io.File(path, s"batch_${queryId}_ep$epochId")
-    if (dest.exists()) { deleteRec(tmpDir(epochId)); return } // replayed epoch: already committed
+    if (dest.exists()) { FileUtils.deleteQuietly(tmpDir(epochId)); return } // replayed epoch: already committed
     val stage = new java.io.File(path, s"_stage_${queryId}_ep$epochId")
     // a commit retried after a crash mid-commit must not collide with
     // the dead attempt's leftovers: per-file ATOMIC_MOVE (no
     // REPLACE_EXISTING) would throw on same-named parts — start clean
-    deleteRec(stage)
+    FileUtils.deleteQuietly(stage)
     stage.mkdirs()
     val metas = messages.collect { case CellFilesCommitted(fs) => fs }.flatten
     metas.foreach { m =>
@@ -5575,19 +5561,14 @@ class GraftCellStreamingWrite(path: String, queryId: String,
     CellManifest.write(stage, CellManifest.nextCommitStamp(path), metas.toSeq)
     java.nio.file.Files.move(stage.toPath, dest.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    deleteRec(tmpDir(epochId))
+    FileUtils.deleteQuietly(tmpDir(epochId))
     java.nio.file.Files.write(new java.io.File(path, "_SUCCESS").toPath,
                               Array.emptyByteArray)
     CellFooterCache.invalidate(path)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    deleteRec(tmpDir(epochId))
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
-  }
+    FileUtils.deleteQuietly(tmpDir(epochId))
 }
 
 class CellStreamingDataWriterFactory(path: String, queryId: String,
@@ -5656,7 +5637,7 @@ class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
     }
     // clear a dead earlier attempt's stage dir: per-file ATOMIC_MOVE
     // below has no REPLACE_EXISTING, so leftovers would fail the retry
-    deleteRec(stage)
+    FileUtils.deleteQuietly(stage)
     stage.mkdirs()
     val metas = messages.collect { case CellFilesCommitted(fs) => fs }.flatten
     metas.foreach { m =>
@@ -5669,19 +5650,14 @@ class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
     CellManifest.write(stage, commitStamp, metas.toSeq)
     java.nio.file.Files.move(stage.toPath, dest.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    deleteRec(tmpDir)
+    FileUtils.deleteQuietly(tmpDir)
     java.nio.file.Files.write(new java.io.File(path, "_SUCCESS").toPath,
                               Array.emptyByteArray)
     CellFooterCache.invalidate(path)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    deleteRec(tmpDir)
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
-  }
+    FileUtils.deleteQuietly(tmpDir)
 }
 
 /** Compression configuration of a write (r18 — the HBase COMPRESSION

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import java.nio.file.Files
+import org.apache.commons.io.FileUtils
 
 /** Per-event row shape used by the stateful operators (top-level for a
   * stable Encoder). */
@@ -239,11 +240,6 @@ object Streaming extends QueryModule {
     else Files.createTempDirectory(prefix).toString
   }
 
-  private def rmrfQuietly(f: java.io.File): Unit = {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(rmrfQuietly)
-    f.delete(); ()
-  }
-
   /** Run a streaming DF to completion (AvailableNow) into a memory sink
     * and return the drained table. The memory sink registers on the DF's
     * own session (the streamSession clone), so the drained table is read
@@ -258,7 +254,7 @@ object Streaming extends QueryModule {
       .outputMode(mode).trigger(Trigger.AvailableNow())
       .option("checkpointLocation", cp).start()
     q.awaitTermination()
-    rmrfQuietly(new java.io.File(cp))
+    FileUtils.deleteQuietly(new java.io.File(cp))
     s.table(name)
   }
 
@@ -853,11 +849,7 @@ object Streaming extends QueryModule {
       // (oracle).
       val outDir = new java.io.File("/tmp/graft_fb_" +
         dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf)
-        f.delete(): Unit
-      }
-      if (outDir.exists()) rmrf(outDir) // idempotent re-runs
+      FileUtils.deleteQuietly(outDir) // idempotent re-runs
       val in = readStream(s, stageEvents(s, dir))
         .filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "value")
@@ -869,7 +861,7 @@ object Streaming extends QueryModule {
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", cp).start()
       q.awaitTermination()
-      rmrfQuietly(new java.io.File(cp))
+      FileUtils.deleteQuietly(new java.io.File(cp))
       s.read.parquet(outDir.getPath)
         .select("event_id", "user_id", "value") // drop the batch_id partition col
         .orderBy("event_id")
@@ -887,11 +879,7 @@ object Streaming extends QueryModule {
       val stem = incrStem(dir)
       val inDir = s"$stem/in"; val outDir = s"$stem/out"
       val cp = s"$stem/ckpt"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf)
-        f.delete(): Unit
-      }
-      rmrf(new java.io.File(stem)) // fresh state per invocation
+      FileUtils.deleteQuietly(new java.io.File(stem)) // fresh state per invocation
       val e = T.events(s, dir)
         .select("event_id", "user_id", "event_type", "value", "ts_us")
       def run(): Unit = {

@@ -396,4 +396,37 @@ class PlanSpec extends AnyFunSuite {
     // no hash shuffle anywhere: the only exchange is the final range sort
     assert(!p.contains("Exchange hashpartitioning"), p)
   }
+
+  test("RunCollector counts a two-stage action's jobs and shuffle bytes, stably, with no sleep") {
+    import java.util.concurrent.CountDownLatch
+    val collector = RunCollector(spark)
+    // Holds the shared listener queue at each run's first task end until
+    // the action has returned, then 100 ms more: counters read without
+    // waiting for the bus would miss every later job and task event.
+    @volatile var gate = new CountDownLatch(0)
+    val holder = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val g = gate
+        if (g.getCount > 0) { g.await(); Thread.sleep(100) }
+      }
+    }
+    def run() = {
+      val g = new CountDownLatch(1)
+      gate = g
+      collector.measure {
+        val n = spark.range(0, 100000, 1, 4).repartition(3).count()
+        g.countDown()
+        n
+      }
+    }
+    spark.sparkContext.addSparkListener(holder)
+    val ((n1, r1), (n2, r2)) =
+      try (run(), run()) finally spark.sparkContext.removeSparkListener(holder)
+    assert(n1 == 100000L && n2 == 100000L)
+    assert(r1.jobs >= 2, r1)
+    assert(r1.shuffleWriteBytes > 0L, r1)
+    assert((r2.jobs, r2.shuffleWriteBytes, r2.memSpill, r2.diskSpill) ==
+           (r1.jobs, r1.shuffleWriteBytes, r1.memSpill, r1.diskSpill))
+  }
 }

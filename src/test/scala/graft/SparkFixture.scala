@@ -2,22 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole (forked) test JVM — SURVEY.md §5.2. */
+/** One shared session for the whole (forked) test JVM — SURVEY.md §5.2.
+  * Fixed local[4], so test plans do not depend on the host's cores. */
 object SparkFixture {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // the library's one-line installation point: SQL functions,
-      // AsOfStrategy, FuseJaccard and (r20) IndexRoute ride the session
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf001 = "/root/testdata/sf0.001"
 }
