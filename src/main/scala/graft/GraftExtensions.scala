@@ -20,9 +20,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - the AsOfJoin planner strategy, so `AsOfJoinPlan.build` plans the
   *    custom co-partitioned merge without touching
   *    `experimental.extraStrategies`;
-  *  - the FuseJaccard optimizer rule, which rewrites the composed
-  *    `size(array_intersect)/size(array_union)` set-Jaccard into the
-  *    fused single-pass `graft_jaccard` wherever it is provably safe.
+  *  - the IndexRoute optimizer rule, which routes value-predicate reads
+  *    on indexed graftcell catalog tables through the secondary index.
   *
   * This is the idiomatic packaging for a third-party Spark library
   * (injection over mutation: `experimental.extraStrategies` mutates live
@@ -49,7 +48,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       classOf[functions.JaccardSets],
       es => functions.JaccardSets(es.head, es(1))))
     e.injectPlannerStrategy(_ => plans.AsOfStrategy)
-    e.injectOptimizerRule(_ => plans.FuseJaccard)
     // r20: value-predicate reads on indexed graftcell catalog tables
     // route through the secondary index automatically (see IndexRoute)
     e.injectOptimizerRule(_ => plans.IndexRoute)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * Probe, PlanDump, Plans, Scale and the test fixture): `local[cpus]`
   * with as many shuffle partitions as cores, the library installed
   * through `graft.GraftExtensions` (SQL functions, AsOfStrategy,
-  * FuseJaccard, IndexRoute), UTC session time, events.parquet's nanos
+  * IndexRoute), UTC session time, events.parquet's nanos
   * read as longs (SURVEY §1.2 T1), no UI, WARN logs. */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS`, else every core of the host. */

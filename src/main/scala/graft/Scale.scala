@@ -21,7 +21,7 @@ import graft.sources.cell.{CellArchive, CellFileMeta, CellFooterCache,
   * timings rest on. Every scenario runs in its own session clone and
   * its own scratch root under /tmp/graft_scale, which is deleted
   * before and after it. Recorded results, each with the commit that
-  * produced it, are in SEEKSCALE.md (rowgroup: NOISE.md). */
+  * produced it, are in SEEKSCALE.md. */
 object Scale {
   private type Scenario = (SparkSession, String, String) => Unit
 
@@ -30,8 +30,7 @@ object Scale {
     "incremental" -> incremental, "adopt" -> adopt,
     "normalize" -> normalize, "meta" -> meta, "archive" -> archive,
     "fuzzy" -> fuzzy, "travel" -> travel, "index" -> index,
-    "route" -> route, "spj" -> spj, "substr" -> substr,
-    "rowgroup" -> rowgroup)
+    "route" -> route, "spj" -> spj, "substr" -> substr)
 
   def main(args: Array[String]): Unit = {
     val chosen = args.headOption match {
@@ -657,32 +656,5 @@ object Scale {
     println(f"| xxhash64 longs | ${mib(hashed)} | ${hashed.sec}%.2f |")
     println()
     println(f"Shuffle narrowing: ${raw.shuffleWriteBytes.toDouble / hashed.shuffleWriteBytes}%.2fx.")
-  }
-
-  /** events.parquet is ONE row group (one split), so the shuffle-free
-    * nested flatten of `sink_cells_nested` runs as one task; re-staged
-    * as N files the UNCHANGED query parallelizes with the splits, as it
-    * would over the thousands of row groups of a large scan. Min of 3,
-    * warm. NOISE.md "Round-9: the `sink_cells_nested` "slow" number is
-    * the single-split fixture". */
-  private def rowgroup(spark: SparkSession, root: String,
-                       sfDir: String): Unit = {
-    def minTime(dir: String): Double = minOf(3) {
-      SparkEntry.queries("sink_cells_nested")(spark, dir)
-        .queryExecution.toRdd.count()
-    }._1
-    val splits = Seq(4, 16).map { n =>
-      val staged = s"$root/events_$n"
-      Tables.load(spark, sfDir, "events").repartition(n)
-        .write.mode("overwrite").parquet(s"$staged/events.parquet")
-      minTime(staged) // warmup (codegen + staged-file cache)
-      n -> minTime(staged)
-    }
-    val t1 = minTime(sfDir)
-    println(s"$sfDir events, `sink_cells_nested` to rows.")
-    println()
-    header("splits", "seconds", "speedup")
-    println(f"| 1 (the fixture) | $t1%.2f | 1x |")
-    splits.foreach { case (n, t) => println(f"| $n | $t%.2f | ${t1 / t}%.1fx |") }
   }
 }

@@ -1414,26 +1414,16 @@ object GraftCellSnapshot {
     val pinnedSet = resolved.map(_._1).toSet
     val orphans = CellFooterCache.committedDirs(store)
       .filterNot(pinnedSet)
-    val orphanFiles = orphans
-      .flatMap(d => CellFooterCache.filesUnder(store, d)).map(_.path)
+    val orphanFiles = orphans.map(CellFooterCache.filesUnder(store, _).size).sum
     // the revival's travel-log event time: the orphan cut's publish
-    // stamp when one happens, else a fresh monotonic stamp
+    // stamp when one happens, else a fresh monotonic stamp. The orphan
+    // dirs leave the live set entirely (a data-less one, e.g. an older
+    // restore marker, too), so the live dir set IS the pinned set +
+    // this marker
     var reviveStamp = -1L
-    if (orphans.nonEmpty) {
-      reviveStamp = GraftCellMaintenance.publishReplacement(
-        store, Nil, orphanFiles, "restore")._2
-      // orphan dirs emptied of data by the publish are removed with it;
-      // dirs that held no data files (e.g. an older restore marker) are
-      // swept here so the live dir set IS the pinned set + this marker
-      // (archived if another snapshot pins them)
-      val pinnedNow = CellArchive.pins(store)
-      orphans.map(new java.io.File(store, _)).filter(_.isDirectory)
-        .foreach { d =>
-          val hasData = Option(d.listFiles).getOrElse(Array.empty)
-            .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-          if (!hasData) CellArchive.retireDir(store, d, pinnedNow)
-        }
-    }
+    if (orphans.nonEmpty)
+      reviveStamp = GraftCellMaintenance.publishReplacement(store,
+        GraftCellMaintenance.freshDir("restore"), Nil, replacedDirs = orphans)
     // REVIVE archived pins AFTER the orphan cut (never alongside the
     // replacements that retired them — no double-count window): a
     // fully retired dir comes back by one staged rename; a partially
@@ -1486,7 +1476,7 @@ object GraftCellSnapshot {
       }
     }
     CellFooterCache.invalidate(store)
-    (resolved.size.toLong, orphanFiles.size.toLong)
+    (resolved.size.toLong, orphanFiles.toLong)
   }
 
   /** The dir set a snapshot pinned; error if the snapshot is unknown. */
@@ -1692,45 +1682,22 @@ class GraftCellCowScan(path: String, required: StructType)
 }
 
 /** The replace side of the group-granular COW: publish the rewritten
-  * rows as one new batch dir (same declared HFile range shuffle +
-  * sort, same atomic-rename protocol, same persisted manifest as every
-  * other write), then delete EXACTLY the region files the paired scan
-  * planned and fold the removals into their dirs' manifests. Like
-  * DELETE and compaction this is single-writer store maintenance: the
-  * publish-then-delete window means a reader racing the commit could
-  * see a replaced row twice (never lose one — strictly safer than the
-  * old truncate-then-publish, which could lose the table to a crash
-  * between its two halves). */
+  * rows as one new batch dir whose publish retires EXACTLY the region
+  * files the paired scan planned ([[GraftCellMaintenance.publishReplacement]]
+  * — the same atomic rename and persisted manifest as every other
+  * write). The layout is [[GraftCellWrite]]'s declared one: bucketed
+  * tables re-cluster on the descriptor's bucket transform
+  * (catalog-routed DML always has the FunctionCatalog in scope), so
+  * UPDATE/MERGE/stream-apply PRESERVE the storage-partitioned-join
+  * layout — the HBase salt survives a Put exactly as it survives a
+  * compaction; unbucketed tables keep the HFile range shuffle. Like
+  * DELETE and compaction this is single-writer store maintenance:
+  * from the rename onward readers exclude the replaced files, and
+  * `CALL repair` finishes a retirement a crash interrupted. */
 class GraftCellGroupReplaceWrite(path: String, queryId: String,
                                  op: GraftCellRowLevelOperation)
-    extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  import org.apache.spark.sql.connector.expressions.{Expressions => E, SortDirection}
-  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-
-  private def asc(c: String) = E.sort(E.column(c), SortDirection.ASCENDING)
-
-  // Bucketed tables: the replacement generation re-clusters on the
-  // descriptor's bucket transform (catalog-routed DML always has the
-  // FunctionCatalog in scope), so UPDATE/MERGE/stream-apply PRESERVE
-  // the storage-partitioned-join layout — the HBase salt survives a
-  // Put exactly as it survives a compaction. Unbucketed tables keep
-  // the declared HFile range shuffle.
-  override def requiredDistribution(): Distribution = op.buckets match {
-    case Some(n) => Distributions.clustered(Array(E.bucket(n, "rowkey")))
-    case None    => Distributions.ordered(Array(asc("rowkey")))
-  }
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    val cellKey = Array(asc("rowkey"), asc("family"), asc("qualifier"),
-                        asc("version"))
-    op.buckets match {
-      case Some(n) =>
-        E.sort(E.bucket(n, "rowkey"), SortDirection.ASCENDING) +: cellKey
-      case None => cellKey
-    }
-  }
-
+    extends GraftCellWrite(path, queryId, truncate = false,
+                           buckets = op.buckets, codecs = op.codecs) {
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
     new GraftCellGroupReplaceBatchWrite(path, queryId, op)
 
@@ -1740,16 +1707,9 @@ class GraftCellGroupReplaceWrite(path: String, queryId: String,
 
 class GraftCellGroupReplaceBatchWrite(path: String, queryId: String,
                                       op: GraftCellRowLevelOperation)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-
-  private def tmpDir = new java.io.File(path, s"_tmp_$queryId")
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    tmpDir.mkdirs()
-    new CellDataWriterFactory(tmpDir.getPath, buckets = op.buckets,
-                              codecs = op.codecs)
-  }
+    extends GraftCellBatchWrite(path, queryId, truncate = false,
+                                buckets = op.buckets, codecs = op.codecs) {
+  import org.apache.spark.sql.connector.write.WriterCommitMessage
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // the paired COW scan must exist: its scanned-file set IS the
@@ -1759,67 +1719,16 @@ class GraftCellGroupReplaceBatchWrite(path: String, queryId: String,
     // plan, which always builds scan before write).
     require(op.cowScan != null,
       "graftcell: group-replace commit without its paired COW scan")
-    val replaced = op.cowScan.scannedFiles
-    // 1. publish the rewritten generation (atomic, manifest included)
-    val stage = new java.io.File(path, s"_stage_$queryId")
-    val dest = new java.io.File(path, s"batch_$queryId")
-    FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
-    val metas = messages.collect { case CellFilesCommitted(fs) => fs }.flatten
-    metas.foreach { m =>
-      val src = new java.io.File(m.path)
-      java.nio.file.Files.move(src.toPath,
-        new java.io.File(stage, src.getName).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    val commitStamp = CellManifest.nextCommitStamp(path)
-    CellManifest.write(stage, commitStamp, metas.toSeq)
-    // the RETIRE INTENT rides the same atomic publish: from the instant
-    // this batch is visible, batch readers exclude the replaced files —
-    // no reader can double-count them during the delete window below,
-    // and a crash anywhere past this point is recoverable (CALL repair).
-    // archive=true (r18 — MVCC under DML): snapshot-pinned victims are
-    // ARCHIVED before deletion, inline below and equally by a
-    // crash-completing repair, so a snapshot reads its creation-time
-    // content through UPDATE / MERGE / group DELETE exactly as it does
-    // through compaction
-    if (replaced.nonEmpty) CellRetire.write(stage, replaced, archive = true)
-    java.nio.file.Files.move(stage.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // 2. retire exactly the scanned region files; non-scanned files
-    //    (and their dirs' manifests) are never touched. Replaced names
-    //    never return (rewritten rows publish under NEW names in the
-    //    new batch dir), so an archived old name can never collide
-    //    with a live one.
-    val pinned = CellArchive.pins(path) // once per commit, not per dir
-    replaced.groupBy(f => new java.io.File(f).getParent).foreach {
-      case (dirPath, files) =>
-        val dir = new java.io.File(dirPath)
-        val names = files.map(f => new java.io.File(f).getName)
-        // travel log (r18): the replaced files leave the view here,
-        // superseded by this batch — a clock travel into the window
-        // resolves them from the archive or refuses loudly
-        CellTravelLog.retire(path, dir.getName,
-          CellManifest.commitStampOf(path, dir.getName), names, commitStamp)
-        CellArchive.archiveRetiring(path, dir.getName, names.toSet, pinned)
-        files.foreach(f => new java.io.File(f).delete())
-        CellManifest.applyRewrite(dir, files.toSet, Map.empty)
-        // a dir emptied of data files is retired with its metadata
-        val remaining = Option(dir.listFiles).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        if (remaining.isEmpty && dir.getName != dest.getName) FileUtils.deleteQuietly(dir)
-    }
-    // retirement complete: drop the intent (batch readers no longer
-    // need it — the files are gone)
-    CellRetire.clear(dest)
+    // replaced names never return (rewritten rows publish under NEW
+    // names in the new batch dir), so an archived old name can never
+    // collide with a live one; snapshot-pinned victims are archived
+    // (r18 — MVCC under DML), so a snapshot reads its creation-time
+    // content through UPDATE / MERGE / group DELETE as it does through
+    // compaction
+    GraftCellMaintenance.publishReplacement(path, s"batch_$queryId",
+      CellFilesCommitted.all(messages), op.cowScan.scannedFiles)
     FileUtils.deleteQuietly(tmpDir)
-    java.nio.file.Files.write(new java.io.File(path, "_SUCCESS").toPath,
-                              Array.emptyByteArray)
-    CellFooterCache.invalidate(path)
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    FileUtils.deleteQuietly(tmpDir)
 }
 
 /** Executor-side single-file DELETE rewrite (see
@@ -2235,24 +2144,31 @@ object CellRegionRewrite {
   * the region server owns. */
 object GraftCellMaintenance {
 
-  /** Atomically publish a REPLACEMENT generation: a new batch dir
-    * holding `newFiles` (already written to a tmp location; may be
-    * empty) plus a RETIRE INTENT for `replaced`, made visible by ONE
-    * rename — the same crash-safe protocol as the group-replace DML
-    * commit, factored for maintenance ops (snapshot restore, region
-    * split/merge). From the rename onward batch readers see the new
-    * files and exclude the replaced ones; the second half (delete the
-    * replaced files, fold their dirs' manifests, drop dirs emptied of
-    * data) is completed by `CALL repair` if interrupted. Single-writer
-    * maintenance, like compaction. Returns the published dir name and
-    * its commit stamp (the travel-log superseding point). */
-  private[cell] def publishReplacement(store: String,
+  /** THE STORE'S ONE PUBLISH STEP — every commit (batch and streaming
+    * writes, truncate overwrites, group-replace DML, maintenance) goes
+    * through it. `newFiles` (already written to a tmp location; may be
+    * empty) move into a hidden `_stage_*` dir with their manifest and,
+    * when anything is replaced, a RETIRE INTENT listing `replaced` plus
+    * every file of `replacedDirs`; ONE rename to `dest` (a `batch_*`
+    * name) makes the batch visible. Readers list non-hidden dirs only,
+    * so a visible batch dir is always complete, and from the rename
+    * onward batch readers exclude the replaced files. The second half
+    * (archive snapshot-pinned victims, delete the replaced files, fold
+    * their dirs' manifests, drop dirs emptied of data, retire what is
+    * left of `replacedDirs`) is completed by `CALL repair` if
+    * interrupted. A plain append (nothing replaced) stops at the
+    * rename. Single-writer, like compaction. Returns the commit stamp
+    * (the travel-log superseding point). */
+  private[cell] def publishReplacement(store: String, dest: String,
                                        newFiles: Seq[CellFileMeta],
-                                       replaced: Seq[String],
-                                       tag: String): (String, Long) = {
-    val id = java.util.UUID.randomUUID().toString.replace("-", "")
-    val stage = new java.io.File(store, s"_stage_${tag}_$id")
-    val dest = new java.io.File(store, s"batch_${tag}_$id")
+                                       replaced: Seq[String] = Nil,
+                                       replacedDirs: Seq[String] = Nil)
+      : Long = {
+    val stage = new java.io.File(store, "_stage_" + dest.stripPrefix("batch_"))
+    val destDir = new java.io.File(store, dest)
+    // a commit retried after a crash mid-commit must not collide with
+    // the dead attempt's leftovers: per-file ATOMIC_MOVE (no
+    // REPLACE_EXISTING) would throw on same-named parts — start clean
     FileUtils.deleteQuietly(stage)
     stage.mkdirs()
     newFiles.foreach { m =>
@@ -2263,36 +2179,52 @@ object GraftCellMaintenance {
     }
     val commitStamp = CellManifest.nextCommitStamp(store)
     CellManifest.write(stage, commitStamp, newFiles)
-    // maintenance retirement ARCHIVES snapshot-pinned victims (r17):
+    val victims = replaced ++ replacedDirs
+      .flatMap(d => CellFooterCache.filesUnder(store, d)).map(_.path)
     // the intent carries archive=true so a crash-completing repair
-    // archives too, never deleting a pinned file the inline path would
-    // have preserved
-    if (replaced.nonEmpty) CellRetire.write(stage, replaced, archive = true)
-    java.nio.file.Files.move(stage.toPath, dest.toPath,
+    // archives snapshot-pinned victims exactly like the inline path
+    if (victims.nonEmpty) CellRetire.write(stage, victims, archive = true)
+    java.nio.file.Files.move(stage.toPath, destDir.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val pinned = CellArchive.pins(store) // once per publish, not per dir
-    replaced.groupBy(f => new java.io.File(f).getParent).foreach {
-      case (dirPath, files) =>
-        val dir = new java.io.File(dirPath)
-        val names = files.map(f => new java.io.File(f).getName)
-        // travel log (r18): the victims leave the view, superseded by
-        // this publish — total-or-loud TIMESTAMP AS OF over the rewrite
-        CellTravelLog.retire(store, dir.getName,
-          CellManifest.commitStampOf(store, dir.getName), names,
-          commitStamp)
-        CellArchive.archiveRetiring(store, dir.getName, names.toSet, pinned)
-        files.foreach(f => new java.io.File(f).delete())
-        CellManifest.applyRewrite(dir, files.toSet, Map.empty)
-        val remaining = Option(dir.listFiles).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        if (remaining.isEmpty && dir.getName != dest.getName) FileUtils.deleteQuietly(dir)
+    if (victims.nonEmpty || replacedDirs.nonEmpty) {
+      val pinned = CellArchive.pins(store) // once per publish, not per dir
+      victims.groupBy(f => new java.io.File(f).getParent).foreach {
+        case (dirPath, files) =>
+          val dir = new java.io.File(dirPath)
+          val names = files.map(f => new java.io.File(f).getName)
+          // travel log (r18): the victims leave the view, superseded by
+          // this publish — total-or-loud TIMESTAMP AS OF over the rewrite
+          CellTravelLog.retire(store, dir.getName,
+            CellManifest.commitStampOf(store, dir.getName), names,
+            commitStamp)
+          CellArchive.archiveRetiring(store, dir.getName, names.toSet, pinned)
+          files.foreach(f => new java.io.File(f).delete())
+          CellManifest.applyRewrite(dir, files.toSet, Map.empty)
+          // a dir emptied of data files is retired with its metadata
+          val remaining = Option(dir.listFiles).getOrElse(Array.empty)
+            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+          if (remaining.isEmpty && dir.getName != dest) FileUtils.deleteQuietly(dir)
+      }
+      // what a replaced dir still holds is no view data (an older
+      // truncate/restore marker, an empty batch): retire it too, so
+      // the replaced dirs leave the live set entirely (archived if a
+      // snapshot pins them); the footer cache still lists the files
+      // deleted above
+      CellFooterCache.invalidate(store)
+      replacedDirs.filterNot(_ == dest).map(new java.io.File(store, _))
+        .filter(_.isDirectory)
+        .foreach(d => CellArchive.retireDir(store, d, pinned))
+      CellRetire.clear(destDir)
     }
-    CellRetire.clear(dest)
     java.nio.file.Files.write(new java.io.File(store, "_SUCCESS").toPath,
                               Array.emptyByteArray)
     CellFooterCache.invalidate(store)
-    (dest.getName, commitStamp)
+    commitStamp
   }
+
+  /** A fresh `batch_<tag>_<uuid>` dir name for a maintenance publish. */
+  private[cell] def freshDir(tag: String): String =
+    s"batch_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
   /** REGION SPLIT as an ADMIN op (r16 — the HBase shell `split 't',
     * 'key'`): every region file whose [min,max] straddles `splitKey`
@@ -2330,7 +2262,7 @@ object GraftCellMaintenance {
       .parallelize(victims.map(_.path), victims.size)
       .flatMap(f => CellRegionRewrite.splitFile(f, key, tmpPath))
       .collect().toSeq
-    publishReplacement(store, metas, victims.map(_.path), "split")
+    publishReplacement(store, freshDir("split"), metas, victims.map(_.path))
     FileUtils.deleteQuietly(tmp)
     (victims.size.toLong, metas.size.toLong)
   }
@@ -2384,7 +2316,7 @@ object GraftCellMaintenance {
       .flatMap { case (files, i) =>
         CellRegionRewrite.mergeRun(files, f"merged-$i%05d.parquet", tmpPath) }
       .collect().toSeq
-    publishReplacement(store, metas, runs.flatten.map(_.path), "merge")
+    publishReplacement(store, freshDir("merge"), metas, runs.flatten.map(_.path))
     FileUtils.deleteQuietly(tmp)
     (runs.size.toLong, before.size.toLong,
      CellFooterCache.filesOf(store).size.toLong)
@@ -2489,22 +2421,9 @@ object GraftCellMaintenance {
     CellRetire.repair(store)
     val dirs = CellFooterCache.committedDirs(store)
     val files = dirs.flatMap(d => CellFooterCache.filesUnder(store, d))
-      .map(_.path)
     if (files.isEmpty) return (0L, 0L) // already empty (marker dirs only)
-    val (marker, _) = publishReplacement(store, Nil, files, "truncate")
-    // dirs emptied of data by the publish were removed with it; sweep
-    // remaining no-data dirs (older restore/truncate markers) so the
-    // live dir set is exactly the fresh marker
-    val pinned = CellArchive.pins(store)
-    CellFooterCache.committedDirs(store)
-      .filterNot(_ == marker)
-      .map(new java.io.File(store, _)).filter(_.isDirectory)
-      .foreach { d =>
-        val hasData = Option(d.listFiles).getOrElse(Array.empty)
-          .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-        if (!hasData) CellArchive.retireDir(store, d, pinned)
-      }
-    CellFooterCache.invalidate(store)
+    // every live dir is replaced: the fresh marker is the whole live set
+    publishReplacement(store, freshDir("truncate"), Nil, replacedDirs = dirs)
     (dirs.size.toLong, files.size.toLong)
   }
 
@@ -2575,7 +2494,7 @@ object GraftCellMaintenance {
           }
         val adopted = metas.map(m => m.copy(path =
           new java.io.File(tmp, new java.io.File(m.path).getName).getPath))
-        publishReplacement(store, adopted, Nil, "bulkload")
+        publishReplacement(store, freshDir("bulkload"), adopted)
         FileUtils.deleteQuietly(tmp)
         dirs += 1; files += metas.size; rows += metas.map(_.rowCount).sum
       }
@@ -3368,8 +3287,9 @@ object GraftCellMaintenance {
     * evolution verb (ALTER refuses it, correctly: the files on disk
     * are hashed against the declared count; the answer was CTAS to a
     * new table). Content-VERBATIM: the same truncate-overwrite publish
-    * as major compaction (snapshot-pinned old generations are ARCHIVED,
-    * not destroyed) but with NO GC — every cell version survives, only
+    * as major compaction — the new generation retires every live file
+    * in its own atomic rename, snapshot-pinned ones are ARCHIVED, not
+    * destroyed — but with NO GC: every cell version survives, only
     * the clustering changes. One shuffle on the new bucket arithmetic,
     * one atomic publish; the CALLER (the rebucket procedure) repoints
     * the descriptor AFTER this commits, so a crash in between leaves
@@ -3469,9 +3389,11 @@ object GraftCellMaintenance {
     * horizon (if TTL set) → ONE window shuffle on the cell key →
     * truncate-commit through the declared HFile layout
     * (`mode("overwrite")`). Safe in place by the commit protocol:
-    * tasks stage to `_tmp_*` while reads run; old generations are
-    * deleted only at commit, and the new generation publishes by
-    * atomic rename. At 100 TB this is the shape HBase runs
+    * tasks stage to `_tmp_*` while reads run; the new generation
+    * publishes by atomic rename with every old file in its retire
+    * intent, so readers switch at the rename and the old generations
+    * are deleted only after it (`CALL repair` finishes a cleanup a
+    * crash interrupted). At 100 TB this is the shape HBase runs
     * region-by-region; here the bulk-load range shuffle partitions
     * the key space instead, so the rewrite scales with executors. */
   /** Per-COLUMN-FAMILY policy overrides (r17 — HBase sets TTL /
@@ -4295,10 +4217,11 @@ object CellManifest {
   }
 }
 
-/** RETIRE INTENTS — the group-replace commit's crash/race shield. A
-  * group-granular DML commit must (1) publish the rewritten rows as a
-  * new batch dir and (2) delete the replaced region files; the two
-  * cannot be one atomic rename. The intent closes the gap: the new
+/** RETIRE INTENTS — the crash/race shield of every replacing publish
+  * ([[GraftCellMaintenance.publishReplacement]]: group-granular DML,
+  * truncate overwrites, maintenance). Such a commit must (1) publish
+  * the new rows as a new batch dir and (2) delete the replaced region
+  * files; the two cannot be one atomic rename. The intent closes the gap: the new
   * batch dir is published WITH a `_retire.json` listing the replaced
   * files (one atomic rename covers data + intent), and every BATCH
   * reader excludes intent-listed files from planning — so a reader
@@ -5424,10 +5347,11 @@ private[cell] final class CellResidual(p: CellInputPartition) {
   * so footers carry tight min/max rowkey stats and the read side's
   * region pruning works on connector-written stores by construction.
   *
-  * Commit protocol: tasks write to `_tmp_<queryId>/`, the driver moves
-  * files into `batch_<queryId>/` and stamps `_SUCCESS` on commit —
-  * readers never see uncommitted files (the listing skips `_`-prefixed
-  * dirs). Abort deletes the temp dir. At cluster scale the move is the
+  * Commit protocol: tasks write to `_tmp_<queryId>/`, the commit
+  * publishes the files as `batch_<queryId>/` through
+  * [[GraftCellMaintenance.publishReplacement]] — readers never see
+  * uncommitted files (the listing skips `_`-prefixed dirs). Abort
+  * deletes the temp dir. At cluster scale the move is the
   * usual rename-based commit (object stores would swap in a manifest
   * commit, which [[CellFooterCache]] already models). */
 class GraftCellWriteBuilder(path: String, queryId: String,
@@ -5508,7 +5432,7 @@ class GraftCellWrite(path: String, queryId: String, truncate: Boolean,
 
   /** Streaming write — the replication PRODUCER: each micro-batch epoch
     * publishes one `batch_<queryId>_ep<epoch>` dir through the same
-    * two-phase atomic-rename commit as the batch path, so a downstream
+    * publish step as the batch path, so a downstream
     * [[GraftCellMicroBatchStream]] consumer sees one complete replica
     * batch per upstream epoch. Epoch re-delivery after a crash (the
     * engine replays the last epoch from the checkpoint) hits the
@@ -5537,53 +5461,22 @@ class GraftCellStreamingWrite(path: String, queryId: String,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
     new java.io.File(path).mkdirs()
-    new CellStreamingDataWriterFactory(path, queryId, maxRowsPerFile, buckets,
-                                       verifyOrder, codecs)
+    new CellDataWriterFactory(new java.io.File(path, s"_tmp_$queryId").getPath,
+                              maxRowsPerFile, buckets, verifyOrder, codecs)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dest = new java.io.File(path, s"batch_${queryId}_ep$epochId")
-    if (dest.exists()) { FileUtils.deleteQuietly(tmpDir(epochId)); return } // replayed epoch: already committed
-    val stage = new java.io.File(path, s"_stage_${queryId}_ep$epochId")
-    // a commit retried after a crash mid-commit must not collide with
-    // the dead attempt's leftovers: per-file ATOMIC_MOVE (no
-    // REPLACE_EXISTING) would throw on same-named parts — start clean
-    FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
-    val metas = messages.collect { case CellFilesCommitted(fs) => fs }.flatten
-    metas.foreach { m =>
-      val src = new java.io.File(m.path)
-      java.nio.file.Files.move(src.toPath,
-        new java.io.File(stage, src.getName).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    // manifest rides the same atomic publish as the data files
-    CellManifest.write(stage, CellManifest.nextCommitStamp(path), metas.toSeq)
-    java.nio.file.Files.move(stage.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val dest = s"batch_${queryId}_ep$epochId"
+    // a dest dir that already exists is a replayed epoch the earlier
+    // attempt committed: drop it
+    if (!new java.io.File(path, dest).exists())
+      GraftCellMaintenance.publishReplacement(path, dest,
+                                              CellFilesCommitted.all(messages))
     FileUtils.deleteQuietly(tmpDir(epochId))
-    java.nio.file.Files.write(new java.io.File(path, "_SUCCESS").toPath,
-                              Array.emptyByteArray)
-    CellFooterCache.invalidate(path)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     FileUtils.deleteQuietly(tmpDir(epochId))
-}
-
-class CellStreamingDataWriterFactory(path: String, queryId: String,
-                                     maxRowsPerFile: Long = -1L,
-                                     buckets: Option[Int] = None,
-                                     verifyOrder: Boolean = false,
-                                     codecs: CellCodecs = CellCodecs.DEFAULT)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
-    val tmp = new java.io.File(path, s"_tmp_${queryId}_ep$epochId")
-    tmp.mkdirs()
-    new CellDataWriter(tmp.getPath, partitionId, maxRowsPerFile, buckets,
-                       verifyOrder, codecs)
-  }
 }
 
 /** Task-commit message: the full manifest entry per written file (the
@@ -5591,6 +5484,13 @@ class CellStreamingDataWriterFactory(path: String, queryId: String,
   * persist `_manifest.json` without opening a single footer. */
 final case class CellFilesCommitted(files: Seq[CellFileMeta])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
+
+object CellFilesCommitted {
+  /** Every file the tasks of one write committed. */
+  def all(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
+      : Seq[CellFileMeta] =
+    messages.toSeq.collect { case CellFilesCommitted(fs) => fs }.flatten
+}
 
 class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
                           maxRowsPerFile: Long = -1L,
@@ -5600,7 +5500,7 @@ class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
 
-  private def tmpDir = new java.io.File(path, s"_tmp_$queryId")
+  protected def tmpDir = new java.io.File(path, s"_tmp_$queryId")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     tmpDir.mkdirs()
@@ -5609,51 +5509,16 @@ class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // Two-phase publish: collect exactly the task-committed files into a
-    // hidden `_stage_<id>` dir (dropping any stray files a retried task
-    // left in tmp), then make the batch visible with ONE atomic dir
-    // rename. Readers and the streaming source list non-hidden dirs
-    // only, so a visible `batch_<id>` dir is always a complete batch —
-    // the property the micro-batch (replication) reader depends on.
-    val stage = new java.io.File(path, s"_stage_$queryId")
-    val dest = new java.io.File(path, s"batch_$queryId")
-    // the commit stamp is fixed BEFORE any retirement, over the
-    // pre-retire dir set: it both supersedes the retired generations
-    // in the travel log and stays strictly above their stamps (a
-    // post-retire nextCommitStamp could regress below them under
-    // clock skew)
-    val commitStamp = CellManifest.nextCommitStamp(path)
-    if (truncate) {
-      // the TRUNCATE overwrite (major compaction) retires every live
-      // generation — dirs a snapshot pins move to the archive (one
-      // rename each, manifest travels) instead of dying with the
-      // rewrite (r17: snapshots survive compaction, as in HBase);
-      // the pin map parses once for the whole pass, and every
-      // retirement lands in the travel log superseded by this commit
-      val pinned = CellArchive.pins(path)
-      Option(new java.io.File(path).listFiles).getOrElse(Array.empty)
-        .filter(d => d.isDirectory && !d.getName.startsWith("_"))
-        .foreach(d => CellArchive.retireDir(path, d, pinned, commitStamp))
-    }
-    // clear a dead earlier attempt's stage dir: per-file ATOMIC_MOVE
-    // below has no REPLACE_EXISTING, so leftovers would fail the retry
-    FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
-    val metas = messages.collect { case CellFilesCommitted(fs) => fs }.flatten
-    metas.foreach { m =>
-      val src = new java.io.File(m.path)
-      java.nio.file.Files.move(src.toPath,
-        new java.io.File(stage, src.getName).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    // manifest rides the same atomic publish as the data files
-    CellManifest.write(stage, commitStamp, metas.toSeq)
-    java.nio.file.Files.move(stage.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // the TRUNCATE overwrite (major compaction, rebucket, every
+    // mode("overwrite") write) replaces every live dir in the same
+    // publish: readers switch at the rename, snapshot-pinned files
+    // move to the archive (r17: snapshots survive compaction, as in
+    // HBase), and every retirement lands in the travel log superseded
+    // by this commit
+    val live = if (truncate) CellFooterCache.committedDirs(path) else Nil
+    GraftCellMaintenance.publishReplacement(path, s"batch_$queryId",
+      CellFilesCommitted.all(messages), replacedDirs = live)
     FileUtils.deleteQuietly(tmpDir)
-    java.nio.file.Files.write(new java.io.File(path, "_SUCCESS").toPath,
-                              Array.emptyByteArray)
-    CellFooterCache.invalidate(path)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -5725,15 +5590,26 @@ object GraftCellCodecTag {
       .getOrElse(CompressionCodecName.SNAPPY)
 }
 
+/** Task-side writer factory of every connector write. A streaming
+  * write gets one tmp dir per epoch, `<tmpDir>_ep<epoch>`. */
 class CellDataWriterFactory(tmpDir: String, maxRowsPerFile: Long = -1L,
                             buckets: Option[Int] = None,
                             verifyOrder: Boolean = false,
                             codecs: CellCodecs = CellCodecs.DEFAULT)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
+    extends org.apache.spark.sql.connector.write.DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new CellDataWriter(tmpDir, partitionId, maxRowsPerFile, buckets,
                        verifyOrder, codecs)
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
+    val tmp = s"${tmpDir}_ep$epochId"
+    new java.io.File(tmp).mkdirs()
+    new CellDataWriter(tmp, partitionId, maxRowsPerFile, buckets,
+                       verifyOrder, codecs)
+  }
 }
 
 /** Direct InternalRow → parquet WriteSupport for the cell schema

@@ -1118,6 +1118,30 @@ class CellConnectorSpec extends AnyFunSuite {
     assert(!new java.io.File(root, "_stage_q1_ep0").exists())
   }
 
+  test("overwrite commit that throws while staging leaves the previous rows readable") {
+    import graft.sources.cell.{CellFileMeta, CellFilesCommitted, GraftCellBatchWrite}
+    val root = java.nio.file.Files.createTempDirectory("graft_overwrite_spec_").toString
+    val cells = {
+      import scala.collection.JavaConverters._
+      s.createDataFrame(Seq("a", "b", "c").map(rk =>
+        org.apache.spark.sql.Row(rk, "d", "q", 1L, rk)).asJava, GraftCell.SCHEMA)
+    }
+    cells.write.format("graftcell").mode("append").save(root)
+    def count() = s.read.format("graftcell").load(root).count()
+    val before = count()
+    assert(before == 3L)
+    // the task-committed file the commit must stage does not exist, so
+    // the move into the stage dir throws before anything is published
+    val ghost = CellFileMeta(
+      new java.io.File(root, "_tmp_q/part-00000.parquet").getPath,
+      1L, 1L, None, None, "t")
+    intercept[java.nio.file.NoSuchFileException] {
+      new GraftCellBatchWrite(root, "q", truncate = true)
+        .commit(Array(CellFilesCommitted(Seq(ghost))))
+    }
+    assert(count() == before, "a failed overwrite lost the store's rows")
+  }
+
   test("in-place compaction leaves ONE committed generation, still non-overlapping") {
     import graft.sources.cell.CellFooterCache
     SparkEntry.queries("cell_connector_compact")(s, dir).queryExecution // stage + compact

@@ -54,79 +54,25 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("FuseJaccard rewrites composed set-Jaccard into graft_jaccard") {
+  test("graft_jaccard equals the composed size(array_intersect)/size(array_union)") {
     withExtSession { s =>
       def sd(c: org.apache.spark.sql.Column) =
         array_sort(array_distinct(split(c, " ")))
-      // Parquet-backed input (a literal LocalRelation would be folded by
-      // ConvertToLocalRelation before the plan could show the rewrite).
       val a = sd(col("text"))
       val b = sd(concat(col("text"), lit(" zzqq")))
       val df = s.read.parquet(SparkFixture.sf001 + "/documents.parquet")
         .select(col("doc_id"),
+                call_function("graft_jaccard", a, b).as("fused"),
                 (size(array_intersect(a, b)).cast("double") /
-                  size(array_union(a, b))).as("j"),
+                  size(array_union(a, b))).as("composed"),
                 size(sd(col("text"))).as("n"))
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(plan.contains("graft_jaccard"),
-             s"composed Jaccard not fused:\n$plan")
-      assert(!plan.contains("array_intersect"), plan)
-      // b = a ∪ {zzqq} ⇒ jaccard must be exactly n/(n+1) per row
+      // b = a ∪ {zzqq} ⇒ both forms must be exactly n/(n+1) per row
       df.collect().foreach { r =>
-        val n = r.getInt(2).toDouble
-        assert(r.getDouble(1) == n / (n + 1),
-               s"doc ${r.getLong(0)}: ${r.getDouble(1)} != $n/(n+1)")
+        val n = r.getInt(3).toDouble
+        assert(r.getDouble(1) == r.getDouble(2) && r.getDouble(1) == n / (n + 1),
+               s"doc ${r.getLong(0)}: fused ${r.getDouble(1)}, " +
+               s"composed ${r.getDouble(2)}, expected $n/(n+1)")
       }
-    }
-  }
-
-  test("FuseJaccard guards: decimal divide untouched, empty sets keep composed semantics") {
-    withExtSession { s =>
-      def sd(c: org.apache.spark.sql.Column) =
-        array_sort(array_distinct(split(c, " ")))
-      val docs = s.read.parquet(SparkFixture.sf001 + "/documents.parquet")
-      // (a) a DECIMAL-typed divide over the same composed shape must NOT
-      // fuse: JaccardSets is double-typed and would change the schema.
-      val a = sd(col("text")); val b = sd(concat(col("text"), lit(" zzqq")))
-      val dec = docs.select(
-        (size(array_intersect(a, b)).cast("decimal(20,10)") /
-          size(array_union(a, b))).as("j"))
-      assert(!dec.queryExecution.optimizedPlan.toString.contains("graft_jaccard"),
-             "decimal divide was fused")
-      assert(dec.schema("j").dataType
-               .isInstanceOf[org.apache.spark.sql.types.DecimalType])
-      // (b) two empty input sets must behave EXACTLY like the unfused
-      // composed 0/0 in the session's mode — never JaccardSets' bare
-      // NaN: DIVIDE_BY_ZERO under ANSI (Spark 4's default), NULL in
-      // legacy mode.
-      def sdEmpty(c: org.apache.spark.sql.Column) =
-        array_sort(array_distinct(filter(split(c, " "),
-                                         w => length(w) > 10000)))
-      def empDf = {
-        val ea = sdEmpty(col("text"))
-        val eb = sdEmpty(concat(col("text"), lit(" x")))
-        docs.limit(3).select(
-          (size(array_intersect(ea, eb)).cast("double") /
-            size(array_union(ea, eb))).as("j"))
-      }
-      assert(s.conf.get("spark.sql.ansi.enabled") == "true",
-             "precondition: Spark 4 defaults to ANSI mode")
-      assert(empDf.queryExecution.optimizedPlan.toString.contains("graft_jaccard"),
-             "empty-capable shape did not fuse")
-      // The DIVIDE_BY_ZERO may arrive bare or wrapped in a task-failure
-      // SparkException depending on where the task ran — walk the chain.
-      val err = intercept[Exception] { empDf.collect() }
-      val chain = Iterator.iterate(err: Throwable)(_.getCause)
-        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-      assert(chain.contains("DIVIDE_BY_ZERO"),
-             s"fused empty pair must keep ANSI's composed-form error: $chain")
-      s.conf.set("spark.sql.ansi.enabled", "false")
-      try {
-        assert(empDf.queryExecution.optimizedPlan.toString.contains("graft_jaccard"),
-               "empty-capable shape did not fuse (legacy mode)")
-        empDf.collect().foreach(r =>
-          assert(r.isNullAt(0), s"legacy-mode 0/0 must be NULL, got $r"))
-      } finally s.conf.set("spark.sql.ansi.enabled", "true")
     }
   }
 
