@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
+import org.apache.spark.types.variant.{Variant, VariantUtil}
+import org.apache.spark.unsafe.types.VariantVal
 
 /** The reference's core semantic, re-expressed Spark-first: recursively
   * flatten a (possibly nested) row into the HBase cell model
@@ -98,110 +100,57 @@ object CellFlatten {
       Seq(array(struct(path.as("qualifier"), ser(c, other).as("value"))))
   }
 
-  /** Per-level checkpoint blocks of the LAST dynamic-flatten build per
-    * (session, tag): the result DataFrame reads from these, so they can
-    * only be unpersisted when the same tag is REBUILT (or its session
-    * stops) — bounding storage to one build per live (session, tag)
-    * without paying an extra result-sized checkpoint pass (advisor r8). */
-  private val lastDynamic =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), Seq[DataFrame]]
-
   /** DYNAMIC (schema-less) flatten — json2hbase's true input mode: the
     * document structure is unknown until runtime, so it arrives as one
     * Spark 4 VARIANT column and is flattened by runtime inspection to
-    * ARBITRARY depth (matching the static `flatten` above, which needs a
+    * ARBITRARY depth (matching the static `flatten` below, which needs a
     * schema). `docs` must have columns `(rowkey string, version long,
-    * v variant)` with every root a container (object/array).
+    * v variant)`.
     *
-    * Algorithm: iterative fixpoint over the frontier of still-nested
-    * values. Each level is ONE `variant_explode` lateral generator —
-    * object member extends the qualifier with `.key`, array element with
-    * `[pos]`, leaves (schema_of_variant not OBJECT/ARRAY) are serialized
-    * via `variant_get(..., 'string')` — and is `localCheckpoint`ed so the
-    * level is decoded exactly once (it feeds both the leaf slice and the
-    * next frontier); the materializing count doubles as the loop's
-    * emptiness probe (one action per level, see below). The loop
-    * terminates when no nested values remain: NO depth cap, NO JSON-text
-    * fallback cells (a 64-level guard throws rather than truncating).
+    * One lazy pass: a typed UDF walks each document and returns its
+    * `(qualifier, leaf variant)` pairs, which one `explode` turns into
+    * rows; calling this runs no job. An object member extends the
+    * qualifier with `.key` (the bare key under an empty parent
+    * qualifier), an array element with `[i]`. Leaves are serialized by
+    * `variant_get(leaf, '$', 'string')`. A root that is not a container,
+    * a SQL NULL document and a JSON null leaf give no cells. An object
+    * or array at level 64 or deeper (the root is level 0) fails the
+    * action with an IllegalStateException naming `tag`: nothing is
+    * truncated or emitted as JSON text.
     *
-    * Scale notes: every level is a shuffle-free generator over the
-    * checkpointed store of the level above; the only shuffle is the
-    * initial hash-spread of the parse-once variant store on rowkey. Depth
-    * is a property of the DOCUMENT SCHEMA, not the data — real corpora
-    * are < 10 levels — so the number of jobs is tiny and independent of
-    * row count; each job is a full-width scan only of the shrinking
-    * frontier (rows leave the frontier the level they become leaves).
-    * The final union is checkpointed and all per-level intermediates are
-    * unpersisted, so the residue of one build is one result-sized store. */
-  def flattenVariant(docs: DataFrame, family: String, tag: String): DataFrame = {
-    val s = docs.sparkSession
-    // drop entries of stopped sessions (their blocks are already gone)
-    lastDynamic.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    val isContainer =
-      schema_of_variant(col("v")).like("OBJECT%") ||
-      schema_of_variant(col("v")).like("ARRAY%")
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // r22: LAZY checkpoint + a raw RDD count — ONE single-stage job per
-    // level both materializes the marked RDD (all partitions computed
-    // exactly once, same blocks, same lineage cut) and returns the
-    // frontier size for the loop condition. The eager variant paid two
-    // actions per level (the checkpoint's internal count + a separate
-    // isEmpty executeTake, which on the final EMPTY frontier scanned
-    // partitions in ~4 scale-up rounds); a Dataset-level count() pays
-    // an extra AQE exchange job per level — the internal-row RDD count
-    // has neither (no shuffle, no row decode: it only sums partition
-    // sizes on the driver).
-    var frontier = docs
-      .select(col("rowkey"), col("version"), lit("").as("q"), col("v"))
-      .repartition(col("rowkey")).localCheckpoint(false)
-    var remaining = frontier.queryExecution.toRdd.count()
-    intermediates += frontier
-    val leafSlices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var depth = 0
-    while (remaining > 0 && depth < 64) {
-      depth += 1
-      // One lazy explode per level. Only the CONTAINER frontier is
-      // checkpointed — it shrinks every level and is what the loop
-      // probes and the next level scans; the (bulky) leaf mass is never
-      // materialized, it streams from the checkpointed parent frontier
-      // straight into the final union (the explode runs twice per
-      // level — once into the next frontier, once under the leaf
-      // slice — but always reading the parent checkpoint, so total
-      // work stays linear in depth).
-      val exploded = frontier
-        .lateralJoin(s.tvf.variant_explode(col("v").outer()))
-        .select(col("rowkey"), col("version"),
-          when(col("key").isNotNull,
-               concat(col("q"),
-                      when(col("q") === lit(""), lit("")).otherwise(lit(".")),
-                      col("key")))
-            .otherwise(concat(col("q"), lit("["),
-                              col("pos").cast("string"), lit("]"))).as("q"),
-          col("value").as("v"))
-      leafSlices += exploded.filter(!isContainer)
-        .select(col("rowkey"), col("version"), col("q"),
-                variant_get(col("v"), "$", "string").as("value"))
-      frontier = exploded.filter(isContainer).localCheckpoint(false)
-      remaining = frontier.queryExecution.toRdd.count()
-      intermediates += frontier
-    }
-    if (remaining > 0)
-      throw new IllegalStateException(
-        s"flattenVariant: document nesting exceeds 64 levels (tag=$tag)")
-    lastDynamic.put((s, tag), intermediates.toSeq)
-      .foreach(_.foreach(_.unpersist()))
-    if (leafSlices.isEmpty)
-      return docs.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType.fromDDL(
-          "rowkey STRING, family STRING, qualifier STRING, version BIGINT, value STRING"))
-    leafSlices.reduceLeft(_ unionByName _)
+    * Scale notes: a per-row generator with no shuffle, pipelined with
+    * whatever produces `docs`; each document is decoded once. */
+  def flattenVariant(docs: DataFrame, family: String, tag: String): DataFrame =
+    docs.select(col("rowkey"), col("version"),
+                explode(variantLeaves(tag)(col("v"))).as("cell"))
       .select(col("rowkey"), lit(family).as("family"),
-              col("q").as("qualifier"), col("version"), col("value"))
+              col("cell._1").as("qualifier"), col("version"),
+              variant_get(col("cell._2"), "$", "string").as("value"))
       .filter(col("value").isNotNull) // JSON null leaf → no cell (HBase semantics)
-  }
+
+  private val MaxDepth = 64
+
+  /** The document walk behind [[flattenVariant]]. */
+  private def variantLeaves(tag: String) = udf { (doc: VariantVal) =>
+    val out = Seq.newBuilder[(String, VariantVal)]
+    def walk(v: Variant, q: String, level: Int): Unit = v.getType match {
+      case VariantUtil.Type.OBJECT | VariantUtil.Type.ARRAY if level >= MaxDepth =>
+        throw new IllegalStateException(
+          s"flattenVariant: document nesting exceeds $MaxDepth levels (tag=$tag)")
+      case VariantUtil.Type.OBJECT =>
+        for (i <- 0 until v.objectSize) {
+          val f = v.getFieldAtIndex(i)
+          walk(f.value, if (q.isEmpty) f.key else s"$q.${f.key}", level + 1)
+        }
+      case VariantUtil.Type.ARRAY =>
+        for (i <- 0 until v.arraySize)
+          walk(v.getElementAtIndex(i), s"$q[$i]", level + 1)
+      case _ if level > 0 => out += q -> new VariantVal(v.getValue, v.getMetadata)
+      case _ => // a scalar root is not a document: no cells
+    }
+    if (doc != null) walk(new Variant(doc.getValue, doc.getMetadata), "", 0)
+    out.result()
+  }.withName("variant_leaves")
 
   /** Flatten `df` into cells. `rowkey` must be unique per input row;
     * `version` is the HBase cell timestamp. Columns used for rowkey or

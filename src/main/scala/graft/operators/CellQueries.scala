@@ -105,9 +105,9 @@ object CellQueries extends QueryModule {
       // ingests arbitrary JSON documents whose structure is unknown until
       // runtime, while CellFlatten.flatten needs a static schema. Here
       // the document is a raw JSON STRING parsed once into a Spark 4
-      // VARIANT, then flattened by CellFlatten.flattenVariant's iterative
-      // variant_explode fixpoint — arbitrary depth, no JSON-text
-      // fallback, matching the static flatten's semantics exactly
+      // VARIANT, then flattened by CellFlatten.flattenVariant's one-pass
+      // document walk — arbitrary depth, no JSON-text fallback,
+      // matching the static flatten's semantics exactly
       // (CellFlattenSpec proves dynamic == static on random nested docs).
       // The fixture carries only long/string leaves: cross-engine JSON
       // rendering of doubles differs, and the oracle rebuilds the same
@@ -120,7 +120,7 @@ object CellQueries extends QueryModule {
       // the document per row, pure expression overhead). Identical
       // variant values (long/string leaves; no floats, no nulls — the
       // two encoders only diverge on those), and the downstream
-      // fixpoint walk is untouched; the oracle pins the leaves.
+      // document walk is untouched; the oracle pins the leaves.
       CellFlatten.flattenVariant(
         T.fanout(T.events(s, dir), col("event_id")).select(
           col("event_id").cast("string").as("rowkey"),
@@ -139,10 +139,10 @@ object CellQueries extends QueryModule {
         .orderBy("rowkey", "qualifier")),
 
     "sink_cells_variant_deep" -> ((s, dir) =>
-      // Depth-6 schema-less flatten: `a.b.c[i].d[j]` needs SIX explode
-      // levels (a → b → c → [i] → d → [j]) — twice the old CTE ladder's
-      // cap — plus leaves at levels 1..3 to prove per-level emission.
-      // The fixpoint walks exactly as deep as the data requires and
+      // Depth-6 schema-less flatten: `a.b.c[i].d[j]` sits SIX levels
+      // down (a → b → c → [i] → d → [j]) — twice the old CTE ladder's
+      // cap — plus leaves at levels 1..3 to prove emission at every
+      // level. The walk goes exactly as deep as the data requires and
       // emits NO JSON-text fallback cells; the oracle rebuilds every
       // leaf from the base columns.
       // r22: direct struct→variant encode (see sink_cells_variant)
@@ -164,7 +164,7 @@ object CellQueries extends QueryModule {
 
     "pipeline_e2e_v3" -> ((s, dir) =>
       // The reference's whole job over SCHEMA-LESS input: raw JSON docs
-      // (structure unknown at plan time) → variant fixpoint flatten →
+      // (structure unknown at plan time) → one-pass variant flatten →
       // per-leaf-PATH analytic readback (array indices normalized), the
       // dynamic twin of pipeline_e2e_v2 — proving the engine runs the
       // full ingest→cells→analytics pipeline without a schema anywhere.
@@ -730,7 +730,7 @@ object CellQueries extends QueryModule {
 
     "sink_cells_variant_deep" ->
       // Rebuilds the depth-6 leaves directly from base columns: the
-      // Spark side must prove the runtime fixpoint reaches them all.
+      // Spark side must prove the runtime walk reaches them all.
       """WITH ev AS (SELECT event_id, epoch_us(ts) AS ts_us, user_id,
                             event_type FROM events),
           ivals AS (SELECT event_id, ts_us, user_id,

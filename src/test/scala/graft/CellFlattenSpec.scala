@@ -102,7 +102,7 @@ class CellFlattenSpec extends AnyFunSuite {
     // (schema-known) flatten produces — same qualifiers, same serialized
     // values — for any document shape: structs, variable-length arrays,
     // arrays-of-structs/arrays, maps, and a map→array→map→array→array
-    // chain that only resolves at explode level 6. Long/string leaves
+    // chain that only resolves at nesting level 6. Long/string leaves
     // only (JSON double rendering is engine-specific by design).
     val rnd = new scala.util.Random(42)
     def rl() = rnd.nextLong() % 1000000
@@ -130,6 +130,43 @@ class CellFlattenSpec extends AnyFunSuite {
     assert(want.nonEmpty)
     assert(got == want,
       s"dynamic-static diff: extra=${(got -- want).take(5)} missing=${(want -- got).take(5)}")
+  }
+
+  test("flattenVariant: lazy, edge shapes, depth bound") {
+    def docs(js: (String, String)*) =
+      js.toDF("rowkey", "j").select(col("rowkey"), lit(3L).as("version"),
+                                    parse_json(col("j")).as("v"))
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select("rowkey", "qualifier", "value").as[(String, String, String)]
+        .collect().toSet
+    val edge = docs(
+      "obj" -> """{"a":null,"b":[],"c":{},"d":[null,1,{"x":true}],"":{"y":2.5},"s":"t"}""",
+      "arr" -> """[1,{"x":2},[3]]""",
+      "empty" -> "{}", "scalar" -> "7", "sqlnull" -> null)
+    // building the flatten is a transformation: no job until an action
+    val (flat, stats) = RunCollector(spark).measure {
+      CellFlatten.flattenVariant(edge, "d", "t")
+    }
+    assert(stats.jobs == 0, stats)
+    assert(flat.columns.toSeq ==
+      Seq("rowkey", "family", "qualifier", "version", "value"))
+    assert(flat.select("family", "version").distinct().as[(String, Long)]
+             .collect().toSeq == Seq(("d", 3L)))
+    assert(cells(flat) == Set(
+      ("obj", "d[1]", "1"), ("obj", "d[2].x", "true"), ("obj", "s", "t"),
+      ("obj", "y", "2.5"),
+      ("arr", "[0]", "1"), ("arr", "[1].x", "2"), ("arr", "[2][0]", "3")))
+    // the root is level 0: 64 nested objects put the leaf at level 64,
+    // 65 put an object there
+    def nested(n: Int) = docs("deep" -> ("""{"a":""" * n + "1" + "}" * n))
+    assert(cells(CellFlatten.flattenVariant(nested(64), "d", "t")) ==
+      Set(("deep", Seq.fill(64)("a").mkString("."), "1")))
+    val e = intercept[Exception] {
+      CellFlatten.flattenVariant(nested(65), "d", "t").collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("nesting exceeds 64 levels")), msgs)
   }
 
   test("sink_cells_variant_deep reaches level 6 with no JSON-text fallback") {

@@ -246,7 +246,10 @@ class PlanSpec extends AnyFunSuite {
 
   test("sink_cells_variant: runtime variant walk is generator-only (no hash shuffle)") {
     val p = plan("sink_cells_variant")
-    assert(p.contains("variant_explode"), p)
+    // one generator walks each whole document; no level is a
+    // checkpointed scan
+    assert(p.contains("Generate explode(variant_leaves("), p)
+    assert(!p.contains("ExistingRDD"), p)
     // the variant walk itself is generator-only: the only hash
     // exchange allowed is the ONE scale-adaptive input fanout
     // (T.fanout, below the generators; absent at production split
