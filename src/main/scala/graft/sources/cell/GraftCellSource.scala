@@ -138,6 +138,14 @@ object GraftCell {
     if (b.length <= STAT_TRUNC) Some(b)
     else prefixStop(JArrays.copyOfRange(b, 0, STAT_TRUNC))
 
+  /** Unsigned byte order with NULL first — the declared write
+    * ordering's order for rowkey, family and qualifier. */
+  private[cell] def compareNullsFirst(a: Array[Byte], b: Array[Byte]): Int =
+    if (a == null && b == null) 0
+    else if (a == null) -1
+    else if (b == null) 1
+    else JArrays.compareUnsigned(a, b)
+
   /** HBase FuzzyRowFilter (r17): a FIXED-POSITION wildcard pattern
     * over the rowkey — `?` matches any single byte, every other byte
     * is fixed, and a key matches iff it is at least pattern-length
@@ -1749,8 +1757,6 @@ class GraftCellGroupReplaceBatchWrite(path: String, queryId: String,
   * the rewrite window. Runs as one Spark task per victim file — the
   * same per-region parallelism unit as the scan. */
 object CellDeleteRewrite {
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.hadoop.metadata.CompressionCodecName
 
   /** `part-x[-rK][-b<i>of<n>].parquet` → same name with the rewrite
     * counter bumped (r1 when absent). Names never repeat within a dir,
@@ -1772,294 +1778,101 @@ object CellDeleteRewrite {
     * it). The driver folds these into the dir's persisted manifest. */
   def rewriteFile(file: String, filters: Array[Filter],
                   inPlace: Boolean): (String, Option[CellFileMeta]) = {
-    val conf = new Configuration()
     val target =
       if (inPlace) file
       else new java.io.File(new java.io.File(file).getParentFile,
         nextRewriteName(new java.io.File(file).getName)).getPath
     val tmpFile = new java.io.File(target + ".tmp")
     tmpFile.delete() // stale tmp from a failed earlier attempt
-    // VECTORIZED decode (r19 — the last row-oriented rewrite reader):
-    // the scan's own columnar reader batches the victim file (the DML
-    // filter is evaluated here EXACTLY per row, so the scan-side
-    // residual-work rule does not apply), and survivors stream through
-    // the direct InternalRow write support — no parquet-example Group
-    // object tree on either side. The rewritten file takes the
-    // canonical cell message type (all graftcell region files share
-    // it; name-resolved reads are order-independent).
-    val cols = GraftCell.SCHEMA.fieldNames
-    val reader = new CellColumnarPartitionReader(
-      CellInputPartition(file, cols, cols, Array.empty))
-    val msgType = {
-      import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      val b = Types.buildMessage()
-      GraftCell.SCHEMA.fields.foreach { f =>
-        if (f.name == "version") b.optional(INT64).named(f.name)
-        else b.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-      }
-      b.named("cell")
-    }
-    val writer = new CellParquetWriterBuilder(new Path(tmpFile.getPath),
-                                              msgType)
-      .withConf(conf)
-      // the input's codec travels through the rewrite (r18 name tag)
-      .withCompressionCodec(GraftCellCodecTag.of(file))
-      .withBloomFilterEnabled("rowkey", true)
-      .withBloomFilterEnabled("value", true)
-      .withBloomFilterNDV("value", 4096)
-      .build()
-    var kept = 0L
-    // manifest stats of the surviving rows (same tracking as the write
-    // path: unsigned-byte order for rowkey/family/qualifier + the
-    // version TimeRange)
-    var minKey: Array[Byte] = null
-    var maxKey: Array[Byte] = null
-    var minVer = Long.MaxValue
-    var maxVer = Long.MinValue
-    var minFam: Array[Byte] = null
-    var maxFam: Array[Byte] = null
-    var minQual: Array[Byte] = null
-    var maxQual: Array[Byte] = null
-    var minVal: Array[Byte] = null
-    var maxVal: Array[Byte] = null
-    var nullKeys = 0L
-    var nullFams = 0L
-    val valueBloom = CellValueBloom.empty()
+    // the input's codec travels through the rewrite (r18 name tag)
+    val out = new CellFileWriter(tmpFile.getPath, GraftCellCodecTag.of(file))
+    // the DML filter is evaluated here EXACTLY per row, so the
+    // scan-side residual-work rule does not apply
     val compiled = GraftCell.compileAll(filters)
-    val colIdx = cols.zipWithIndex.toMap
-    val vIdx = colIdx("version")
+    val colIdx = GraftCell.SCHEMA.fieldNames.zipWithIndex.toMap
+    val st = new CellRowStream(file)
     try {
-      while (reader.next()) {
-        val batch = reader.get()
-        val n = batch.numRows()
-        var r = 0
-        while (r < n) {
-          val row = batch.getRow(r)
-          val get = (c: String) => {
-            val i = colIdx(c)
-            if (row.isNullAt(i)) null
-            else if (i == vIdx) java.lang.Long.valueOf(row.getLong(i))
-            else row.getUTF8String(i)
-          }
-          val doomed = filters.nonEmpty && compiled.forall(f => f(get))
-          if (!doomed) {
-            writer.write(row); kept += 1
-            // min/max candidates CLONE their bytes: the batch's column
-            // memory is reused across batches, and an aliased extreme
-            // would silently mutate (updates are rare after warmup, so
-            // the clone is off the hot path)
-            def trackBin(col: String)(update: Array[Byte] => Unit): Unit = {
-              val i = colIdx(col)
-              if (!row.isNullAt(i)) update(row.getUTF8String(i).getBytes)
-            }
-            if (row.isNullAt(colIdx("rowkey"))) nullKeys += 1
-            if (row.isNullAt(colIdx("family"))) nullFams += 1
-            trackBin("rowkey") { kb =>
-              if (minKey == null || JArrays.compareUnsigned(kb, minKey) < 0) minKey = kb.clone()
-              if (maxKey == null || JArrays.compareUnsigned(kb, maxKey) > 0) maxKey = kb.clone()
-            }
-            trackBin("family") { kb =>
-              if (minFam == null || JArrays.compareUnsigned(kb, minFam) < 0) minFam = kb.clone()
-              if (maxFam == null || JArrays.compareUnsigned(kb, maxFam) > 0) maxFam = kb.clone()
-            }
-            trackBin("qualifier") { kb =>
-              if (minQual == null || JArrays.compareUnsigned(kb, minQual) < 0) minQual = kb.clone()
-              if (maxQual == null || JArrays.compareUnsigned(kb, maxQual) > 0) maxQual = kb.clone()
-            }
-            trackBin("value") { kb =>
-              if (minVal == null || JArrays.compareUnsigned(kb, minVal) < 0) minVal = kb.clone()
-              if (maxVal == null || JArrays.compareUnsigned(kb, maxVal) > 0) maxVal = kb.clone()
-              CellValueBloom.add(valueBloom, kb)
-            }
-            if (!row.isNullAt(vIdx)) {
-              val v = row.getLong(vIdx)
-              if (v < minVer) minVer = v
-              if (v > maxVer) maxVer = v
-            }
-          }
-          r += 1
+      while (st.advance()) {
+        val row = st.row
+        val get = (c: String) => {
+          val i = colIdx(c)
+          if (row.isNullAt(i)) null
+          else if (i == CellWriteSupport.V_IDX)
+            java.lang.Long.valueOf(row.getLong(i))
+          else row.getUTF8String(i)
         }
+        val doomed = filters.nonEmpty && compiled.forall(f => f(get))
+        if (!doomed) out.write(row)
       }
-    } finally { reader.close(); writer.close() }
-    if (kept == 0L) {
-      tmpFile.delete()
-      // a NEW-NAME rewrite leaves the original for the driver (archive-
-      // if-pinned, then delete after the manifest swap); in-place mode
-      // has no manifest to coordinate with and removes it here
-      if (inPlace) { new java.io.File(file).delete(); () }
-      (file, None)
-    } else {
-      java.nio.file.Files.move(tmpFile.toPath,
-        new java.io.File(target).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      (file, Some(CellFileMeta(target, new java.io.File(target).length(), kept,
-        Option(minKey), Option(maxKey), msgType.toString,
-        if (minVer == Long.MaxValue) None else Some(minVer),
-        if (maxVer == Long.MinValue) None else Some(maxVer),
-        Option(minFam), Option(maxFam), Option(minQual), Option(maxQual),
-        Some(nullKeys),
-        Option(minVal).map(GraftCell.truncStatMin),
-        Option(maxVal).flatMap(GraftCell.truncStatMax),
-        nullFams = Some(nullFams),
-        valueBloom = CellValueBloom.finish(valueBloom))))
+    } catch { case e: Throwable => out.abort(); throw e }
+    finally st.close()
+    out.finish() match {
+      case None =>
+        // a NEW-NAME rewrite leaves the original for the driver
+        // (archive-if-pinned, then delete after the manifest swap);
+        // in-place mode has no manifest to coordinate with and removes
+        // it here
+        if (inPlace) { new java.io.File(file).delete(); () }
+        (file, None)
+      case Some(m) =>
+        java.nio.file.Files.move(tmpFile.toPath,
+          new java.io.File(target).toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        (file, Some(m.copy(path = target)))
     }
   }
 }
 
-/** Executor-side region-file SPLIT and MERGE rewrites (r16;
-  * vectorized r19) — the post-hoc layout surgery of HBase's
-  * `split`/`merge_region` shell verbs, at the engine's region
-  * granularity (one region = one sorted parquet file). Both run as
-  * one Spark task per victim/run, decode through the scan's own
-  * columnar batch reader, stream rows (never materialize a file in
-  * memory), track exact manifest stats while writing through the
-  * direct InternalRow write support, and hand their outputs to
+/** Pull-based row stream over the scan's vectorized batch reader —
+  * the input side of every region-file rewrite (DELETE, split,
+  * merge). `row` is the batch cursor, valid until THIS stream's next
+  * advance (the reader only swaps batch memory when its own stream
+  * advances past a batch); the cell-key components are snapshotted per
+  * advance so k-way heap comparisons never read a moved cursor. */
+private[cell] final class CellRowStream(file: String) {
+  import CellWriteSupport._
+  private val reader = {
+    val cols = GraftCell.SCHEMA.fieldNames
+    new CellColumnarPartitionReader(
+      CellInputPartition(file, cols, cols, Array.empty))
+  }
+  private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
+  private var n = 0
+  private var r = 0
+  var row: InternalRow = _
+  var kb: Array[Byte] = _
+  var fb: Array[Byte] = _
+  var qb: Array[Byte] = _
+  var verNull = true
+  var ver = 0L
+
+  def advance(): Boolean = {
+    while (batch == null || r >= n) {
+      if (!reader.next()) { row = null; return false }
+      batch = reader.get(); n = batch.numRows(); r = 0
+    }
+    row = batch.getRow(r); r += 1
+    kb = if (row.isNullAt(K_IDX)) null else row.getUTF8String(K_IDX).getBytes
+    fb = if (row.isNullAt(F_IDX)) null else row.getUTF8String(F_IDX).getBytes
+    qb = if (row.isNullAt(Q_IDX)) null else row.getUTF8String(Q_IDX).getBytes
+    verNull = row.isNullAt(V_IDX)
+    ver = if (verNull) 0L else row.getLong(V_IDX)
+    true
+  }
+
+  def close(): Unit = reader.close()
+}
+
+/** Executor-side region-file SPLIT and MERGE rewrites (r16) — the
+  * post-hoc layout surgery of HBase's `split`/`merge_region` shell
+  * verbs, at the engine's region granularity (one region = one sorted
+  * parquet file). Both run as one Spark task per victim/run, stream
+  * rows from [[CellRowStream]] into [[CellFileWriter]] (never
+  * materialize a file in memory), and hand their outputs to
   * [[GraftCellMaintenance.publishReplacement]] for the crash-safe
   * retire-intent publish. */
 object CellRegionRewrite {
-  import org.apache.parquet.hadoop.metadata.CompressionCodecName
-  import org.apache.spark.sql.vectorized.ColumnarBatch
-
-  // positional layout of the canonical cell schema — the vectorized
-  // batches, the direct write support, and the stats tracker all
-  // agree on it
-  private val COLS = GraftCell.SCHEMA.fieldNames
-  private val K_IDX = 0 // rowkey
-  private val F_IDX = 1 // family
-  private val Q_IDX = 2 // qualifier
-  private val V_IDX = 3 // version
-  private val VAL_IDX = 4 // value
-
-  private def cellMsgType: org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val b = Types.buildMessage()
-    GraftCell.SCHEMA.fields.foreach { f =>
-      if (f.name == "version") b.optional(INT64).named(f.name)
-      else b.optional(BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named(f.name)
-    }
-    b.named("cell")
-  }
-
-  /** Streaming stats-tracking writer (the CellDataWriter shape): rows
-    * pass through the direct InternalRow write support verbatim
-    * (r19 — no parquet-example Group tree), min/max key bytes and the
-    * version TimeRange are tracked exactly. Extreme candidates CLONE
-    * their bytes — the source batch memory is reused across batches
-    * and an aliased extreme would silently mutate (updates are rare
-    * after warmup, so the clone is off the hot path). */
-  private final class TrackedWriter(path: String,
-      codec: CompressionCodecName = CompressionCodecName.SNAPPY) {
-    private val msgType = cellMsgType
-    private val writer = new CellParquetWriterBuilder(new Path(path), msgType)
-      .withConf(new Configuration())
-      .withCompressionCodec(codec)
-      .withBloomFilterEnabled("rowkey", true)
-      .withBloomFilterEnabled("value", true)
-      .withBloomFilterNDV("value", 4096)
-      .build()
-    private var rows = 0L
-    private var minKey: Array[Byte] = _
-    private var maxKey: Array[Byte] = _
-    private var minVer = Long.MaxValue
-    private var maxVer = Long.MinValue
-    private var minFam: Array[Byte] = _
-    private var maxFam: Array[Byte] = _
-    private var minQual: Array[Byte] = _
-    private var maxQual: Array[Byte] = _
-    private var minVal: Array[Byte] = _
-    private var maxVal: Array[Byte] = _
-    private var nullKeys = 0L
-    private var nullFams = 0L
-    private val valueBloom = CellValueBloom.empty()
-
-    def write(row: InternalRow): Unit = {
-      writer.write(row)
-      rows += 1
-      def trackBin(i: Int)(update: Array[Byte] => Unit): Unit =
-        if (!row.isNullAt(i)) update(row.getUTF8String(i).getBytes)
-      if (row.isNullAt(K_IDX)) nullKeys += 1
-      if (row.isNullAt(F_IDX)) nullFams += 1
-      trackBin(K_IDX) { kb =>
-        if (minKey == null || JArrays.compareUnsigned(kb, minKey) < 0) minKey = kb.clone()
-        if (maxKey == null || JArrays.compareUnsigned(kb, maxKey) > 0) maxKey = kb.clone()
-      }
-      trackBin(F_IDX) { kb =>
-        if (minFam == null || JArrays.compareUnsigned(kb, minFam) < 0) minFam = kb.clone()
-        if (maxFam == null || JArrays.compareUnsigned(kb, maxFam) > 0) maxFam = kb.clone()
-      }
-      trackBin(Q_IDX) { kb =>
-        if (minQual == null || JArrays.compareUnsigned(kb, minQual) < 0) minQual = kb.clone()
-        if (maxQual == null || JArrays.compareUnsigned(kb, maxQual) > 0) maxQual = kb.clone()
-      }
-      trackBin(VAL_IDX) { kb =>
-        if (minVal == null || JArrays.compareUnsigned(kb, minVal) < 0) minVal = kb.clone()
-        if (maxVal == null || JArrays.compareUnsigned(kb, maxVal) > 0) maxVal = kb.clone()
-        CellValueBloom.add(valueBloom, kb)
-      }
-      if (!row.isNullAt(V_IDX)) {
-        val v = row.getLong(V_IDX)
-        if (v < minVer) minVer = v
-        if (v > maxVer) maxVer = v
-      }
-    }
-
-    /** Close; None (file deleted) when no row was written. */
-    def finish(): Option[CellFileMeta] = {
-      writer.close()
-      if (rows == 0L) { new java.io.File(path).delete(); None }
-      else Some(CellFileMeta(path, new java.io.File(path).length(), rows,
-        Option(minKey), Option(maxKey), msgType.toString,
-        if (minVer == Long.MaxValue) None else Some(minVer),
-        if (maxVer == Long.MinValue) None else Some(maxVer),
-        Option(minFam), Option(maxFam), Option(minQual), Option(maxQual),
-        Some(nullKeys),
-        Option(minVal).map(GraftCell.truncStatMin),
-        Option(maxVal).flatMap(GraftCell.truncStatMax),
-        nullFams = Some(nullFams),
-        valueBloom = CellValueBloom.finish(valueBloom)))
-    }
-  }
-
-  /** Pull-based row stream over the VECTORIZED batch reader (r19 —
-    * replaces the Group reader): `row` is the batch cursor, valid
-    * until THIS stream's next advance (the reader only swaps batch
-    * memory when its own stream advances past a batch); the cell-key
-    * components are snapshotted per advance so k-way heap comparisons
-    * never read a moved cursor. */
-  private final class CellRowStream(file: String) {
-    private val reader = new CellColumnarPartitionReader(
-      CellInputPartition(file, COLS, COLS, Array.empty))
-    private var batch: ColumnarBatch = _
-    private var n = 0
-    private var r = 0
-    var row: InternalRow = _
-    var kb: Array[Byte] = _
-    var fb: Array[Byte] = _
-    var qb: Array[Byte] = _
-    var verNull = true
-    var ver = 0L
-
-    def advance(): Boolean = {
-      while (batch == null || r >= n) {
-        if (!reader.next()) { row = null; return false }
-        batch = reader.get(); n = batch.numRows(); r = 0
-      }
-      row = batch.getRow(r); r += 1
-      kb = if (row.isNullAt(K_IDX)) null else row.getUTF8String(K_IDX).getBytes
-      fb = if (row.isNullAt(F_IDX)) null else row.getUTF8String(F_IDX).getBytes
-      qb = if (row.isNullAt(Q_IDX)) null else row.getUTF8String(Q_IDX).getBytes
-      verNull = row.isNullAt(V_IDX)
-      ver = if (verNull) 0L else row.getLong(V_IDX)
-      true
-    }
-
-    def close(): Unit = reader.close()
-  }
 
   /** SPLIT one region file at `splitKey`: rows with rowkey < key (and
     * null rowkeys — the write ordering is NULLS FIRST) to the `.lo`
@@ -2076,8 +1889,8 @@ object CellRegionRewrite {
     val ctag = GraftCellCodecTag.tag(codec)
     val base = new java.io.File(file).getName.stripSuffix(".parquet")
       .replaceAll("(-z[A-Z0-9_]+)?(-b\\d+of\\d+)?$", "")
-    val lo = new TrackedWriter(s"$tmpDir/$base.lo$ctag.parquet", codec)
-    val hi = new TrackedWriter(s"$tmpDir/$base.hi$ctag.parquet", codec)
+    val lo = new CellFileWriter(s"$tmpDir/$base.lo$ctag.parquet", codec)
+    val hi = new CellFileWriter(s"$tmpDir/$base.hi$ctag.parquet", codec)
     val st = new CellRowStream(file)
     try {
       while (st.advance()) {
@@ -2085,7 +1898,8 @@ object CellRegionRewrite {
           JArrays.compareUnsigned(st.kb, splitKey) < 0
         if (below) lo.write(st.row) else hi.write(st.row)
       }
-    } finally st.close()
+    } catch { case e: Throwable => lo.abort(); hi.abort(); throw e }
+    finally st.close()
     Seq(lo, hi).flatMap(_.finish())
   }
 
@@ -2096,24 +1910,19 @@ object CellRegionRewrite {
     * ordering even when adjacent inputs share a boundary rowkey. */
   def mergeRun(files: Seq[String], outName: String,
                tmpDir: String): Option[CellFileMeta] = {
-    def cmpB(a: Array[Byte], b: Array[Byte]): Int =
-      if (a == null && b == null) 0
-      else if (a == null) -1
-      else if (b == null) 1
-      else JArrays.compareUnsigned(a, b)
     // runs are codec-grouped (see mergeRegions); the merged file keeps
     // the run's codec and carries its name tag
     val codec = GraftCellCodecTag.of(files.head)
-    val out = new TrackedWriter(
+    val out = new CellFileWriter(
       s"$tmpDir/${outName.stripSuffix(".parquet")}" +
         s"${GraftCellCodecTag.tag(codec)}.parquet", codec)
     val streams = files.map(new CellRowStream(_)).toArray
     def cmpS(a: CellRowStream, b: CellRowStream): Int = {
-      var c = cmpB(a.kb, b.kb)
+      var c = GraftCell.compareNullsFirst(a.kb, b.kb)
       if (c != 0) return c
-      c = cmpB(a.fb, b.fb)
+      c = GraftCell.compareNullsFirst(a.fb, b.fb)
       if (c != 0) return c
-      c = cmpB(a.qb, b.qb)
+      c = GraftCell.compareNullsFirst(a.qb, b.qb)
       if (c != 0) return c
       if (a.verNull && b.verNull) 0
       else if (a.verNull) -1
@@ -2135,7 +1944,8 @@ object CellRegionRewrite {
         out.write(streams(i).row)
         if (streams(i).advance()) heap.add(i)
       }
-    } finally streams.foreach(_.close())
+    } catch { case e: Throwable => out.abort(); throw e }
+    finally streams.foreach(_.close())
     out.finish()
   }
 }
@@ -4078,7 +3888,7 @@ final case class CellFileMeta(path: String, bytes: Long, rowCount: Long,
   * data so the driver NEVER opens parquet footers at plan time. The
   * write path already knows every stat it commits (each task tracks
   * min/max rowkey bytes, min/max version, row and byte counts while
-  * writing — see [[CellDataWriter]]), ships them in the commit message,
+  * writing — see [[CellFileWriter]]), ships them in the commit message,
   * and the driver writes the manifest into the stage dir BEFORE the
   * atomic publish rename — so manifest and data appear together or not
   * at all. `committedAtMicros` is stamped monotonically per store
@@ -4608,7 +4418,7 @@ object CellFooterCache {
     * driver-side legacy fallback, and (r19) the EXECUTOR-side worker of
     * `CALL upgrade_manifests` (module-method call: the closure captures
     * nothing, the task ships clean). */
-  private[cell] def metaOfFooter(path: String): CellFileMeta = {
+  private[graft] def metaOfFooter(path: String): CellFileMeta = {
       val conf = new Configuration()
       val f = new java.io.File(path)
       val in = HadoopInputFile.fromPath(new Path(f.getPath), conf)
@@ -5612,27 +5422,22 @@ class CellDataWriterFactory(tmpDir: String, maxRowsPerFile: Long = -1L,
   }
 }
 
-/** Direct InternalRow → parquet WriteSupport for the cell schema
-  * (r19) — the WRITE-side twin of the vectorized read path:
-  * CellDataWriter used to build one parquet-example `Group` (a boxed
-  * object tree) per row only for GroupWriteSupport to walk it back
-  * apart. This consumes the shuffled UnsafeRow directly — per field
-  * one isNullAt + addBinary/addLong on the RecordConsumer, no
-  * intermediate objects beyond the byte copy parquet's page builders
-  * require — on EVERY connector write (inserts, DML rewrites,
-  * compaction/maintenance outputs). Fields are positional in
-  * [[GraftCell.SCHEMA]] order, exactly how Spark hands rows to the
-  * sink. */
-class CellWriteSupport(msgType: org.apache.parquet.schema.MessageType)
+/** Direct InternalRow → parquet WriteSupport for the cell schema — the
+  * WRITE-side twin of the vectorized read path: per field one isNullAt
+  * + addBinary/addLong on the RecordConsumer, no intermediate objects
+  * beyond the byte copy parquet's page builders require. Fields are
+  * positional in [[GraftCell.SCHEMA]] order, exactly how Spark hands
+  * rows to the sink. */
+class CellWriteSupport
     extends org.apache.parquet.hadoop.api.WriteSupport[InternalRow] {
+  import CellWriteSupport._
   private var consumer: org.apache.parquet.io.api.RecordConsumer = _
-  private val names = msgType.getFields.asScala.map(_.getName).toArray
-  private val versionIdx = names.indexOf("version")
+  private val names = GraftCell.SCHEMA.fieldNames
 
   override def init(conf: Configuration)
       : org.apache.parquet.hadoop.api.WriteSupport.WriteContext =
     new org.apache.parquet.hadoop.api.WriteSupport.WriteContext(
-      msgType, java.util.Collections.emptyMap[String, String]())
+      MESSAGE_TYPE, java.util.Collections.emptyMap[String, String]())
 
   override def prepareForWrite(
       rc: org.apache.parquet.io.api.RecordConsumer): Unit = consumer = rc
@@ -5643,7 +5448,7 @@ class CellWriteSupport(msgType: org.apache.parquet.schema.MessageType)
     while (i < names.length) {
       if (!row.isNullAt(i)) {
         consumer.startField(names(i), i)
-        if (i == versionIdx) consumer.addLong(row.getLong(i))
+        if (i == V_IDX) consumer.addLong(row.getLong(i))
         else consumer.addBinary(
           Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
         consumer.endField(names(i), i)
@@ -5654,40 +5459,20 @@ class CellWriteSupport(msgType: org.apache.parquet.schema.MessageType)
   }
 }
 
-/** ParquetWriter.Builder over [[CellWriteSupport]] — keeps the stock
-  * builder surface (codec, bloom filters, page sizes). */
-class CellParquetWriterBuilder(path: Path,
-                               msgType: org.apache.parquet.schema.MessageType)
-    extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-      InternalRow, CellParquetWriterBuilder](path) {
-  override def self(): CellParquetWriterBuilder = this
-  override def getWriteSupport(conf: Configuration)
-      : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
-    new CellWriteSupport(msgType)
-}
+object CellWriteSupport {
+  // positional layout of the canonical cell schema — the vectorized
+  // batches, the write support, the file writer and the row stream all
+  // agree on it
+  private[cell] val K_IDX = 0 // rowkey
+  private[cell] val F_IDX = 1 // family
+  private[cell] val Q_IDX = 2 // qualifier
+  private[cell] val V_IDX = 3 // version
+  private[cell] val VAL_IDX = 4 // value
 
-/** Sorted region file(s) per (range-partitioned) task. Rows arrive
-  * rowkey-sorted (the declared write ordering), so ROLLING to a new
-  * file every `maxRowsPerFile` rows — the HBase region SPLIT-ON-SIZE —
-  * keeps every emitted file sorted and the task's files pairwise
-  * non-overlapping by construction: footer pruning granularity is then
-  * a policy knob (`option("maxRowsPerFile", n)`), not a side effect of
-  * the shuffle partition count. A rowkey BLOOM FILTER is written per
-  * file so point gets (`eq`/`in` pushed to parquet) can skip row
-  * groups whose [min,max] straddles the key but which provably don't
-  * contain it. */
-class CellDataWriter(tmpDir: String, partitionId: Int,
-                     maxRowsPerFile: Long = -1L,
-                     buckets: Option[Int] = None,
-                     verifyOrder: Boolean = false,
-                     codecs: CellCodecs = CellCodecs.DEFAULT)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.metadata.CompressionCodecName
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  private val msgType = {
+  /** The parquet message type every region file is written with. */
+  val MESSAGE_TYPE: org.apache.parquet.schema.MessageType = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val b = Types.buildMessage()
     GraftCell.SCHEMA.fields.foreach { f =>
       if (f.name == "version") b.optional(INT64).named(f.name)
@@ -5696,147 +5481,165 @@ class CellDataWriter(tmpDir: String, partitionId: Int,
     }
     b.named("cell")
   }
+}
+
+/** ParquetWriter.Builder over [[CellWriteSupport]] — keeps the stock
+  * builder surface (codec, bloom filters, page sizes). */
+class CellParquetWriterBuilder(path: Path)
+    extends org.apache.parquet.hadoop.ParquetWriter.Builder[
+      InternalRow, CellParquetWriterBuilder](path) {
+  override def self(): CellParquetWriterBuilder = this
+  override def getWriteSupport(conf: Configuration)
+      : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+    new CellWriteSupport
+}
+
+/** ONE region file being written — the HBase `StoreFileWriter` analog
+  * and the only place that holds the parquet builder settings and the
+  * per-file manifest stats. Connector writes ([[CellDataWriter]]),
+  * DELETE rewrites ([[CellDeleteRewrite]]) and split/merge
+  * ([[CellRegionRewrite]]) all write through it. The stats are exact,
+  * tracked while writing (not footer-derived): min/max of rowkey,
+  * family, qualifier and value in unsigned byte order — the order of
+  * parquet UTF8 statistics and of UTF8String comparison — the version
+  * TimeRange, the NULL rowkey and family counts, and the value bloom.
+  * A rowkey BLOOM FILTER is written into the file so point gets (`eq`/
+  * `in` pushed to parquet) can skip row groups whose [min,max]
+  * straddles the key but which provably don't contain it. */
+private[cell] final class CellFileWriter(path: String,
+    codec: org.apache.parquet.hadoop.metadata.CompressionCodecName) {
+  import CellWriteSupport._
+  private val writer = new CellParquetWriterBuilder(new Path(path))
+    .withConf(new Configuration())
+    .withCompressionCodec(codec)
+    .withBloomFilterEnabled("rowkey", true)
+    // value bloom for row-group point skipping — NDV-capped (~5 KB)
+    // unlike the rowkey bloom's default sizing, so every small file
+    // doesn't grow by a megabyte of bitset; above 4096 distinct values
+    // the FPP degrades gracefully (still sound)
+    .withBloomFilterEnabled("value", true)
+    .withBloomFilterNDV("value", 4096)
+    .build()
+  private var rows = 0L
+  // binary column extremes by schema position (the version slots stay
+  // null; the version TimeRange is tracked as longs)
+  private val mins = new Array[Array[Byte]](GraftCell.SCHEMA.length)
+  private val maxs = new Array[Array[Byte]](GraftCell.SCHEMA.length)
+  private var minVer = Long.MaxValue
+  private var maxVer = Long.MinValue
+  private var nullKeys = 0L
+  private var nullFams = 0L
+  private val valueBloom = CellValueBloom.empty()
+
+  def rowCount: Long = rows
+
+  def write(row: InternalRow): Unit = {
+    writer.write(row)
+    rows += 1
+    if (row.isNullAt(K_IDX)) nullKeys += 1 else track(row, K_IDX)
+    if (row.isNullAt(F_IDX)) nullFams += 1 else track(row, F_IDX)
+    if (!row.isNullAt(Q_IDX)) track(row, Q_IDX)
+    if (!row.isNullAt(VAL_IDX))
+      CellValueBloom.add(valueBloom, track(row, VAL_IDX))
+    if (!row.isNullAt(V_IDX)) {
+      val v = row.getLong(V_IDX)
+      if (v < minVer) minVer = v
+      if (v > maxVer) maxVer = v
+    }
+  }
+
+  // An extreme candidate is COPIED, and only when it replaces the
+  // extreme: a row from a columnar batch can share memory that the next
+  // batch reuses, and an aliased extreme would silently mutate (updates
+  // are rare after warmup, so the copy is off the hot path).
+  private def track(row: InternalRow, i: Int): Array[Byte] = {
+    val b = row.getUTF8String(i).getBytes
+    if (mins(i) == null || JArrays.compareUnsigned(b, mins(i)) < 0)
+      mins(i) = b.clone()
+    if (maxs(i) == null || JArrays.compareUnsigned(b, maxs(i)) > 0)
+      maxs(i) = b.clone()
+    b
+  }
+
+  /** Close; None (file deleted) when no row was written. */
+  def finish(): Option[CellFileMeta] = {
+    writer.close()
+    val f = new java.io.File(path)
+    if (rows == 0L) { f.delete(); None }
+    else Some(CellFileMeta(path, f.length(), rows,
+      Option(mins(K_IDX)), Option(maxs(K_IDX)), MESSAGE_TYPE.toString,
+      if (minVer == Long.MaxValue) None else Some(minVer),
+      if (maxVer == Long.MinValue) None else Some(maxVer),
+      Option(mins(F_IDX)), Option(maxs(F_IDX)),
+      Option(mins(Q_IDX)), Option(maxs(Q_IDX)),
+      Some(nullKeys),
+      Option(mins(VAL_IDX)).map(GraftCell.truncStatMin),
+      Option(maxs(VAL_IDX)).flatMap(GraftCell.truncStatMax),
+      nullFams = Some(nullFams),
+      valueBloom = CellValueBloom.finish(valueBloom)))
+  }
+
+  /** Close and delete the file. */
+  def abort(): Unit =
+    try writer.close() finally { new java.io.File(path).delete(); () }
+}
+
+/** Sorted region file(s) per (range-partitioned) task. Rows arrive
+  * rowkey-sorted (the declared write ordering), so ROLLING to a new
+  * file every `maxRowsPerFile` rows — the HBase region SPLIT-ON-SIZE —
+  * keeps every emitted file sorted and the task's files pairwise
+  * non-overlapping by construction: footer pruning granularity is then
+  * a policy knob (`option("maxRowsPerFile", n)`), not a side effect of
+  * the shuffle partition count. Each file goes through one
+  * [[CellFileWriter]]. */
+class CellDataWriter(tmpDir: String, partitionId: Int,
+                     maxRowsPerFile: Long = -1L,
+                     buckets: Option[Int] = None,
+                     verifyOrder: Boolean = false,
+                     codecs: CellCodecs = CellCodecs.DEFAULT)
+    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+  import org.apache.parquet.hadoop.metadata.CompressionCodecName
 
   private val files = scala.collection.mutable.ArrayBuffer.empty[CellFileMeta]
   // file sequence shared across sinks: names stay unique per task
   private var seq = 0
 
-  /** One open region file + its task-tracked manifest stats. The
-    * default write uses ONE sink; per-family compression (r18 — the
-    * HBase per-CF COMPRESSION descriptor) keys sinks by RESOLVED
-    * CODEC, so each emitted file is codec-pure and carries a
-    * `-z<CODEC>` name tag (omitted for the default SNAPPY — names are
-    * byte-identical to pre-r18 when no codec property is set) that
-    * travels through manifests/snapshots/clone and lets split/merge/
-    * DELETE rewrites re-encode with the same codec. Rows arrive
-    * cell-key-sorted; each sink sees a subsequence, so every emitted
-    * file keeps the declared sort order, and bucket purity holds per
-    * sink (roll on bucket change). */
+  /** The open region file of one codec. The default write uses ONE
+    * sink; per-family compression (r18 — the HBase per-CF COMPRESSION
+    * descriptor) keys sinks by RESOLVED CODEC, so each emitted file is
+    * codec-pure and carries a `-z<CODEC>` name tag (omitted for the
+    * default SNAPPY — names are byte-identical to pre-r18 when no codec
+    * property is set) that travels through manifests/snapshots/clone
+    * and lets split/merge/DELETE rewrites re-encode with the same
+    * codec. Rows arrive cell-key-sorted; each sink sees a subsequence,
+    * so every emitted file keeps the declared sort order, and bucket
+    * purity holds per sink (roll on bucket change). */
   private final class Sink(codec: CompressionCodecName) {
     private val codecTag = GraftCellCodecTag.tag(codec)
-    var writer: ParquetWriter[InternalRow] = _
-    var file: String = _
-    private var rowsInFile = 0L
-    var curBucket = -1
-    // manifest stats, tracked per file while writing (exact, not
-    // footer-derived): min/max rowkey in unsigned byte order — the
-    // same order as parquet UTF8 statistics and UTF8String comparison
-    // — plus the version TimeRange, per-CF bounds, value bounds and
-    // the NULL-rowkey count. Each getBytes call returns a fresh copy
-    // (the UnsafeRow backing is never exactly spanned), so retaining
-    // the min/max arrays is safe.
-    private var minKey: Array[Byte] = _
-    private var maxKey: Array[Byte] = _
-    private var minVer = Long.MaxValue
-    private var maxVer = Long.MinValue
-    private var minFam: Array[Byte] = _
-    private var maxFam: Array[Byte] = _
-    private var minQual: Array[Byte] = _
-    private var maxQual: Array[Byte] = _
-    private var minVal: Array[Byte] = _
-    private var maxVal: Array[Byte] = _
-    private var nullKeys = 0L
-    private var nullFams = 0L
-    private var valueBloom: Array[Byte] = _
+    private var out: CellFileWriter = _
+    private var curBucket = -1
 
-    // lazy open on first row: an empty sink commits no region file
-    private def open(): Unit = {
-      val tag = buckets.fold("")(n => GraftBucket.tag(curBucket, n))
-      file = f"$tmpDir/part-$partitionId%05d-$seq%04d$codecTag$tag.parquet"
-      seq += 1
-      writer = new CellParquetWriterBuilder(new Path(file), msgType)
-        .withConf(new Configuration())
-        .withCompressionCodec(codec)
-        .withBloomFilterEnabled("rowkey", true)
-        // r19: value bloom for row-group point skipping — NDV-capped
-        // (~5 KB) unlike the rowkey bloom's default sizing, so every
-        // small file doesn't grow by a megabyte of bitset; above 4096
-        // distinct values the FPP degrades gracefully (still sound)
-        .withBloomFilterEnabled("value", true)
-        .withBloomFilterNDV("value", 4096)
-        .build()
-      rowsInFile = 0L
-      minKey = null; maxKey = null
-      minVer = Long.MaxValue; maxVer = Long.MinValue
-      minFam = null; maxFam = null
-      minQual = null; maxQual = null
-      minVal = null; maxVal = null
-      nullKeys = 0L
-      nullFams = 0L
-      valueBloom = CellValueBloom.empty()
-    }
-
-    def roll(): Unit = if (writer != null) {
-      writer.close()
-      files += CellFileMeta(file, new java.io.File(file).length(), rowsInFile,
-        Option(minKey), Option(maxKey), msgType.toString,
-        if (minVer == Long.MaxValue) None else Some(minVer),
-        if (maxVer == Long.MinValue) None else Some(maxVer),
-        Option(minFam), Option(maxFam), Option(minQual), Option(maxQual),
-        Some(nullKeys),
-        Option(minVal).map(GraftCell.truncStatMin),
-        Option(maxVal).flatMap(GraftCell.truncStatMax),
-        nullFams = Some(nullFams),
-        valueBloom = CellValueBloom.finish(valueBloom))
-      writer = null
-    }
+    def roll(): Unit = if (out != null) { files ++= out.finish(); out = null }
 
     def write(row: InternalRow): Unit = {
       buckets.foreach { n =>
         val b = GraftBucket.of(
           if (row.isNullAt(0)) null else row.getUTF8String(0).getBytes, n)
-        if (writer != null && b != curBucket) roll()
+        if (out != null && b != curBucket) roll()
         curBucket = b
       }
-      if (writer == null) open()
-      if (row.isNullAt(0)) nullKeys += 1
-      if (row.isNullAt(1)) nullFams += 1
-      var i = 0
-      while (i < GraftCell.SCHEMA.length) {
-        if (!row.isNullAt(i)) {
-          if (GraftCell.SCHEMA(i).name == "version") {
-            val v = row.getLong(i)
-            if (v < minVer) minVer = v
-            if (v > maxVer) maxVer = v
-          } else {
-            val bytes = row.getUTF8String(i).getBytes
-            if (i == 0) { // rowkey
-              if (minKey == null ||
-                  JArrays.compareUnsigned(bytes, minKey) < 0) minKey = bytes
-              if (maxKey == null ||
-                  JArrays.compareUnsigned(bytes, maxKey) > 0) maxKey = bytes
-            } else if (i == 1) { // family
-              if (minFam == null ||
-                  JArrays.compareUnsigned(bytes, minFam) < 0) minFam = bytes
-              if (maxFam == null ||
-                  JArrays.compareUnsigned(bytes, maxFam) > 0) maxFam = bytes
-            } else if (i == 2) { // qualifier
-              if (minQual == null ||
-                  JArrays.compareUnsigned(bytes, minQual) < 0) minQual = bytes
-              if (maxQual == null ||
-                  JArrays.compareUnsigned(bytes, maxQual) > 0) maxQual = bytes
-            } else if (i == 4) { // value
-              if (minVal == null ||
-                  JArrays.compareUnsigned(bytes, minVal) < 0) minVal = bytes
-              if (maxVal == null ||
-                  JArrays.compareUnsigned(bytes, maxVal) > 0) maxVal = bytes
-              CellValueBloom.add(valueBloom, bytes)
-            }
-          }
-        }
-        i += 1
+      // lazy open on first row: an empty sink commits no region file
+      if (out == null) {
+        val tag = buckets.fold("")(n => GraftBucket.tag(curBucket, n))
+        out = new CellFileWriter(
+          f"$tmpDir/part-$partitionId%05d-$seq%04d$codecTag$tag.parquet", codec)
+        seq += 1
       }
-      // r19: the row goes to parquet DIRECTLY (CellWriteSupport) — no
-      // per-row Group tree on the connector write path anymore
-      writer.write(row)
-      rowsInFile += 1
-      if (maxRowsPerFile > 0 && rowsInFile >= maxRowsPerFile) roll()
+      out.write(row)
+      if (maxRowsPerFile > 0 && out.rowCount >= maxRowsPerFile) roll()
     }
 
-    def abort(): Unit = {
-      if (writer != null) writer.close()
-      if (file != null) { new java.io.File(file).delete(); () }
-    }
+    def abort(): Unit = if (out != null) { out.abort(); out = null }
   }
 
   // default path: ONE sink (file names and behavior byte-identical to
@@ -5878,12 +5681,6 @@ class CellDataWriter(tmpDir: String, partitionId: Int,
   private var prevQual: Array[Byte] = _
   private var prevVer: java.lang.Long = _
   private var verifySeen = false
-  // nulls-first ascending — the declared write ordering's null order
-  private def cmpNf(a: Array[Byte], b: Array[Byte]): Int =
-    if (a == null && b == null) 0
-    else if (a == null) -1
-    else if (b == null) 1
-    else JArrays.compareUnsigned(a, b)
   private def checkOrder(row: InternalRow): Unit = {
     def bytesAt(i: Int): Array[Byte] =
       if (row.isNullAt(i)) null else row.getUTF8String(i).getBytes
@@ -5895,9 +5692,9 @@ class CellDataWriter(tmpDir: String, partitionId: Int,
       prevBucket = b
     }
     if (verifySeen) {
-      var c = cmpNf(kb, prevKey)
-      if (c == 0) c = cmpNf(fb, prevFam)
-      if (c == 0) c = cmpNf(qb, prevQual)
+      var c = GraftCell.compareNullsFirst(kb, prevKey)
+      if (c == 0) c = GraftCell.compareNullsFirst(fb, prevFam)
+      if (c == 0) c = GraftCell.compareNullsFirst(qb, prevQual)
       if (c == 0) c = (prevVer, vv) match {
         case (null, null) => 0
         case (null, _)    => 1

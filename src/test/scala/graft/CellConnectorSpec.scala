@@ -16,6 +16,47 @@ class CellConnectorSpec extends AnyFunSuite {
   private def b(x: String): Array[Byte] =
     x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
+  /** Asserts that each manifest entry is exactly what its file says:
+    * every field the footer re-derivation can produce (row count,
+    * bytes, rowkey/family/qualifier/version bounds, NULL rowkey and
+    * family counts, truncated value bounds, message type) and, where a
+    * value bloom is present, that it admits every non-null value the
+    * file holds. */
+  private def assertFooterTruth(
+      metas: Seq[graft.sources.cell.CellFileMeta]): Unit = {
+    import graft.sources.cell.{CellFooterCache, CellValueBloom}
+    import org.apache.parquet.schema.MessageTypeParser
+    assert(metas.nonEmpty, "no region files to check")
+    def same(x: Option[Array[Byte]], y: Option[Array[Byte]]) =
+      x.map(_.toSeq) == y.map(_.toSeq)
+    metas.foreach { m =>
+      val f = CellFooterCache.metaOfFooter(m.path)
+      assert(m.path == f.path && m.rowCount == f.rowCount &&
+             m.bytes == f.bytes, s"meta mismatch $m vs $f")
+      assert(same(m.minKey, f.minKey) && same(m.maxKey, f.maxKey),
+             s"rowkey stats mismatch $m vs $f")
+      assert(m.minVer == f.minVer && m.maxVer == f.maxVer,
+             s"version stats mismatch $m vs $f")
+      assert(same(m.minFam, f.minFam) && same(m.maxFam, f.maxFam),
+             s"family stats mismatch $m vs $f")
+      assert(same(m.minQual, f.minQual) && same(m.maxQual, f.maxQual),
+             s"qualifier stats mismatch $m vs $f")
+      assert(m.nullKeys == f.nullKeys && m.nullFams == f.nullFams,
+             s"null counts mismatch $m vs $f")
+      assert(same(m.minVal, f.minVal) && same(m.maxVal, f.maxVal),
+             s"value stats mismatch $m vs $f")
+      assert(MessageTypeParser.parseMessageType(m.messageType) ==
+             MessageTypeParser.parseMessageType(f.messageType))
+      m.valueBloom.foreach { bloom =>
+        val values = s.read.parquet(m.path).select("value").collect()
+          .flatMap(r => Option(r.getString(0)))
+        val missed = values.filterNot(v => CellValueBloom.mayContain(bloom, b(v)))
+        assert(missed.isEmpty,
+               s"value bloom of ${m.path} rejects ${missed.toSeq}")
+      }
+    }
+  }
+
   // ---- pure pruning math -------------------------------------------------
 
   test("prefixStop increments the last non-0xFF byte (HBase stopRow)") {
@@ -1759,6 +1800,7 @@ class CellConnectorSpec extends AnyFunSuite {
            sp(0).getLong(2) == 2L, s"split summary: ${sp.toSeq}")
     val metas = CellFooterCache.filesOf(store)
     assert(metas.size == 2)
+    assertFooterTruth(metas)
     // cut exactly at the key, halves disjoint and tight
     val spans = metas.map(m => (new String(m.minKey.get),
                                 new String(m.maxKey.get))).sortBy(_._1)
@@ -1794,7 +1836,8 @@ class CellConnectorSpec extends AnyFunSuite {
     // per-file (rowkey, family, qualifier, version) sort order
     val rows = for {
       k <- Seq("aa", "bb", "cc"); q <- Seq("q1", "q2", "q3")
-    } yield org.apache.spark.sql.Row(k, "d", q, 1L, s"$k/$q")
+    } yield org.apache.spark.sql.Row(k, if (k == "cc") null else "d", q, 1L,
+                                     s"$k/$q")
     s.createDataFrame(rows.asJava, GraftCell.SCHEMA).coalesce(1)
       .write.format("graftcell").option("maxRowsPerFile", "4")
       .mode("append").save(store)
@@ -1812,6 +1855,7 @@ class CellConnectorSpec extends AnyFunSuite {
     // parquet row order is (rowkey, family, qualifier, version)-sorted
     val merged = CellFooterCache.filesOf(store)
     assert(merged.size == 1)
+    assertFooterTruth(merged)
     val raw = s.read.parquet(merged.head.path)
       .select("rowkey", "qualifier").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
@@ -2227,12 +2271,11 @@ class CellConnectorSpec extends AnyFunSuite {
 
   test("persisted manifest: plans with ZERO footer opens; stats exactly the footer truth") {
     import graft.sources.cell.{CellFooterCache, CellManifest}
-    import org.apache.parquet.schema.MessageTypeParser
     import scala.collection.JavaConverters._
     val store = java.nio.file.Files
       .createTempDirectory("graft_manifest_spec_").toString + "/t"
-    val rows = ('a' to 't').map(c =>
-      org.apache.spark.sql.Row(c.toString, "d", "q", c.toLong, s"v$c"))
+    val rows = ('a' to 't').map(c => org.apache.spark.sql.Row(c.toString,
+      if (c == 'k') null else "d", "q", c.toLong, s"v$c"))
     s.createDataFrame(rows.asJava, GraftCell.SCHEMA)
       .write.format("graftcell").option("maxRowsPerFile", "5")
       .mode("append").save(store)
@@ -2264,27 +2307,8 @@ class CellConnectorSpec extends AnyFunSuite {
     val viaFooters = CellFooterCache.filesOf(store)
     assert(CellFooterCache.footerOpens.get() > opens0,
       "legacy fallback did not open footers")
-    val a = viaManifest.sortBy(_.path)
-    val b = viaFooters.sortBy(_.path)
-    assert(a.size == b.size)
-    a.zip(b).foreach { case (m, f) =>
-      assert(m.path == f.path && m.rowCount == f.rowCount &&
-             m.bytes == f.bytes, s"meta mismatch $m vs $f")
-      assert(m.minKey.map(_.toSeq) == f.minKey.map(_.toSeq) &&
-             m.maxKey.map(_.toSeq) == f.maxKey.map(_.toSeq),
-             s"rowkey stats mismatch $m vs $f")
-      assert(m.minVer == f.minVer && m.maxVer == f.maxVer,
-             s"version stats mismatch $m vs $f")
-      // r16: family/qualifier stats ride the same manifest entries
-      assert(m.minFam.map(_.toSeq) == f.minFam.map(_.toSeq) &&
-             m.maxFam.map(_.toSeq) == f.maxFam.map(_.toSeq),
-             s"family stats mismatch $m vs $f")
-      assert(m.minQual.map(_.toSeq) == f.minQual.map(_.toSeq) &&
-             m.maxQual.map(_.toSeq) == f.maxQual.map(_.toSeq),
-             s"qualifier stats mismatch $m vs $f")
-      assert(MessageTypeParser.parseMessageType(m.messageType) ==
-             MessageTypeParser.parseMessageType(f.messageType))
-    }
+    assert(viaManifest.map(_.path).sorted == viaFooters.map(_.path).sorted)
+    assertFooterTruth(viaManifest)
   }
 
   test("qualifier/family manifest stats prune whole generations (r16)") {
@@ -2334,8 +2358,9 @@ class CellConnectorSpec extends AnyFunSuite {
     import scala.collection.JavaConverters._
     val store = java.nio.file.Files
       .createTempDirectory("graft_manifest_del_spec_").toString + "/t"
-    val rows = ('a' to 't').map(c =>
-      org.apache.spark.sql.Row(c.toString, "d", "q", 1L, s"v$c"))
+    // 'd' has a NULL family and survives into the rewritten file
+    val rows = ('a' to 't').map(c => org.apache.spark.sql.Row(c.toString,
+      if (c == 'd') null else "d", "q", 1L, s"v$c"))
     s.createDataFrame(rows.asJava, GraftCell.SCHEMA)
       .write.format("graftcell").option("maxRowsPerFile", "5")
       .mode("append").save(store)
@@ -2354,13 +2379,7 @@ class CellConnectorSpec extends AnyFunSuite {
     val minKey = metas.flatMap(_.minKey).map(new String(_)).min
     assert(minKey == "c", s"stale min key $minKey")
     // and the remembered stats match a footer re-derivation exactly
-    val dirName = CellFooterCache.committedDirs(store).head
-    assert(new java.io.File(new java.io.File(store, dirName),
-      graft.sources.cell.CellManifest.NAME).delete())
-    CellFooterCache.invalidate(store)
-    val viaFooters = CellFooterCache.filesOf(store)
-    assert(metas.sortBy(_.path).map(m => (m.path, m.rowCount, m.bytes)) ==
-           viaFooters.sortBy(_.path).map(m => (m.path, m.rowCount, m.bytes)))
+    assertFooterTruth(metas)
   }
 
   test("sinceSnapshot plans ONLY post-snapshot generations; between-windows are reproducible (r16)") {
