@@ -28,6 +28,10 @@ object CellConnector extends QueryModule {
   private def storePath(dir: String): String =
     "/tmp/graft_cellstore_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
 
+  /** Warehouse root of the sf-dir's `graftcat` catalog tables. */
+  private def warehouse(dir: String): String =
+    "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+
   /** Stage the event-cell store once per sf-dir (write-once marker like
     * Sources staging). Pre-split on the first rowkey byte — explicit,
     * data-independent split points, so the layout is deterministic —
@@ -87,11 +91,7 @@ object CellConnector extends QueryModule {
     val fp = srcFp(dir)
     val marker = new java.io.File(path, markerName)
     if (!markerUpToDate(marker, fp)) {
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-        f.delete(); ()
-      }
-      rec(new java.io.File(path))
+      FileUtils.deleteQuietly(new java.io.File(path))
       graft.sources.cell.CellFooterCache.invalidate(path)
       body
       stampMarker(marker, fp)
@@ -138,9 +138,7 @@ object CellConnector extends QueryModule {
   private def stageGiTable(s: org.apache.spark.sql.SparkSession,
                            dir: String): Unit = {
     registerCatalog(s, dir)
-    val marker = new java.io.File(
-      "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_"),
-      "_GI_STAGED")
+    val marker = new java.io.File(warehouse(dir), "_GI_STAGED")
     if (markerUpToDate(marker, srcFp(dir))) return
     CellQueries.eventCells(s, dir)
       .createOrReplaceTempView("graft_catalog_src")
@@ -189,7 +187,7 @@ object CellConnector extends QueryModule {
                           tables: Seq[String])(stage: => Unit): Unit = {
     registerCatalog(s, dir)
     val wtag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val wh = new java.io.File(s"/tmp/graft_catalog_$wtag")
+    val wh = new java.io.File(warehouse(dir))
     val proto = new java.io.File(s"/tmp/graft_proto_$wtag/$tag")
     val marker = new java.io.File(proto, "_PROTO_READY")
     val fp = srcFp(dir)
@@ -244,8 +242,7 @@ object CellConnector extends QueryModule {
                               dir: String): Unit = {
     s.conf.set("spark.sql.catalog.graftcat",
                classOf[graft.sources.cell.GraftCellCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftcat.root",
-               "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    s.conf.set("spark.sql.catalog.graftcat.root", warehouse(dir))
   }
 
   /** Stage the metadata-table fixture `graftcat.events_meta` — shared
@@ -262,9 +259,7 @@ object CellConnector extends QueryModule {
   private def stageMetaTable(s: org.apache.spark.sql.SparkSession,
                              dir: String): Unit = {
     registerCatalog(s, dir)
-    val marker = new java.io.File(
-      "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_"),
-      "_META_STAGED")
+    val marker = new java.io.File(warehouse(dir), "_META_STAGED")
     if (markerUpToDate(marker, srcFp(dir))) return
     CellQueries.eventCells(s, dir)
       .createOrReplaceTempView("graft_catalog_src")
@@ -297,9 +292,7 @@ object CellConnector extends QueryModule {
   private def stageSpjTables(s: org.apache.spark.sql.SparkSession,
                              dir: String): Unit = {
     registerCatalog(s, dir)
-    val marker = new java.io.File(
-      "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_"),
-      "_SPJ_STAGED")
+    val marker = new java.io.File(warehouse(dir), "_SPJ_STAGED")
     if (markerUpToDate(marker, srcFp(dir))) return
     CellQueries.eventCells(s, dir)
       .createOrReplaceTempView("graft_catalog_src")
@@ -804,9 +797,7 @@ object CellConnector extends QueryModule {
       // O(table).
       registerCatalog(s, dir)
       val src = stageCdc(s, dir)
-      val warehouse =
-        "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      stagedOnce(dir, s"$warehouse/events_apply", "_APPLY_DONE") {
+      stagedOnce(dir, s"${warehouse(dir)}/events_apply", "_APPLY_DONE") {
         CellQueries.eventCells(s, dir)
           .createOrReplaceTempView("graft_catalog_src")
         s.sql("""CREATE TABLE IF NOT EXISTS graftcat.events_apply (
@@ -1087,8 +1078,7 @@ object CellConnector extends QueryModule {
       CellQueries.eventCells(s, dir)
         .createOrReplaceTempView("graft_catalog_src")
       graft.sources.cell.GraftCellSnapshot.create(
-        "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-          "/events_tt", "s1")
+        warehouse(dir) + "/events_tt", "s1")
       s.sql("""INSERT INTO graftcat.events_tt
                SELECT rowkey, family, qualifier,
                       version + 1000000 AS version,
@@ -1273,8 +1263,7 @@ object CellConnector extends QueryModule {
       pristineEventsTable(s, dir, "events_tts")
       CellQueries.eventCells(s, dir)
         .createOrReplaceTempView("graft_catalog_src")
-      val store = "/tmp/graft_catalog_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_") + "/events_tts"
+      val store = warehouse(dir) + "/events_tts"
       val t1 = graft.sources.cell.CellFooterCache.committedDirs(store)
         .map(d => graft.sources.cell.CellManifest.commitStampOf(store, d))
         .max
@@ -1315,8 +1304,7 @@ object CellConnector extends QueryModule {
       pristineEventsTable(s, dir, "events_tta")
       CellQueries.eventCells(s, dir)
         .createOrReplaceTempView("graft_catalog_src")
-      val store = "/tmp/graft_catalog_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_") + "/events_tta"
+      val store = warehouse(dir) + "/events_tta"
       // re-staged each run: the previous run's snapshot must not keep
       // pinning era-1 dirs of an older generation
       scala.util.Try(s.sql(
@@ -2215,11 +2203,7 @@ object CellConnector extends QueryModule {
                       concat(value, '#JUNK') AS value
                FROM graft_catalog_src WHERE rowkey >= '6'""")
       val dest = "/tmp/graft_export_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-        f.delete(); ()
-      }
-      rec(new java.io.File(dest))
+      FileUtils.deleteQuietly(new java.io.File(dest))
       graft.sources.cell.CellFooterCache.invalidate(dest)
       s.sql(s"CALL graftcat.export_snapshot('events_exp', 'bak', '$dest')")
       s.read.format("graftcell").load(dest)
@@ -2255,11 +2239,7 @@ object CellConnector extends QueryModule {
                       concat(value, '#JUNK') AS value
                FROM graft_catalog_src WHERE rowkey < '2'""")
       val dest = "/tmp/graft_exportinc_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-        f.delete(); ()
-      }
-      rec(new java.io.File(dest))
+      FileUtils.deleteQuietly(new java.io.File(dest))
       graft.sources.cell.CellFooterCache.invalidate(dest)
       s.sql(s"CALL graftcat.export_snapshot('events_expi', 'b2', '$dest', 'b1')")
       s.read.format("graftcell").load(dest)
@@ -2303,11 +2283,7 @@ object CellConnector extends QueryModule {
         ()
       }
       val dest = "/tmp/graft_bulkload_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-        f.delete(); ()
-      }
-      rec(new java.io.File(dest))
+      FileUtils.deleteQuietly(new java.io.File(dest))
       graft.sources.cell.CellFooterCache.invalidate(dest)
       s.sql(s"CALL graftcat.export_snapshot('events_bl', 'ship', '$dest')")
       s.sql(s"CALL graftcat.bulkload('events_bl2', '$dest')")
@@ -2354,8 +2330,7 @@ object CellConnector extends QueryModule {
         // compaction collapses to ONE live generation; 'hpin''s pinned
         // generations move to _archive/ and the snapshot STAYS VALID
         s.sql("CALL graftcat.compact('events_hb')")
-        val store = "/tmp/graft_catalog_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_") + "/events_hb"
+        val store = warehouse(dir) + "/events_hb"
         val d = graft.sources.cell.CellFooterCache.committedDirs(store)
         assert(d.size == 1, s"expected one compacted dir, got $d")
         val dirFile = new java.io.File(store, d.head)
@@ -2404,8 +2379,7 @@ object CellConnector extends QueryModule {
       // invocation restores the pristine legacy state by file copy);
       // the upgrade + MVCC protocol below runs per invocation
       val src = CellQueries.eventCells(s, dir)
-      val store = "/tmp/graft_catalog_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_") + "/events_upg"
+      val store = warehouse(dir) + "/events_upg"
       protoTables(s, dir, "events_upg", Seq("events_upg")) {
         s.sql("DROP TABLE IF EXISTS graftcat.events_upg")
         s.sql("""CREATE TABLE graftcat.events_upg (
@@ -2683,9 +2657,7 @@ object CellConnector extends QueryModule {
       // per invocation (a matching rebuild is a full overwrite landing
       // on the same rows, spec-pinned idempotent), as do both probes.
       registerCatalog(s, dir)
-      val ciMarker = new java.io.File(
-        "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_"),
-        "_CI_STAGED")
+      val ciMarker = new java.io.File(warehouse(dir), "_CI_STAGED")
       if (!markerUpToDate(ciMarker, srcFp(dir))) {
         CellQueries.eventCells(s, dir)
           .createOrReplaceTempView("graft_ci_src")
@@ -2890,9 +2862,7 @@ object CellConnector extends QueryModule {
       // forced every GI consumer to restage per invocation); the probe
       // + no-route plan pin still run per invocation.
       registerCatalog(s, dir)
-      val marker = new java.io.File(
-        "/tmp/graft_catalog_" + dir.replaceAll("[^A-Za-z0-9.]", "_"),
-        "_ARS_STAGED")
+      val marker = new java.io.File(warehouse(dir), "_ARS_STAGED")
       if (!markerUpToDate(marker, srcFp(dir))) {
         CellQueries.eventCells(s, dir)
           .createOrReplaceTempView("graft_ars_src")
@@ -2945,8 +2915,7 @@ object CellConnector extends QueryModule {
       // else. Metadata-only driver work: O(intent files) deletions.
       // r21: the staged CRASH STATE is the fixture — proto-copied;
       // CALL repair (the verb) and its protocol pins run per invocation
-      val store = "/tmp/graft_catalog_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_") + "/events_rp"
+      val store = warehouse(dir) + "/events_rp"
       val fc = graft.sources.cell.CellFooterCache
       protoTables(s, dir, "events_rp", Seq("events_rp")) {
         CellQueries.eventCells(s, dir)
@@ -3044,8 +3013,7 @@ object CellConnector extends QueryModule {
                  FROM graft_catalog_src WHERE rowkey >= '6'""")
         // compaction archives 'vpin''s generations; the snapshot LIVES
         s.sql("CALL graftcat.compact('events_vc')")
-        val store = "/tmp/graft_catalog_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_") + "/events_vc"
+        val store = warehouse(dir) + "/events_vc"
         val d = graft.sources.cell.CellFooterCache.committedDirs(store)
         assert(d.size == 1, s"expected one compacted dir, got $d")
         java.nio.file.Files.write(

@@ -309,9 +309,10 @@ object CellArchive {
   /** Retire a whole live dir: ONE rename into the archive when pinned
     * (fast path — manifest and stats travel with it), a link-merge when
     * part of the dir was archived earlier, plain delete when no
-    * snapshot pins it. Two callers: a replacement publish, for what its
-    * replaced dirs still hold after their files retired (data-less
-    * markers), and minor compaction, for its merged victims. Callers
+    * snapshot pins it. Two callers: [[CellRetire.complete]], the one
+    * completion path of every replacing publish, for what the replaced
+    * dirs still hold after their files retired (data-less markers,
+    * empty batches), and minor compaction, for its merged victims. Callers
     * retiring MANY dirs pass a pre-computed `pinned` map (one manifest
     * parse per operation, not per dir). `supersededAt` (≥ 0) is the
     * commit stamp of the generation that REPLACED this one — recorded

@@ -2,6 +2,7 @@ package graft.sources.cell
 
 import java.util.{Map => JMap}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -431,11 +432,7 @@ class GraftCellCatalog extends TableCatalog
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
     if (!marker(dir).exists()) return false
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-      f.delete(); ()
-    }
-    rec(dir)
+    FileUtils.deleteQuietly(dir)
     CellFooterCache.invalidate(dir.getPath)
     true
   }
@@ -572,11 +569,7 @@ class GraftCellCatalog extends TableCatalog
       throw new org.apache.spark.sql.catalyst.analysis
         .NonEmptyNamespaceException(namespace)
     tables.foreach(dropTable)
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-      f.delete(); ()
-    }
-    rec(nsDir(namespace))
+    FileUtils.deleteQuietly(nsDir(namespace))
     true
   }
 

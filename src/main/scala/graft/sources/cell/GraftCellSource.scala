@@ -887,13 +887,19 @@ class GraftCellTable(path: String,
     * granular: footer pruning selects ONLY the region files the
     * predicate can touch (a rowkey-range delete on a 100 TB table
     * plans exactly the overlapping regions), then one distributed task
-    * per victim file rewrites it in place without the matching rows
-    * (tmp + atomic same-name rename; an all-rows-matched file is
-    * simply removed). Accepted-filter semantics are the scan's own
-    * `eval` (a NULL predicate keeps the row — SQL DELETE deletes only
-    * WHERE = TRUE). Like compaction, this is single-writer store
-    * maintenance: concurrent snapshots pinning the rewritten dirs are
-    * invalidated, and the footer cache is refreshed at the end. */
+    * per victim file writes it again without the matching rows (an
+    * all-rows-matched file is simply removed). In a manifest-bearing
+    * dir the rewrite gets a fresh `-rK` name, and the dir's
+    * [[CellRewriteIntent]] is written before anything becomes visible;
+    * [[CellRewriteIntent.complete]] then archives snapshot-pinned
+    * originals, logs the rename in the travel log, swaps the manifest
+    * and deletes the originals — the one completion path, which
+    * `CALL repair` also runs after a crash. A legacy manifest-less dir
+    * is rewritten in place (tmp + atomic same-name rename). Accepted-
+    * filter semantics are the scan's own `eval` (a NULL predicate keeps
+    * the row — SQL DELETE deletes only WHERE = TRUE). Like compaction,
+    * this is single-writer store maintenance; the footer cache is
+    * refreshed at the end. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(GraftCell.acceptable)
 
@@ -931,7 +937,6 @@ class GraftCellTable(path: String,
         .map { case (f, inPlace) =>
           CellDeleteRewrite.rewriteFile(f, filters, inPlace) }
         .collect()
-      lazy val pinned = CellArchive.pins(path) // once per statement
       // every rename is a travel-log event pair (r18 — same
       // total-or-loud contract as the group-replace DML path): the OLD
       // name retires at the rename stamp (a clock travel into an
@@ -940,34 +945,17 @@ class GraftCellTable(path: String,
       // reads post-DELETE content), and the NEW name is BORN at the
       // rename stamp (it never claims windows from before it existed).
       // A per-dir REWRITE INTENT (r19, [[CellRewriteIntent]]) persists
-      // the whole planned sequence FIRST, so a crash anywhere between
-      // the log append and the manifest swap is crash-completed by
-      // `CALL repair` instead of leaving the log asserting a rename
-      // that never became visible.
+      // the whole planned rename FIRST; its `complete` then carries it
+      // out, the same call `CALL repair` makes after a crash. Legacy
+      // dirs have no manifest to swap: their tasks rewrote in place.
       lazy val renameStamp = CellManifest.nextCommitStamp(path)
-      results.groupBy(r => new java.io.File(r._1).getParent).foreach {
-        case (dirPath, rs) =>
+      results.groupBy(r => new java.io.File(r._1).getParent)
+        .filter { case (dirPath, _) => manifested.contains(dirPath) }
+        .foreach { case (dirPath, rs) =>
           val dir = new java.io.File(dirPath)
-          if (manifested.contains(dirPath)) {
-            val olds = rs.map(r => new java.io.File(r._1).getName)
-            val news = rs.flatMap(_._2)
-              .map(m => new java.io.File(m.path).getName)
-            CellRewriteIntent.write(dir, renameStamp, rs.toSeq)
-            CellArchive.archiveRetiring(path, dir.getName, olds.toSet,
-                                        pinned)
-            CellTravelLog.retire(path, dir.getName,
-              CellManifest.commitStampOf(path, dir.getName), olds,
-              renameStamp)
-            CellTravelLog.born(path, dir.getName, news, renameStamp)
-          }
-          CellManifest.applyRewrite(dir,
-            removed = rs.collect { case (p, None) => p }.toSet,
-            replaced = rs.collect { case (p, Some(m)) => p -> m }.toMap)
-          if (manifested.contains(dirPath)) {
-            rs.foreach { case (p, _) => new java.io.File(p).delete() }
-            CellRewriteIntent.clear(dir)
-          }
-      }
+          CellRewriteIntent.write(dir, renameStamp, rs.toSeq)
+          CellRewriteIntent.complete(path, dir)
+        }
     }
     CellFooterCache.invalidate(path)
   }
@@ -1338,11 +1326,7 @@ object GraftCellSnapshot {
     if (destDir.exists()) {
       val entries = Option(destDir.listFiles).getOrElse(Array.empty)
       if (intent.exists()) { // crashed earlier export: wipe and redo
-        def rec(f: java.io.File): Unit = {
-          Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-          f.delete(); ()
-        }
-        rec(destDir)
+        FileUtils.deleteQuietly(destDir)
       } else require(entries.isEmpty,
         s"graftcell: destination $dest exists and is not a graftcell " +
         "export in progress — refusing to overwrite")
@@ -1958,17 +1942,17 @@ object GraftCellMaintenance {
     * writes, truncate overwrites, group-replace DML, maintenance) goes
     * through it. `newFiles` (already written to a tmp location; may be
     * empty) move into a hidden `_stage_*` dir with their manifest and,
-    * when anything is replaced, a RETIRE INTENT listing `replaced` plus
-    * every file of `replacedDirs`; ONE rename to `dest` (a `batch_*`
-    * name) makes the batch visible. Readers list non-hidden dirs only,
-    * so a visible batch dir is always complete, and from the rename
-    * onward batch readers exclude the replaced files. The second half
-    * (archive snapshot-pinned victims, delete the replaced files, fold
-    * their dirs' manifests, drop dirs emptied of data, retire what is
-    * left of `replacedDirs`) is completed by `CALL repair` if
-    * interrupted. A plain append (nothing replaced) stops at the
-    * rename. Single-writer, like compaction. Returns the commit stamp
-    * (the travel-log superseding point). */
+    * when anything is replaced, a RETIRE INTENT ([[CellRetire]]) listing
+    * `replaced` plus every file of `replacedDirs`, and `replacedDirs`
+    * themselves; ONE rename to `dest` (a `batch_*` name) makes the
+    * batch visible. Readers list non-hidden dirs only, so a visible
+    * batch dir is always complete, and from the rename onward batch
+    * readers exclude the replaced files. [[CellRetire.complete]] then
+    * retires what the intent lists — the same call `CALL repair` makes
+    * if a crash stops the publish after the rename. A plain append
+    * (nothing replaced) stops at the rename. Single-writer, like
+    * compaction. Returns the commit stamp (the travel-log superseding
+    * point). */
   private[cell] def publishReplacement(store: String, dest: String,
                                        newFiles: Seq[CellFileMeta],
                                        replaced: Seq[String] = Nil,
@@ -1991,41 +1975,11 @@ object GraftCellMaintenance {
     CellManifest.write(stage, commitStamp, newFiles)
     val victims = replaced ++ replacedDirs
       .flatMap(d => CellFooterCache.filesUnder(store, d)).map(_.path)
-    // the intent carries archive=true so a crash-completing repair
-    // archives snapshot-pinned victims exactly like the inline path
-    if (victims.nonEmpty) CellRetire.write(stage, victims, archive = true)
+    val replacing = victims.nonEmpty || replacedDirs.nonEmpty
+    if (replacing) CellRetire.write(stage, victims, replacedDirs)
     java.nio.file.Files.move(stage.toPath, destDir.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (victims.nonEmpty || replacedDirs.nonEmpty) {
-      val pinned = CellArchive.pins(store) // once per publish, not per dir
-      victims.groupBy(f => new java.io.File(f).getParent).foreach {
-        case (dirPath, files) =>
-          val dir = new java.io.File(dirPath)
-          val names = files.map(f => new java.io.File(f).getName)
-          // travel log (r18): the victims leave the view, superseded by
-          // this publish — total-or-loud TIMESTAMP AS OF over the rewrite
-          CellTravelLog.retire(store, dir.getName,
-            CellManifest.commitStampOf(store, dir.getName), names,
-            commitStamp)
-          CellArchive.archiveRetiring(store, dir.getName, names.toSet, pinned)
-          files.foreach(f => new java.io.File(f).delete())
-          CellManifest.applyRewrite(dir, files.toSet, Map.empty)
-          // a dir emptied of data files is retired with its metadata
-          val remaining = Option(dir.listFiles).getOrElse(Array.empty)
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          if (remaining.isEmpty && dir.getName != dest) FileUtils.deleteQuietly(dir)
-      }
-      // what a replaced dir still holds is no view data (an older
-      // truncate/restore marker, an empty batch): retire it too, so
-      // the replaced dirs leave the live set entirely (archived if a
-      // snapshot pins them); the footer cache still lists the files
-      // deleted above
-      CellFooterCache.invalidate(store)
-      replacedDirs.filterNot(_ == dest).map(new java.io.File(store, _))
-        .filter(_.isDirectory)
-        .foreach(d => CellArchive.retireDir(store, d, pinned))
-      CellRetire.clear(destDir)
-    }
+    if (replacing) CellRetire.complete(store, destDir)
     java.nio.file.Files.write(new java.io.File(store, "_SUCCESS").toPath,
                               Array.emptyByteArray)
     CellFooterCache.invalidate(store)
@@ -2312,67 +2266,6 @@ object GraftCellMaintenance {
     (dirs, files, rows)
   }
 
-  /** HBCK — HBase's `hbck` consistency report, REPORT-ONLY (it mutates
-    * nothing; `CALL repair` / re-staging are the fix verbs). Pure
-    * driver-side metadata — O(file names), zero data bytes — so it is
-    * cheap at any store size:
-    *
-    *  - `missing_files`: manifest entries whose region file is GONE
-    *    from disk (corruption — reads of that dir would fail);
-    *  - `orphan_files`: disk parquet files a manifest does NOT list
-    *    (invisible to reads — the manifest is authoritative — but
-    *    occupying space; a crashed pre-manifest writer's leavings);
-    *  - `pending_intents`: committed dirs carrying `_retire.json`
-    *    (an interrupted group-replace — readers already exclude the
-    *    listed files; `CALL repair` completes the deletion);
-    *  - `invalid_snapshots`: snapshot manifests pinning dirs a later
-    *    compaction removed (reads partially empty, restore refused);
-    *  - `stale_tmp_dirs`: `_stage_*` / `_tmp_*` root dirs a crashed
-    *    maintenance op left behind (invisible to reads, reclaimable).
-    *
-    *  - `lost_travel_windows` (r18): distinct supersession points in
-    *    the travel log whose window can no longer be reconstructed
-    *    (probed at the last instant before each supersession) — the
-    *    historical timestamps a `TIMESTAMP AS OF` would refuse, so an
-    *    operator learns about lost history from the admin verb, not
-    *    from a refused query.
-    *
-    * Manifest-less (legacy) dirs have no declared file set to check
-    * against and contribute nothing. Returns (dirs, missing, orphans,
-    * pending intents, invalid snapshots, stale tmp dirs, unreferenced
-    * archived, lost travel windows). */
-  /** UPGRADE MANIFESTS (r19 — VERDICT r18 #2, retiring the legacy-dir
-    * caveat class): every committed dir WITHOUT `_manifest.json` (a
-    * pre-manifest ingest, e.g. the plain-parquet stager's `region=k`
-    * layout) gets one derived from its parquet footers — exact per-file
-    * stats computed EXECUTOR-side (one task per file, the footers never
-    * pass through the driver), committed at the dir's mtime stamp (the
-    * exact value `commitStampOf` already reported for it, so no travel
-    * window shifts) and published by the same atomic tmp+rename as
-    * every manifest. After the upgrade the store is manifest-complete:
-    * write-once (dir, name), MVCC under DML, total-or-loud clock
-    * travel, and zero-footer planning hold STORE-WIDE — the documented
-    * "legacy dirs rewrite in place" caveat has nothing left to apply
-    * to. Idempotent; returns (dirs upgraded, files indexed). */
-  /** GLOBAL SECONDARY INDEX bulk build (r19 — the Phoenix
-    * global-index shape): materialize a VALUE-addressable twin of one
-    * (family, qualifier) column as its own cell store. Index cells:
-    * rowkey = `value ++ 0x00 ++ base_rowkey` (the Phoenix
-    * variable-length separator — value-prefix scans seek the index
-    * exactly like rowkey scans seek the base), family `i`, qualifier
-    * `r`, the base cell's version, and the BASE ROWKEY as the value —
-    * a covered back-pointer, so probe → base multiget needs no third
-    * hop. ONE distributed pass: connector read of the base (family +
-    * qualifier predicates pushed; NULL keys/values excluded — they are
-    * not seekable), projection, truncate-commit through the declared
-    * sorted HFile layout, so the index store carries the same tight
-    * per-file [min,max] stats and blooms every graftcell table gets —
-    * the probe's prefix prune IS the ordinary file-pruning machinery.
-    * Rebuild = same call again (overwrite; deterministic). At 100 TB
-    * this is Phoenix's ASYNC index MR build re-expressed as one Spark
-    * plan; incremental maintenance composes from the sinceSnapshot
-    * delta scan the same way `sql_cell_sync` replicates. Returns the
-    * indexed cell count (from the fresh manifest — no second pass). */
   /** The SYNC SNAPSHOT a build pins on the base store: the exact view
     * the index covers, and the boundary `syncIndex` reads its delta
     * from. Keyed by the index store's leaf name PLUS a hash of its
@@ -2494,6 +2387,25 @@ object GraftCellMaintenance {
     }
   }
 
+  /** GLOBAL SECONDARY INDEX bulk build (r19 — the Phoenix
+    * global-index shape): materialize a VALUE-addressable twin of one
+    * (family, qualifier) column as its own cell store. Index cells:
+    * rowkey = `value ++ 0x00 ++ base_rowkey` (the Phoenix
+    * variable-length separator — value-prefix scans seek the index
+    * exactly like rowkey scans seek the base), family `i`, qualifier
+    * `r`, the base cell's version, and the BASE ROWKEY as the value —
+    * a covered back-pointer, so probe → base multiget needs no third
+    * hop. ONE distributed pass: connector read of the base (family +
+    * qualifier predicates pushed; NULL keys/values excluded — they are
+    * not seekable), projection, truncate-commit through the declared
+    * sorted HFile layout, so the index store carries the same tight
+    * per-file [min,max] stats and blooms every graftcell table gets —
+    * the probe's prefix prune IS the ordinary file-pruning machinery.
+    * Rebuild = same call again (overwrite; deterministic). At 100 TB
+    * this is Phoenix's ASYNC index MR build re-expressed as one Spark
+    * plan; incremental maintenance composes from the sinceSnapshot
+    * delta scan the same way `sql_cell_sync` replicates. Returns the
+    * indexed cell count (from the fresh manifest — no second pass). */
   def buildIndex(spark: org.apache.spark.sql.SparkSession,
                  baseStore: String, idxStore: String,
                  family: String, qualifier: String,
@@ -2649,6 +2561,25 @@ object GraftCellMaintenance {
     * and the rebuild's one distributed pass is the cheaper plan. */
   private val IDX_SYNC_MAX_DELETES = 10000
 
+  /** ADOPT an r19-era legacy boundary (`__idx_sync_<leaf>`, no path
+    * hash) for this index: rename it to the current path-keyed name so
+    * the sync lifecycle RESUMES instead of forcing a full rebuild, and
+    * so the legacy pin cannot linger unreclaimed next to the new-name
+    * boundary a rebuild would have created (ADVICE r20 low). Only a
+    * boundary whose recorded owner IS this index (or an ownerless
+    * legacy pin) is adopted. */
+  private def adoptLegacyBoundary(baseStore: String,
+                                  idxStore: String): Unit = {
+    val cur = idxSyncSnapshot(idxStore)
+    val legacy = s"__idx_sync_${new java.io.File(idxStore).getName}"
+    if (legacy != cur &&
+        !new java.io.File(baseStore, s"_snapshot_$cur.json").exists() &&
+        new java.io.File(baseStore, s"_snapshot_$legacy.json").exists() &&
+        GraftCellSnapshot.ownerOf(baseStore, legacy)
+          .forall(_ == new java.io.File(idxStore).getAbsolutePath))
+      GraftCellSnapshot.promote(baseStore, legacy, cur)
+  }
+
   /** INCREMENTAL index maintenance (r19; content-mode + race-free
     * boundary r20 — completes the build_index lifecycle). Protocol:
     *
@@ -2684,25 +2615,6 @@ object GraftCellMaintenance {
     *
     * Returns (cells appended, index entries deleted, delta
     * generations, mode). */
-  /** ADOPT an r19-era legacy boundary (`__idx_sync_<leaf>`, no path
-    * hash) for this index: rename it to the current path-keyed name so
-    * the sync lifecycle RESUMES instead of forcing a full rebuild, and
-    * so the legacy pin cannot linger unreclaimed next to the new-name
-    * boundary a rebuild would have created (ADVICE r20 low). Only a
-    * boundary whose recorded owner IS this index (or an ownerless
-    * legacy pin) is adopted. */
-  private def adoptLegacyBoundary(baseStore: String,
-                                  idxStore: String): Unit = {
-    val cur = idxSyncSnapshot(idxStore)
-    val legacy = s"__idx_sync_${new java.io.File(idxStore).getName}"
-    if (legacy != cur &&
-        !new java.io.File(baseStore, s"_snapshot_$cur.json").exists() &&
-        new java.io.File(baseStore, s"_snapshot_$legacy.json").exists() &&
-        GraftCellSnapshot.ownerOf(baseStore, legacy)
-          .forall(_ == new java.io.File(idxStore).getAbsolutePath))
-      GraftCellSnapshot.promote(baseStore, legacy, cur)
-  }
-
   def syncIndex(spark: org.apache.spark.sql.SparkSession,
                 baseStore: String, idxStore: String,
                 family: String, qualifier: String)
@@ -2865,6 +2777,19 @@ object GraftCellMaintenance {
     }
   }
 
+  /** UPGRADE MANIFESTS (r19 — VERDICT r18 #2, retiring the legacy-dir
+    * caveat class): every committed dir WITHOUT `_manifest.json` (a
+    * pre-manifest ingest, e.g. the plain-parquet stager's `region=k`
+    * layout) gets one derived from its parquet footers — exact per-file
+    * stats computed EXECUTOR-side (one task per file, the footers never
+    * pass through the driver), committed at the dir's mtime stamp (the
+    * exact value `commitStampOf` already reported for it, so no travel
+    * window shifts) and published by the same atomic tmp+rename as
+    * every manifest. After the upgrade the store is manifest-complete:
+    * write-once (dir, name), MVCC under DML, total-or-loud clock
+    * travel, and zero-footer planning hold STORE-WIDE — the documented
+    * "legacy dirs rewrite in place" caveat has nothing left to apply
+    * to. Idempotent; returns (dirs upgraded, files indexed). */
   def upgradeManifests(spark: org.apache.spark.sql.SparkSession,
                        store: String): (Long, Long) = {
     val legacy = CellFooterCache.committedDirs(store).filter(d =>
@@ -2888,6 +2813,35 @@ object GraftCellMaintenance {
     (legacy.size.toLong, files)
   }
 
+  /** HBCK — HBase's `hbck` consistency report, REPORT-ONLY (it mutates
+    * nothing; `CALL repair` / re-staging are the fix verbs). Pure
+    * driver-side metadata — O(file names), zero data bytes — so it is
+    * cheap at any store size:
+    *
+    *  - `missing_files`: manifest entries whose region file is GONE
+    *    from disk (corruption — reads of that dir would fail);
+    *  - `orphan_files`: disk parquet files a manifest does NOT list
+    *    (invisible to reads — the manifest is authoritative — but
+    *    occupying space; a crashed pre-manifest writer's leavings);
+    *  - `pending_intents`: committed dirs carrying `_retire.json`
+    *    (an interrupted group-replace — readers already exclude the
+    *    listed files; `CALL repair` completes the deletion);
+    *  - `invalid_snapshots`: snapshot manifests pinning dirs a later
+    *    compaction removed (reads partially empty, restore refused);
+    *  - `stale_tmp_dirs`: `_stage_*` / `_tmp_*` root dirs a crashed
+    *    maintenance op left behind (invisible to reads, reclaimable).
+    *
+    *  - `lost_travel_windows` (r18): distinct supersession points in
+    *    the travel log whose window can no longer be reconstructed
+    *    (probed at the last instant before each supersession) — the
+    *    historical timestamps a `TIMESTAMP AS OF` would refuse, so an
+    *    operator learns about lost history from the admin verb, not
+    *    from a refused query.
+    *
+    * Manifest-less (legacy) dirs have no declared file set to check
+    * against and contribute nothing. Returns (dirs, missing, orphans,
+    * pending intents, invalid snapshots, stale tmp dirs, unreferenced
+    * archived, lost travel windows). */
   def hbck(store: String)
       : (Long, Long, Long, Long, Long, Long, Long, Long, Long) = {
     val dirs = CellFooterCache.committedDirs(store)
@@ -3183,6 +3137,21 @@ object GraftCellMaintenance {
     victims
   }
 
+  /** Per-COLUMN-FAMILY policy overrides (r17 — HBase sets TTL /
+    * VERSIONS / KEEP_DELETED per family in the table descriptor): each
+    * defined field overrides the table-level value for cells of that
+    * family; an undefined field falls through to the table-level
+    * policy. A hot `f:` family and an audit `a:` family can therefore
+    * age differently under ONE compact. */
+  final case class FamilyPolicy(ttlMicros: Option[Long] = None,
+                                tombstone: Option[String] = None,
+                                maxVersions: Option[Int] = None,
+                                // r19: "current" (engine default) |
+                                // "hide-all-older" (HBase markers)
+                                deleteMarkers: Option[String] = None)
+
+  private val DELETE_MARKER_MODES = Set("current", "hide-all-older")
+
   /** MAJOR COMPACTION with GARBAGE COLLECTION: the full HBase
     * major-compaction semantics as one store operation — a single
     * rewrite that (a) resolves every cell key to its LATEST version,
@@ -3206,21 +3175,6 @@ object GraftCellMaintenance {
     * crash interrupted). At 100 TB this is the shape HBase runs
     * region-by-region; here the bulk-load range shuffle partitions
     * the key space instead, so the rewrite scales with executors. */
-  /** Per-COLUMN-FAMILY policy overrides (r17 — HBase sets TTL /
-    * VERSIONS / KEEP_DELETED per family in the table descriptor): each
-    * defined field overrides the table-level value for cells of that
-    * family; an undefined field falls through to the table-level
-    * policy. A hot `f:` family and an audit `a:` family can therefore
-    * age differently under ONE compact. */
-  final case class FamilyPolicy(ttlMicros: Option[Long] = None,
-                                tombstone: Option[String] = None,
-                                maxVersions: Option[Int] = None,
-                                // r19: "current" (engine default) |
-                                // "hide-all-older" (HBase markers)
-                                deleteMarkers: Option[String] = None)
-
-  private val DELETE_MARKER_MODES = Set("current", "hide-all-older")
-
   def majorCompact(spark: org.apache.spark.sql.SparkSession,
                    store: String,
                    ttlMicros: Option[Long] = None,
@@ -4030,62 +3984,54 @@ object CellManifest {
 /** RETIRE INTENTS — the crash/race shield of every replacing publish
   * ([[GraftCellMaintenance.publishReplacement]]: group-granular DML,
   * truncate overwrites, maintenance). Such a commit must (1) publish
-  * the new rows as a new batch dir and (2) delete the replaced region
-  * files; the two cannot be one atomic rename. The intent closes the gap: the new
-  * batch dir is published WITH a `_retire.json` listing the replaced
-  * files (one atomic rename covers data + intent), and every BATCH
-  * reader excludes intent-listed files from planning — so a reader
-  * racing the delete window, or a store recovered from a crash
-  * between publish and delete, never double-counts a replaced row.
-  * The files are then deleted and the intent removed; an interrupted
-  * retirement is completed by `CALL <cat>.repair('<table>')` (or
-  * implicitly by the next major compaction's truncate). The streaming
-  * (replication-log) reader deliberately does NOT apply intents: it
-  * replays committed batches as written, log semantics. */
+  * the new rows as a new batch dir and (2) retire what it replaced;
+  * the two cannot be one atomic rename. The intent closes the gap: the
+  * new batch dir is published WITH a `_retire.json` listing the
+  * replaced region files and the replaced dirs (one atomic rename
+  * covers data + intent), and every BATCH reader excludes
+  * intent-listed files from planning — so a reader racing the
+  * retirement, or a store recovered from a crash after the rename,
+  * never double-counts a replaced row. [[complete]] carries the
+  * retirement out and drops the intent: the publish calls it right
+  * after its rename, and `CALL <cat>.repair('<table>')` (which the
+  * maintenance verbs also run first) calls it for each intent a crash
+  * left pending, so a commit finishes through one code path whether or
+  * not it was interrupted. The streaming (replication-log) reader
+  * deliberately does NOT apply intents: it replays committed batches
+  * as written, log semantics. */
 object CellRetire {
   val NAME = "_retire.json"
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Written into the STAGE dir before the publish rename. `archive`
-    * marks a retirement whose snapshot-pinned victims a
-    * crash-completing [[repair]] must archive exactly like the inline
-    * path would have — MAINTENANCE retirements
-    * (compaction/restore/split/merge) since r17, and DML group-replace
-    * retirements since r18 (the MVCC completion: snapshots read their
-    * creation-time content through UPDATE/MERGE too). Format: a bare
-    * JSON array (legacy, no archive) or
-    * `{"archive":true,"files":[...]}`. */
+  /** Written into the STAGE dir before the publish rename, as
+    * `{"files":[replaced paths],"dirs":[replaced dir names]}`. */
   def write(dir: java.io.File, replaced: Seq[String],
-            archive: Boolean = false): Unit = {
-    val payload: Any =
-      if (!archive) replaced.sorted.toArray
-      else {
-        val root = mapper.createObjectNode()
-        root.put("archive", true)
-        val arr = root.putArray("files")
-        replaced.sorted.foreach(arr.add)
-        root
-      }
+            replacedDirs: Seq[String] = Nil): Unit = {
+    val root = mapper.createObjectNode()
+    val files = root.putArray("files")
+    replaced.sorted.foreach(files.add)
+    val dirs = root.putArray("dirs")
+    replacedDirs.sorted.foreach(dirs.add)
     java.nio.file.Files.write(new java.io.File(dir, NAME).toPath,
-      mapper.writeValueAsBytes(payload))
+      mapper.writeValueAsBytes(root))
     ()
   }
 
-  def read(dir: java.io.File): Seq[String] = readFull(dir)._1
-
-  /** (retired paths, archive flag). */
-  def readFull(dir: java.io.File): (Seq[String], Boolean) = {
+  /** (replaced paths, replaced dir names). Intents of older releases
+    * still parse: a bare array of paths, or `{"archive":…,"files":…}`;
+    * both list no dirs. */
+  private def parse(dir: java.io.File): (Seq[String], Seq[String]) = {
     val f = new java.io.File(dir, NAME)
-    if (!f.exists()) (Nil, false)
-    else {
-      val root = mapper.readTree(java.nio.file.Files.readAllBytes(f.toPath))
-      if (root.isArray)
-        (root.elements().asScala.map(_.asText()).toSeq, false)
-      else
-        (root.get("files").elements().asScala.map(_.asText()).toSeq,
-         root.get("archive").asBoolean(false))
-    }
+    if (!f.exists()) return (Nil, Nil)
+    val root = mapper.readTree(java.nio.file.Files.readAllBytes(f.toPath))
+    def strings(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+      Option(n).map(_.elements().asScala.map(_.asText()).toSeq)
+        .getOrElse(Nil)
+    if (root.isArray) (strings(root), Nil)
+    else (strings(root.get("files")), strings(root.get("dirs")))
   }
+
+  def read(dir: java.io.File): Seq[String] = parse(dir)._1
 
   def clear(dir: java.io.File): Unit = {
     new java.io.File(dir, NAME).delete(); ()
@@ -4097,83 +4043,86 @@ object CellRetire {
     CellFooterCache.committedDirs(store)
       .flatMap(d => read(new java.io.File(store, d))).toSet
 
-  /** Complete every pending retirement: delete listed files that still
-    * exist, fold removals into their dirs' manifests, drop the
-    * intents. Returns (intents completed, files deleted). */
+  /** Carry out the retirement `dir`'s intent lists, then drop the
+    * intent. Per victim dir: log the retirement in the travel log
+    * (superseded by `dir`'s commit) while the dir still exists, archive
+    * its snapshot-pinned victims, delete them, fold the removal into
+    * its manifest, and drop the dir once it holds no data. Then retire
+    * what is left of the replaced dirs — data-less truncate/restore
+    * markers, empty batches — archived if a snapshot pins them.
+    * Idempotent from any crash point: every step skips what an earlier
+    * attempt already did, except the travel-log retire, whose repeat
+    * replays as the same event. Returns the files deleted. */
+  def complete(store: String, dir: java.io.File): Long = {
+    val (files, dirs) = parse(dir)
+    val pinned = CellArchive.pins(store) // once per intent, not per dir
+    val supersededAt = CellManifest.commitStampOf(store, dir.getName)
+    var removed = 0L
+    files.groupBy(f => new java.io.File(f).getParent).foreach {
+      case (parent, victims) =>
+        val pdir = new java.io.File(parent)
+        val live = victims.filter(f => new java.io.File(f).isFile)
+        if (pdir.isDirectory)
+          CellTravelLog.retire(store, pdir.getName,
+            CellManifest.commitStampOf(store, pdir.getName),
+            victims.map(f => new java.io.File(f).getName), supersededAt)
+        CellArchive.archiveRetiring(store, pdir.getName,
+          live.map(f => new java.io.File(f).getName).toSet, pinned)
+        live.foreach { f => new java.io.File(f).delete(); removed += 1 }
+        CellManifest.applyRewrite(pdir, victims.toSet, Map.empty)
+        val remaining = Option(pdir.listFiles).getOrElse(Array.empty)
+          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+        if (remaining.isEmpty && pdir.getName != dir.getName)
+          FileUtils.deleteQuietly(pdir)
+    }
+    // the footer cache still lists the files deleted above
+    CellFooterCache.invalidate(store)
+    dirs.filterNot(_ == dir.getName).map(new java.io.File(store, _))
+      .filter(_.isDirectory)
+      .foreach(d => CellArchive.retireDir(store, d, pinned))
+    clear(dir)
+    CellFooterCache.invalidate(store)
+    removed
+  }
+
+  /** [[complete]] every pending retirement, then every pending in-dir
+    * rewrite ([[CellRewriteIntent.repair]]). Returns (intents
+    * completed, files deleted). */
   def repair(store: String): (Long, Long) = {
     var intents = 0L
     var removed = 0L
-    lazy val pinned = CellArchive.pins(store) // once per repair pass
-    CellFooterCache.committedDirs(store).foreach { d =>
-      val dir = new java.io.File(store, d)
-      val (listed, archiveFlag) = readFull(dir)
-      if (listed.nonEmpty) {
-        intents += 1
-        listed.groupBy(f => new java.io.File(f).getParent).foreach {
-          case (parent, files) =>
-            val live = files.filter(f => new java.io.File(f).isFile)
-            val pdir = new java.io.File(parent)
-            // travel log (r18): a crash-completing repair records the
-            // retirement exactly like the inline path, superseded by
-            // the intent-carrying batch. A duplicate of an
-            // already-logged entry replays idempotently (same OUT
-            // event at the same stamp); a dir the crash already
-            // destroyed has nothing recoverable to record.
-            if (pdir.isDirectory && CellManifest.read(pdir).isDefined)
-              CellTravelLog.retire(store, pdir.getName,
-                CellManifest.commitStampOf(store, pdir.getName),
-                files.map(f => new java.io.File(f).getName),
-                CellManifest.commitStampOf(store, d))
-            if (archiveFlag)
-              CellArchive.archiveRetiring(store, pdir.getName,
-                live.map(f => new java.io.File(f).getName).toSet, pinned)
-            live.foreach { f => new java.io.File(f).delete(); removed += 1 }
-            CellManifest.applyRewrite(pdir, files.toSet, Map.empty)
-            // a dir emptied of data files is retired with its metadata
-            // — the same end-state the interrupted commit would have
-            // reached (group-replace and maintenance publishes both
-            // drop emptied victim dirs)
-            val remaining = Option(pdir.listFiles).getOrElse(Array.empty)
-              .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            if (remaining.isEmpty && pdir.getName != d) {
-              def rec(f: java.io.File): Unit = {
-                Option(f.listFiles).getOrElse(Array.empty).foreach(rec)
-                f.delete(); ()
-              }
-              rec(pdir)
-            }
+    CellFooterCache.committedDirs(store).map(new java.io.File(store, _))
+      .foreach { dir =>
+        if (new java.io.File(dir, NAME).exists()) {
+          intents += 1
+          removed += complete(store, dir)
         }
-        clear(dir)
       }
-    }
-    CellFooterCache.invalidate(store)
-    // r19: pending IN-DIR rewrite intents (the ranged-DELETE crash
-    // shield) crash-complete in the same repair pass
     val (ri, rr) = CellRewriteIntent.repair(store)
     (intents + ri, removed + rr)
   }
 }
 
 /** IN-DIR REWRITE INTENTS (r19) — the ranged-DELETE analog of
-  * [[CellRetire]], closing the ADVICE r18 crash window: the
-  * manifest-bearing DELETE path renames victim files to fresh `-rK`
-  * names and must (1) archive pinned originals, (2) append the travel
-  * log's retire/born event pair, (3) swap the manifest, (4) delete the
-  * originals — and a crash between (2) and (3) used to leave the log
-  * asserting a rename the manifest never made visible: any later
-  * `TIMESTAMP AS OF ≥ renameStamp` silently dropped ALL of that file's
-  * rows (the old name reads as retired, the new name is in no
-  * manifest). The intent is written into the affected dir BEFORE any
-  * of (1)–(4), carrying the rename stamp and the complete old→new
-  * mapping WITH the rewritten files' manifest stats (the `-rK` files
-  * themselves were already durably written by the executor tasks), so
-  * `CALL repair` can crash-complete the whole sequence from any
-  * interruption point. Readers never consult it — a manifest-bearing
-  * dir plans from its manifest, which either still lists the olds
-  * (swap pending: the pre-DELETE content, correct) or already lists
-  * the news (swap done). `hbck` counts pending intents; `vacuum`
-  * completes them before its orphan sweep (an intent's new files are
-  * manifest-orphans only while the intent is pending). */
+  * [[CellRetire]]: the manifest-bearing DELETE path renames victim
+  * files to fresh `-rK` names and must (1) archive pinned originals,
+  * (2) append the travel log's retire/born event pair, (3) swap the
+  * manifest, (4) delete the originals. A crash between (2) and (3)
+  * would leave the log asserting a rename the manifest never made
+  * visible: any later `TIMESTAMP AS OF ≥ renameStamp` would silently
+  * drop ALL of that file's rows (the old name reads as retired, the
+  * new name is in no manifest). So `deleteWhere` writes the intent
+  * into the affected dir BEFORE any of (1)–(4), carrying the rename
+  * stamp and the complete old→new mapping WITH the rewritten files'
+  * manifest stats (the `-rK` files themselves were already durably
+  * written by the executor tasks), and then runs [[complete]] — the
+  * same code `CALL repair` runs for an intent a crash left pending.
+  * Readers never consult it — a manifest-bearing dir plans from its
+  * manifest, which either still lists the olds (swap pending: the
+  * pre-DELETE content, correct) or already lists the news (swap done).
+  * `hbck` counts pending intents; `vacuum` completes them before its
+  * orphan sweep (an intent's new files are manifest-orphans only while
+  * the intent is pending). */
 object CellRewriteIntent {
   val NAME = "_rewrite_intent.json"
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -4223,57 +4172,60 @@ object CellRewriteIntent {
       .count(d => new java.io.File(new java.io.File(store, d), NAME)
         .exists()).toLong
 
-  /** Crash-complete every pending in-dir rewrite: re-drive the archive
-    * / travel-log / manifest-swap / delete sequence idempotently from
-    * wherever the interrupted DELETE stopped. Returns (intents
+  /** Carry out `dir`'s pending rewrite — archive, travel-log pair,
+    * manifest swap, delete the originals — from wherever an earlier
+    * attempt stopped, then drop the intent. Events the log already
+    * holds are not appended again. A dir without a manifest (one that
+    * vanished out-of-band; legacy dirs never write an intent) leaves
+    * nothing to complete. Returns the original files deleted. */
+  def complete(store: String, dir: java.io.File): Long = {
+    var removed = 0L
+    for (p <- read(dir); data <- CellManifest.read(dir)) {
+      val d = dir.getName
+      val oldNames = p.renames.map(r => new java.io.File(r._1).getName)
+      val listed = data.files.map(m => new java.io.File(m.path).getName).toSet
+      if (oldNames.exists(listed.contains)) {
+        // the manifest still lists the originals: swap pending
+        CellArchive.archiveRetiring(store, d,
+          oldNames.filter(listed.contains).toSet)
+        val newNames = p.renames.flatMap(_._2)
+          .map(m => new java.io.File(m.path).getName)
+        val logged = CellTravelLog.read(store)
+        def already(kind: String, names: Seq[String]) =
+          logged.exists(e => e.kind == kind && e.dir == d &&
+            e.at == p.stamp && e.files == names.sorted)
+        if (!already("retire", oldNames))
+          CellTravelLog.retire(store, d, CellManifest.commitStampOf(store, d),
+                               oldNames, p.stamp)
+        if (!already("born", newNames))
+          CellTravelLog.born(store, d, newNames, p.stamp)
+        CellManifest.applyRewrite(dir,
+          removed = p.renames.collect { case (o, None) => o }.toSet,
+          replaced = p.renames.collect { case (o, Some(m)) => o -> m }.toMap)
+      }
+      // swap done (now or earlier): delete lingering originals
+      p.renames.foreach { case (o, _) =>
+        val f = new java.io.File(o)
+        if (f.isFile) { f.delete(); removed += 1 }
+      }
+    }
+    clear(dir)
+    CellFooterCache.invalidate(store)
+    removed
+  }
+
+  /** [[complete]] every pending in-dir rewrite. Returns (intents
     * completed, old files deleted). */
   def repair(store: String): (Long, Long) = {
     var intents = 0L
     var removed = 0L
-    lazy val pinned = CellArchive.pins(store)
-    lazy val logged = CellTravelLog.read(store)
-    CellFooterCache.committedDirs(store).foreach { d =>
-      val dir = new java.io.File(store, d)
-      read(dir).foreach { p =>
-        intents += 1
-        val oldNames = p.renames.map(r => new java.io.File(r._1).getName)
-        CellManifest.read(dir) match {
-          case Some(data) =>
-            val listed = data.files
-              .map(m => new java.io.File(m.path).getName).toSet
-            if (oldNames.exists(listed.contains)) {
-              // crash BEFORE the manifest swap: finish (1)–(3)
-              CellArchive.archiveRetiring(store, d,
-                oldNames.filter(listed.contains).toSet, pinned)
-              val newNames = p.renames.flatMap(_._2)
-                .map(m => new java.io.File(m.path).getName)
-              val dirStamp = CellManifest.commitStampOf(store, d)
-              def already(kind: String, names: Seq[String]) =
-                logged.exists(e => e.kind == kind && e.dir == d &&
-                  e.at == p.stamp && e.files == names.sorted)
-              if (!already("retire", oldNames))
-                CellTravelLog.retire(store, d, dirStamp, oldNames, p.stamp)
-              if (!already("born", newNames))
-                CellTravelLog.born(store, d, newNames, p.stamp)
-              CellManifest.applyRewrite(dir,
-                removed = p.renames.collect { case (o, None) => o }.toSet,
-                replaced = p.renames.collect {
-                  case (o, Some(m)) => o -> m }.toMap)
-            }
-            // swap done (now or earlier): delete lingering originals
-            p.renames.foreach { case (o, _) =>
-              val f = new java.io.File(o)
-              if (f.isFile) { f.delete(); removed += 1 }
-            }
-            clear(dir)
-          case None =>
-            // a legacy dir never writes an intent; a manifest that
-            // vanished out-of-band leaves nothing completable
-            clear(dir)
+    CellFooterCache.committedDirs(store).map(new java.io.File(store, _))
+      .foreach { dir =>
+        if (new java.io.File(dir, NAME).exists()) {
+          intents += 1
+          removed += complete(store, dir)
         }
       }
-    }
-    if (intents > 0) CellFooterCache.invalidate(store)
     (intents, removed)
   }
 }

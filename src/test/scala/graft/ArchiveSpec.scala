@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.cell.{CellArchive, CellFooterCache, CellManifest,
-                           CellRetire, GraftCell, GraftCellSnapshot}
+                           CellRetire, CellTravelLog, GraftCell,
+                           GraftCellMaintenance, GraftCellSnapshot}
 
 /** Gates the r17 SNAPSHOT ARCHIVE (SURVEY §2.14 — the HBase archive
   * dir): maintenance rewrites move snapshot-pinned region files under
@@ -113,8 +114,8 @@ class ArchiveSpec extends AnyFunSuite {
     val victim = CellFooterCache.filesUnder(store, victimDir).head.path
     val carrier = new java.io.File(store, ds.filterNot(_ == victimDir).head)
     // the mid-window crash state of a MAINTENANCE publish: intent
-    // written (archive = true), victim not yet deleted
-    CellRetire.write(carrier, Seq(victim), archive = true)
+    // written, victim not yet deleted
+    CellRetire.write(carrier, Seq(victim))
     CellFooterCache.invalidate(store)
     CellRetire.repair(store)
     // the victim was archived before deletion — "pin" still reads it
@@ -126,11 +127,96 @@ class ArchiveSpec extends AnyFunSuite {
       .load(store).collect().map(_.getString(0)).sorted.toSeq
     assert(rows == Seq("a", "b"),
       "the snapshot must read the repaired-away generation in full")
-    // a DML-shaped intent (no archive flag) keeps the documented
-    // caveat: repair deletes without archiving
     val victim2 = CellFooterCache.filesUnder(store, victimDir)
       .headOption.map(_.path)
     assert(victim2.isEmpty, "victim dir was emptied and dropped")
+
+    // The publish and CALL repair finish a commit through the same
+    // code, so they must leave the same store. Pre-state: a data-less
+    // marker dir (an earlier truncate) and two generations pinned by a
+    // snapshot. Copy "inl" runs a replacing publish (an overwrite)
+    // straight through; copy "rep" is planted in the state that publish
+    // leaves right after its rename — the new batch dir carrying its
+    // retire intent, nothing retired yet — and completed by CALL repair.
+    val root2 = java.nio.file.Files
+      .createTempDirectory("graft_archrep_cat_").toString
+    s.conf.set("spark.sql.catalog.graftrep",
+               classOf[graft.sources.cell.GraftCellCatalog].getName)
+    s.conf.set("spark.sql.catalog.graftrep.root", root2)
+    s.sql("""CREATE TABLE graftrep.inl (rowkey STRING, family STRING,
+             qualifier STRING, version BIGINT, value STRING)
+             USING graftcell""")
+    val inl = s"$root2/inl"
+    val rep = s"$root2/rep"
+    def write(mode: String, keys: String*): Unit = s.createDataFrame(
+      keys.map(rk => org.apache.spark.sql.Row(rk, "d", "q", 1L, rk)).asJava,
+      GraftCell.SCHEMA)
+      .write.format("graftcell").mode(mode).save(inl)
+    write("append", "a")
+    GraftCellSnapshot.create(inl, "old") // keeps the truncated window
+    GraftCellMaintenance.truncate(inl)
+    val marker = CellFooterCache.committedDirs(inl)
+    assert(marker.size == 1 && CellFooterCache.filesUnder(inl, marker.head)
+      .isEmpty, s"truncate must leave one data-less marker dir: $marker")
+    write("append", "a")
+    write("append", "b")
+    GraftCellSnapshot.create(inl, "pin")
+    val replaced = CellFooterCache.committedDirs(inl)
+    assert(replaced.size == 3)
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(inl), new java.io.File(rep))
+    write("overwrite", "a", "b")
+    val dest = CellFooterCache.committedDirs(inl).diff(replaced)
+    assert(dest.size == 1, s"the overwrite must publish one dir: $dest")
+    val destDir = new java.io.File(rep, dest.head)
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(inl, dest.head), destDir)
+    CellFooterCache.invalidate(rep)
+    CellRetire.write(destDir, replaced.flatMap(d =>
+      CellFooterCache.filesUnder(rep, d)).map(_.path), replaced)
+    CellFooterCache.invalidate(rep)
+    assert(GraftCellMaintenance.hbck(rep)._4 == 1L, "planted intent")
+    val r = s.sql("CALL graftrep.repair('rep')").collect()(0)
+    assert(r.getLong(0) == 1L && r.getLong(1) == 2L,
+      s"repair must complete the planted intent: $r")
+    def names(dir: java.io.File, rel: String = ""): Seq[String] =
+      Option(dir.listFiles).getOrElse(Array.empty).toSeq.flatMap { f =>
+        if (f.isDirectory) names(f, rel + f.getName + "/")
+        else Seq(rel + f.getName)
+      }.sorted
+    def bytes(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    def state(st: String): Seq[(String, Any)] = {
+      CellFooterCache.invalidate(st)
+      val live = CellFooterCache.committedDirs(st)
+      val arch = CellArchive.root(st)
+      Seq(
+        "live dirs" -> live,
+        "live files" -> live.map(d => names(new java.io.File(st, d))),
+        "manifests" -> (live.map(new java.io.File(st, _)) ++
+            Option(arch.listFiles).getOrElse(Array.empty).toSeq)
+          .map(d => bytes(new java.io.File(d, CellManifest.NAME))),
+        "archived" -> names(arch),
+        "travel log" -> CellTravelLog.read(st)
+          .map(e => (e.kind, e.dir, e.files)).sortBy(_.toString),
+        "hbck" -> GraftCellMaintenance.hbck(st))
+    }
+    val (a, b) = (state(inl), state(rep))
+    a.zip(b).foreach { case ((what, x), (_, y)) =>
+      assert(x == y, s"$what differs: inline $x, repair $y") }
+    val got = a.toMap
+    assert(got("hbck") == ((1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
+      s"hbck must be clean: ${got("hbck")}")
+    // what the replaced dirs held retired with them: the pinned
+    // generations AND the data-less marker moved to the archive, and
+    // only the overwrite's dir is live
+    assert(got("live dirs") == dest)
+    assert(replaced.forall(d => CellArchive.dirOf(inl, d).isDirectory),
+      s"every pinned replaced dir must be archived: ${got("archived")}")
+    assert(got("travel log").asInstanceOf[Seq[(String, String, Seq[String])]]
+      .count(_._1 == "retire") == 3,
+      s"one retire event per data generation: ${got("travel log")}")
+    s.sql("DROP TABLE graftrep.inl")
   }
 
   test("export and minor compaction honor the archive: a compacted-away " +
