@@ -14,11 +14,11 @@ import org.apache.commons.io.FileUtils
   * a snapshot stays restorable until it is explicitly dropped.
   *
   * Cost model (the 100 TB argument): archiving is METADATA ONLY — a
-  * whole retired generation moves by ONE directory rename, a partially
-  * retired one by hard links (same-filesystem, zero data bytes); the
-  * archive holds inodes the snapshots already logically owned. Space is
-  * reclaimed by [[sweep]] the moment the last pinning snapshot is
-  * dropped (`drop_snapshot` / `vacuum` both sweep).
+  * retired generation's files move by hard links (same-filesystem,
+  * zero data bytes), a data-less marker dir by ONE directory rename;
+  * the archive holds inodes the snapshots already logically owned.
+  * Space is reclaimed by [[sweep]] the moment the last pinning
+  * snapshot is dropped (`drop_snapshot` / `vacuum` both sweep).
   *
   * Granularity: snapshot manifests are file-granular since r17 (v2 —
   * see [[GraftCellSnapshot]]), so a later snapshot of a dir that lost
@@ -45,8 +45,10 @@ import org.apache.commons.io.FileUtils
   *  - RETIRE `{"event":"retire","dir":d,"stamp":s,"supersededAt":S,
   *    "files":[names]}`: the named files of generation `d` (committed
   *    at `s`) left the live view when the generation committed at `S`
-  *    replaced them — a compaction / truncate / restore orphan cut /
-  *    split / merge victim set, or a group-replace DML victim set.
+  *    replaced them. [[CellRetire.complete]] — the one completion path
+  *    of every replacing publish (major and minor compaction, truncate,
+  *    the restore orphan cut, split, merge, group-replace DML) — writes
+  *    one per victim dir, before it archives or deletes anything.
   *  - REVIVE `{"event":"revive","dir":d,"at":R,"files":[names]}`: a
   *    restore hard-linked the named archived files back into the live
   *    view at commit stamp `R`.
@@ -58,9 +60,8 @@ import org.apache.commons.io.FileUtils
   * to `ts` materializes every member file — live dirs serve their
   * members directly, retired members resolve from `_archive/<d>/` —
   * and REFUSES LOUDLY when a member resolves NOWHERE (an unpinned
-  * retirement, or an archive swept by drop_snapshot/vacuum): before
-  * r18 a timestamp inside a minor-compacted window passed the
-  * first-commit guard and silently read a THINNED table. In-dir
+  * retirement, or an archive swept by drop_snapshot/vacuum), never
+  * silently reading a THINNED table. In-dir
   * content rewrites (ranged DELETE `-rK` renames) are deliberately NOT
   * events: they replace a name inside a still-live generation, so the
   * documented "travel reads the pinned generations' current content"
@@ -131,15 +132,6 @@ object CellTravelLog {
     * dir's commit stamp. */
   def born(store: String, dirName: String, files: Seq[String],
            at: Long): Unit = inEvent(store, "born", dirName, files, at)
-
-  /** Log the retirement of a dir's CURRENT full content — call BEFORE
-    * destroying or archiving it wholesale. */
-  def retireWhole(store: String, dir: File, supersededAt: Long): Unit = {
-    val stamp = CellManifest.commitStampOf(store, dir.getName)
-    val names = CellFooterCache.filesUnder(store, dir.getName)
-      .map(m => new File(m.path).getName)
-    retire(store, dir.getName, stamp, names, supersededAt)
-  }
 
   /** All events, in append (= stamp) order. For retire events `stamp`
     * is the generation's commit stamp and `at` the superseding stamp;
@@ -306,41 +298,20 @@ object CellArchive {
     foldManifest(store, dirName, dst, metas)
   }
 
-  /** Retire a whole live dir: ONE rename into the archive when pinned
-    * (fast path — manifest and stats travel with it), a link-merge when
-    * part of the dir was archived earlier, plain delete when no
-    * snapshot pins it. Two callers: [[CellRetire.complete]], the one
-    * completion path of every replacing publish, for what the replaced
-    * dirs still hold after their files retired (data-less markers,
-    * empty batches), and minor compaction, for its merged victims. Callers
-    * retiring MANY dirs pass a pre-computed `pinned` map (one manifest
-    * parse per operation, not per dir). `supersededAt` (≥ 0) is the
-    * commit stamp of the generation that REPLACED this one — recorded
-    * in the [[CellTravelLog]] so `TIMESTAMP AS OF` stays total-or-loud
-    * over the retirement. */
+  /** Retire a whole live dir whose listed files [[CellRetire.complete]]
+    * already retired (a data-less truncate/restore marker, an empty
+    * batch, unlisted leftovers): ONE rename into the archive when a
+    * snapshot pins it and no archive dir of that name exists yet, a
+    * plain delete otherwise. Its one caller passes the pin map it
+    * computed once per intent. */
   def retireDir(store: String, dir: File,
-                pinned: Map[String, Option[Set[String]]] = null,
-                supersededAt: Long = -1L): Unit = {
-    if (supersededAt >= 0L) CellTravelLog.retireWhole(store, dir, supersededAt)
-    val pinnedDirs = if (pinned != null) pinned else pins(store)
-    if (!pinnedDirs.contains(dir.getName)) { FileUtils.deleteQuietly(dir); return }
+                pinned: Map[String, Option[Set[String]]]): Unit = {
     val dst = dirOf(store, dir.getName)
-    if (!dst.exists()) {
+    if (pinned.contains(dir.getName) && !dst.exists()) {
       root(store).mkdirs()
       Files.move(dir.toPath, dst.toPath, StandardCopyOption.ATOMIC_MOVE)
       ()
-    } else {
-      // earlier partial retirement already created the archive dir:
-      // link the remaining live files in, fold their entries, drop live
-      val metas = CellFooterCache.filesUnder(store, dir.getName)
-      metas.foreach { m =>
-        val link = new File(dst, new File(m.path).getName)
-        if (link.exists()) link.delete()
-        Files.createLink(link.toPath, new File(m.path).toPath)
-      }
-      foldManifest(store, dir.getName, dst, metas)
-      FileUtils.deleteQuietly(dir)
-    }
+    } else FileUtils.deleteQuietly(dir)
   }
 
   /** Merge `metas` (paths still pointing at the LIVE dir; only names
@@ -357,10 +328,8 @@ object CellArchive {
       .getOrElse(new File(store, dirName).lastModified() * 1000L)
     val prior = existing.map(_.files).getOrElse(Nil)
     val newNames = metas.map(m => new File(m.path).getName).toSet
-    val merged = prior.filterNot(m =>
-      newNames.contains(new File(m.path).getName)) ++
-      metas.map(m => m.copy(path = new File(dst, new File(m.path).getName).getPath))
-    CellManifest.write(dst, stamp, merged)
+    CellManifest.write(dst, stamp, prior.filterNot(m =>
+      newNames.contains(new File(m.path).getName)) ++ metas)
   }
 
   /** File metas a snapshot resolves for one pinned dir: live entries

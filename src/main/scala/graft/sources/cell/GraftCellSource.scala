@@ -825,14 +825,13 @@ class GraftCellTable(path: String,
 
   /** Planner-rule surface (r20 — [[graft.plans.IndexRoute]] consults
     * these to decide whether a value-predicate read on this table can
-    * route through a global secondary index): the store path, whether
-    * this is the LIVE view (time-travel tables must never route — the
-    * index reflects the live view only), and the persisted descriptor
-    * properties. Read-only accessors; no behavior change. */
+    * route through a global secondary index): the store path, and
+    * whether this is the LIVE view (time-travel tables must never
+    * route — the index reflects the live view only). Read-only
+    * accessors; no behavior change. */
   private[graft] def storePath: String = path
   private[graft] def isLiveView: Boolean =
     pinnedSnapshot.isEmpty && pinnedDirs.isEmpty
-  private[graft] def descriptorProps: Map[String, String] = tableProps
 
   private def requireLive(op: String): Unit =
     require(pinnedSnapshot.isEmpty && pinnedDirs.isEmpty,
@@ -876,9 +875,7 @@ class GraftCellTable(path: String,
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     requireLive("UPDATE/MERGE/DELETE")
-    val codecs = CellCodecs.of(tableProps.filter { case (k, _) =>
-      k == "compression" || (k.startsWith("family.") &&
-                             k.endsWith(".compression")) })
+    val codecs = CellCodecs.of(tableProps)
     () => new GraftCellRowLevelOperation(path, info.command(), buckets,
                                          codecs)
   }
@@ -1029,15 +1026,10 @@ class GraftCellTable(path: String,
         .forEach((k, v) => b += (k -> v))
       b.result()
     }
-    def codecKeys(m: Map[String, String]): Map[String, String] =
-      m.filter { case (k, _) =>
-        k == "compression" || (k.startsWith("family.") &&
-                               k.endsWith(".compression")) }
-    val codecProps = codecKeys(tableProps) ++ codecKeys(optMap)
     new GraftCellWriteBuilder(path, info.queryId(),
       Option(info.options().get("maxRowsPerFile")).map(_.toLong).getOrElse(-1L),
       buckets.orElse(optBuckets), declareTransform = buckets.isDefined,
-      codecs = CellCodecs.of(codecProps))
+      codecs = CellCodecs.of(tableProps ++ optMap))
   }
 }
 
@@ -1110,8 +1102,8 @@ object GraftCellSnapshot {
     dirs
   }
 
-  /** Pin an EXPLICIT dir set (maintenance use: minor compaction reads
-    * its victim dirs through a pinned manifest). */
+  /** Pin an EXPLICIT dir set in the legacy v1 format (a JSON array of
+    * dir names — whole-dir pins). */
   def createPinned(store: String, name: String,
                    pin: Seq[String]): Unit = {
     val tmp = java.io.File.createTempFile("_snaptmp_", ".json",
@@ -1241,21 +1233,28 @@ object GraftCellSnapshot {
           new java.io.File(m.path).toPath)
         files += 1
       }
-      // the clone's manifest is WRITTEN from the resolved metas (not
-      // copied): a partially archived source dir has no single manifest
-      // file that matches the pinned view
-      val stamp = CellManifest.read(new java.io.File(store, d))
-        .orElse(CellManifest.read(CellArchive.dirOf(store, d)))
-        .map(_.committedAtMicros)
-      stamp.foreach(ts => CellManifest.write(dstDir, ts,
-        metas.map(m => m.copy(path =
-          new java.io.File(dstDir, new java.io.File(m.path).getName).getPath))))
+      writePinnedManifest(store, d, dstDir, metas)
     }
     java.nio.file.Files.write(
       new java.io.File(destStore, "_SUCCESS").toPath, Array.emptyByteArray)
     CellFooterCache.invalidate(destStore)
     (pinnedAll.size.toLong, files)
   }
+
+  /** Write the manifest of `dst`, a clone or export of pinned dir `d`,
+    * from the resolved `metas` (not copied: a partially archived source
+    * dir has no single manifest that matches the pinned view), stamped
+    * from `d`'s live manifest, else its archived one. A legacy
+    * manifest-less dir gets none and falls back to footers. */
+  private def writePinnedManifest(store: String, d: String,
+                                  dst: java.io.File,
+                                  metas: Seq[CellFileMeta]): Unit =
+    CellManifest.read(new java.io.File(store, d))
+      .orElse(CellManifest.read(CellArchive.dirOf(store, d)))
+      .foreach { m =>
+        dst.mkdirs()
+        CellManifest.write(dst, m.committedAtMicros, metas)
+      }
 
   /** Resolve every pin of snapshot `name` through live-then-archive,
     * refusing (with the historical 'invalidated' wording) if anything
@@ -1350,17 +1349,7 @@ object GraftCellSnapshot {
           out.length()
       }.collect().sum
     pinned.foreach { case (d, metas) =>
-      // write the export's manifest from the resolved metas — the
-      // source's live manifest can't describe archived pins
-      val stamp = CellManifest.read(new java.io.File(store, d))
-        .orElse(CellManifest.read(CellArchive.dirOf(store, d)))
-        .map(_.committedAtMicros)
-      stamp.foreach { ts =>
-        val dd = new java.io.File(destDir, d)
-        dd.mkdirs()
-        CellManifest.write(dd, ts, metas.map(m => m.copy(path =
-          new java.io.File(dd, new java.io.File(m.path).getName).getPath)))
-      }
+      writePinnedManifest(store, d, new java.io.File(destDir, d), metas)
     }
     intent.delete()
     java.nio.file.Files.write(
@@ -1427,8 +1416,6 @@ object GraftCellSnapshot {
       if (archived.nonEmpty) {
         if (reviveStamp < 0L) reviveStamp = CellManifest.nextCommitStamp(store)
         val liveDir = new java.io.File(store, d)
-        def rebase(m: CellFileMeta) = m.copy(path =
-          new java.io.File(liveDir, new java.io.File(m.path).getName).getPath)
         if (!liveDir.isDirectory) {
           val stage = new java.io.File(store, s"_revive_$d")
           FileUtils.deleteQuietly(stage)
@@ -1441,7 +1428,7 @@ object GraftCellSnapshot {
           val stamp = CellManifest.read(CellArchive.dirOf(store, d))
             .map(_.committedAtMicros)
             .getOrElse(CellManifest.nextCommitStamp(store))
-          CellManifest.write(stage, stamp, archived.map(rebase))
+          CellManifest.write(stage, stamp, archived)
           java.nio.file.Files.move(stage.toPath, liveDir.toPath,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           ()
@@ -1455,7 +1442,7 @@ object GraftCellSnapshot {
           CellManifest.read(liveDir).foreach { data =>
             val have = data.files.map(m => new java.io.File(m.path).getName).toSet
             val add = archived.filterNot(m =>
-              have.contains(new java.io.File(m.path).getName)).map(rebase)
+              have.contains(new java.io.File(m.path).getName))
             if (add.nonEmpty)
               CellManifest.write(liveDir, data.committedAtMicros,
                                  data.files ++ add)
@@ -2813,6 +2800,24 @@ object GraftCellMaintenance {
     (legacy.size.toLong, files)
   }
 
+  /** A manifest-bearing dir's declared file names and its on-disk
+    * parquet files; None for a legacy (manifest-less) dir. */
+  private def declaredVsDisk(dir: java.io.File)
+      : Option[(Set[String], Seq[java.io.File])] =
+    CellManifest.read(dir).map { data =>
+      (data.files.map(m => new java.io.File(m.path).getName).toSet,
+       Option(dir.listFiles).getOrElse(Array.empty).toSeq
+         .filter(f => f.isFile && f.getName.endsWith(".parquet")))
+    }
+
+  /** Root dirs a crashed commit or maintenance op left behind
+    * (`_stage_*`, `_tmp_*`, `_revive_*`): invisible to reads and
+    * reclaimable. */
+  private def staleTmpDirs(store: String): Seq[java.io.File] =
+    Option(new java.io.File(store).listFiles).getOrElse(Array.empty).toSeq
+      .filter(f => f.isDirectory && Seq("_stage_", "_tmp_", "_revive_")
+        .exists(f.getName.startsWith))
+
   /** HBCK — HBase's `hbck` consistency report, REPORT-ONLY (it mutates
     * nothing; `CALL repair` / re-staging are the fix verbs). Pure
     * driver-side metadata — O(file names), zero data bytes — so it is
@@ -2836,12 +2841,14 @@ object GraftCellMaintenance {
     *    (probed at the last instant before each supersession) — the
     *    historical timestamps a `TIMESTAMP AS OF` would refuse, so an
     *    operator learns about lost history from the admin verb, not
-    *    from a refused query.
+    *    from a refused query;
+    *  - `legacy_dirs` (r19): manifest-less dirs, which have no declared
+    *    file set to check missing/orphan files against (`CALL
+    *    upgrade_manifests` brings them under the manifest guarantees).
     *
-    * Manifest-less (legacy) dirs have no declared file set to check
-    * against and contribute nothing. Returns (dirs, missing, orphans,
-    * pending intents, invalid snapshots, stale tmp dirs, unreferenced
-    * archived, lost travel windows). */
+    * Returns (dirs, missing, orphans, pending intents, invalid
+    * snapshots, stale tmp dirs, unreferenced archived, lost travel
+    * windows, legacy dirs). */
   def hbck(store: String)
       : (Long, Long, Long, Long, Long, Long, Long, Long, Long) = {
     val dirs = CellFooterCache.committedDirs(store)
@@ -2856,25 +2863,17 @@ object GraftCellMaintenance {
       // DELETE) is the same anomaly class — repair completes it
       if (new java.io.File(dir, CellRewriteIntent.NAME).exists())
         intents += 1
-      CellManifest.read(dir) match {
-        case Some(data) =>
-          val declared = data.files
-            .map(m => new java.io.File(m.path).getName).toSet
-          val disk = Option(dir.listFiles).getOrElse(Array.empty)
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .map(_.getName).toSet
-          missing += declared.count(!disk.contains(_))
-          orphans += disk.count(!declared.contains(_))
+      declaredVsDisk(dir) match {
+        case Some((declared, disk)) =>
+          val onDisk = disk.map(_.getName).toSet
+          missing += declared.count(!onDisk.contains(_))
+          orphans += disk.count(f => !declared.contains(f.getName))
         case None => legacyDirs += 1
       }
     }
     val invalidSnaps =
       GraftCellSnapshot.list(store).count(_._3.nonEmpty).toLong
-    val staleTmp = Option(new java.io.File(store).listFiles)
-      .getOrElse(Array.empty)
-      .count(f => f.isDirectory && (f.getName.startsWith("_stage_") ||
-                                    f.getName.startsWith("_tmp_") ||
-                                    f.getName.startsWith("_revive_"))).toLong
+    val staleTmp = staleTmpDirs(store).size.toLong
     // r17: archived region files no snapshot pins — garbage the sweep
     // (drop_snapshot / vacuum) should have reclaimed
     val archiveOrphans = CellArchive.unreferenced(store)
@@ -2928,22 +2927,15 @@ object GraftCellMaintenance {
     val (intents, _) = CellRetire.repair(store)
     var orphans = 0L
     CellFooterCache.committedDirs(store).foreach { d =>
-      val dir = new java.io.File(store, d)
-      CellManifest.read(dir).foreach { data =>
-        val declared = data.files
-          .map(m => new java.io.File(m.path).getName).toSet
-        Option(dir.listFiles).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-                       !declared.contains(f.getName))
-          .foreach { f => f.delete(); orphans += 1 }
+      declaredVsDisk(new java.io.File(store, d)).foreach {
+        case (declared, disk) =>
+          disk.filterNot(f => declared.contains(f.getName))
+            .foreach { f => f.delete(); orphans += 1 }
       }
     }
-    var staleTmp = 0L
-    Option(new java.io.File(store).listFiles).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && (f.getName.startsWith("_stage_") ||
-                                     f.getName.startsWith("_tmp_") ||
-                                     f.getName.startsWith("_revive_")))
-      .foreach { d => FileUtils.deleteQuietly(d); staleTmp += 1 }
+    val stale = staleTmpDirs(store)
+    stale.foreach(FileUtils.deleteQuietly)
+    val staleTmp = stale.size.toLong
     val droppedSnaps =
       if (!dropInvalidSnapshots) 0L
       else {
@@ -3065,18 +3057,32 @@ object GraftCellMaintenance {
                codecProps: Map[String, String] = Map.empty): Unit = {
     require(n >= 1 && n <= 4096,
       s"graftcell: rebucket count must be in [1, 4096], got $n")
+    overwrite(spark.read.format("graftcell").load(store), store, Some(n),
+              codecProps)
+  }
+
+  /** The truncate-overwrite publish of [[rebucket]] and
+    * [[majorCompact]]. With `buckets`, the cells re-cluster on the
+    * GraftBucket arithmetic of the original write (one shuffle, sorted
+    * by bucket then cell key) and the path write's `buckets` option
+    * makes the writer roll tagged bucket-pure files. */
+  private def overwrite(cells: org.apache.spark.sql.DataFrame,
+                        store: String, buckets: Option[Int],
+                        codecProps: Map[String, String]): Unit = {
     import org.apache.spark.sql.functions._
-    val cells = spark.read.format("graftcell").load(store)
-    val bucketOf = udf((k: String) =>
-      GraftBucket.of(if (k == null) null else
-        k.getBytes(java.nio.charset.StandardCharsets.UTF_8), n))
-    cells
-      .repartition(n, bucketOf(col("rowkey")))
-      .sortWithinPartitions(bucketOf(col("rowkey")), col("rowkey"),
-        col("family"), col("qualifier"), col("version"))
-      .write.format("graftcell").option("buckets", n)
-      .options(codecProps)
-      .mode("overwrite").save(store)
+    val writer = buckets match {
+      case Some(n) =>
+        val bucketOf = udf((k: String) =>
+          GraftBucket.of(if (k == null) null else
+            k.getBytes(java.nio.charset.StandardCharsets.UTF_8), n))
+        cells
+          .repartition(n, bucketOf(col("rowkey")))
+          .sortWithinPartitions(bucketOf(col("rowkey")), col("rowkey"),
+            col("family"), col("qualifier"), col("version"))
+          .write.format("graftcell").option("buckets", n)
+      case None => cells.write.format("graftcell")
+    }
+    writer.options(codecProps).mode("overwrite").save(store)
     CellFooterCache.invalidate(store)
   }
 
@@ -3088,52 +3094,47 @@ object GraftCellMaintenance {
     * verbatim: no version resolution, no tombstone dropping — that is
     * MAJOR compaction's job (`cell_connector_compact`).
     *
-    * Protocol: pin the victim dirs in an internal snapshot manifest,
-    * read exactly those dirs through the connector (so the merged
-    * batch gets the declared sorted, non-overlapping region layout),
-    * publish the merged batch by the usual atomic rename, THEN delete
-    * the victims. Single-writer maintenance, as in HBase where the
-    * region server owns compaction; a reader racing the short delete
-    * window could see a victim's cells twice, which is why the store
-    * must be quiesced for maintenance (the spec runs it so).
-    * Returns the merged (deleted) dirs; no-op below 2 victims. */
-
+    * Protocol: read exactly the victim dirs through an in-memory
+    * pinned table (so the merged batch gets the declared sorted,
+    * non-overlapping region layout), write the merged cells into a
+    * hidden `_tmp_minor_*` store, and publish them with the victims as
+    * the replaced dirs — the same [[publishReplacement]] as split,
+    * merge and truncate. Readers switch at its one rename, and
+    * [[CellRetire.complete]] travel-logs, archives (when a snapshot
+    * pins them) and deletes the victims, or `CALL repair` does after a
+    * crash. Single-writer maintenance, as in HBase where the region
+    * server owns compaction. Returns the merged (retired) dirs; no-op
+    * below 2 victims. */
   def minorCompact(spark: org.apache.spark.sql.SparkSession,
                    store: String, maxBytes: Long,
                    codecProps: Map[String, String] = Map.empty)
       : Seq[String] = {
-    // Complete pending RETIREMENTS first (ADVICE r15): the victim
-    // deletion below removes dirs wholesale, including any
-    // `_retire.json` a crash-interrupted group-replace left behind. If
-    // such an intent lived in a (small) victim dir while the listed
-    // already-replaced files live in a larger SURVIVING dir, merging
-    // would copy the rewritten rows and then the delete would drop the
-    // intent — the still-existing replaced files would resurface in
-    // live listings and double-count. repair() is idempotent and a
-    // no-op on a healthy store.
+    // Complete pending RETIREMENTS first (ADVICE r15): retiring the
+    // victims drops their dirs wholesale, including any `_retire.json`
+    // a crash-interrupted group-replace left behind. If such an intent
+    // lived in a (small) victim dir while the listed already-replaced
+    // files live in a larger SURVIVING dir, merging would copy the
+    // rewritten rows and then the retirement would drop the intent —
+    // the still-existing replaced files would resurface in live
+    // listings and double-count. repair() is idempotent and a no-op on
+    // a healthy store.
     CellRetire.repair(store)
     val victims = CellFooterCache.committedDirs(store).filter { d =>
       CellFooterCache.filesUnder(store, d).map(_.bytes).sum <= maxBytes
     }
     if (victims.size < 2) return Nil
-    val work = "minor-work"
-    GraftCellSnapshot.createPinned(store, work, victims)
-    try {
-      spark.read.format("graftcell").option("snapshot", work).load(store)
-        .write.format("graftcell").options(codecProps)
-        .mode("append").save(store)
-    } finally GraftCellSnapshot.drop(store, work)
-    // victim dirs a USER snapshot pins are archived, not deleted (the
-    // work snapshot above is already dropped and never pins them here);
-    // the merged batch — the newest commit — supersedes them in the
-    // travel log, so TIMESTAMP AS OF into the merged window resolves
-    // the victims from the archive or refuses loudly (r18)
-    val pinned = CellArchive.pins(store)
-    val sup = CellFooterCache.committedDirs(store)
-      .map(d => CellManifest.commitStampOf(store, d)).max
-    victims.foreach(d =>
-      CellArchive.retireDir(store, new java.io.File(store, d), pinned, sup))
-    CellFooterCache.invalidate(store)
+    val victimTable = new GraftCellTable(store,
+      pinnedDirs = Some(victims.map(CellGenPin(_))))
+    val tmp = new java.io.File(store,
+      s"_tmp_minor_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          .create(victimTable, None, None))
+      .write.format("graftcell").options(codecProps)
+      .mode("append").save(tmp.getPath)
+    publishReplacement(store, freshDir("minor"),
+      CellFooterCache.filesOf(tmp.getPath), replacedDirs = victims)
+    FileUtils.deleteQuietly(tmp)
     victims
   }
 
@@ -3291,32 +3292,13 @@ object GraftCellMaintenance {
       if (!anyTomb) latest
       else latest.filter(hideAll || tombExpr.isNull ||
                          col("value") =!= tombExpr)
-    buckets match {
-      case Some(n) =>
-        // BUCKET-PRESERVING compaction (the HBase invariant: compaction
-        // never changes the salt/region layout): the procedure passes
-        // the table descriptor's bucket count, the GC'd cells re-cluster
-        // on the SAME GraftBucket arithmetic the original write used,
-        // and the path write's `buckets` option makes the writer roll
-        // tagged bucket-pure files — so a compacted bucketed table KEEPS
-        // its storage-partitioned joins (spec-pinned: zero-exchange join
-        // after CALL compact). Without this, one maintenance pass would
-        // silently demote every future join to a full shuffle.
-        val bucketOf = udf((k: String) =>
-          GraftBucket.of(if (k == null) null else
-            k.getBytes(java.nio.charset.StandardCharsets.UTF_8), n))
-        kept
-          .repartition(n, bucketOf(col("rowkey")))
-          .sortWithinPartitions(bucketOf(col("rowkey")), col("rowkey"),
-            col("family"), col("qualifier"), col("version"))
-          .write.format("graftcell").option("buckets", n)
-          .options(codecProps)
-          .mode("overwrite").save(store)
-      case None =>
-        kept.write.format("graftcell").options(codecProps)
-          .mode("overwrite").save(store)
-    }
-    CellFooterCache.invalidate(store)
+    // BUCKET-PRESERVING compaction (the HBase invariant: compaction
+    // never changes the salt/region layout): the procedure passes the
+    // table descriptor's bucket count, so a compacted bucketed table
+    // KEEPS its storage-partitioned joins (spec-pinned: zero-exchange
+    // join after CALL compact). Without it, one maintenance pass would
+    // silently demote every future join to a full shuffle.
+    overwrite(kept, store, buckets, codecProps)
   }
 }
 
@@ -3913,13 +3895,17 @@ object CellManifest {
       Option(o.get("nullFams")).map(_.asLong()),
       Option(o.get("valueBloom")).map(n => b64d.decode(n.asText())))
 
+  /** Persist `dir`'s manifest. Entries store file NAMES only and are
+    * sorted by name, so `metas` may point into any dir (a tmp write
+    * dir, the live dir, the archive) and still describe `dir`. */
   def write(dir: java.io.File, committedAtMicros: Long,
             metas: Seq[CellFileMeta]): Unit = {
     val root = mapper.createObjectNode()
     root.put("v", 1)
     root.put("committedAtMicros", committedAtMicros)
     val arr = root.putArray("files")
-    metas.sortBy(_.path).foreach(m => encodeMeta(arr.addObject(), m))
+    metas.sortBy(m => new java.io.File(m.path).getName)
+      .foreach(m => encodeMeta(arr.addObject(), m))
     val tmp = new java.io.File(dir, NAME + ".tmp")
     java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(root))
     java.nio.file.Files.move(tmp.toPath, new java.io.File(dir, NAME).toPath,

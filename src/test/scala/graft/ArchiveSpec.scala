@@ -134,51 +134,16 @@ class ArchiveSpec extends AnyFunSuite {
     // The publish and CALL repair finish a commit through the same
     // code, so they must leave the same store. Pre-state: a data-less
     // marker dir (an earlier truncate) and two generations pinned by a
-    // snapshot. Copy "inl" runs a replacing publish (an overwrite)
-    // straight through; copy "rep" is planted in the state that publish
-    // leaves right after its rename — the new batch dir carrying its
-    // retire intent, nothing retired yet — and completed by CALL repair.
+    // snapshot. Two replacing publishes replace all three dirs: an
+    // overwrite and a minor compaction. For each, copy "<t>i" runs it
+    // straight through; copy "<t>r" is planted in the state it leaves
+    // right after its rename — the new batch dir carrying its retire
+    // intent, nothing retired yet — and completed by CALL repair.
     val root2 = java.nio.file.Files
       .createTempDirectory("graft_archrep_cat_").toString
     s.conf.set("spark.sql.catalog.graftrep",
                classOf[graft.sources.cell.GraftCellCatalog].getName)
     s.conf.set("spark.sql.catalog.graftrep.root", root2)
-    s.sql("""CREATE TABLE graftrep.inl (rowkey STRING, family STRING,
-             qualifier STRING, version BIGINT, value STRING)
-             USING graftcell""")
-    val inl = s"$root2/inl"
-    val rep = s"$root2/rep"
-    def write(mode: String, keys: String*): Unit = s.createDataFrame(
-      keys.map(rk => org.apache.spark.sql.Row(rk, "d", "q", 1L, rk)).asJava,
-      GraftCell.SCHEMA)
-      .write.format("graftcell").mode(mode).save(inl)
-    write("append", "a")
-    GraftCellSnapshot.create(inl, "old") // keeps the truncated window
-    GraftCellMaintenance.truncate(inl)
-    val marker = CellFooterCache.committedDirs(inl)
-    assert(marker.size == 1 && CellFooterCache.filesUnder(inl, marker.head)
-      .isEmpty, s"truncate must leave one data-less marker dir: $marker")
-    write("append", "a")
-    write("append", "b")
-    GraftCellSnapshot.create(inl, "pin")
-    val replaced = CellFooterCache.committedDirs(inl)
-    assert(replaced.size == 3)
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(inl), new java.io.File(rep))
-    write("overwrite", "a", "b")
-    val dest = CellFooterCache.committedDirs(inl).diff(replaced)
-    assert(dest.size == 1, s"the overwrite must publish one dir: $dest")
-    val destDir = new java.io.File(rep, dest.head)
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(inl, dest.head), destDir)
-    CellFooterCache.invalidate(rep)
-    CellRetire.write(destDir, replaced.flatMap(d =>
-      CellFooterCache.filesUnder(rep, d)).map(_.path), replaced)
-    CellFooterCache.invalidate(rep)
-    assert(GraftCellMaintenance.hbck(rep)._4 == 1L, "planted intent")
-    val r = s.sql("CALL graftrep.repair('rep')").collect()(0)
-    assert(r.getLong(0) == 1L && r.getLong(1) == 2L,
-      s"repair must complete the planted intent: $r")
     def names(dir: java.io.File, rel: String = ""): Seq[String] =
       Option(dir.listFiles).getOrElse(Array.empty).toSeq.flatMap { f =>
         if (f.isDirectory) names(f, rel + f.getName + "/")
@@ -201,22 +166,75 @@ class ArchiveSpec extends AnyFunSuite {
           .map(e => (e.kind, e.dir, e.files)).sortBy(_.toString),
         "hbck" -> GraftCellMaintenance.hbck(st))
     }
-    val (a, b) = (state(inl), state(rep))
-    a.zip(b).foreach { case ((what, x), (_, y)) =>
-      assert(x == y, s"$what differs: inline $x, repair $y") }
-    val got = a.toMap
-    assert(got("hbck") == ((1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
-      s"hbck must be clean: ${got("hbck")}")
-    // what the replaced dirs held retired with them: the pinned
-    // generations AND the data-less marker moved to the archive, and
-    // only the overwrite's dir is live
-    assert(got("live dirs") == dest)
-    assert(replaced.forall(d => CellArchive.dirOf(inl, d).isDirectory),
-      s"every pinned replaced dir must be archived: ${got("archived")}")
-    assert(got("travel log").asInstanceOf[Seq[(String, String, Seq[String])]]
-      .count(_._1 == "retire") == 3,
-      s"one retire event per data generation: ${got("travel log")}")
-    s.sql("DROP TABLE graftrep.inl")
+    def write(st: String, mode: String, keys: String*): Unit =
+      s.createDataFrame(
+        keys.map(rk => org.apache.spark.sql.Row(rk, "d", "q", 1L, rk)).asJava,
+        GraftCell.SCHEMA)
+        .write.format("graftcell").mode(mode).save(st)
+    def crashCompare(t: String)(publish: String => Unit): Unit = {
+      s.sql(s"""CREATE TABLE graftrep.${t}i (rowkey STRING, family STRING,
+               qualifier STRING, version BIGINT, value STRING)
+               USING graftcell""")
+      val inl = s"$root2/${t}i"
+      val rep = s"$root2/${t}r"
+      write(inl, "append", "a")
+      GraftCellSnapshot.create(inl, "old") // keeps the truncated window
+      GraftCellMaintenance.truncate(inl)
+      val marker = CellFooterCache.committedDirs(inl)
+      assert(marker.size == 1 && CellFooterCache.filesUnder(inl, marker.head)
+        .isEmpty, s"truncate must leave one data-less marker dir: $marker")
+      write(inl, "append", "a")
+      write(inl, "append", "b")
+      GraftCellSnapshot.create(inl, "pin")
+      val replaced = CellFooterCache.committedDirs(inl)
+      assert(replaced.size == 3)
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(inl), new java.io.File(rep))
+      publish(inl)
+      val dest = CellFooterCache.committedDirs(inl).diff(replaced)
+      assert(dest.size == 1, s"$t must publish one dir: $dest")
+      val destDir = new java.io.File(rep, dest.head)
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(inl, dest.head), destDir)
+      CellFooterCache.invalidate(rep)
+      CellRetire.write(destDir, replaced.flatMap(d =>
+        CellFooterCache.filesUnder(rep, d)).map(_.path), replaced)
+      CellFooterCache.invalidate(rep)
+      assert(GraftCellMaintenance.hbck(rep)._4 == 1L, "planted intent")
+      // batch readers already exclude what the intent lists
+      val pending = s.read.format("graftcell").load(rep).collect()
+        .map(_.getString(0)).sorted.toSeq
+      assert(pending == Seq("a", "b"),
+        s"$t: a read before repair must return each row once: $pending")
+      val r = s.sql(s"CALL graftrep.repair('${t}r')").collect()(0)
+      assert(r.getLong(0) == 1L && r.getLong(1) == 2L,
+        s"$t: repair must complete the planted intent: $r")
+      val (a, b) = (state(inl), state(rep))
+      a.zip(b).foreach { case ((what, x), (_, y)) =>
+        assert(x == y, s"$t: $what differs: inline $x, repair $y") }
+      val got = a.toMap
+      assert(got("hbck") == ((1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
+        s"$t: hbck must be clean: ${got("hbck")}")
+      // what the replaced dirs held retired with them: the pinned
+      // generations AND the data-less marker moved to the archive, and
+      // only the publish's dir is live
+      assert(got("live dirs") == dest)
+      assert(replaced.forall(d => CellArchive.dirOf(inl, d).isDirectory),
+        s"$t: every pinned replaced dir must be archived: ${got("archived")}")
+      assert(got("travel log").asInstanceOf[Seq[(String, String, Seq[String])]]
+        .count(_._1 == "retire") == 3,
+        s"$t: one retire event per data generation: ${got("travel log")}")
+      s.sql(s"DROP TABLE graftrep.${t}i")
+    }
+    crashCompare("ovw")(write(_, "overwrite", "a", "b"))
+    crashCompare("mnr") { st =>
+      assert(GraftCellMaintenance.minorCompact(s, st, Long.MaxValue).size == 3)
+      assert(GraftCellSnapshot.names(st).sorted == Seq("old", "pin"),
+        "minor compaction must leave no work snapshot")
+      assert(!Option(new java.io.File(st).list).get.exists(n =>
+        n.startsWith("_tmp_") || n.startsWith("_stage_")),
+        "minor compaction must leave no tmp store or stage dir")
+    }
   }
 
   test("export and minor compaction honor the archive: a compacted-away " +
@@ -480,7 +498,8 @@ class ArchiveSpec extends AnyFunSuite {
     // live dir present: resolves live, archive ignored
     assert(CellFooterCache.filesOf(store, Some("old")).size == 1)
     // archive the whole dir (as a compaction would), drop the live one
-    CellArchive.retireDir(store, new java.io.File(store, d))
+    CellArchive.retireDir(store, new java.io.File(store, d),
+                          CellArchive.pins(store))
     CellFooterCache.invalidate(store)
     assert(!new java.io.File(store, d).exists())
     // the v1 pin resolves the archived dir wholesale — still readable
