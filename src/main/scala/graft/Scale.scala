@@ -147,15 +147,18 @@ object Scale {
 
   /** One-band UPDATE, group filtering on (runtime `_region_file`
     * pruning) vs off (full-table copy-on-write through the same code
-    * path), min of 2 on a freshly staged store. SEEKSCALE.md
-    * "Group-granular DML vs full-table COW (round 15)". */
+    * path), and the same band as a ranged DELETE (footer-pruned
+    * `deleteWhere`), each min of 2 on a freshly staged store; the
+    * DELETE also reports its Spark jobs. SEEKSCALE.md "Group-granular
+    * DML vs full-table COW (round 15)". */
   private def dml(spark: SparkSession, root: String,
                   sfDir: String): Unit = {
     val groupFilter =
       "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled"
     catalog(spark, "graftdml", root)
     header("region files", "group-filtered UPDATE (s)", "files rewritten",
-           "full-COW UPDATE (s)", "files rewritten")
+           "full-COW UPDATE (s)", "files rewritten",
+           "ranged DELETE (s)", "files rewritten", "jobs")
     Seq(16, 128, 1024).foreach { nFiles =>
       val rows = nFiles * 50L
       def stage(name: String): String = {
@@ -171,22 +174,29 @@ object Scale {
           .map(m => m.path -> new File(m.path).lastModified()).toMap
       // the one-band predicate: rows 100..149 — exactly one region file
       val where = "rowkey >= '0000000100' AND rowkey < '0000000150'"
-      def measure(name: String, on: Boolean): (Double, Int) = {
+      // (seconds, files rewritten, jobs) of the fastest of 2 runs
+      def measure(name: String, on: Boolean)
+                 (stmt: String): (Double, Int, Int) = {
         spark.conf.set(groupFilter, on.toString)
         val best = (1 to 2).map { _ =>
           val store = stage(name)
           val before = mtimes(store)
-          val (t, _) = timed(spark.sql(
-            s"UPDATE graftdml.$name SET value = concat(value, '*') WHERE $where"))
+          val (_, st) = RunCollector(spark).measure(spark.sql(stmt))
           val after = mtimes(store)
-          (t, before.count { case (p, m) => !after.get(p).contains(m) })
+          (st.sec, before.count { case (p, m) => !after.get(p).contains(m) },
+           st.jobs)
         }.minBy(_._1)
         spark.conf.set(groupFilter, "true")
         best
       }
-      val (gT, gN) = measure(s"t_g$nFiles", on = true)
-      val (cT, cN) = measure(s"t_c$nFiles", on = false)
-      println(f"| ~$nFiles ($rows rows) | $gT%.2f | $gN | $cT%.2f | $cN |")
+      def update(name: String, on: Boolean) = measure(name, on)(
+        s"UPDATE graftdml.$name SET value = concat(value, '*') WHERE $where")
+      val (gT, gN, _) = update(s"t_g$nFiles", on = true)
+      val (cT, cN, _) = update(s"t_c$nFiles", on = false)
+      val (dT, dN, dJ) = measure(s"t_d$nFiles", on = true)(
+        s"DELETE FROM graftdml.t_d$nFiles WHERE $where")
+      println(f"| ~$nFiles ($rows rows) | $gT%.2f | $gN | $cT%.2f | $cN | " +
+              f"$dT%.2f | $dN | $dJ |")
     }
   }
 

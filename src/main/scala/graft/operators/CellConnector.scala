@@ -893,8 +893,9 @@ object CellConnector extends QueryModule {
       // DELETE FROM through the catalog (SupportsDelete) — the HBase
       // ranged delete, file-granular: footer pruning plans only the
       // region files the predicate can touch, then one distributed
-      // task per victim rewrites it in place without the matching rows
-      // (all-rows-matched files are simply removed). Two deletes: a
+      // task per victim writes its rows without the matching ones, and
+      // one new batch dir publishes the survivors while it retires the
+      // victims (an all-rows-matched file has no survivors). Two deletes: a
       // pure rowkey range (the region-seek path) and a qualifier+range
       // conjunction (exact per-row rewrite inside survivors).
       // Proto-copy reset (r21): the table restores to the pristine
@@ -1382,10 +1383,9 @@ object CellConnector extends QueryModule {
       // is the pinned generation, ZERO data copy — pinned dirs are
       // re-created with HARD LINKS to the source region files (the
       // HFile-reference mechanism), so cloning a 100 TB table is a
-      // metadata operation. Inode semantics make the share safe: an
-      // in-place DELETE in the source publishes a NEW inode over the
-      // name, a compaction merely unlinks — the clone's links keep
-      // the pinned content either way (spec-pinned by mutating the
+      // metadata operation. Inode semantics make the share safe: DML
+      // and compaction in the source write new files and merely unlink
+      // the old names — the clone's links keep the pinned content (spec-pinned by mutating the
       // source after cloning). The source is corrupted AFTER the
       // snapshot here, and the clone reads back the clean generation
       // — oracle = plain rebuild. Re-staged each run (DROP + clone).
@@ -1760,10 +1760,9 @@ object CellConnector extends QueryModule {
       // SNAPSHOT ISOLATION UNDER ROW-LEVEL DML (r18 — the MVCC
       // completion): before r18 a snapshot observed later
       // UPDATE/DELETE/MERGE (in-place rewrites kept the pinned file
-      // names — the long-documented caveat). Now every DML rewrite on
-      // a manifest-bearing store publishes NEW file names (a `-rK`
-      // rewrite counter on the ranged-DELETE path, fresh batch dirs on
-      // the group-replace path) and ARCHIVES snapshot-pinned
+      // names — the long-documented caveat). Now every DML rewrite
+      // (ranged DELETE and group-replace alike) publishes its rows in
+      // a fresh batch dir and ARCHIVES snapshot-pinned
       // originals, so (dir, name) is write-once and a snapshot reads
       // its creation-time content through DML exactly as it does
       // through a compaction — what every modern table format gives
@@ -2370,9 +2369,9 @@ object CellConnector extends QueryModule {
       // mtime (the value commitStampOf already reported, so no travel
       // window shifts) and published atomically. From that point the
       // store is manifest-complete: the snapshot taken next reads its
-      // creation-time content THROUGH the ranged DELETE (MVCC — the
-      // guarantee a legacy store never had), and the live view reads
-      // the post-DELETE band. At 100 TB the upgrade is one footer-read
+      // creation-time content THROUGH the ranged DELETE (MVCC, which
+      // legacy dirs now get as well), and the live view reads the
+      // post-DELETE band. At 100 TB the upgrade is one footer-read
       // task per file, zero data rows moved, run once per store ever.
       // r21: the manifest-less legacy layout is the fixture —
       // proto-copied (the verb's DELETE mutates the store, so each

@@ -27,16 +27,12 @@ import org.apache.commons.io.FileUtils
   * whole dirs: their archived dirs resolve wholesale, and only when the
   * live dir is gone.
   *
-  * Row-level DML (UPDATE / DELETE / MERGE) archives too since r18 —
-  * the MVCC completion: rewritten region files get NEW names
-  * (`-rK` rewrite counters on the ranged-DELETE path, fresh batch-dir
-  * names on the group-replace path), so (dir, name) is WRITE-ONCE on
-  * every manifest-bearing store and a snapshot pinning the old name
-  * resolves its creation-time content through the archive exactly as
-  * it does across a compaction. The one remaining leak-through is the
-  * LEGACY manifest-less dir (the plain-parquet stager's `region=k`
-  * layout), whose ranged DELETE still rewrites in place — there is no
-  * manifest to swap atomically under a new name. */
+  * Row-level DML (UPDATE / DELETE / MERGE) archives too: every DML
+  * rewrite publishes its rows in a fresh batch dir and retires the
+  * files it replaced, so (dir, name) is WRITE-ONCE on every store,
+  * legacy manifest-less dirs included, and a snapshot pinning the old
+  * name resolves its creation-time content through the archive
+  * exactly as it does across a compaction. */
 /** APPEND-ONLY structural-history log (`_travel_log.jsonl` at the
   * store root) — what makes `TIMESTAMP AS OF` TOTAL-OR-LOUD over
   * maintenance and DML history (r18, VERDICT r17 #1). Two event kinds,
@@ -47,8 +43,9 @@ import org.apache.commons.io.FileUtils
   *    at `s`) left the live view when the generation committed at `S`
   *    replaced them. [[CellRetire.complete]] — the one completion path
   *    of every replacing publish (major and minor compaction, truncate,
-  *    the restore orphan cut, split, merge, group-replace DML) — writes
-  *    one per victim dir, before it archives or deletes anything.
+  *    the restore orphan cut, split, merge, UPDATE/MERGE and DELETE) —
+  *    writes one per victim dir, before it archives or deletes
+  *    anything.
   *  - REVIVE `{"event":"revive","dir":d,"at":R,"files":[names]}`: a
   *    restore hard-linked the named archived files back into the live
   *    view at commit stamp `R`.
@@ -61,23 +58,20 @@ import org.apache.commons.io.FileUtils
   * members directly, retired members resolve from `_archive/<d>/` —
   * and REFUSES LOUDLY when a member resolves NOWHERE (an unpinned
   * retirement, or an archive swept by drop_snapshot/vacuum), never
-  * silently reading a THINNED table. In-dir
-  * content rewrites (ranged DELETE `-rK` renames) are deliberately NOT
-  * events: they replace a name inside a still-live generation, so the
-  * documented "travel reads the pinned generations' current content"
-  * caveat applies and no row silently vanishes. O(structural
-  * rewrites) small lines of driver-side metadata; read only by
-  * `loadTable(ident, ts)`, never on a data path. */
+  * silently reading a THINNED table. Logs written by older releases
+  * may also hold BORN events (`{"event":"born","dir":d,"at":B,
+  * "files":[names]}`: an in-dir ranged-DELETE rename product that
+  * first existed at `B`); they still replay, but nothing writes them
+  * any more. O(structural rewrites) small lines of driver-side
+  * metadata; read only by `loadTable(ident, ts)`, never on a data
+  * path. */
 object CellTravelLog {
   val NAME = "_travel_log.jsonl"
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** `kind` ∈ retire | revive | born. `stamp` is the generation's
-    * commit stamp (retire events only; -1 otherwise), `at` the event
-    * time. A `born` event marks a file that did NOT exist at its dir's
-    * commit stamp — the `-rK` rename of an event-bearing name (see
-    * [[GraftCellTable.deleteWhere]]): without it the new name would
-    * claim membership of windows before the rename. */
+  /** `kind` ∈ retire | revive | born (born: older logs only). `stamp`
+    * is the generation's commit stamp (retire events only; -1
+    * otherwise), `at` the event time. */
   final case class Event(kind: String, dir: String, stamp: Long,
                          at: Long, files: Seq[String]) {
     def revive: Boolean = kind == "revive"
@@ -110,28 +104,19 @@ object CellTravelLog {
     write(store, node)
   }
 
-  private def inEvent(store: String, kind: String, dirName: String,
-                      files: Seq[String], at: Long): Unit = {
+  /** Log a restore revival: archived `files` of `dirName` re-entered
+    * the live view at commit stamp `at`. */
+  def revive(store: String, dirName: String, files: Seq[String],
+             at: Long): Unit = {
     if (files.isEmpty) return
     val node = mapper.createObjectNode()
-    node.put("event", kind)
+    node.put("event", "revive")
     node.put("dir", dirName)
     node.put("at", at)
     val arr = node.putArray("files")
     files.sorted.foreach(arr.add)
     write(store, node)
   }
-
-  /** Log a restore revival: archived `files` of `dirName` re-entered
-    * the live view at commit stamp `at`. */
-  def revive(store: String, dirName: String, files: Seq[String],
-             at: Long): Unit = inEvent(store, "revive", dirName, files, at)
-
-  /** Log a mid-generation birth: `files` of `dirName` first existed at
-    * `at` (a DML `-rK` rename of an event-bearing name), not at the
-    * dir's commit stamp. */
-  def born(store: String, dirName: String, files: Seq[String],
-           at: Long): Unit = inEvent(store, "born", dirName, files, at)
 
   /** All events, in append (= stamp) order. For retire events `stamp`
     * is the generation's commit stamp and `at` the superseding stamp;
@@ -206,7 +191,8 @@ object GraftCellTimeTravel {
           case Some((_, kind)) => kind != "retire"
           case None =>
             // no event yet at ts: alive since the dir's commit — unless
-            // the name was BORN later (a post-ts -rK rename product)
+            // the name was BORN later (an older release's in-dir
+            // DELETE rename product, logged after ts)
             birth.get(d).exists(_ <= timestamp) &&
               !evs.exists(_._2 == "born")
         }
@@ -333,9 +319,8 @@ object CellArchive {
   }
 
   /** File metas a snapshot resolves for one pinned dir: live entries
-    * first (a live name always wins — sound since r18 because
-    * (dir, name) is write-once on manifest-bearing stores; only a
-    * legacy in-place rewrite still flows through), archived entries
+    * first (a live name always wins — sound because (dir, name) is
+    * write-once: no rewrite reuses a name), archived entries
     * for pinned names no longer live. `names` = None is a legacy v1
     * whole-dir pin: the live dir wins wholesale; only a fully retired
     * dir falls back to its archive copy. */
@@ -380,7 +365,7 @@ object CellArchive {
                            !names.contains(f.getName))
             dead.foreach { f => f.delete(); reclaimed += 1 }
             if (dead.nonEmpty)
-              CellManifest.applyRewrite(d, dead.map(_.getPath).toSet, Map.empty)
+              CellManifest.removeEntries(d, dead.map(_.getPath).toSet)
             if (!hasData(d)) FileUtils.deleteQuietly(d)
           case None =>
             reclaimed += Option(d.listFiles).getOrElse(Array.empty)

@@ -353,11 +353,9 @@ class GraftCellCatalog extends TableCatalog
     * names; a member that resolves NOWHERE — an unpinned retirement,
     * or an archive swept by drop_snapshot/vacuum — REFUSES with the
     * missing files named, instead of silently reading a thinned table
-    * (the pre-r18 behavior inside a minor-compacted window). Ranged
-    * DELETE `-rK` renames are events too, at their own stamps — clock
-    * travel is total-or-loud over row-level DML exactly as over
-    * maintenance (legacy manifest-less dirs keep the in-place
-    * current-content caveat). */
+    * (the pre-r18 behavior inside a minor-compacted window). Row-level
+    * DML retires through the same publish as maintenance, so clock
+    * travel is total-or-loud over UPDATE/MERGE/DELETE too. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val dir = existingDataDir(ident.namespace(), ident.name())
       .getOrElse(throw new NoSuchTableException(ident))

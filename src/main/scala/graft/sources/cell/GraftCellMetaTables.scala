@@ -108,8 +108,8 @@ object GraftCellMeta {
   /** One row per travel-log event (r18 — `TIMESTAMP AS OF`'s
     * structural history, see [[CellTravelLog]]), in append (= stamp)
     * order: retire events carry the retired generation's commit stamp
-    * and the superseding stamp in `at`; revive/born events carry only
-    * their own event time. `n_files` is the event's file-name count —
+    * and the superseding stamp in `at`; revive events (and the born
+    * events of older releases' logs) carry only their own event time. `n_files` is the event's file-name count —
     * the operator's "what would a travel into this window need"
     * inspection, from plain SQL. */
   val TRAVEL_SCHEMA: StructType = StructType(Seq(

@@ -241,16 +241,17 @@ object GraftCellProcedures {
   }
 
   /** `repair(table)` — complete pending RETIRE intents (a crash
-    * between a group-replace commit's publish and its file deletions
+    * between a replacing commit's publish and its file deletions
     * leaves an intent behind; readers already exclude the listed
     * files, repair finishes the physical deletion and drops the
-    * intent — cf. HBase's hbck). No-op on a healthy store. */
+    * intent — cf. HBase's hbck). No-op on a healthy store; refuses a
+    * store holding an older release's `_rewrite_intent.json`. */
   final class Repair(catalog: GraftCellCatalog)
       extends CellProcedure(catalog, "repair") {
     override def parameters(): Array[ProcedureParameter] =
       Array(p("table", StringType))
     override def description(): String =
-      "complete interrupted group-replace retirements (pending intents)"
+      "complete interrupted replacing commits (pending intents)"
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val (intents, removed) =
         CellRetire.repair(store(input.getUTF8String(0)))

@@ -884,19 +884,18 @@ class GraftCellTable(path: String,
     * granular: footer pruning selects ONLY the region files the
     * predicate can touch (a rowkey-range delete on a 100 TB table
     * plans exactly the overlapping regions), then one distributed task
-    * per victim file writes it again without the matching rows (an
-    * all-rows-matched file is simply removed). In a manifest-bearing
-    * dir the rewrite gets a fresh `-rK` name, and the dir's
-    * [[CellRewriteIntent]] is written before anything becomes visible;
-    * [[CellRewriteIntent.complete]] then archives snapshot-pinned
-    * originals, logs the rename in the travel log, swaps the manifest
-    * and deletes the originals — the one completion path, which
-    * `CALL repair` also runs after a crash. A legacy manifest-less dir
-    * is rewritten in place (tmp + atomic same-name rename). Accepted-
-    * filter semantics are the scan's own `eval` (a NULL predicate keeps
-    * the row — SQL DELETE deletes only WHERE = TRUE). Like compaction,
-    * this is single-writer store maintenance; the footer cache is
-    * refreshed at the end. */
+    * per victim file writes its surviving rows into a hidden
+    * `_tmp_delete_*` dir (an all-rows-matched file writes nothing).
+    * The driver publishes the survivors as one new `batch_delete_*`
+    * dir that replaces every victim
+    * ([[GraftCellMaintenance.publishReplacement]]), the same commit
+    * UPDATE/MERGE, compaction, split and merge make: snapshot-pinned
+    * victims archive, the travel log records their retirement, and
+    * `CALL repair` finishes the commit after a crash. Legacy
+    * manifest-less dirs commit the same way. Accepted-filter
+    * semantics are the scan's own `eval` (a NULL predicate keeps the
+    * row — SQL DELETE deletes only WHERE = TRUE). Like compaction,
+    * this is single-writer store maintenance. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(GraftCell.acceptable)
 
@@ -911,50 +910,18 @@ class GraftCellTable(path: String,
         CellFooterCache.filesOf(path).filter(pruner.mayMatch),
         filters.toSeq, buckets)
       .map(_.path)
-    if (victims.nonEmpty) {
-      // each task returns the rewritten file's fresh manifest stats
-      // (None = every row matched), so the affected dirs' persisted
-      // manifests stay exact without a single footer open.
-      // MANIFEST-BEARING dirs rewrite to NEW names (r18 — MVCC under
-      // DML): the manifest swap is the atomic visibility point, the
-      // originals are archived-if-pinned and deleted AFTER it, so a
-      // snapshot pinning the old names keeps its creation-time content
-      // through the archive, and (dir, name) stays write-once. Legacy
-      // manifest-less dirs rewrite in place (footer listings have no
-      // atomic swap; the documented no-isolation caveat narrows to
-      // exactly them).
-      val manifested: Set[String] = victims
-        .map(f => new java.io.File(f).getParent).distinct
-        .filter(d => CellManifest.read(new java.io.File(d)).isDefined)
-        .toSet
-      val work = victims.map(f =>
-        (f, !manifested.contains(new java.io.File(f).getParent)))
-      val results = spark.sparkContext
-        .parallelize(work, work.size)
-        .map { case (f, inPlace) =>
-          CellDeleteRewrite.rewriteFile(f, filters, inPlace) }
-        .collect()
-      // every rename is a travel-log event pair (r18 — same
-      // total-or-loud contract as the group-replace DML path): the OLD
-      // name retires at the rename stamp (a clock travel into an
-      // earlier window reconstructs it from the archive when a
-      // snapshot pinned it, refuses loudly when not — never silently
-      // reads post-DELETE content), and the NEW name is BORN at the
-      // rename stamp (it never claims windows from before it existed).
-      // A per-dir REWRITE INTENT (r19, [[CellRewriteIntent]]) persists
-      // the whole planned rename FIRST; its `complete` then carries it
-      // out, the same call `CALL repair` makes after a crash. Legacy
-      // dirs have no manifest to swap: their tasks rewrote in place.
-      lazy val renameStamp = CellManifest.nextCommitStamp(path)
-      results.groupBy(r => new java.io.File(r._1).getParent)
-        .filter { case (dirPath, _) => manifested.contains(dirPath) }
-        .foreach { case (dirPath, rs) =>
-          val dir = new java.io.File(dirPath)
-          CellRewriteIntent.write(dir, renameStamp, rs.toSeq)
-          CellRewriteIntent.complete(path, dir)
-        }
-    }
-    CellFooterCache.invalidate(path)
+    if (victims.isEmpty) return
+    val tmp = GraftCellMaintenance.tmpDir(path, "delete")
+    try {
+      val tmpPath = tmp.getPath
+      val outputs = spark.sparkContext
+        .parallelize(victims.zipWithIndex, victims.size)
+        .flatMap { case (f, i) =>
+          CellDeleteRewrite.rewriteFile(f, i, filters, tmpPath) }
+        .collect().toSeq
+      GraftCellMaintenance.publishReplacement(path,
+        GraftCellMaintenance.freshDir("delete"), outputs, victims)
+    } finally FileUtils.deleteQuietly(tmp)
   }
 
   /** `TRUNCATE TABLE` — the HBase shell `truncate` (drop all data,
@@ -1051,12 +1018,11 @@ class GraftCellTable(path: String,
   * dir names) keep their dir-granular resolution. The remaining
   * invalidation path is a pin whose file is in NEITHER place (a v1-era
   * loss, or an archive reclaimed by `vacuum`'s drop-invalid flag).
-  * Since r18 row-level DML is MVCC-complete on manifest-bearing
-  * stores: rewrites publish NEW file names and archive pinned
-  * originals, so a snapshot reads its creation-time content through
-  * UPDATE/DELETE/MERGE as well as through maintenance. Only a legacy
-  * manifest-less dir still rewrites in place (pinned names, rewritten
-  * content — the caveat narrowed to exactly that layout). */
+  * Row-level DML is MVCC-complete on every store, legacy
+  * manifest-less dirs included: UPDATE/DELETE/MERGE publish their rows
+  * in a new batch dir and archive pinned originals, so a snapshot
+  * reads its creation-time content through DML as well as through
+  * maintenance. */
 object GraftCellSnapshot {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -1210,11 +1176,9 @@ object GraftCellSnapshot {
     * HFile-reference mechanism); the per-dir manifest is COPIED (not
     * linked) because the clone's metadata evolves independently from
     * the first mutation on. The link sharing is safe against every
-    * source mutation by inode semantics: in-place DELETE rewrites
-    * publish a NEW inode over the old name (the clone's link keeps the
-    * pre-delete content), and compaction/restore/drop merely unlink
-    * names (the shared inode survives until the clone drops its own
-    * link). Refuses unknown or compaction-invalidated snapshots, and a
+    * source mutation by inode semantics: DML, compaction, restore and
+    * drop write new files and merely unlink old names (the shared
+    * inode survives until the clone drops its own link). Refuses unknown or compaction-invalidated snapshots, and a
     * destination that already exists. Returns (dirs, files linked). */
   def clone(store: String, name: String, destStore: String): (Long, Long) = {
     // complete pending retirements first so no intent-listed file can
@@ -1379,9 +1343,8 @@ object GraftCellSnapshot {
     * metadata-only), and OTHER snapshots pinning the retired orphan
     * dirs stay valid because the orphan retirement itself archives
     * (see [[CellArchive]]). Since r18 DML retirements archive too, so
-    * a restore also rolls back post-snapshot UPDATE/DELETE/MERGE on
-    * manifest-bearing stores (legacy manifest-less dirs keep the
-    * in-place caveat). A crash mid-restore
+    * a restore also rolls back post-snapshot UPDATE/DELETE/MERGE. A
+    * crash mid-restore
     * leaves a store readable without the not-yet-revived archived
     * files; re-running the restore completes it (the archive links are
     * never consumed, only copied). Returns (pinned dirs, orphan files
@@ -1712,51 +1675,22 @@ class GraftCellGroupReplaceBatchWrite(path: String, queryId: String,
 
 /** Executor-side single-file DELETE rewrite (see
   * [[GraftCellTable.deleteWhere]]): streams the file's rows through the
-  * exact filter eval and writes the survivors.
-  *
-  * MANIFEST-BEARING dirs (every connector-written store) rewrite to a
-  * NEW file name (r18 — the MVCC half of DML): `X.parquet` becomes
-  * `X-r1.parquet` (the bucket tag, if any, stays in tag position so
-  * the layout evidence survives), the original is left untouched for
-  * the driver to archive-if-pinned and delete AFTER the atomic
-  * manifest swap — so (dir, name) is WRITE-ONCE and a snapshot pinning
-  * the old name keeps its creation-time content through the archive.
-  * LEGACY manifest-less dirs (`inPlace = true`) keep the historical
-  * in-place rewrite (`<file>.tmp` + atomic same-name rename; an
-  * emptied file is removed) — there is no manifest to swap atomically,
-  * and a new name would double-count against the footer listing during
-  * the rewrite window. Runs as one Spark task per victim file — the
-  * same per-region parallelism unit as the scan. */
+  * exact filter eval and writes the survivors into the DELETE's tmp
+  * dir, under [[CellRegionRewrite.outputName]] (the input's codec and
+  * bucket tags stay in tag position, so the layout evidence survives).
+  * Runs as one Spark task per victim file — the same per-region
+  * parallelism unit as the scan. */
 object CellDeleteRewrite {
 
-  /** `part-x[-rK][-b<i>of<n>].parquet` → same name with the rewrite
-    * counter bumped (r1 when absent). Names never repeat within a dir,
-    * so archived old generations can never collide with live ones. */
-  private[graft] def nextRewriteName(name: String): String = {
-    val Re = raw"^(.*?)(?:-r(\d+))?(-b\d+of\d+)?\.parquet$$".r
-    name match {
-      case Re(stem, r, tag) =>
-        val k = Option(r).map(_.toInt + 1).getOrElse(1)
-        s"$stem-r$k${Option(tag).getOrElse("")}.parquet"
-      case _ => name.stripSuffix(".parquet") + "-r1.parquet"
-    }
-  }
-
-  /** Returns (file, Some(new stats)) for a surviving rewrite — the
-    * stats' `path` is the REWRITTEN file (a fresh `-rK` name unless
-    * `inPlace`) — or (file, None) when every row matched (the file is
-    * removed here only when `inPlace`; otherwise the driver retires
-    * it). The driver folds these into the dir's persisted manifest. */
-  def rewriteFile(file: String, filters: Array[Filter],
-                  inPlace: Boolean): (String, Option[CellFileMeta]) = {
+  /** The survivors' stats, or None when every row matched. */
+  def rewriteFile(file: String, victim: Int, filters: Array[Filter],
+                  tmpDir: String): Option[CellFileMeta] = {
     val target =
-      if (inPlace) file
-      else new java.io.File(new java.io.File(file).getParentFile,
-        nextRewriteName(new java.io.File(file).getName)).getPath
-    val tmpFile = new java.io.File(target + ".tmp")
-    tmpFile.delete() // stale tmp from a failed earlier attempt
+      CellRegionRewrite.outputName(tmpDir, victim, file, keepBucket = true)
+    // a retried task starts over: the writer refuses an existing file
+    new java.io.File(target).delete()
     // the input's codec travels through the rewrite (r18 name tag)
-    val out = new CellFileWriter(tmpFile.getPath, GraftCellCodecTag.of(file))
+    val out = new CellFileWriter(target, GraftCellCodecTag.of(file))
     // the DML filter is evaluated here EXACTLY per row, so the
     // scan-side residual-work rule does not apply
     val compiled = GraftCell.compileAll(filters)
@@ -1777,21 +1711,7 @@ object CellDeleteRewrite {
       }
     } catch { case e: Throwable => out.abort(); throw e }
     finally st.close()
-    out.finish() match {
-      case None =>
-        // a NEW-NAME rewrite leaves the original for the driver
-        // (archive-if-pinned, then delete after the manifest swap);
-        // in-place mode has no manifest to coordinate with and removes
-        // it here
-        if (inPlace) { new java.io.File(file).delete(); () }
-        (file, None)
-      case Some(m) =>
-        java.nio.file.Files.move(tmpFile.toPath,
-          new java.io.File(target).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        (file, Some(m.copy(path = target)))
-    }
+    out.finish()
   }
 }
 
@@ -1845,23 +1765,39 @@ private[cell] final class CellRowStream(file: String) {
   * retire-intent publish. */
 object CellRegionRewrite {
 
+  /** Output path in a rewrite's one tmp dir for victim number `victim`
+    * of the op: `v<victim>-<stem><infix><codec tag>[<bucket tag>]
+    * .parquet`. Every connector batch names its files
+    * `part-<pid>-<seq>`, so victims from two dirs can share a name; the
+    * per-victim prefix keeps their outputs apart (an earlier rewrite's
+    * prefix is replaced, not stacked). The codec and bucket tags stay
+    * at the end, where their parsers look. */
+  def outputName(tmpDir: String, victim: Int, file: String,
+                 infix: String = "", keepBucket: Boolean): String = {
+    val name = new java.io.File(file).getName
+    val stem = name.stripSuffix(".parquet")
+      .replaceAll("(-z[A-Z0-9_]+)?(-r\\d+)?(-b\\d+of\\d+)?$", "")
+      .replaceFirst("^v\\d+-", "")
+    val btag = if (!keepBucket) "" else GraftBucket.parse(name)
+      .fold("") { case (id, n) => GraftBucket.tag(id, n) }
+    f"$tmpDir/v$victim%05d-$stem$infix" +
+      s"${GraftCellCodecTag.tag(GraftCellCodecTag.of(file))}$btag.parquet"
+  }
+
   /** SPLIT one region file at `splitKey`: rows with rowkey < key (and
     * null rowkeys — the write ordering is NULLS FIRST) to the `.lo`
     * half, rows >= key to `.hi`. Input rows are sorted, outputs stay
     * sorted and non-overlapping by construction; an empty half is
     * dropped. */
-  def splitFile(file: String, splitKey: Array[Byte],
+  def splitFile(file: String, victim: Int, splitKey: Array[Byte],
                 tmpDir: String): Seq[CellFileMeta] = {
-    // the halves keep the input's CODEC and re-carry its name tag at
-    // tag position (after the .lo/.hi infix, so the tag parser matches
-    // the final name); the bucket tag is deliberately dropped, as for
-    // every rewrite (documented: rewritten files degrade to unkeyed)
+    // the halves keep the input's CODEC and its name tag; the bucket
+    // tag is deliberately dropped (split files degrade to unkeyed)
     val codec = GraftCellCodecTag.of(file)
-    val ctag = GraftCellCodecTag.tag(codec)
-    val base = new java.io.File(file).getName.stripSuffix(".parquet")
-      .replaceAll("(-z[A-Z0-9_]+)?(-b\\d+of\\d+)?$", "")
-    val lo = new CellFileWriter(s"$tmpDir/$base.lo$ctag.parquet", codec)
-    val hi = new CellFileWriter(s"$tmpDir/$base.hi$ctag.parquet", codec)
+    def half(infix: String) = new CellFileWriter(
+      outputName(tmpDir, victim, file, infix, keepBucket = false), codec)
+    val lo = half(".lo")
+    val hi = half(".hi")
     val st = new CellRowStream(file)
     try {
       while (st.advance()) {
@@ -1977,6 +1913,16 @@ object GraftCellMaintenance {
   private[cell] def freshDir(tag: String): String =
     s"batch_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
+  /** A fresh, created `_tmp_<tag>_<uuid>` dir under the store root: a
+    * rewrite's task outputs before its publish. Readers skip it; the
+    * caller deletes it in a `finally`. */
+  private[cell] def tmpDir(store: String, tag: String): java.io.File = {
+    val d = new java.io.File(store,
+      s"_tmp_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    d.mkdirs()
+    d
+  }
+
   /** REGION SPLIT as an ADMIN op (r16 — the HBase shell `split 't',
     * 'key'`): every region file whose [min,max] straddles `splitKey`
     * is rewritten into two files cut exactly at the key, so a later
@@ -2005,17 +1951,17 @@ object GraftCellMaintenance {
       m.minKey.exists(JArrays.compareUnsigned(_, key) < 0) &&
       m.maxKey.exists(JArrays.compareUnsigned(_, key) >= 0))
     if (victims.isEmpty) return (0L, 0L)
-    val tmp = new java.io.File(store,
-      s"_tmp_split_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    tmp.mkdirs()
-    val tmpPath = tmp.getPath
-    val metas = spark.sparkContext
-      .parallelize(victims.map(_.path), victims.size)
-      .flatMap(f => CellRegionRewrite.splitFile(f, key, tmpPath))
-      .collect().toSeq
-    publishReplacement(store, freshDir("split"), metas, victims.map(_.path))
-    FileUtils.deleteQuietly(tmp)
-    (victims.size.toLong, metas.size.toLong)
+    val tmp = tmpDir(store, "split")
+    try {
+      val tmpPath = tmp.getPath
+      val metas = spark.sparkContext
+        .parallelize(victims.map(_.path).zipWithIndex, victims.size)
+        .flatMap { case (f, i) =>
+          CellRegionRewrite.splitFile(f, i, key, tmpPath) }
+        .collect().toSeq
+      publishReplacement(store, freshDir("split"), metas, victims.map(_.path))
+      (victims.size.toLong, metas.size.toLong)
+    } finally FileUtils.deleteQuietly(tmp)
   }
 
   /** REGION MERGE as an ADMIN op (r16 — the HBase shell
@@ -2057,18 +2003,18 @@ object GraftCellMaintenance {
         out.toSeq
       }.filter(_.size >= 2)
     if (runs.isEmpty) return (0L, before.size.toLong, before.size.toLong)
-    val tmp = new java.io.File(store,
-      s"_tmp_merge_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    tmp.mkdirs()
-    val tmpPath = tmp.getPath
-    val work = runs.map(_.map(_.path)).zipWithIndex
-    val metas = spark.sparkContext
-      .parallelize(work, work.size)
-      .flatMap { case (files, i) =>
-        CellRegionRewrite.mergeRun(files, f"merged-$i%05d.parquet", tmpPath) }
-      .collect().toSeq
-    publishReplacement(store, freshDir("merge"), metas, runs.flatten.map(_.path))
-    FileUtils.deleteQuietly(tmp)
+    val tmp = tmpDir(store, "merge")
+    try {
+      val tmpPath = tmp.getPath
+      val work = runs.map(_.map(_.path)).zipWithIndex
+      val metas = spark.sparkContext
+        .parallelize(work, work.size)
+        .flatMap { case (files, i) =>
+          CellRegionRewrite.mergeRun(files, f"merged-$i%05d.parquet", tmpPath) }
+        .collect().toSeq
+      publishReplacement(store, freshDir("merge"), metas,
+                         runs.flatten.map(_.path))
+    } finally FileUtils.deleteQuietly(tmp)
     (runs.size.toLong, before.size.toLong,
      CellFooterCache.filesOf(store).size.toLong)
   }
@@ -2230,9 +2176,7 @@ object GraftCellMaintenance {
         s"graftcell: bulkload file ${m.path} has parquet message type " +
         s"'${m.messageType}' incompatible with the target store"))
       if (metas.nonEmpty) {
-        val tmp = new java.io.File(store, s"_tmp_bulkload_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""))
-        tmp.mkdirs()
+        val tmp = tmpDir(store, "bulkload")
         val tmpPath = tmp.getPath
         spark.sparkContext
           .parallelize(metas.map(_.path), metas.size)
@@ -2772,11 +2716,9 @@ object GraftCellMaintenance {
     * pass through the driver), committed at the dir's mtime stamp (the
     * exact value `commitStampOf` already reported for it, so no travel
     * window shifts) and published by the same atomic tmp+rename as
-    * every manifest. After the upgrade the store is manifest-complete:
-    * write-once (dir, name), MVCC under DML, total-or-loud clock
-    * travel, and zero-footer planning hold STORE-WIDE — the documented
-    * "legacy dirs rewrite in place" caveat has nothing left to apply
-    * to. Idempotent; returns (dirs upgraded, files indexed). */
+    * every manifest. After the upgrade the store plans with zero
+    * footer opens and hbck can check every dir's declared file set.
+    * Idempotent; returns (dirs upgraded, files indexed). */
   def upgradeManifests(spark: org.apache.spark.sql.SparkSession,
                        store: String): (Long, Long) = {
     val legacy = CellFooterCache.committedDirs(store).filter(d =>
@@ -2829,8 +2771,10 @@ object GraftCellMaintenance {
     *    (invisible to reads — the manifest is authoritative — but
     *    occupying space; a crashed pre-manifest writer's leavings);
     *  - `pending_intents`: committed dirs carrying `_retire.json`
-    *    (an interrupted group-replace — readers already exclude the
-    *    listed files; `CALL repair` completes the deletion);
+    *    (an interrupted replacing publish — readers already exclude
+    *    the listed files; `CALL repair` completes the retirement),
+    *    plus dirs carrying an older release's `_rewrite_intent.json`
+    *    (an interrupted in-dir DELETE, which `CALL repair` refuses);
     *  - `invalid_snapshots`: snapshot manifests pinning dirs a later
     *    compaction removed (reads partially empty, restore refused);
     *  - `stale_tmp_dirs`: `_stage_*` / `_tmp_*` root dirs a crashed
@@ -2859,9 +2803,9 @@ object GraftCellMaintenance {
     dirs.foreach { d =>
       val dir = new java.io.File(store, d)
       if (new java.io.File(dir, CellRetire.NAME).exists()) intents += 1
-      // r19: a pending in-dir rewrite intent (interrupted ranged
-      // DELETE) is the same anomaly class — repair completes it
-      if (new java.io.File(dir, CellRewriteIntent.NAME).exists())
+      // an older release's interrupted ranged DELETE: `CALL repair`
+      // refuses it loudly
+      if (new java.io.File(dir, CellRetire.LEGACY_REWRITE_INTENT).exists())
         intents += 1
       declaredVsDisk(dir) match {
         case Some((declared, disk)) =>
@@ -2898,9 +2842,11 @@ object GraftCellMaintenance {
     * and the FIX side of the anomaly classes `hbck` only REPORTS:
     *
     *  1. pending retirements are COMPLETED first (CellRetire.repair —
-    *     an in-flight group replace's victim files are deliberate
+    *     an in-flight replacing publish's victim files are deliberate
     *     deletions mid-protocol, NOT garbage; collecting them as
-    *     orphans would race the protocol that owns them);
+    *     orphans would race the protocol that owns them). A store
+    *     holding an older release's in-dir rewrite intent is refused
+    *     here, before anything is swept;
     *  2. ORPHAN data files — parquet on disk that no manifest lists —
     *     are deleted. Orphans are invisible to every read (the
     *     manifest is authoritative), so this reclaims bytes without
@@ -3848,9 +3794,8 @@ object CellManifest {
 
   final case class Data(committedAtMicros: Long, files: Seq[CellFileMeta])
 
-  /** One file meta as a JSON node (name-relative — shared by the
-    * manifest proper and the r19 rewrite intent). */
-  private[cell] def encodeMeta(
+  /** One manifest entry as a JSON node (name-relative). */
+  private def encodeMeta(
       o: com.fasterxml.jackson.databind.node.ObjectNode,
       m: CellFileMeta): Unit = {
     o.put("name", new java.io.File(m.path).getName)
@@ -3875,7 +3820,7 @@ object CellManifest {
 
   /** Inverse of [[encodeMeta]]: the meta's `path` resolves under
     * `dir`. */
-  private[cell] def decodeMeta(dir: java.io.File,
+  private def decodeMeta(dir: java.io.File,
       o: com.fasterxml.jackson.databind.JsonNode): CellFileMeta =
     CellFileMeta(
       new java.io.File(dir, o.get("name").asText()).getPath,
@@ -3923,30 +3868,27 @@ object CellManifest {
     Some(Data(root.get("committedAtMicros").asLong(), files))
   }
 
-  /** Apply an in-place rewrite's results to a dir's manifest (if one
-    * exists): entries in `removed` drop out, entries in `replaced`
-    * (keyed by absolute file path) take the rewritten stats. The
-    * commit stamp is preserved — a rewrite mutates content, it does
-    * not create a new generation. No-op for manifest-less dirs (they
-    * already fall back to footer reads). */
-  def applyRewrite(dir: java.io.File, removed: Set[String],
-                   replaced: Map[String, CellFileMeta]): Unit =
+  /** Drop the entries in `removed` (absolute file paths) from a dir's
+    * manifest, if it has one. The commit stamp is preserved — losing
+    * files does not create a new generation. No-op for manifest-less
+    * dirs (they already fall back to footer reads). */
+  def removeEntries(dir: java.io.File, removed: Set[String]): Unit =
     read(dir).foreach { d =>
-      val files = d.files.filterNot(m => removed.contains(m.path))
-        .map(m => replaced.getOrElse(m.path, m))
-      write(dir, d.committedAtMicros, files)
+      write(dir, d.committedAtMicros,
+            d.files.filterNot(m => removed.contains(m.path)))
     }
 
   /** Monotonic commit stamp for a store: strictly greater than every
     * existing dir's stamp AND every travel-log event stamp, and at
     * least the wall clock. Dirs without a manifest contribute their
     * directory mtime (legacy fallback). The travel-log floor (ADVICE
-    * r18) anchors stamps that only the LOG persisted — a ranged
-    * DELETE's renameStamp commits no generation, so without it a
-    * backwards clock step could hand a later commit a stamp BELOW an
-    * already-logged event, breaking the log's strictly-monotonic
-    * replay order (a travel into that window would reconstruct a
-    * state that never existed). */
+    * r18) anchors stamps that only the LOG still persists — the
+    * superseding stamp of a dir that was itself retired later, or an
+    * older release's in-dir DELETE rename stamp — so a backwards clock
+    * step can never hand a later commit a stamp BELOW an
+    * already-logged event, which would break the log's
+    * strictly-monotonic replay order (a travel into that window would
+    * reconstruct a state that never existed). */
   def nextCommitStamp(store: String): Long = {
     val existing = CellFooterCache.committedDirs(store).map { d =>
       val dir = new java.io.File(store, d)
@@ -4055,7 +3997,7 @@ object CellRetire {
         CellArchive.archiveRetiring(store, pdir.getName,
           live.map(f => new java.io.File(f).getName).toSet, pinned)
         live.foreach { f => new java.io.File(f).delete(); removed += 1 }
-        CellManifest.applyRewrite(pdir, victims.toSet, Map.empty)
+        CellManifest.removeEntries(pdir, victims.toSet)
         val remaining = Option(pdir.listFiles).getOrElse(Array.empty)
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
         if (remaining.isEmpty && pdir.getName != dir.getName)
@@ -4071,142 +4013,27 @@ object CellRetire {
     removed
   }
 
-  /** [[complete]] every pending retirement, then every pending in-dir
-    * rewrite ([[CellRewriteIntent.repair]]). Returns (intents
-    * completed, files deleted). */
+  /** An in-dir rewrite intent: what an interrupted ranged DELETE of an
+    * older release left in its dir. Today's DELETE publishes through
+    * the replacing publish and never writes one. */
+  val LEGACY_REWRITE_INTENT = "_rewrite_intent.json"
+
+  /** [[complete]] every pending retirement. Returns (intents
+    * completed, files deleted). Refuses a store holding an older
+    * release's in-dir rewrite intent: completing it took a protocol
+    * that is gone, and ignoring it could leave the travel log
+    * recording a rename the manifest never made. */
   def repair(store: String): (Long, Long) = {
     var intents = 0L
     var removed = 0L
     CellFooterCache.committedDirs(store).map(new java.io.File(store, _))
       .foreach { dir =>
-        if (new java.io.File(dir, NAME).exists()) {
-          intents += 1
-          removed += complete(store, dir)
-        }
-      }
-    val (ri, rr) = CellRewriteIntent.repair(store)
-    (intents + ri, removed + rr)
-  }
-}
-
-/** IN-DIR REWRITE INTENTS (r19) — the ranged-DELETE analog of
-  * [[CellRetire]]: the manifest-bearing DELETE path renames victim
-  * files to fresh `-rK` names and must (1) archive pinned originals,
-  * (2) append the travel log's retire/born event pair, (3) swap the
-  * manifest, (4) delete the originals. A crash between (2) and (3)
-  * would leave the log asserting a rename the manifest never made
-  * visible: any later `TIMESTAMP AS OF ≥ renameStamp` would silently
-  * drop ALL of that file's rows (the old name reads as retired, the
-  * new name is in no manifest). So `deleteWhere` writes the intent
-  * into the affected dir BEFORE any of (1)–(4), carrying the rename
-  * stamp and the complete old→new mapping WITH the rewritten files'
-  * manifest stats (the `-rK` files themselves were already durably
-  * written by the executor tasks), and then runs [[complete]] — the
-  * same code `CALL repair` runs for an intent a crash left pending.
-  * Readers never consult it — a manifest-bearing dir plans from its
-  * manifest, which either still lists the olds (swap pending: the
-  * pre-DELETE content, correct) or already lists the news (swap done).
-  * `hbck` counts pending intents; `vacuum` completes them before its
-  * orphan sweep (an intent's new files are manifest-orphans only while
-  * the intent is pending). */
-object CellRewriteIntent {
-  val NAME = "_rewrite_intent.json"
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  final case class Pending(stamp: Long,
-                           renames: Seq[(String, Option[CellFileMeta])])
-
-  /** Persist the intent (atomic tmp+rename, like the manifest).
-    * `renames` pairs each victim's ABSOLUTE path with the rewritten
-    * file's stats (None = every row matched; the old file is simply
-    * removed). */
-  def write(dir: java.io.File, stamp: Long,
-            renames: Seq[(String, Option[CellFileMeta])]): Unit = {
-    val root = mapper.createObjectNode()
-    root.put("stamp", stamp)
-    val arr = root.putArray("renames")
-    renames.sortBy(_._1).foreach { case (old, meta) =>
-      val o = arr.addObject()
-      o.put("old", new java.io.File(old).getName)
-      meta.foreach(m => CellManifest.encodeMeta(o.putObject("new"), m))
-    }
-    val tmp = new java.io.File(dir, NAME + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(root))
-    java.nio.file.Files.move(tmp.toPath, new java.io.File(dir, NAME).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  def read(dir: java.io.File): Option[Pending] = {
-    val f = new java.io.File(dir, NAME)
-    if (!f.exists()) return None
-    val root = mapper.readTree(java.nio.file.Files.readAllBytes(f.toPath))
-    val renames = root.get("renames").elements().asScala.map { o =>
-      (new java.io.File(dir, o.get("old").asText()).getPath,
-       Option(o.get("new")).map(CellManifest.decodeMeta(dir, _)))
-    }.toSeq
-    Some(Pending(root.get("stamp").asLong(), renames))
-  }
-
-  def clear(dir: java.io.File): Unit = {
-    new java.io.File(dir, NAME).delete(); ()
-  }
-
-  def pendingOf(store: String): Long =
-    CellFooterCache.committedDirs(store)
-      .count(d => new java.io.File(new java.io.File(store, d), NAME)
-        .exists()).toLong
-
-  /** Carry out `dir`'s pending rewrite — archive, travel-log pair,
-    * manifest swap, delete the originals — from wherever an earlier
-    * attempt stopped, then drop the intent. Events the log already
-    * holds are not appended again. A dir without a manifest (one that
-    * vanished out-of-band; legacy dirs never write an intent) leaves
-    * nothing to complete. Returns the original files deleted. */
-  def complete(store: String, dir: java.io.File): Long = {
-    var removed = 0L
-    for (p <- read(dir); data <- CellManifest.read(dir)) {
-      val d = dir.getName
-      val oldNames = p.renames.map(r => new java.io.File(r._1).getName)
-      val listed = data.files.map(m => new java.io.File(m.path).getName).toSet
-      if (oldNames.exists(listed.contains)) {
-        // the manifest still lists the originals: swap pending
-        CellArchive.archiveRetiring(store, d,
-          oldNames.filter(listed.contains).toSet)
-        val newNames = p.renames.flatMap(_._2)
-          .map(m => new java.io.File(m.path).getName)
-        val logged = CellTravelLog.read(store)
-        def already(kind: String, names: Seq[String]) =
-          logged.exists(e => e.kind == kind && e.dir == d &&
-            e.at == p.stamp && e.files == names.sorted)
-        if (!already("retire", oldNames))
-          CellTravelLog.retire(store, d, CellManifest.commitStampOf(store, d),
-                               oldNames, p.stamp)
-        if (!already("born", newNames))
-          CellTravelLog.born(store, d, newNames, p.stamp)
-        CellManifest.applyRewrite(dir,
-          removed = p.renames.collect { case (o, None) => o }.toSet,
-          replaced = p.renames.collect { case (o, Some(m)) => o -> m }.toMap)
-      }
-      // swap done (now or earlier): delete lingering originals
-      p.renames.foreach { case (o, _) =>
-        val f = new java.io.File(o)
-        if (f.isFile) { f.delete(); removed += 1 }
-      }
-    }
-    clear(dir)
-    CellFooterCache.invalidate(store)
-    removed
-  }
-
-  /** [[complete]] every pending in-dir rewrite. Returns (intents
-    * completed, old files deleted). */
-  def repair(store: String): (Long, Long) = {
-    var intents = 0L
-    var removed = 0L
-    CellFooterCache.committedDirs(store).map(new java.io.File(store, _))
-      .foreach { dir =>
+        if (new java.io.File(dir, LEGACY_REWRITE_INTENT).exists())
+          throw new IllegalStateException(
+            s"graftcell: ${dir.getPath} holds $LEGACY_REWRITE_INTENT, an " +
+            "interrupted ranged DELETE that an older release wrote; " +
+            "finish it with that release (CALL repair) before using " +
+            "this one")
         if (new java.io.File(dir, NAME).exists()) {
           intents += 1
           removed += complete(store, dir)
@@ -4248,7 +4075,10 @@ object CellFooterCache {
     * (see [[CellRetire]]): a file listed by a committed intent is
     * already replaced by its publishing batch dir — planning it too
     * would double-count its rows during the delete window or after a
-    * crash between publish and delete. */
+    * crash between publish and delete. The subtraction is by path, so
+    * it holds in manifest-bearing and legacy manifest-less dirs alike
+    * — which is what lets UPDATE/MERGE and DELETE replace legacy files
+    * through the same publish. */
   def filesOf(store: String): Seq[CellFileMeta] = {
     val retired = CellRetire.retiredOf(store)
     committedDirs(store).flatMap(filesUnder(store, _))
@@ -4256,10 +4086,9 @@ object CellFooterCache {
   }
 
   /** Files of a store, optionally AS OF a named snapshot: pinned files
-    * resolve LIVE-FIRST — sound because (dir, name) is write-once on
-    * manifest-bearing stores since r18 (a live pinned name IS the
-    * pinned content; only a legacy in-place rewrite can still change a
-    * name's content) — then through `_archive/<dir>/` (r17 —
+    * resolve LIVE-FIRST — sound because (dir, name) is write-once (a
+    * live pinned name IS the pinned content: no rewrite reuses a
+    * name) — then through `_archive/<dir>/` (r17 —
     * generations a compaction/truncate/restore/DML retired survive for
     * every snapshot that pins them, as in HBase's archive dir). A pin
     * in neither place reads as empty (`list_snapshots` reports it). */
@@ -4302,10 +4131,11 @@ object CellFooterCache {
     * backup / Iceberg incremental consumption): only the generations
     * committed AFTER the snapshot are planned, so a periodic consumer
     * reads O(delta), never O(store). Dir-granular by the same contract
-    * as snapshots themselves (committed dirs are write-once; the
-    * in-place file-granular DELETE carries the documented
-    * snapshot-invalidation caveat). An unknown since-snapshot fails
-    * loudly inside [[GraftCellSnapshot.dirs]]. */
+    * as snapshots themselves (committed dirs are write-once): the
+    * survivors of an UPDATE/MERGE or DELETE are a new batch dir, so
+    * they read as delta, while the rows the DML removed from older
+    * dirs do not show up here. An unknown since-snapshot fails loudly
+    * inside [[GraftCellSnapshot.dirs]]. */
   def filesOf(store: String, snapshot: Option[String],
               pinnedDirs: Option[Seq[CellGenPin]],
               since: Option[String]): Seq[CellFileMeta] =
@@ -4328,9 +4158,9 @@ object CellFooterCache {
     * `_manifest.json` with every stat the planner needs, so the driver
     * opens NO footers for it (at millions of region files the footer
     * sweep would serialize the first plan on the driver). Entries whose
-    * file has since been deleted in place (a crash between a DELETE's
-    * file removal and its manifest update) are dropped by an exists()
-    * stat — cheap, and conservative in the right direction (a listed-
+    * file has since been deleted (a crash inside
+    * [[CellRetire.complete]], between a victim's deletion and its
+    * manifest update) are dropped by an exists() stat — cheap, and conservative in the right direction (a listed-
     * but-missing file holds no rows). Legacy dirs (no manifest — e.g.
     * the plain-parquet stager's `region=k` layout) fall back to one
     * footer open per file, counted in [[footerOpens]]. */

@@ -134,11 +134,14 @@ class ArchiveSpec extends AnyFunSuite {
     // The publish and CALL repair finish a commit through the same
     // code, so they must leave the same store. Pre-state: a data-less
     // marker dir (an earlier truncate) and two generations pinned by a
-    // snapshot. Two replacing publishes replace all three dirs: an
-    // overwrite and a minor compaction. For each, copy "<t>i" runs it
-    // straight through; copy "<t>r" is planted in the state it leaves
-    // right after its rename — the new batch dir carrying its retire
-    // intent, nothing retired yet — and completed by CALL repair.
+    // snapshot, {a} and {b, c}. Three replacing publishes: an
+    // overwrite and a minor compaction replace all three dirs; a
+    // ranged DELETE replaces both data files, emptying {a} and keeping
+    // c of {b, c}. For each, copy "<t>i" runs it straight through;
+    // copy "<t>r" is planted in the state it leaves right after its
+    // rename — the new batch dir carrying a retire intent for what the
+    // publish replaced, nothing retired yet — and completed by CALL
+    // repair.
     val root2 = java.nio.file.Files
       .createTempDirectory("graft_archrep_cat_").toString
     s.conf.set("spark.sql.catalog.graftrep",
@@ -169,9 +172,13 @@ class ArchiveSpec extends AnyFunSuite {
     def write(st: String, mode: String, keys: String*): Unit =
       s.createDataFrame(
         keys.map(rk => org.apache.spark.sql.Row(rk, "d", "q", 1L, rk)).asJava,
-        GraftCell.SCHEMA)
+        GraftCell.SCHEMA).coalesce(1)
         .write.format("graftcell").mode(mode).save(st)
-    def crashCompare(t: String)(publish: String => Unit): Unit = {
+    def read(st: String): Seq[String] =
+      s.read.format("graftcell").load(st).collect()
+        .map(_.getString(0)).sorted.toSeq
+    def crashCompare(t: String, want: Seq[String])
+                    (publish: String => Unit): Unit = {
       s.sql(s"""CREATE TABLE graftrep.${t}i (rowkey STRING, family STRING,
                qualifier STRING, version BIGINT, value STRING)
                USING graftcell""")
@@ -184,28 +191,35 @@ class ArchiveSpec extends AnyFunSuite {
       assert(marker.size == 1 && CellFooterCache.filesUnder(inl, marker.head)
         .isEmpty, s"truncate must leave one data-less marker dir: $marker")
       write(inl, "append", "a")
-      write(inl, "append", "b")
+      write(inl, "append", "b", "c")
       GraftCellSnapshot.create(inl, "pin")
-      val replaced = CellFooterCache.committedDirs(inl)
-      assert(replaced.size == 3)
+      val before = CellFooterCache.committedDirs(inl)
+      assert(before.size == 3)
+      val filesBefore = CellFooterCache.filesOf(inl).map(_.path)
+      assert(filesBefore.size == 2, s"one file per generation: $filesBefore")
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(inl), new java.io.File(rep))
       publish(inl)
-      val dest = CellFooterCache.committedDirs(inl).diff(replaced)
+      CellFooterCache.invalidate(inl)
+      assert(read(inl) == want, s"$t: wrong rows after the publish")
+      val dest = CellFooterCache.committedDirs(inl).diff(before)
       assert(dest.size == 1, s"$t must publish one dir: $dest")
+      // what the publish replaced: the files and dirs it retired
+      val replacedFiles = filesBefore
+        .diff(CellFooterCache.filesOf(inl).map(_.path))
+      val replacedDirs = before.diff(CellFooterCache.committedDirs(inl))
+      assert(replacedFiles.size == 2,
+        s"$t must replace both data files: $replacedFiles")
       val destDir = new java.io.File(rep, dest.head)
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(inl, dest.head), destDir)
-      CellFooterCache.invalidate(rep)
-      CellRetire.write(destDir, replaced.flatMap(d =>
-        CellFooterCache.filesUnder(rep, d)).map(_.path), replaced)
+      CellRetire.write(destDir, replacedFiles.map(_.replace(inl, rep)),
+                       replacedDirs)
       CellFooterCache.invalidate(rep)
       assert(GraftCellMaintenance.hbck(rep)._4 == 1L, "planted intent")
       // batch readers already exclude what the intent lists
-      val pending = s.read.format("graftcell").load(rep).collect()
-        .map(_.getString(0)).sorted.toSeq
-      assert(pending == Seq("a", "b"),
-        s"$t: a read before repair must return each row once: $pending")
+      assert(read(rep) == want,
+        s"$t: a read before repair must return each row once")
       val r = s.sql(s"CALL graftrep.repair('${t}r')").collect()(0)
       assert(r.getLong(0) == 1L && r.getLong(1) == 2L,
         s"$t: repair must complete the planted intent: $r")
@@ -213,27 +227,38 @@ class ArchiveSpec extends AnyFunSuite {
       a.zip(b).foreach { case ((what, x), (_, y)) =>
         assert(x == y, s"$t: $what differs: inline $x, repair $y") }
       val got = a.toMap
-      assert(got("hbck") == ((1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
+      val live = got("live dirs").asInstanceOf[Seq[String]]
+      assert(got("hbck") ==
+        ((live.size.toLong, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
         s"$t: hbck must be clean: ${got("hbck")}")
-      // what the replaced dirs held retired with them: the pinned
-      // generations AND the data-less marker moved to the archive, and
-      // only the publish's dir is live
-      assert(got("live dirs") == dest)
-      assert(replaced.forall(d => CellArchive.dirOf(inl, d).isDirectory),
-        s"$t: every pinned replaced dir must be archived: ${got("archived")}")
+      // what the publish replaced retired with it: the pinned
+      // generations (and, when replaced, the data-less marker) moved to
+      // the archive, and the publish's dir is live
+      assert(live == (before.diff(replacedDirs) ++ dest).sorted)
+      assert(replacedFiles.forall(f => CellArchive.dirOf(inl,
+          new java.io.File(f).getParentFile.getName).isDirectory),
+        s"$t: every pinned replaced file must be archived: ${got("archived")}")
       assert(got("travel log").asInstanceOf[Seq[(String, String, Seq[String])]]
         .count(_._1 == "retire") == 3,
         s"$t: one retire event per data generation: ${got("travel log")}")
       s.sql(s"DROP TABLE graftrep.${t}i")
     }
-    crashCompare("ovw")(write(_, "overwrite", "a", "b"))
-    crashCompare("mnr") { st =>
+    crashCompare("ovw", Seq("a", "b"))(write(_, "overwrite", "a", "b"))
+    crashCompare("mnr", Seq("a", "b", "c")) { st =>
       assert(GraftCellMaintenance.minorCompact(s, st, Long.MaxValue).size == 3)
       assert(GraftCellSnapshot.names(st).sorted == Seq("old", "pin"),
         "minor compaction must leave no work snapshot")
       assert(!Option(new java.io.File(st).list).get.exists(n =>
         n.startsWith("_tmp_") || n.startsWith("_stage_")),
         "minor compaction must leave no tmp store or stage dir")
+    }
+    crashCompare("del", Seq("c")) { st =>
+      new graft.sources.cell.GraftCellTable(st).deleteWhere(
+        Array[org.apache.spark.sql.sources.Filter](
+          org.apache.spark.sql.sources.LessThan("rowkey", "c")))
+      assert(!Option(new java.io.File(st).list).get.exists(n =>
+        n.startsWith("_tmp_") || n.startsWith("_stage_")),
+        "DELETE must leave no tmp or stage dir")
     }
   }
 
@@ -339,8 +364,8 @@ class ArchiveSpec extends AnyFunSuite {
                                  GraftCellTimeTravel}
       // the view recorded at each point of structural history: the
       // newest commit stamp, or the latest travel-log event stamp when
-      // that is newer (a ranged DELETE renames at its own event stamp
-      // without committing a generation)
+      // that is newer (a restore logs its revival at its own stamp,
+      // while the revived dirs keep their old commit stamps)
       def latestViewStamp(): Long = {
         val commits = CellFooterCache.committedDirs(store)
           .map(d => CellManifest.commitStampOf(store, d)).max
@@ -509,23 +534,6 @@ class ArchiveSpec extends AnyFunSuite {
            Seq(("old", Seq(d), Seq.empty[String])))
   }
 
-  test("rewrite names bump the -rK counter and keep the bucket tag in " +
-       "tag position (write-once (dir, name) invariant)") {
-    import graft.sources.cell.CellDeleteRewrite.nextRewriteName
-    assert(nextRewriteName("part-00001-0002.parquet") ==
-           "part-00001-0002-r1.parquet")
-    assert(nextRewriteName("part-00001-0002-r1.parquet") ==
-           "part-00001-0002-r2.parquet")
-    assert(nextRewriteName("part-00001-0002-b3of8.parquet") ==
-           "part-00001-0002-r1-b3of8.parquet")
-    assert(nextRewriteName("part-00001-0002-r7-b3of8.parquet") ==
-           "part-00001-0002-r8-b3of8.parquet")
-    // the scan's layout evidence survives the rewrite
-    assert(graft.sources.cell.GraftBucket
-      .parse(nextRewriteName("part-00001-0002-b3of8.parquet"))
-      .contains((3, 8)))
-  }
-
   test("TIMESTAMP AS OF is total-or-loud over maintenance history (r18): " +
        "archived windows reconstruct exactly, lost windows refuse loudly") {
     import scala.collection.JavaConverters._
@@ -635,8 +643,14 @@ class ArchiveSpec extends AnyFunSuite {
     val t0 = CellFooterCache.committedDirs(store)
       .map(d => graft.sources.cell.CellManifest.commitStampOf(store, d)).max
     s.sql("CALL graftmvcc.snapshot('t', 'iso')")
-    // ranged DELETE — the deleteWhere new-name path: the victim file
-    // rewrites under a fresh -r1 name, the pinned original archives
+    val deleteVictim = {
+      val vs = CellFooterCache.filesOf(store)
+        .filter(_.maxKey.exists(k => new String(k, "UTF-8") >= "w"))
+      assert(vs.size == 1, s"one DELETE victim expected: $vs")
+      new java.io.File(vs.head.path).getName
+    }
+    // ranged DELETE — the deleteWhere path: the victim's survivors
+    // publish in a new batch dir, the pinned original archives
     s.sql("DELETE FROM graftmvcc.t WHERE rowkey >= 'w'")
     // group-replace UPDATE — the COW path: victims retire into the
     // archive, the rewritten rows publish as a new batch dir
@@ -659,8 +673,12 @@ class ArchiveSpec extends AnyFunSuite {
       .map(m => new java.io.File(m.path).getName).toSet
     val retiredNames = namesBefore -- liveNames
     assert(retiredNames.nonEmpty, "DML must retire the old names")
-    assert(liveNames.exists(_.contains("-r1")),
-      s"the ranged DELETE must publish a -r1 rewrite name: $liveNames")
+    assert(!liveNames.contains(deleteVictim),
+      s"the DELETE victim's name must leave the live set: $liveNames")
+    assert(CellFooterCache.filesOf(store).exists(m =>
+        new java.io.File(m.path).getParentFile.getName
+          .startsWith("batch_delete_")),
+      "the ranged DELETE must publish its survivors in a new dir")
     assert(CellArchive.root(store).isDirectory,
       "pinned DML victims must be archived")
     // the manifest swap stays exact: a cold re-plan opens no footers
@@ -770,8 +788,10 @@ class ArchiveSpec extends AnyFunSuite {
     import graft.sources.cell.CellTravelLog
     val store = java.nio.file.Files
       .createTempDirectory("graft_stamp_spec_").toString
-    // a ranged DELETE's renameStamp commits NO generation — only the
-    // log persists it. Simulate one logged far ahead of the wall clock
+    // a retire event's superseding stamp outlives its dir once later
+    // maintenance retires that dir too — only the log persists it, as
+    // it does an older release's in-dir DELETE rename stamp. Simulate
+    // one logged far ahead of the wall clock
     // (= the wall clock stepped back after it): the next commit stamp
     // must still land strictly above it, or the log's replay order
     // breaks (ADVICE r18).
@@ -783,115 +803,88 @@ class ArchiveSpec extends AnyFunSuite {
       "their monotonicity floor")
   }
 
-  test("crash-completing repair of an interrupted ranged DELETE (r19): " +
-       "the rewrite intent closes the log-vs-manifest window") {
+  test("a ranged DELETE on legacy manifest-less dirs commits through the " +
+       "replacing publish: right rows, clean hbck, isolated snapshot") {
     import scala.collection.JavaConverters._
-    import graft.sources.cell.{CellDeleteRewrite, CellRewriteIntent,
-                               CellTravelLog}
     val root = java.nio.file.Files
-      .createTempDirectory("graft_rwint_spec_").toString
-    s.conf.set("spark.sql.catalog.graftrwi",
+      .createTempDirectory("graft_legdel_spec_").toString
+    s.conf.set("spark.sql.catalog.graftlegdel",
                classOf[graft.sources.cell.GraftCellCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftrwi.root", root)
-    s.sql("""CREATE TABLE graftrwi.t (rowkey STRING, family STRING,
+    s.conf.set("spark.sql.catalog.graftlegdel.root", root)
+    s.sql("""CREATE TABLE graftlegdel.t (rowkey STRING, family STRING,
+             qualifier STRING, version BIGINT, value STRING)
+             USING graftcell""")
+    val store = s"$root/t"
+    // LEGACY layout: plain parquet written behind the catalog's back,
+    // one file in each of two region dirs, no manifests anywhere
+    s.createDataFrame(
+      ('a' to 'z').map(c =>
+        org.apache.spark.sql.Row(c.toString, "d", "q", 1L, s"v$c")).asJava,
+      GraftCell.SCHEMA)
+      .withColumn("region",
+        org.apache.spark.sql.functions.expr("CASE WHEN rowkey < 'n' THEN 0 ELSE 1 END"))
+      .repartition(org.apache.spark.sql.functions.col("region"))
+      .sortWithinPartitions("region", "rowkey")
+      .write.mode("append").partitionBy("region").parquet(store)
+    CellFooterCache.invalidate(store)
+    def readAll(sql: String = "SELECT rowkey, value FROM graftlegdel.t") =
+      s.sql(s"$sql ORDER BY rowkey")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val original = readAll()
+    assert(original.size == 26)
+    assert(CellFooterCache.committedDirs(store) == Seq("region=0", "region=1"))
+    assert(CellFooterCache.committedDirs(store).forall(d =>
+      CellManifest.read(new java.io.File(store, d)).isEmpty))
+    s.sql("CALL graftlegdel.snapshot('t', 'pre')")
+    // one victim per region: region=0 keeps a..b, region=1 keeps y..z
+    s.sql("DELETE FROM graftlegdel.t WHERE rowkey >= 'c' AND rowkey < 'y'")
+    val deleted = original.filter { case (k, _) => k < "c" || k >= "y" }
+    assert(readAll() == deleted, "DELETE must leave exactly the survivors")
+    val dirs = CellFooterCache.committedDirs(store)
+    assert(dirs.size == 1 && dirs.head.startsWith("batch_delete_"),
+      s"both emptied legacy dirs retire; one DELETE dir holds the rest: $dirs")
+    val h = s.sql("CALL graftlegdel.hbck('t')").collect()(0)
+    assert(Seq("missing_files", "orphan_files", "pending_intents",
+               "invalid_snapshots", "stale_tmp_dirs",
+               "unreferenced_archived", "lost_travel_windows",
+               "legacy_dirs").forall(h.getAs[Long](_) == 0L),
+      s"hbck must be clean: $h")
+    // legacy dirs gain isolation: the snapshot reads its creation-time
+    // content through the archive
+    assert(readAll("SELECT rowkey, value FROM graftlegdel.t VERSION AS OF 'pre'")
+      == original, "the pre-DELETE snapshot must read the original rows")
+    s.sql("DROP TABLE graftlegdel.t")
+  }
+
+  test("an older release's in-dir rewrite intent fails loudly: hbck " +
+       "counts it, CALL repair refuses naming the dir") {
+    import scala.collection.JavaConverters._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_oldint_spec_").toString
+    s.conf.set("spark.sql.catalog.graftoldint",
+               classOf[graft.sources.cell.GraftCellCatalog].getName)
+    s.conf.set("spark.sql.catalog.graftoldint.root", root)
+    s.sql("""CREATE TABLE graftoldint.t (rowkey STRING, family STRING,
              qualifier STRING, version BIGINT, value STRING)
              USING graftcell""")
     val store = s"$root/t"
     s.createDataFrame(
-      ('a' to 'z').map(c =>
-        org.apache.spark.sql.Row(c.toString, "d", "q", 1L, s"v$c")).asJava,
-      GraftCell.SCHEMA).coalesce(1)
-      .write.format("graftcell").option("maxRowsPerFile", 13)
-      .mode("append").save(store)
-    def readAll() = s.sql(
-      "SELECT rowkey, value FROM graftrwi.t ORDER BY rowkey")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    val original = readAll()
-    s.sql("CALL graftrwi.snapshot('t', 'iso')")
-    val t0 = CellFooterCache.committedDirs(store)
-      .map(d => CellManifest.commitStampOf(store, d)).max
-    // SIMULATED CRASH mid `DELETE FROM t WHERE rowkey >= 'w'` at the
-    // exact ADVICE r18 window: executor rewrites durable, intent
-    // written, archive + travel-log retire/born appended — driver dies
-    // BEFORE CellManifest.applyRewrite. Pre-r19 this state was
-    // unrepairable: the log asserts the rename, the manifest never saw
-    // it, so any travel ≥ renameStamp silently dropped the file's rows.
-    val victim = CellFooterCache.filesOf(store).find(m =>
-      m.maxKey.exists(b => new String(b, "UTF-8") >= "w")).get
-    val victimName = new java.io.File(victim.path).getName
-    val dir = new java.io.File(victim.path).getParentFile
-    val filters: Array[org.apache.spark.sql.sources.Filter] =
-      Array(org.apache.spark.sql.sources.GreaterThanOrEqual("rowkey", "w"))
-    val res = CellDeleteRewrite.rewriteFile(victim.path, filters,
-                                            inPlace = false)
-    val renameStamp = CellManifest.nextCommitStamp(store)
-    CellRewriteIntent.write(dir, renameStamp, Seq(res))
-    CellArchive.archiveRetiring(store, dir.getName, Set(victimName))
-    CellTravelLog.retire(store, dir.getName,
-      CellManifest.commitStampOf(store, dir.getName), Seq(victimName),
-      renameStamp)
-    CellTravelLog.born(store, dir.getName,
-      res._2.toSeq.map(m => new java.io.File(m.path).getName), renameStamp)
-    CellFooterCache.invalidate(store)
-    // live reads still serve the pre-DELETE manifest — never half state
-    assert(readAll() == original,
-      "the un-swapped manifest must keep serving the pre-DELETE view")
-    // hbck REPORTS the pending rewrite intent
-    val h = s.sql("CALL graftrwi.hbck('t')").collect()(0)
+      Seq(org.apache.spark.sql.Row("a", "d", "q", 1L, "va")).asJava,
+      GraftCell.SCHEMA)
+      .write.format("graftcell").mode("append").save(store)
+    val dir = new java.io.File(store, CellFooterCache.committedDirs(store).head)
+    java.nio.file.Files.write(
+      new java.io.File(dir, "_rewrite_intent.json").toPath,
+      """{"stamp":1,"renames":[]}""".getBytes("UTF-8"))
+    val h = s.sql("CALL graftoldint.hbck('t')").collect()(0)
     assert(h.getAs[Long]("pending_intents") == 1L,
-      s"hbck must count the pending rewrite intent: $h")
-    // repair CRASH-COMPLETES: manifest swap, old-file deletion, intent
-    val rep = s.sql("CALL graftrwi.repair('t')").collect()(0)
-    assert(rep.getAs[Long]("intents_completed") == 1L, rep.toString)
-    val deleted = original.filterNot(_._1 >= "w")
-    assert(readAll() == deleted,
-      "repair must complete the manifest swap (post-DELETE view)")
-    assert(CellRewriteIntent.pendingOf(store) == 0L, "intent must clear")
-    assert(!new java.io.File(victim.path).isFile,
-      "repair must delete the replaced original")
-    // the travel log stays consistent — NO duplicate events appended
-    // (the crash already logged the pair; repair detects and skips)
-    val evs = CellTravelLog.read(store).filter(_.at == renameStamp)
-    assert(evs.count(_.kind == "retire") == 1 &&
-           evs.count(_.kind == "born") == 1,
-      s"repair must not duplicate already-logged events: $evs")
-    // total-or-loud travel across the completed rename: the pre-DML
-    // window reconstructs the original via the archive, the post-DML
-    // window reads the deleted view
-    def travel(ts: Long) = s.sql(
-      s"""SELECT rowkey, value FROM graftrwi.t
-          TIMESTAMP AS OF timestamp_micros(${ts}L) ORDER BY rowkey""")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(travel(t0) == original,
-      "pre-DELETE travel must reconstruct the original through repair")
-    assert(travel(renameStamp) == deleted,
-      "post-DELETE travel must read the rename's view")
-    // the snapshot stays isolated and the second repair is a no-op
-    assert(s.sql("SELECT rowkey FROM graftrwi.t VERSION AS OF 'iso'")
-      .count() == 26L)
-    val rep2 = s.sql("CALL graftrwi.repair('t')").collect()(0)
-    assert(rep2.getAs[Long]("intents_completed") == 0L, "idempotent")
-    // EARLIER crash point (intent written, nothing else yet): repair
-    // drives the WHOLE sequence including the missing log events
-    val victim2 = CellFooterCache.filesOf(store).find(m =>
-      m.maxKey.exists(b => new String(b, "UTF-8") >= "t")).get
-    val v2Name = new java.io.File(victim2.path).getName
-    val dir2 = new java.io.File(victim2.path).getParentFile
-    val f2: Array[org.apache.spark.sql.sources.Filter] =
-      Array(org.apache.spark.sql.sources.GreaterThanOrEqual("rowkey", "t"))
-    val res2 = CellDeleteRewrite.rewriteFile(victim2.path, f2,
-                                             inPlace = false)
-    val stamp2 = CellManifest.nextCommitStamp(store)
-    CellRewriteIntent.write(dir2, stamp2, Seq(res2))
-    CellFooterCache.invalidate(store)
-    s.sql("CALL graftrwi.repair('t')")
-    assert(readAll() == deleted.filterNot(_._1 >= "t"),
-      "repair from the intent-only crash point must finish the DELETE")
-    assert(CellTravelLog.read(store).exists(e =>
-        e.kind == "retire" && e.at == stamp2 && e.files == Seq(v2Name)),
-      "repair must append the missing retire event itself")
-    assert(travel(renameStamp) == deleted,
-      "the pre-second-DELETE window must survive (iso pins the victim)")
-    s.sql("DROP TABLE graftrwi.t")
+      s"hbck must count the legacy rewrite intent: $h")
+    val e = intercept[Exception](s.sql("CALL graftoldint.repair('t')").collect())
+    val ise = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalStateException => x }
+    assert(ise.exists(x => x.getMessage.contains(dir.getPath) &&
+                           x.getMessage.contains("older release")),
+      s"repair must refuse with an IllegalStateException naming the dir: $e")
+    s.sql("DROP TABLE graftoldint.t")
   }
 }

@@ -1824,6 +1824,44 @@ class CellConnectorSpec extends AnyFunSuite {
     s.sql("DROP TABLE graftsplit.t")
   }
 
+  test("split_region on a multi-batch store: same-named victims from " +
+       "two batches split side by side, no tmp dir left") {
+    import graft.sources.cell.{CellFooterCache, GraftCellMaintenance}
+    import scala.collection.JavaConverters._
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_split2_spec_").toString + "/t"
+    // two appended a..z batches: each is ONE file, and every connector
+    // batch names its files part-<pid>-<seq>, so both victims share a
+    // name
+    (1 to 2).foreach { b =>
+      s.createDataFrame(
+        ('a' to 'z').map(c =>
+          org.apache.spark.sql.Row(c.toString, "d", "q", b.toLong, s"v$c")).asJava,
+        GraftCell.SCHEMA).coalesce(1)
+        .write.format("graftcell").mode("append").save(store)
+    }
+    val names = CellFooterCache.filesOf(store)
+      .map(m => new java.io.File(m.path).getName)
+    assert(names.size == 2 && names.distinct.size == 1,
+      s"fixture must hold two same-named victims: $names")
+    def readAll() = s.read.format("graftcell").load(store)
+      .collect().map(r => (r.getString(0), r.getLong(3), r.getString(4)))
+      .sorted.toSeq
+    val before = readAll()
+    // pins the victims, so the pre-split travel window stays readable
+    graft.sources.cell.GraftCellSnapshot.create(store, "pre")
+    val (split, created) = GraftCellMaintenance.splitRegion(s, store, "m")
+    assert((split, created) == ((2L, 4L)), s"split summary: ($split, $created)")
+    val metas = CellFooterCache.filesOf(store)
+    assert(metas.size == 4, s"four halves expected: ${metas.map(_.path)}")
+    assertFooterTruth(metas)
+    assert(readAll() == before, "content must survive the split")
+    assert(GraftCellMaintenance.hbck(store) ==
+      ((1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)), "hbck must be clean")
+    assert(!Option(new java.io.File(store).list).get.exists(
+      _.startsWith("_tmp_")), "the split must leave no tmp dir")
+  }
+
   test("merge_regions k-way-merges adjacent files; content and sort order preserved (r16)") {
     import graft.sources.cell.CellFooterCache
     import scala.collection.JavaConverters._
@@ -1976,8 +2014,8 @@ class CellConnectorSpec extends AnyFunSuite {
     val shown = s.sql("SHOW TBLPROPERTIES graftclone.tclone").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(shown.get("ttl_micros").contains("777"), s"clone props: $shown")
-    // a source DELETE retires the shared names (r18: the rewrite
-    // publishes a NEW -r1 name) — the clone keeps its own links
+    // a source DELETE retires the shared names (its survivors publish
+    // in a new batch dir) — the clone keeps its own links
     s.sql("DELETE FROM graftclone.t WHERE rowkey >= 'h'")
     assert(readAll("t").size == 7)
     assert(readAll("tclone") == base, "source DELETE leaked into the clone")
@@ -2372,8 +2410,9 @@ class CellConnectorSpec extends AnyFunSuite {
     new GraftCellTable(store)
       .deleteWhere(Array[org.apache.spark.sql.sources.Filter](
         LessThan("rowkey", "c")))
-    // the rewriting tasks shipped fresh stats back; the manifest was
-    // updated in place, so the cold re-plan still needs no footers
+    // the rewriting tasks shipped fresh stats back into the DELETE
+    // dir's manifest, and the victims' manifest dropped their entries,
+    // so the cold re-plan still needs no footers
     CellFooterCache.invalidate(store)
     val opens0 = CellFooterCache.footerOpens.get()
     val metas = CellFooterCache.filesOf(store)
@@ -3027,7 +3066,7 @@ class CellConnectorSpec extends AnyFunSuite {
     assert(tmax.length <= 64)
     // all-0xFF prefix ⇒ unbounded ⇒ None (keep — evidence only)
     assert(GraftCell.truncStatMax(Array.fill(100)(0xFF.toByte)).isEmpty)
-    // a DELETE rewrite refreshes the value stats exactly (new -r1 file
+    // a DELETE rewrite refreshes the value stats exactly (its new file
     // still prunes; cold re-plan needs no footers)
     new graft.sources.cell.GraftCellTable(root).deleteWhere(
       Array[org.apache.spark.sql.sources.Filter](
@@ -3094,7 +3133,7 @@ class CellConnectorSpec extends AnyFunSuite {
     assert(planned(absent2) == cFiles.size,
       "bloom-less files must stay planned; bloomed ones still prune")
     assert(absent2.count() == 0L)
-    // a DELETE rewrite refreshes the bloom exactly (the -r1 file's
+    // a DELETE rewrite refreshes the bloom exactly (the new file's
     // bloom no longer claims the dropped value; b prunes by bloom, c
     // by range — nothing left to plan)
     new graft.sources.cell.GraftCellTable(root).deleteWhere(
@@ -3144,11 +3183,16 @@ class CellConnectorSpec extends AnyFunSuite {
     }
     checkStore() // post-compact: the descriptor traveled through CALL compact
     // a ranged DELETE rewrite keeps each file's codec (-z tag parsed
-    // from the input name; new -rK names carry it forward)
+    // from the input name; the output names carry it forward)
+    val pathsBefore = CellFooterCache.filesOf(store).map(_.path).toSet
     s.sql("DELETE FROM graftcat.events_zip WHERE rowkey >= '11' AND rowkey < '12'")
     checkStore()
-    assert(CellFooterCache.filesOf(store)
-      .exists(m => m.path.contains("-r1")), "expected a -r1 rewrite name")
+    val after = CellFooterCache.filesOf(store)
+    assert((pathsBefore -- after.map(_.path)).nonEmpty,
+      "the DELETE victims' names must leave the live set")
+    assert(after.exists(m => new java.io.File(m.path).getParentFile.getName
+        .startsWith("batch_delete_")),
+      "the DELETE survivors must sit in a new batch_delete_* dir")
     // validation: unsupported codec names refuse at CREATE/ALTER
     val e = intercept[Exception] {
       s.sql("""CREATE TABLE graftcat.events_zip_bad (
