@@ -149,8 +149,10 @@ object Scale {
     * pruning) vs off (full-table copy-on-write through the same code
     * path), and the same band as a ranged DELETE (footer-pruned
     * `deleteWhere`), each min of 2 on a freshly staged store; the
-    * DELETE also reports its Spark jobs. SEEKSCALE.md "Group-granular
-    * DML vs full-table COW (round 15)". */
+    * DELETE also reports its Spark jobs. Then 32 successive ranged
+    * DELETEs on one store: committed dirs, DELETE seconds and a point
+    * get as the DELETEs pile up. SEEKSCALE.md "Group-granular DML vs
+    * full-table COW (round 15)". */
   private def dml(spark: SparkSession, root: String,
                   sfDir: String): Unit = {
     val groupFilter =
@@ -197,6 +199,32 @@ object Scale {
         s"DELETE FROM graftdml.t_d$nFiles WHERE $where")
       println(f"| ~$nFiles ($rows rows) | $gT%.2f | $gN | $cT%.2f | $cN | " +
               f"$dT%.2f | $dN | $dJ |")
+    }
+    // repeated ranged DELETEs on one 128-file store: DELETE k trims 10
+    // rows off region file k, so every DELETE rewrites one file and
+    // keeps survivors; after it, the committed dirs, its own seconds
+    // and a point get (fastest of 3)
+    println()
+    header("DELETEs so far", "committed dirs", "that DELETE (s)",
+           "point get (s)")
+    val store = s"$root/t_rep"
+    fresh(store)
+    spark.sql("DROP TABLE IF EXISTS graftdml.t_rep")
+    spark.sql(s"CREATE TABLE graftdml.t_rep $CellColumns")
+    append(cells(spark, 0L, 128 * 50L), store)
+    (1 to 32).foreach { k =>
+      val lo = 50L * k
+      val (t, _) = timed(spark.sql(
+        f"DELETE FROM graftdml.t_rep WHERE rowkey >= '$lo%010d' " +
+        f"AND rowkey < '${lo + 10}%010d'"))
+      if (Set(1, 8, 16, 32).contains(k)) {
+        val (g, n) = minOf(3)(spark.sql(
+          "SELECT value FROM graftdml.t_rep WHERE rowkey = '0000006025'")
+          .collect().length)
+        require(n == 1, s"the point get must find its row: $n")
+        println(f"| $k | ${CellFooterCache.committedDirs(store).size} | " +
+                f"$t%.3f | $g%.3f |")
+      }
     }
   }
 

@@ -135,13 +135,13 @@ class ArchiveSpec extends AnyFunSuite {
     // code, so they must leave the same store. Pre-state: a data-less
     // marker dir (an earlier truncate) and two generations pinned by a
     // snapshot, {a} and {b, c}. Three replacing publishes: an
-    // overwrite and a minor compaction replace all three dirs; a
-    // ranged DELETE replaces both data files, emptying {a} and keeping
-    // c of {b, c}. For each, copy "<t>i" runs it straight through;
-    // copy "<t>r" is planted in the state it leaves right after its
-    // rename — the new batch dir carrying a retire intent for what the
-    // publish replaced, nothing retired yet — and completed by CALL
-    // repair.
+    // overwrite and a minor compaction replace all three dirs, the
+    // marker included; a ranged DELETE replaces both data files
+    // (emptying {a}, keeping c of {b, c}) and leaves the marker live.
+    // For each, copy "<t>i" runs it straight through; copy "<t>r" is
+    // planted in the state it leaves right after its rename — the new
+    // batch dir carrying the retire intent the publish writes, nothing
+    // retired yet — and completed by CALL repair.
     val root2 = java.nio.file.Files
       .createTempDirectory("graft_archrep_cat_").toString
     s.conf.set("spark.sql.catalog.graftrep",
@@ -177,7 +177,7 @@ class ArchiveSpec extends AnyFunSuite {
     def read(st: String): Seq[String] =
       s.read.format("graftcell").load(st).collect()
         .map(_.getString(0)).sorted.toSeq
-    def crashCompare(t: String, want: Seq[String])
+    def crashCompare(t: String, want: Seq[String], replacesMarker: Boolean)
                     (publish: String => Unit): Unit = {
       s.sql(s"""CREATE TABLE graftrep.${t}i (rowkey STRING, family STRING,
                qualifier STRING, version BIGINT, value STRING)
@@ -197,6 +197,13 @@ class ArchiveSpec extends AnyFunSuite {
       assert(before.size == 3)
       val filesBefore = CellFooterCache.filesOf(inl).map(_.path)
       assert(filesBefore.size == 2, s"one file per generation: $filesBefore")
+      // the intent each publish writes: overwrite and minor compaction
+      // list the replaced dirs (their files follow); DELETE lists only
+      // its victims, and a victim dir drops once it holds no data
+      val intentDirs = if (replacesMarker) before else Nil
+      val expectReplaced =
+        if (replacesMarker) before else before.diff(marker)
+      val expectLive = if (replacesMarker) 1L else 2L
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(inl), new java.io.File(rep))
       publish(inl)
@@ -204,17 +211,18 @@ class ArchiveSpec extends AnyFunSuite {
       assert(read(inl) == want, s"$t: wrong rows after the publish")
       val dest = CellFooterCache.committedDirs(inl).diff(before)
       assert(dest.size == 1, s"$t must publish one dir: $dest")
-      // what the publish replaced: the files and dirs it retired
       val replacedFiles = filesBefore
         .diff(CellFooterCache.filesOf(inl).map(_.path))
-      val replacedDirs = before.diff(CellFooterCache.committedDirs(inl))
-      assert(replacedFiles.size == 2,
+      assert(replacedFiles == filesBefore,
         s"$t must replace both data files: $replacedFiles")
+      val replacedDirs = before.diff(CellFooterCache.committedDirs(inl))
+      assert(replacedDirs == expectReplaced,
+        s"$t must retire $expectReplaced, retired $replacedDirs")
       val destDir = new java.io.File(rep, dest.head)
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(inl, dest.head), destDir)
-      CellRetire.write(destDir, replacedFiles.map(_.replace(inl, rep)),
-                       replacedDirs)
+      CellRetire.write(destDir, filesBefore.map(_.replace(inl, rep)),
+                       intentDirs)
       CellFooterCache.invalidate(rep)
       assert(GraftCellMaintenance.hbck(rep)._4 == 1L, "planted intent")
       // batch readers already exclude what the intent lists
@@ -227,24 +235,23 @@ class ArchiveSpec extends AnyFunSuite {
       a.zip(b).foreach { case ((what, x), (_, y)) =>
         assert(x == y, s"$t: $what differs: inline $x, repair $y") }
       val got = a.toMap
-      val live = got("live dirs").asInstanceOf[Seq[String]]
-      assert(got("hbck") ==
-        ((live.size.toLong, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
+      assert(got("hbck") == ((expectLive, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
         s"$t: hbck must be clean: ${got("hbck")}")
       // what the publish replaced retired with it: the pinned
-      // generations (and, when replaced, the data-less marker) moved to
-      // the archive, and the publish's dir is live
-      assert(live == (before.diff(replacedDirs) ++ dest).sorted)
-      assert(replacedFiles.forall(f => CellArchive.dirOf(inl,
-          new java.io.File(f).getParentFile.getName).isDirectory),
-        s"$t: every pinned replaced file must be archived: ${got("archived")}")
+      // generations (and, for overwrite and minor compaction, the
+      // data-less marker) moved to the archive; the publish's dir (and,
+      // for DELETE, the marker) is live
+      assert(got("live dirs") == (before.diff(expectReplaced) ++ dest).sorted)
+      assert(expectReplaced.forall(d => CellArchive.dirOf(inl, d).isDirectory),
+        s"$t: every pinned replaced dir must be archived: ${got("archived")}")
       assert(got("travel log").asInstanceOf[Seq[(String, String, Seq[String])]]
         .count(_._1 == "retire") == 3,
         s"$t: one retire event per data generation: ${got("travel log")}")
       s.sql(s"DROP TABLE graftrep.${t}i")
     }
-    crashCompare("ovw", Seq("a", "b"))(write(_, "overwrite", "a", "b"))
-    crashCompare("mnr", Seq("a", "b", "c")) { st =>
+    crashCompare("ovw", Seq("a", "b"), replacesMarker = true)(
+      write(_, "overwrite", "a", "b"))
+    crashCompare("mnr", Seq("a", "b", "c"), replacesMarker = true) { st =>
       assert(GraftCellMaintenance.minorCompact(s, st, Long.MaxValue).size == 3)
       assert(GraftCellSnapshot.names(st).sorted == Seq("old", "pin"),
         "minor compaction must leave no work snapshot")
@@ -252,7 +259,7 @@ class ArchiveSpec extends AnyFunSuite {
         n.startsWith("_tmp_") || n.startsWith("_stage_")),
         "minor compaction must leave no tmp store or stage dir")
     }
-    crashCompare("del", Seq("c")) { st =>
+    crashCompare("del", Seq("c"), replacesMarker = false) { st =>
       new graft.sources.cell.GraftCellTable(st).deleteWhere(
         Array[org.apache.spark.sql.sources.Filter](
           org.apache.spark.sql.sources.LessThan("rowkey", "c")))

@@ -293,6 +293,33 @@ class SpjSpec extends AnyFunSuite {
     assert(s.sql("SELECT * FROM gspj.spj_del WHERE rowkey = 'k007'").count() == 0)
   }
 
+  test("a point DELETE preserves the layout: survivors stay tagged, SPJ survives") {
+    mkTable("spj_dl", Some(8), rowsA)
+    mkTable("spj_bdl", Some(8), rowsB)
+    // the victim's survivors publish in a new batch_delete_* dir under
+    // a name that keeps the victim's bucket tag
+    s.sql("DELETE FROM gspj.spj_dl WHERE rowkey = 'k200'")
+    val dirs = Option(new java.io.File(root, "spj_dl").listFiles)
+      .getOrElse(Array.empty)
+      .filter(d => d.isDirectory && !d.getName.startsWith("_"))
+    def parquet(ds: Seq[java.io.File]): Seq[java.io.File] =
+      ds.flatMap(d => Option(d.listFiles).getOrElse(Array.empty))
+        .filter(_.getName.endsWith(".parquet"))
+    val rewritten = parquet(dirs.filter(_.getName.startsWith("batch_delete_")))
+    assert(rewritten.size == 1 &&
+      GraftBucket.parse(rewritten.head.getName).exists(_._2 == 8),
+      s"the DELETE output must keep its bucket tag: ${rewritten.map(_.getName)}")
+    val files = parquet(dirs)
+    assert(files.forall(f => GraftBucket.parse(f.getName).exists(_._2 == 8)),
+      s"every live file must stay bucket-tagged: ${files.map(_.getName)}")
+    val df = joined("spj_dl", "spj_bdl")
+    val plan = ranPlan(df)
+    assert(exchanges(plan) == 0,
+      s"DELETE must not demote the join to a shuffle:\n$plan")
+    assert(df.collect().map(r => (r.getString(0), r.getString(1),
+      r.getString(2))).toSet == expectedJoin.filterNot(_._1 == "k200"))
+  }
+
   test("the bucket hash is FROZEN: pinned values can never silently change") {
     // Every bucketed store on disk depends on this arithmetic: a Scala
     // upgrade or a casual 'improvement' that changes one of these pins
