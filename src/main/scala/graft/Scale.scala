@@ -30,7 +30,8 @@ object Scale {
     "incremental" -> incremental, "adopt" -> adopt,
     "normalize" -> normalize, "meta" -> meta, "archive" -> archive,
     "fuzzy" -> fuzzy, "travel" -> travel, "index" -> index,
-    "route" -> route, "spj" -> spj, "substr" -> substr)
+    "route" -> route, "spj" -> spj, "substr" -> substr,
+    "compact" -> compact)
 
   def main(args: Array[String]): Unit = {
     val chosen = args.headOption match {
@@ -409,6 +410,43 @@ object Scale {
       val parts = spark.sql("SELECT * FROM metascale.t.files")
         .queryExecution.executedPlan.execute().getNumPartitions
       println(f"| $nDirs | $nFiles | $best%.3f | $parts | $opens |")
+    }
+  }
+
+  /** Compaction of a 2,000,000-cell base plus six 40,000-cell batches
+    * hashed over its key space (minor merges the six batches), each run
+    * on a fresh store: min-of-2 seconds with that run's jobs, shuffle
+    * bytes and published files. SEEKSCALE.md "CompactScale". */
+  private def compact(spark: SparkSession, root: String,
+                      sfDir: String): Unit = {
+    header("verb", "seconds (min of 2)", "jobs", "shuffle bytes",
+           "files published", "cells after")
+    Seq[(String, (String, Long) => Unit)](
+      "minorCompact" -> ((st, base) =>
+        GraftCellMaintenance.minorCompact(spark, st, base - 1)),
+      "majorCompact" -> ((st, _) => GraftCellMaintenance.majorCompact(spark, st))
+    ).foreach { case (verb, run) =>
+      val store = s"$root/$verb"
+      val (stats, published) = (1 to 2).map { _ =>
+        fresh(store)
+        cells(spark, 0L, 2000000L).write.format("graftcell").mode("append")
+          .save(store)
+        val base = CellFooterCache.filesOf(store).map(_.bytes).sum
+        (0 until 6).foreach(b => cells(spark, 0L, 40000L).select(
+            format_string("%010d", pmod(xxhash64(col("rowkey"), lit(b)),
+                                        lit(2000000L))).as("rowkey"),
+            col("family"), col("qualifier"),
+            (col("version") + 3000000L + b * 40000L).as("version"),
+            col("value"))
+          .write.format("graftcell").mode("append").save(store))
+        val before = CellFooterCache.committedDirs(store)
+        val (_, st) = RunCollector(spark).measure(run(store, base))
+        (st, CellFooterCache.committedDirs(store).diff(before)
+          .map(CellFooterCache.filesUnder(store, _).size).sum)
+      }.minBy(_._1.sec)
+      val after = spark.read.format("graftcell").load(store).count()
+      println(f"| $verb | ${stats.sec}%.2f | ${stats.jobs} | " +
+              s"${stats.shuffleWriteBytes} | $published | $after |")
     }
   }
 

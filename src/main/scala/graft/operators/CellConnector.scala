@@ -754,7 +754,8 @@ object CellConnector extends QueryModule {
       // compaction's job): the oracle is the three-batch union, and
       // the spec pins dirs 3→2 with byte-identical readback. Staged
       // once: base cells + two narrow re-write batches, then
-      // minorCompact with a threshold below the base size.
+      // minorCompact (a shuffle-free merge of the two batches' sorted
+      // region files) with a threshold below the base size.
       val path = stagedOnce(dir, storePath(dir) + "_mnr", "_MINOR_DONE") {
         val p = storePath(dir) + "_mnr"
         val base = CellQueries.eventCells(s, dir)
@@ -845,10 +846,11 @@ object CellConnector extends QueryModule {
       // (store-max version − 10 days, the deterministic compaction
       // clock) is expired. Staged once: base cells + a DELETE-marker
       // batch for every error event's 'value' cell (1 s newer than the
-      // write it hides); then one majorCompact rewrite. Readback
+      // write it hides); then one majorCompact: a shuffle-free merge
+      // of the sorted region files, GC'd per cell key. Readback
       // returns the GC'd store through the footer-pruned scan, so the
       // oracle checks append → tombstone → TTL expiry → version
-      // resolution → truncate-commit → read as one lifecycle.
+      // resolution → replacing publish → read as one lifecycle.
       val TOMB = "__TOMBSTONE__"
       val path = stagedOnce(dir, storePath(dir) + "_gc", "_GC_DONE") {
         val p = storePath(dir) + "_gc"
@@ -1333,8 +1335,8 @@ object CellConnector extends QueryModule {
       // Spark 4.x ProcedureCatalog): HBase shell `major_compact` as
       // `CALL graftcat.compact('<table>')`. A two-generation catalog
       // table (base + an updated-version band) is compacted by the
-      // procedure — latest-version resolution, truncate-commit through
-      // the declared HFile layout — and the SELECT afterwards is the
+      // procedure — latest-version resolution in one shuffle-free
+      // merge of the sorted region files — and the SELECT afterwards is the
       // oracle-checked result. ttl_micros/tombstone ride as optional
       // defaulted parameters (exercised in CellConnectorSpec with the
       // GC fixture; here the pure major-compact path). Re-staged each
@@ -1610,9 +1612,9 @@ object CellConnector extends QueryModule {
       // (ttl 1500, max_versions 1) expires hot's old generation and
       // keeps only its newest, while audit's overrides (a practically
       // infinite TTL, VERSIONS => 2) retain both. One compact, one
-      // distributed rewrite, two retention outcomes — the plan is the
-      // same single window shuffle; the policy is a codegen'd literal
-      // map lookup per row, no extra shuffle or join.
+      // distributed rewrite, two retention outcomes — the family's
+      // policy is looked up once per cell key on the merged stream, no
+      // shuffle or join.
       // r21: the dual-family two-era store is the fixture —
       // proto-copied; the policy compaction (the verb) runs per run
       protoTables(s, dir, "events_fam", Seq("events_fam")) {
@@ -1656,9 +1658,8 @@ object CellConnector extends QueryModule {
       // (max_versions 2): the default family RESURFACES version 2000
       // where no newer put exists (the marker consumed a retained
       // slot), while the hide-all-older family returns NOTHING there —
-      // marker and all older versions gone, exactly HBase. Same single
-      // window shuffle; the marker ceiling is a second window function
-      // over the same partition key (one Exchange).
+      // marker and all older versions gone, exactly HBase. The marker
+      // ceiling is computed per cell key on the merged stream.
       // r21: the full version history is the fixture — proto-copied;
       // the marker-aware compaction (the verb) runs per invocation
       protoTables(s, dir, "events_dm", Seq("events_dm")) {

@@ -181,12 +181,8 @@ class GraftCellCatalog extends TableCatalog
                          props: Map[String, String]): Unit = {
     val node = mapper.createObjectNode()
     props.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    val tmp = new java.io.File(dir, "_GRAFT_TABLE.tmp")
-    java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(node))
-    java.nio.file.Files.move(tmp.toPath, marker(dir).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    CellJson.writeAtomic(new java.io.File(dir, "_GRAFT_TABLE.tmp"),
+                         marker(dir), node)
   }
 
   private def readProps(dir: java.io.File): Map[String, String] = {
@@ -541,12 +537,8 @@ class GraftCellCatalog extends TableCatalog
     import scala.jdk.CollectionConverters._
     val node = mapper.createObjectNode()
     metadata.asScala.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    val tmp = new java.io.File(dir, "_GRAFT_NS.tmp")
-    java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(node))
-    java.nio.file.Files.move(tmp.toPath, nsMarker(dir).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    CellJson.writeAtomic(new java.io.File(dir, "_GRAFT_NS.tmp"),
+                         nsMarker(dir), node)
   }
 
   override def alterNamespace(namespace: Array[String],

@@ -126,8 +126,8 @@ object GraftCellProcedures {
       "major compaction: resolve to the max_versions newest versions " +
       "(default 1); optional TTL expiry and tombstone GC (defaults " +
       "from TBLPROPERTIES; delete_markers = 'hide-all-older' masks " +
-      "every version at or below a marker); truncate-commit through " +
-      "the declared HFile layout"
+      "every version at or below a marker); one shuffle-free merge " +
+      "of the sorted region files, published as one replacing batch"
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val tableName = input.getUTF8String(0).toString
       val s = catalog.storeOf(tableName)

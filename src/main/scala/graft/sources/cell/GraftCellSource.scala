@@ -109,6 +109,16 @@ object GraftCell {
 
   private def utf8(s: String): Array[Byte] = UTF8String.fromString(s).getBytes
 
+  /** A string literal's bytes; a `UTF8String` literal carries raw key
+    * bytes (a rewrite's range bound need not be valid UTF-8). */
+  private object StrLit {
+    def unapply(v: Any): Option[Array[Byte]] = v match {
+      case s: String     => Some(utf8(s))
+      case u: UTF8String => Some(u.getBytes)
+      case _             => None
+    }
+  }
+
   /** HBase PrefixFilter stopRow: smallest byte string strictly greater
     * than every string with this prefix — increment the last non-0xFF
     * byte, dropping trailing 0xFF bytes; all-0xFF ⇒ unbounded above. */
@@ -268,16 +278,16 @@ object GraftCell {
     * qualifier stats prune with exactly the same math). */
   def colRange(colName: String, filters: Seq[Filter]): KeyRange =
     filters.foldLeft(FULL_RANGE) {
-      case (r, EqualTo(c, v: String)) if c == colName =>
-        r.tightenLo(Bound(utf8(v), true)).tightenHi(Bound(utf8(v), true))
-      case (r, GreaterThan(c, v: String)) if c == colName =>
-        r.tightenLo(Bound(utf8(v), false))
-      case (r, GreaterThanOrEqual(c, v: String)) if c == colName =>
-        r.tightenLo(Bound(utf8(v), true))
-      case (r, LessThan(c, v: String)) if c == colName =>
-        r.tightenHi(Bound(utf8(v), false))
-      case (r, LessThanOrEqual(c, v: String)) if c == colName =>
-        r.tightenHi(Bound(utf8(v), true))
+      case (r, EqualTo(c, StrLit(v))) if c == colName =>
+        r.tightenLo(Bound(v, true)).tightenHi(Bound(v, true))
+      case (r, GreaterThan(c, StrLit(v))) if c == colName =>
+        r.tightenLo(Bound(v, false))
+      case (r, GreaterThanOrEqual(c, StrLit(v))) if c == colName =>
+        r.tightenLo(Bound(v, true))
+      case (r, LessThan(c, StrLit(v))) if c == colName =>
+        r.tightenHi(Bound(v, false))
+      case (r, LessThanOrEqual(c, StrLit(v))) if c == colName =>
+        r.tightenHi(Bound(v, true))
       case (r, StringStartsWith(c, p: String)) if c == colName =>
         val lo = r.tightenLo(Bound(utf8(p), true))
         prefixStop(utf8(p)).fold(lo)(s => lo.tightenHi(Bound(s, false)))
@@ -436,6 +446,9 @@ object GraftCell {
     // TRUE in SQL and (false || true) here; (null OR false) is null ⇒
     // row filtered, and (false || false) filters too
     case Or(l, r)                 => eval(l, get) || eval(r, get)
+    // only DELETE's complement reaches here (scans never accept Not):
+    // negating the collapsed value keeps a row whose predicate is NULL
+    case Not(c)                   => !eval(c, get)
     case _: AlwaysTrue            => true
     case _: AlwaysFalse           => false
     case _                        => false
@@ -446,6 +459,7 @@ object GraftCell {
   private def cmp(cell: Any, lit: Any): Option[Int] = (cell, lit) match {
     case (null, _) | (_, null)          => None
     case (s: UTF8String, v: String)     => Some(s.compareTo(UTF8String.fromString(v)))
+    case (s: UTF8String, v: UTF8String) => Some(s.compareTo(v))
     case (l: java.lang.Long, v: Number) => Some(java.lang.Long.compare(l, v.longValue()))
     case _                              => None
   }
@@ -735,6 +749,9 @@ object GraftCell {
     case Or(l, r) =>
       val cl = compile(l); val cr = compile(r)
       get => cl(get) || cr(get)
+    case Not(c) =>
+      val cc = compile(c)
+      get => !cc(get)
     case other => get => eval(other, get)
   }
 
@@ -761,6 +778,9 @@ object GraftCell {
         FilterApi.in(col, set): FilterPredicate
       case EqualTo("rowkey", v: String) =>
         FilterApi.eq(col, Binary.fromConstantByteArray(utf8(v))): FilterPredicate
+      // row groups without a NULL rowkey skip (parquet's eq-null)
+      case IsNull("rowkey") =>
+        FilterApi.eq(col, null: Binary): FilterPredicate
     }
     // value POINT probes ride the predicate too (r19): parquet answers
     // them from row-group stats, dictionary pages and the value bloom
@@ -881,21 +901,16 @@ class GraftCellTable(path: String,
   }
 
   /** `DELETE FROM ... WHERE` — the HBase ranged-delete surface, file-
-    * granular: footer pruning selects ONLY the region files the
-    * predicate can touch (a rowkey-range delete on a 100 TB table
-    * plans exactly the overlapping regions), then one distributed task
-    * per victim file writes its surviving rows into a hidden
-    * `_tmp_delete_*` dir (an all-rows-matched file writes nothing).
-    * The driver publishes the survivors as one new `batch_delete_*`
-    * dir that replaces every victim
-    * ([[GraftCellMaintenance.publishReplacement]]), the same commit
-    * UPDATE/MERGE, compaction, split and merge make: snapshot-pinned
+    * granular: footer and bucket pruning select ONLY the region files
+    * the predicate can touch, then [[GraftCellMaintenance.rewrite]]
+    * runs one task per victim whose reader drops the matching rows
+    * (the filters' complement, pushed; a NULL predicate keeps the row
+    * — SQL DELETE deletes only WHERE = TRUE), keeping the victim's
+    * codec and bucket tag, and publishes the survivors as one
+    * `batch_delete_*` dir that replaces every victim: snapshot-pinned
     * victims archive, the travel log records their retirement, and
-    * `CALL repair` finishes the commit after a crash. Legacy
-    * manifest-less dirs commit the same way. Accepted-filter
-    * semantics are the scan's own `eval` (a NULL predicate keeps the
-    * row — SQL DELETE deletes only WHERE = TRUE). Like compaction,
-    * this is single-writer store maintenance. */
+    * `CALL repair` finishes the commit after a crash, legacy
+    * manifest-less dirs included. Single-writer store maintenance. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(GraftCell.acceptable)
 
@@ -911,17 +926,12 @@ class GraftCellTable(path: String,
         filters.toSeq, buckets)
       .map(_.path)
     if (victims.isEmpty) return
-    val tmp = GraftCellMaintenance.tmpDir(path, "delete")
-    try {
-      val tmpPath = tmp.getPath
-      val outputs = spark.sparkContext
-        .parallelize(victims.zipWithIndex, victims.size)
-        .flatMap { case (f, i) =>
-          CellDeleteRewrite.rewriteFile(f, i, filters, tmpPath) }
-        .collect().toSeq
-      GraftCellMaintenance.publishReplacement(path,
-        GraftCellMaintenance.freshDir("delete"), outputs, victims)
-    } finally FileUtils.deleteQuietly(tmp)
+    // a row survives unless every filter is TRUE for it
+    val survives = filters.reduceOption(And).map(Not)
+    GraftCellMaintenance.rewrite(spark, path, "delete",
+      victims.map(f => CellRewriteTask(Seq(Seq(f)), filter = survives,
+        bucket = GraftBucket.parse(f), codec = Some(GraftCellCodecTag.of(f)))),
+      CellCodecs.DEFAULT, replaced = victims)
   }
 
   /** `TRUNCATE TABLE` — the HBase shell `truncate` (drop all data,
@@ -975,7 +985,7 @@ class GraftCellTable(path: String,
     // resolve in a declared distribution): the writer still tags and
     // rolls bucket-pure files — roll-on-bucket-change guarantees
     // purity whatever the arrangement — but the CALLER owns the
-    // clustering (majorCompact pre-shuffles; an unarranged write just
+    // clustering (rebucket pre-shuffles; an unarranged write just
     // rolls more files, never mis-tags). A catalog table's descriptor
     // wins; asking for a different count through the option is a lie
     // and is refused.
@@ -1059,26 +1069,16 @@ object GraftCellSnapshot {
         .map(m => new java.io.File(m.path).getName).sorted
         .foreach(arr.add)
     }
-    val tmp = java.io.File.createTempFile("_snaptmp_", ".json",
-                                          new java.io.File(store))
-    java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(root))
-    java.nio.file.Files.move(tmp.toPath, manifest(store, name).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    CellJson.writeAtomic(java.io.File.createTempFile("_snaptmp_", ".json",
+      new java.io.File(store)), manifest(store, name), root)
     dirs
   }
 
   /** Pin an EXPLICIT dir set in the legacy v1 format (a JSON array of
     * dir names — whole-dir pins). */
-  def createPinned(store: String, name: String,
-                   pin: Seq[String]): Unit = {
-    val tmp = java.io.File.createTempFile("_snaptmp_", ".json",
-                                          new java.io.File(store))
-    java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(pin.toArray))
-    java.nio.file.Files.move(tmp.toPath, manifest(store, name).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def createPinned(store: String, name: String, pin: Seq[String]): Unit =
+    CellJson.writeAtomic(java.io.File.createTempFile("_snaptmp_", ".json",
+      new java.io.File(store)), manifest(store, name), pin.toArray)
 
   /** Drop a snapshot manifest AND reclaim archived files it alone
     * pinned (the HBase archive cleaner runs on snapshot deletion).
@@ -1673,61 +1673,21 @@ class GraftCellGroupReplaceBatchWrite(path: String, queryId: String,
   }
 }
 
-/** Executor-side single-file DELETE rewrite (see
-  * [[GraftCellTable.deleteWhere]]): streams the file's rows through the
-  * exact filter eval and writes the survivors into the DELETE's tmp
-  * dir, under [[CellRegionRewrite.outputName]] (the input's codec and
-  * bucket tags stay in tag position, so the layout evidence survives).
-  * Runs as one Spark task per victim file — the same per-region
-  * parallelism unit as the scan. */
-object CellDeleteRewrite {
-
-  /** The survivors' stats, or None when every row matched. */
-  def rewriteFile(file: String, victim: Int, filters: Array[Filter],
-                  tmpDir: String): Option[CellFileMeta] = {
-    val target =
-      CellRegionRewrite.outputName(tmpDir, victim, file, keepBucket = true)
-    // a retried task starts over: the writer refuses an existing file
-    new java.io.File(target).delete()
-    // the input's codec travels through the rewrite (r18 name tag)
-    val out = new CellFileWriter(target, GraftCellCodecTag.of(file))
-    // the DML filter is evaluated here EXACTLY per row, so the
-    // scan-side residual-work rule does not apply
-    val compiled = GraftCell.compileAll(filters)
-    val colIdx = GraftCell.SCHEMA.fieldNames.zipWithIndex.toMap
-    val st = new CellRowStream(file)
-    try {
-      while (st.advance()) {
-        val row = st.row
-        val get = (c: String) => {
-          val i = colIdx(c)
-          if (row.isNullAt(i)) null
-          else if (i == CellWriteSupport.V_IDX)
-            java.lang.Long.valueOf(row.getLong(i))
-          else row.getUTF8String(i)
-        }
-        val doomed = filters.nonEmpty && compiled.forall(f => f(get))
-        if (!doomed) out.write(row)
-      }
-    } catch { case e: Throwable => out.abort(); throw e }
-    finally st.close()
-    out.finish()
-  }
-}
-
-/** Pull-based row stream over the scan's vectorized batch reader —
-  * the input side of every region-file rewrite (DELETE, split,
-  * merge). `row` is the batch cursor, valid until THIS stream's next
-  * advance (the reader only swaps batch memory when its own stream
-  * advances past a batch); the cell-key components are snapshotted per
-  * advance so k-way heap comparisons never read a moved cursor. */
-private[cell] final class CellRowStream(file: String) {
+/** Row stream over one CHAIN of key-disjoint region files in key order
+  * — the input side of every [[GraftCellMaintenance.rewrite]]: the
+  * files are read one after another through the scan's vectorized
+  * reader with `filters` pushed (row-group pruning, exact residual).
+  * With `bucket` = (b, n), a file not tagged with bucket count n yields
+  * only bucket b's rows. `row` is valid until the next advance; the
+  * cell-key components are snapshotted for the k-way heap. */
+private[cell] final class CellRowStream(files: Seq[String],
+                                        filters: Array[Filter] = Array.empty,
+                                        bucket: Option[(Int, Int)] = None) {
   import CellWriteSupport._
-  private val reader = {
-    val cols = GraftCell.SCHEMA.fieldNames
-    new CellColumnarPartitionReader(
-      CellInputPartition(file, cols, cols, Array.empty))
-  }
+  private val rest = files.iterator
+  private var reader: CellColumnarPartitionReader = _
+  // the bucket a foreign-count file is filtered to; -1 keeps every row
+  private var onlyBucket = -1
   private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
   private var n = 0
   private var r = 0
@@ -1739,12 +1699,24 @@ private[cell] final class CellRowStream(file: String) {
   var ver = 0L
 
   def advance(): Boolean = {
-    while (batch == null || r >= n) {
-      if (!reader.next()) { row = null; return false }
-      batch = reader.get(); n = batch.numRows(); r = 0
-    }
-    row = batch.getRow(r); r += 1
-    kb = if (row.isNullAt(K_IDX)) null else row.getUTF8String(K_IDX).getBytes
+    do {
+      while (batch == null || r >= n) {
+        if (reader != null && reader.next()) {
+          batch = reader.get(); n = batch.numRows(); r = 0
+        } else {
+          close()
+          if (!rest.hasNext) { row = null; return false }
+          val file = rest.next()
+          val cols = GraftCell.SCHEMA.fieldNames
+          reader = new CellColumnarPartitionReader(
+            CellInputPartition(file, cols, cols, filters))
+          onlyBucket = bucket.filterNot(b =>
+            GraftBucket.parse(file).exists(_._2 == b._2)).fold(-1)(_._1)
+        }
+      }
+      row = batch.getRow(r); r += 1
+      kb = if (row.isNullAt(K_IDX)) null else row.getUTF8String(K_IDX).getBytes
+    } while (onlyBucket >= 0 && GraftBucket.of(kb, bucket.get._2) != onlyBucket)
     fb = if (row.isNullAt(F_IDX)) null else row.getUTF8String(F_IDX).getBytes
     qb = if (row.isNullAt(Q_IDX)) null else row.getUTF8String(Q_IDX).getBytes
     verNull = row.isNullAt(V_IDX)
@@ -1752,108 +1724,122 @@ private[cell] final class CellRowStream(file: String) {
     true
   }
 
-  def close(): Unit = reader.close()
+  def close(): Unit =
+    if (reader != null) { reader.close(); reader = null; batch = null }
 }
 
-/** Executor-side region-file SPLIT and MERGE rewrites (r16) — the
-  * post-hoc layout surgery of HBase's `split`/`merge_region` shell
-  * verbs, at the engine's region granularity (one region = one sorted
-  * parquet file). Both run as one Spark task per victim/run, stream
-  * rows from [[CellRowStream]] into [[CellFileWriter]] (never
-  * materialize a file in memory), and hand their outputs to
-  * [[GraftCellMaintenance.publishReplacement]] for the crash-safe
-  * retire-intent publish. */
+/** Which rows of one cell-key group a rewrite writes: the group's rows
+  * arrive copied and in cell-key order, and the kept ones leave in that
+  * order (major compaction's GC rule). */
+private[cell] trait CellKeep extends Serializable {
+  def apply(group: scala.collection.IndexedSeq[InternalRow]): Iterable[InternalRow]
+}
+
+/** One task of a [[GraftCellMaintenance.rewrite]]: input files as
+  * key-disjoint `chains` (each in key order) and contiguous ascending
+  * rowkey `ranges`, each written to its own outputs. `filter` drops
+  * rows by the reader's exact residual (DELETE's complement);
+  * `bucket` = (b, n) tags outputs `-b<b>of<n>` and filters
+  * foreign-count inputs to bucket b; `codec` overrides the rewrite's
+  * codecs; `keep` filters each cell-key group (None: verbatim). */
+private[cell] final case class CellRewriteTask(
+    chains: Seq[Seq[String]],
+    ranges: Seq[GraftCell.KeyRange] = Seq(GraftCell.FULL_RANGE),
+    filter: Option[Filter] = None,
+    bucket: Option[(Int, Int)] = None,
+    codec: Option[org.apache.parquet.hadoop.metadata.CompressionCodecName] = None,
+    keep: Option[CellKeep] = None)
+
+/** The executor side of [[GraftCellMaintenance.rewrite]] (HBase's
+  * compaction scanner): ONE pass per task, a k-way heap merge of its
+  * chains on the full cell key (NULLS FIRST, ties by chain index),
+  * optionally through `keep` per cell-key group, each row routed to
+  * its range's [[CellDataWriter]] (codec-pure sinks, bucket tags, no
+  * file for an empty range). Only a `keep` group is buffered. */
 object CellRegionRewrite {
+  import GraftCell.{Bound, KeyRange}
 
-  /** Output path in a rewrite's one tmp dir for victim number `victim`
-    * of the op: `v<victim>-<stem><infix><codec tag>[<bucket tag>]
-    * .parquet`. Every connector batch names its files
-    * `part-<pid>-<seq>`, so victims from two dirs can share a name; the
-    * per-victim prefix keeps their outputs apart (an earlier rewrite's
-    * prefix is replaced, not stacked). The codec and bucket tags stay
-    * at the end, where their parsers look. */
-  def outputName(tmpDir: String, victim: Int, file: String,
-                 infix: String = "", keepBucket: Boolean): String = {
-    val name = new java.io.File(file).getName
-    val stem = name.stripSuffix(".parquet")
-      .replaceAll("(-z[A-Z0-9_]+)?(-r\\d+)?(-b\\d+of\\d+)?$", "")
-      .replaceFirst("^v\\d+-", "")
-    val btag = if (!keepBucket) "" else GraftBucket.parse(name)
-      .fold("") { case (id, n) => GraftBucket.tag(id, n) }
-    f"$tmpDir/v$victim%05d-$stem$infix" +
-      s"${GraftCellCodecTag.tag(GraftCellCodecTag.of(file))}$btag.parquet"
-  }
-
-  /** SPLIT one region file at `splitKey`: rows with rowkey < key (and
-    * null rowkeys — the write ordering is NULLS FIRST) to the `.lo`
-    * half, rows >= key to `.hi`. Input rows are sorted, outputs stay
-    * sorted and non-overlapping by construction; an empty half is
-    * dropped. */
-  def splitFile(file: String, victim: Int, splitKey: Array[Byte],
-                tmpDir: String): Seq[CellFileMeta] = {
-    // the halves keep the input's CODEC and its name tag; the bucket
-    // tag is deliberately dropped (split files degrade to unkeyed)
-    val codec = GraftCellCodecTag.of(file)
-    def half(infix: String) = new CellFileWriter(
-      outputName(tmpDir, victim, file, infix, keepBucket = false), codec)
-    val lo = half(".lo")
-    val hi = half(".hi")
-    val st = new CellRowStream(file)
-    try {
-      while (st.advance()) {
-        val below = st.kb == null || // null rowkey: NULLS FIRST
-          JArrays.compareUnsigned(st.kb, splitKey) < 0
-        if (below) lo.write(st.row) else hi.write(st.row)
-      }
-    } catch { case e: Throwable => lo.abort(); hi.abort(); throw e }
-    finally st.close()
-    Seq(lo, hi).flatMap(_.finish())
-  }
-
-  /** MERGE a run of same-dir region files into ONE sorted file: a
-    * k-way heap merge on the full cell key (rowkey, family, qualifier,
-    * version — byte order, NULLS FIRST, ties broken by input index for
-    * determinism), so the merged file honors the declared write
-    * ordering even when adjacent inputs share a boundary rowkey. */
-  def mergeRun(files: Seq[String], outName: String,
-               tmpDir: String): Option[CellFileMeta] = {
-    // runs are codec-grouped (see mergeRegions); the merged file keeps
-    // the run's codec and carries its name tag
-    val codec = GraftCellCodecTag.of(files.head)
-    val out = new CellFileWriter(
-      s"$tmpDir/${outName.stripSuffix(".parquet")}" +
-        s"${GraftCellCodecTag.tag(codec)}.parquet", codec)
-    val streams = files.map(new CellRowStream(_)).toArray
+  /** The outputs of task `t`; its ranges write as output ids
+    * `firstId`, `firstId + 1`, …. */
+  private[cell] def run(t: CellRewriteTask, firstId: Int, tmpDir: String,
+                        codecs: CellCodecs): Seq[CellFileMeta] = {
+    val filters = rangeFilters(KeyRange(t.ranges.head.lo, t.ranges.last.hi))
+    val streams = t.chains
+      .map(new CellRowStream(_, filters ++ t.filter, t.bucket)).toArray
+    val outs = t.ranges.indices.map(j => new CellDataWriter(tmpDir,
+      firstId + j, buckets = t.bucket.map(_._2),
+      codecs = t.codec.fold(codecs)(CellCodecs(_, Map.empty))))
+    // rows arrive in key order, so the range index only moves up
+    var cur = 0
+    def out(kb: Array[Byte]): CellDataWriter = {
+      while (cur + 1 < outs.size && !below(kb, t.ranges(cur).hi.get)) cur += 1
+      outs(cur)
+    }
+    def cellCmp(a: CellRowStream, k: Array[Byte], f: Array[Byte],
+                q: Array[Byte]): Int = {
+      var c = GraftCell.compareNullsFirst(a.kb, k)
+      if (c == 0) c = GraftCell.compareNullsFirst(a.fb, f)
+      if (c == 0) c = GraftCell.compareNullsFirst(a.qb, q)
+      c
+    }
+    // the full cell key: (rowkey, family, qualifier), then version
     def cmpS(a: CellRowStream, b: CellRowStream): Int = {
-      var c = GraftCell.compareNullsFirst(a.kb, b.kb)
-      if (c != 0) return c
-      c = GraftCell.compareNullsFirst(a.fb, b.fb)
-      if (c != 0) return c
-      c = GraftCell.compareNullsFirst(a.qb, b.qb)
-      if (c != 0) return c
-      if (a.verNull && b.verNull) 0
-      else if (a.verNull) -1
-      else if (b.verNull) 1
+      val c = cellCmp(a, b.kb, b.fb, b.qb)
+      if (c != 0) c
+      else if (a.verNull || b.verNull)
+        java.lang.Boolean.compare(!a.verNull, !b.verNull)
       else java.lang.Long.compare(a.ver, b.ver)
+    }
+    val group = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var (gk, gf, gq) = (null: Array[Byte], null: Array[Byte], null: Array[Byte])
+    def flush(): Unit = if (group.nonEmpty) {
+      t.keep.get(group).foreach(out(gk).write)
+      group.clear()
     }
     try {
       val heap = new java.util.PriorityQueue[Integer](
-        math.max(1, files.size),
+        math.max(1, streams.length),
         (x: Integer, y: Integer) => {
           val c = cmpS(streams(x), streams(y))
           if (c != 0) c else Integer.compare(x, y)
         })
-      streams.zipWithIndex.foreach { case (st, i) =>
-        if (st.advance()) heap.add(i)
-      }
+      streams.indices.foreach(i => if (streams(i).advance()) heap.add(i))
       while (!heap.isEmpty) {
         val i = heap.poll()
-        out.write(streams(i).row)
-        if (streams(i).advance()) heap.add(i)
+        val st = streams(i)
+        if (t.keep.isEmpty) out(st.kb).write(st.row)
+        else {
+          if (group.nonEmpty && cellCmp(st, gk, gf, gq) != 0) flush()
+          if (group.isEmpty) { gk = st.kb; gf = st.fb; gq = st.qb }
+          group += st.row.copy()
+        }
+        if (st.advance()) heap.add(i)
       }
-    } catch { case e: Throwable => out.abort(); throw e }
+      flush()
+      CellFilesCommitted.all(outs.map(_.commit()).toArray)
+    } catch { case e: Throwable => outs.foreach(_.abort()); throw e }
     finally streams.foreach(_.close())
-    out.finish()
+  }
+
+  /** Is `kb` below the upper bound `hi`? NULL rowkeys sort first. */
+  private def below(kb: Array[Byte], hi: Bound): Boolean = kb == null || {
+    val c = JArrays.compareUnsigned(kb, hi.key)
+    c < 0 || (c == 0 && hi.inclusive)
+  }
+
+  /** A range as pushed rowkey filters (UTF8String literals: bounds are
+    * raw bytes); a range open below keeps the NULL rowkeys. */
+  private def rangeFilters(r: KeyRange): Array[Filter] = {
+    def lit(b: Bound) = UTF8String.fromBytes(b.key)
+    val lo = r.lo.map(b =>
+      if (b.inclusive) GreaterThanOrEqual("rowkey", lit(b))
+      else GreaterThan("rowkey", lit(b)))
+    val hi = r.hi.map { b =>
+      val f = if (b.inclusive) LessThanOrEqual("rowkey", lit(b))
+              else LessThan("rowkey", lit(b))
+      if (r.lo.isEmpty) Or(IsNull("rowkey"), f) else f
+    }
+    (lo ++ hi).toArray[Filter]
   }
 }
 
@@ -1862,7 +1848,8 @@ object CellRegionRewrite {
 object GraftCellMaintenance {
 
   /** THE STORE'S ONE PUBLISH STEP — every commit (batch and streaming
-    * writes, truncate overwrites, group-replace DML, maintenance) goes
+    * writes, truncate overwrites, group-replace DML, and through
+    * [[rewrite]] every layout-maintenance verb and ranged DELETE) goes
     * through it. `newFiles` (already written to a tmp location; may be
     * empty) move into a hidden `_stage_*` dir with their manifest and,
     * when anything is replaced, a RETIRE INTENT ([[CellRetire]]) listing
@@ -1914,67 +1901,132 @@ object GraftCellMaintenance {
     s"batch_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
   /** A fresh, created `_tmp_<tag>_<uuid>` dir under the store root: a
-    * rewrite's task outputs before its publish. Readers skip it; the
-    * caller deletes it in a `finally`. */
+    * rewrite's task outputs before its publish; the caller deletes it. */
   private[cell] def tmpDir(store: String, tag: String): java.io.File = {
-    val d = new java.io.File(store,
-      s"_tmp_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val d = new java.io.File(store, "_tmp_" + freshDir(tag).stripPrefix("batch_"))
     d.mkdirs()
     d
+  }
+
+  /** THE REWRITE PRIMITIVE — HBase compacts, splits and merges a region
+    * by merging its sorted store files, no repartition: one Spark job,
+    * one task per entry of `tasks` ([[CellRegionRewrite]]) writing
+    * `part-<id>-<seq>` files (one id per task range) into a hidden
+    * `_tmp_<tag>_*` dir, then ONE [[publishReplacement]] of a fresh
+    * `batch_<tag>_*` dir. Returns the published files. */
+  private[cell] def rewrite(spark: org.apache.spark.sql.SparkSession,
+                            store: String, tag: String,
+                            tasks: Seq[CellRewriteTask], codecs: CellCodecs,
+                            replaced: Seq[String] = Nil,
+                            replacedDirs: Seq[String] = Nil)
+      : Seq[CellFileMeta] = {
+    val tmp = tmpDir(store, tag)
+    try {
+      val tmpPath = tmp.getPath
+      val work = tasks.zip(tasks.scanLeft(0)(_ + _.ranges.size))
+      val metas = if (work.isEmpty) Nil
+        else spark.sparkContext.parallelize(work, work.size).flatMap {
+          case (t, id) => CellRegionRewrite.run(t, id, tmpPath, codecs)
+        }.collect().toSeq
+      publishReplacement(store, freshDir(tag), metas, replaced, replacedDirs)
+      metas
+    } finally FileUtils.deleteQuietly(tmp)
+  }
+
+  /** `files` as key-disjoint CHAINS, first-fit by min rowkey: a task
+    * opens one reader per overlapping generation, not per file. A file
+    * that may hold NULL rowkeys (they sort first) only starts a chain;
+    * one without rowkey stats is a chain of its own. */
+  private def chains(files: Seq[CellFileMeta]): Seq[Seq[String]] = {
+    val (keyed, bare) =
+      files.partition(m => m.minKey.nonEmpty && m.maxKey.nonEmpty)
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[scala.collection.mutable.ArrayBuffer[CellFileMeta]]
+    keyed.sortBy(_.minKey.get)(GraftCell.UnsignedBytesOrd).foreach { m =>
+      out.find(c => m.nullKeys.contains(0L) &&
+          JArrays.compareUnsigned(c.last.maxKey.get, m.minKey.get) < 0) match {
+        case Some(c) => c += m
+        case None    => out += scala.collection.mutable.ArrayBuffer(m)
+      }
+    }
+    out.map(_.map(_.path).toSeq).toSeq ++ bare.map(_.path).sorted.map(Seq(_))
+  }
+
+  /** The contiguous rowkey ranges cut at ascending `cuts`: (-∞, c1),
+    * [c1, c2), …, [cn, ∞). */
+  private def rangesAt(cuts: Seq[Array[Byte]]): Seq[GraftCell.KeyRange] =
+    (None +: cuts.map(Some(_)) :+ None).sliding(2).toSeq.map {
+      case Seq(lo, hi) => GraftCell.KeyRange(
+        lo.map(GraftCell.Bound(_, true)), hi.map(GraftCell.Bound(_, false)))
+    }
+
+  /** Compaction's plan: one task per rowkey range, cut at byte-weighted
+    * quantiles of the files' manifest min keys (at most
+    * `spark.sql.shuffle.partitions` ranges), so the layout depends only
+    * on the data and that setting. Files without rowkey stats go to
+    * every range, files that may hold NULL rowkeys to the first too. */
+  private def rangeTasks(spark: org.apache.spark.sql.SparkSession,
+                         files: Seq[CellFileMeta],
+                         keep: Option[CellKeep]): Seq[CellRewriteTask] = {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val keyed = files.filter(_.minKey.nonEmpty).toIndexedSeq
+      .sortBy(_.minKey.get)(GraftCell.UnsignedBytesOrd)
+    // cut before file i when a quantile of the bytes before it is passed
+    val before = keyed.scanLeft(0L)(_ + _.bytes)
+    val q = before.map(_ * parts / math.max(1L, before.last))
+    val cuts = keyed.indices.drop(1).filter(i => q(i) > q(i - 1))
+      .map(keyed(_).minKey.get).distinctBy(_.toSeq)
+      .filter(JArrays.compareUnsigned(_, keyed.head.minKey.get) > 0)
+    rangesAt(cuts).flatMap { r =>
+      val in = files.filter(m =>
+        GraftCell.mayOverlap(m.minKey, m.maxKey, r) ||
+        (r.lo.isEmpty && !m.nullKeys.contains(0L)))
+      if (in.isEmpty) None
+      else Some(CellRewriteTask(chains(in), Seq(r), keep = keep))
+    }
   }
 
   /** REGION SPLIT as an ADMIN op (r16 — the HBase shell `split 't',
     * 'key'`): every region file whose [min,max] straddles `splitKey`
     * is rewritten into two files cut exactly at the key, so a later
-    * range probe on either side plans half the bytes. Write-time
-    * rolling (`maxRowsPerFile`) decides granularity at load; this is
-    * the post-hoc knob for a store that's already on disk — at 100 TB
-    * you split the one hot region, not re-load the table. One
-    * distributed task per victim (streams rows, exact stats), one
-    * crash-safe retire-intent publish for all of them; pairwise
-    * non-overlap and the per-file sort order are preserved by
-    * construction (a sorted file cut at a key yields two sorted,
-    * disjoint files). Files without rowkey stats cannot be known to
-    * straddle and are left alone. Returns (files split, files
+    * range probe on either side plans half the bytes — the post-hoc
+    * knob for a store already on disk. One [[rewrite]] task per victim
+    * with the ranges (-∞, key) and [key, ∞), keeping the victim's codec
+    * and dropping its bucket tag (split files degrade to unkeyed); a
+    * sorted file cut at a key yields two sorted, disjoint files. Files
+    * without rowkey stats are left alone. Returns (files split, files
     * created). */
   def splitRegion(spark: org.apache.spark.sql.SparkSession,
                   store: String, splitKey: String): (Long, Long) =
-    splitRegionAt(spark, store, UTF8String.fromString(splitKey).getBytes)
+    splitRegionAt(spark, store, Seq(UTF8String.fromString(splitKey).getBytes))
 
-  /** [[splitRegion]] at a raw byte key — [[normalize]]'s midpoint keys
+  /** [[splitRegion]] at ascending raw byte keys in one [[rewrite]], each
+    * file cut at every key it straddles — [[normalize]]'s midpoint keys
     * are byte-fraction midpoints, not necessarily valid UTF-8. */
   private[cell] def splitRegionAt(spark: org.apache.spark.sql.SparkSession,
                                   store: String,
-                                  key: Array[Byte]): (Long, Long) = {
+                                  keys: Seq[Array[Byte]]): (Long, Long) = {
     CellRetire.repair(store) // never resurrect pending retirements
-    val victims = CellFooterCache.filesOf(store).filter(m =>
-      m.minKey.exists(JArrays.compareUnsigned(_, key) < 0) &&
-      m.maxKey.exists(JArrays.compareUnsigned(_, key) >= 0))
+    val victims = CellFooterCache.filesOf(store).map(m => m -> keys.filter(k =>
+        m.minKey.exists(JArrays.compareUnsigned(_, k) < 0) &&
+        m.maxKey.exists(JArrays.compareUnsigned(_, k) >= 0)))
+      .filter(_._2.nonEmpty)
     if (victims.isEmpty) return (0L, 0L)
-    val tmp = tmpDir(store, "split")
-    try {
-      val tmpPath = tmp.getPath
-      val metas = spark.sparkContext
-        .parallelize(victims.map(_.path).zipWithIndex, victims.size)
-        .flatMap { case (f, i) =>
-          CellRegionRewrite.splitFile(f, i, key, tmpPath) }
-        .collect().toSeq
-      publishReplacement(store, freshDir("split"), metas, victims.map(_.path))
-      (victims.size.toLong, metas.size.toLong)
-    } finally FileUtils.deleteQuietly(tmp)
+    val metas = rewrite(spark, store, "split",
+      victims.map { case (m, ks) => CellRewriteTask(Seq(Seq(m.path)),
+        rangesAt(ks), codec = Some(GraftCellCodecTag.of(m.path))) },
+      CellCodecs.DEFAULT, victims.map(_._1.path))
+    (victims.size.toLong, metas.size.toLong)
   }
 
   /** REGION MERGE as an ADMIN op (r16 — the HBase shell
     * `merge_region`): within each committed dir, consecutive (rowkey-
     * adjacent) region files are greedily grouped into runs of total
-    * size ≤ `maxBytes`, and every run of ≥ 2 files is k-way-merged
-    * into ONE sorted file — bounding the store's region-file count
-    * (and with it footer/manifest size and planning fan-out) after
-    * fine-grained loads or repeated splits. Same-dir only: dirs are
-    * the snapshot/streaming granularity, so merging never blends
-    * generations. One distributed task per run, one retire-intent
-    * publish for all runs. Returns (runs merged, files before, files
-    * after). */
+    * size ≤ `maxBytes`, and every run of ≥ 2 files is merged into ONE
+    * sorted file, bounding the store's region-file count. Same-dir and
+    * same-codec only, so merging never blends generations or codecs.
+    * One [[rewrite]] task per run. Returns (runs merged, files before,
+    * files after). */
   def mergeRegions(spark: org.apache.spark.sql.SparkSession,
                    store: String, maxBytes: Long): (Long, Long, Long) = {
     CellRetire.repair(store)
@@ -2003,18 +2055,10 @@ object GraftCellMaintenance {
         out.toSeq
       }.filter(_.size >= 2)
     if (runs.isEmpty) return (0L, before.size.toLong, before.size.toLong)
-    val tmp = tmpDir(store, "merge")
-    try {
-      val tmpPath = tmp.getPath
-      val work = runs.map(_.map(_.path)).zipWithIndex
-      val metas = spark.sparkContext
-        .parallelize(work, work.size)
-        .flatMap { case (files, i) =>
-          CellRegionRewrite.mergeRun(files, f"merged-$i%05d.parquet", tmpPath) }
-        .collect().toSeq
-      publishReplacement(store, freshDir("merge"), metas,
-                         runs.flatten.map(_.path))
-    } finally FileUtils.deleteQuietly(tmp)
+    rewrite(spark, store, "merge",
+      runs.map(r => CellRewriteTask(chains(r),
+        codec = Some(GraftCellCodecTag.of(r.head.path)))),
+      CellCodecs.DEFAULT, runs.flatten.map(_.path))
     (runs.size.toLong, before.size.toLong,
      CellFooterCache.filesOf(store).size.toLong)
   }
@@ -2061,10 +2105,9 @@ object GraftCellMaintenance {
     * before the surgery itself) —
     *
     *  - SPLIT: every file > 2×target is cut at the byte-midpoint of
-    *    its key range ([[midKey]]) via the same distributed crash-safe
-    *    rewrite as `CALL split_region`;
-    *  - MERGE: runs of adjacent files totalling ≤ target k-way-merge
-    *    into one ([[mergeRegions]]).
+    *    its key range ([[midKey]]), all in one [[splitRegionAt]];
+    *  - MERGE: runs of adjacent files totalling ≤ target merge into
+    *    one ([[mergeRegions]]).
     *
     * `target` defaults to the pre-state MEAN file size (HBase's
     * normalizer targets the average region size), so the verb is
@@ -2088,13 +2131,9 @@ object GraftCellMaintenance {
       m.bytes > 2 * target && m.minKey.nonEmpty && m.maxKey.nonEmpty &&
       JArrays.compareUnsigned(m.minKey.get, m.maxKey.get) < 0)
     // one split key per victim, deduped (victims can share a key range)
-    // and applied in key order — a deterministic publish sequence under
-    // any victim enumeration order
     val keys = victims.map(m => midKey(m.minKey.get, m.maxKey.get))
-      .distinctBy(_.toSeq)
-      .sortWith(JArrays.compareUnsigned(_, _) < 0)
-    var filesSplit = 0L
-    keys.foreach { k => filesSplit += splitRegionAt(spark, store, k)._1 }
+      .distinctBy(_.toSeq).sortBy(identity)(GraftCell.UnsignedBytesOrd)
+    val (filesSplit, _) = splitRegionAt(spark, store, keys)
     val (runs, _, after) = mergeRegions(spark, store, target)
     (filesSplit, runs, before, after, target)
   }
@@ -2984,103 +3023,55 @@ object GraftCellMaintenance {
           (col("l_value") <=> col("r_value"))).as("matching"))
   }
 
-  /** REBUCKET (r17): one-publish LAYOUT rewrite to a new bucket count —
-    * until now `buckets` was the only layout property with no in-place
-    * evolution verb (ALTER refuses it, correctly: the files on disk
-    * are hashed against the declared count; the answer was CTAS to a
-    * new table). Content-VERBATIM: the same truncate-overwrite publish
-    * as major compaction — the new generation retires every live file
-    * in its own atomic rename, snapshot-pinned ones are ARCHIVED, not
-    * destroyed — but with NO GC: every cell version survives, only
-    * the clustering changes. One shuffle on the new bucket arithmetic,
-    * one atomic publish; the CALLER (the rebucket procedure) repoints
-    * the descriptor AFTER this commits, so a crash in between leaves
-    * new-n-tagged files under an old-n descriptor — which the scan's
-    * tag-evidence rule reads as UNKEYED (a shuffle, never a wrong
-    * join) until a re-run completes the descriptor flip. */
+  /** REBUCKET (r17): one-publish rewrite to a new bucket count, content
+    * VERBATIM. Every old file feeds every new bucket, so unlike
+    * compaction it keeps one shuffle on the GraftBucket arithmetic
+    * (sorted by bucket, then cell key) and a truncate overwrite whose
+    * `buckets` option rolls tagged bucket-pure files. The procedure
+    * repoints the descriptor AFTER this commits; a crash in between
+    * leaves files the scan reads as UNKEYED until a re-run. */
   def rebucket(spark: org.apache.spark.sql.SparkSession,
                store: String, n: Int,
                codecProps: Map[String, String] = Map.empty): Unit = {
     require(n >= 1 && n <= 4096,
       s"graftcell: rebucket count must be in [1, 4096], got $n")
-    overwrite(spark.read.format("graftcell").load(store), store, Some(n),
-              codecProps)
-  }
-
-  /** The truncate-overwrite publish of [[rebucket]] and
-    * [[majorCompact]]. With `buckets`, the cells re-cluster on the
-    * GraftBucket arithmetic of the original write (one shuffle, sorted
-    * by bucket then cell key) and the path write's `buckets` option
-    * makes the writer roll tagged bucket-pure files. */
-  private def overwrite(cells: org.apache.spark.sql.DataFrame,
-                        store: String, buckets: Option[Int],
-                        codecProps: Map[String, String]): Unit = {
     import org.apache.spark.sql.functions._
-    val writer = buckets match {
-      case Some(n) =>
-        val bucketOf = udf((k: String) =>
-          GraftBucket.of(if (k == null) null else
-            k.getBytes(java.nio.charset.StandardCharsets.UTF_8), n))
-        cells
-          .repartition(n, bucketOf(col("rowkey")))
-          .sortWithinPartitions(bucketOf(col("rowkey")), col("rowkey"),
-            col("family"), col("qualifier"), col("version"))
-          .write.format("graftcell").option("buckets", n)
-      case None => cells.write.format("graftcell")
-    }
-    writer.options(codecProps).mode("overwrite").save(store)
+    val bucketOf = udf((k: String) =>
+      GraftBucket.of(if (k == null) null else
+        k.getBytes(java.nio.charset.StandardCharsets.UTF_8), n))
+    spark.read.format("graftcell").load(store)
+      .repartition(n, bucketOf(col("rowkey")))
+      .sortWithinPartitions(bucketOf(col("rowkey")), col("rowkey"),
+        col("family"), col("qualifier"), col("version"))
+      .write.format("graftcell").option("buckets", n)
+      .options(codecProps).mode("overwrite").save(store)
     CellFooterCache.invalidate(store)
   }
 
-  /** MINOR COMPACTION: merge every committed batch dir whose total
-    * bytes are ≤ `maxBytes` into ONE new batch, leaving larger
-    * generations untouched — HBase's size-tiered minor compaction,
-    * bounding read amplification (dir count, footer fetches, merge
-    * width) WITHOUT rewriting the whole store. Content is preserved
-    * verbatim: no version resolution, no tombstone dropping — that is
-    * MAJOR compaction's job (`cell_connector_compact`).
-    *
-    * Protocol: read exactly the victim dirs through an in-memory
-    * pinned table (so the merged batch gets the declared sorted,
-    * non-overlapping region layout), write the merged cells into a
-    * hidden `_tmp_minor_*` store, and publish them with the victims as
-    * the replaced dirs — the same [[publishReplacement]] as split,
-    * merge and truncate. Readers switch at its one rename, and
-    * [[CellRetire.complete]] travel-logs, archives (when a snapshot
-    * pins them) and deletes the victims, or `CALL repair` does after a
-    * crash. Single-writer maintenance, as in HBase where the region
-    * server owns compaction. Returns the merged (retired) dirs; no-op
-    * below 2 victims. */
+  /** MINOR COMPACTION — HBase's size-tiered minor compaction: merge
+    * every committed batch dir whose total bytes are ≤ `maxBytes` into
+    * ONE new batch, content verbatim, leaving larger generations
+    * untouched. One [[rewrite]] of the victims' files in rowkey ranges
+    * cut at byte-weighted quantiles of their manifest min keys, with
+    * `codecProps`' codecs, published as one `batch_minor_*` dir that
+    * replaces the victim dirs. Returns the merged (retired) dirs;
+    * no-op below 2 victims. */
   def minorCompact(spark: org.apache.spark.sql.SparkSession,
                    store: String, maxBytes: Long,
                    codecProps: Map[String, String] = Map.empty)
       : Seq[String] = {
-    // Complete pending RETIREMENTS first (ADVICE r15): retiring the
-    // victims drops their dirs wholesale, including any `_retire.json`
-    // a crash-interrupted group-replace left behind. If such an intent
-    // lived in a (small) victim dir while the listed already-replaced
-    // files live in a larger SURVIVING dir, merging would copy the
-    // rewritten rows and then the retirement would drop the intent —
-    // the still-existing replaced files would resurface in live
-    // listings and double-count. repair() is idempotent and a no-op on
-    // a healthy store.
+    // complete pending retirements first: retiring a victim dir drops
+    // any intent it carries, and the files that intent still lists
+    // would resurface in live listings
     CellRetire.repair(store)
     val victims = CellFooterCache.committedDirs(store).filter { d =>
       CellFooterCache.filesUnder(store, d).map(_.bytes).sum <= maxBytes
     }
     if (victims.size < 2) return Nil
-    val victimTable = new GraftCellTable(store,
-      pinnedDirs = Some(victims.map(CellGenPin(_))))
-    val tmp = new java.io.File(store,
-      s"_tmp_minor_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
-        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-          .create(victimTable, None, None))
-      .write.format("graftcell").options(codecProps)
-      .mode("append").save(tmp.getPath)
-    publishReplacement(store, freshDir("minor"),
-      CellFooterCache.filesOf(tmp.getPath), replacedDirs = victims)
-    FileUtils.deleteQuietly(tmp)
+    rewrite(spark, store, "minor",
+      rangeTasks(spark, victims.flatMap(CellFooterCache.filesUnder(store, _)),
+                 keep = None),
+      CellCodecs.of(codecProps), replacedDirs = victims)
     victims
   }
 
@@ -3099,29 +3090,67 @@ object GraftCellMaintenance {
 
   private val DELETE_MARKER_MODES = Set("current", "hide-all-older")
 
-  /** MAJOR COMPACTION with GARBAGE COLLECTION: the full HBase
-    * major-compaction semantics as one store operation — a single
-    * rewrite that (a) resolves every cell key to its LATEST version,
-    * (b) physically drops cells hidden by a `tombstone` DELETE marker
-    * (and the marker itself — cf. the cell_tombstone query pattern),
-    * and (c) expires every version older than the TTL horizon,
-    * `max(version in store) − ttlMicros` — the deterministic
-    * compaction clock the cell_ttl pattern established (HBase uses
-    * wall-clock "now"; a reproducible store uses its own newest write).
-    * Completes the GC half that `cell_connector_compact` (version
-    * resolution only) leaves to the query patterns.
-    *
-    * One distributed plan: connector read → broadcast single-row
-    * horizon (if TTL set) → ONE window shuffle on the cell key →
-    * truncate-commit through the declared HFile layout
-    * (`mode("overwrite")`). Safe in place by the commit protocol:
-    * tasks stage to `_tmp_*` while reads run; the new generation
-    * publishes by atomic rename with every old file in its retire
-    * intent, so readers switch at the rename and the old generations
-    * are deleted only after it (`CALL repair` finishes a cleanup a
-    * crash interrupted). At 100 TB this is the shape HBase runs
-    * region-by-region; here the bulk-load range shuffle partitions
-    * the key space instead, so the rewrite scales with executors. */
+  /** Major compaction's GC rule per cell key; a family's policy
+    * overrides each table-level knob it defines. (1) TTL against
+    * `maxVer`, the store's newest version; (2) `hide-all-older`: a
+    * marker at V masks every version ≤ V and goes with them; (3) keep
+    * the `maxVersions` newest by (version DESC NULLS LAST, value DESC
+    * NULLS LAST — max value wins a same-version tie); (4) `current`:
+    * the ranked markers are dropped. A NULL comparison drops the row. */
+  private final class GcKeep(ttl: Option[Long], tomb: Option[String],
+                             maxVersions: Int, markers: Option[String],
+                             fams: Map[String, FamilyPolicy],
+                             maxVer: Option[Long]) extends CellKeep {
+    import CellWriteSupport.{F_IDX, V_IDX, VAL_IDX}
+    private def ver(r: InternalRow): Option[Long] =
+      if (r.isNullAt(V_IDX)) None else Some(r.getLong(V_IDX))
+    private def value(r: InternalRow): UTF8String =
+      if (r.isNullAt(VAL_IDX)) null else r.getUTF8String(VAL_IDX)
+    @transient private lazy val newestFirst = Ordering.Tuple2(
+      Ordering.Option(Ordering.Long),
+      Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0))
+    ).reverse
+
+    def apply(group: scala.collection.IndexedSeq[InternalRow])
+        : Iterable[InternalRow] = {
+      val p = if (group.head.isNullAt(F_IDX)) None
+              else fams.get(group.head.getUTF8String(F_IDX).toString)
+      val ttlF = p.flatMap(_.ttlMicros).orElse(ttl)
+      val tombF = p.flatMap(_.tombstone).orElse(tomb).map(UTF8String.fromString)
+      val hideAll =
+        p.flatMap(_.deleteMarkers).orElse(markers).contains("hide-all-older")
+      def isMarker(r: InternalRow) = tombF.exists(_ == value(r))
+      val live = ttlF.fold(group) { t =>
+        val floor = maxVer.map(Math.subtractExact(_, t))
+        group.filter(r => floor.exists(f => ver(r).exists(_ >= f)))
+      }
+      val masked =
+        if (!hideAll) live
+        else {
+          val ceil = live.filter(isMarker).flatMap(ver).maxOption
+          live.filter(r => !isMarker(r) &&
+                           ceil.forall(c => ver(r).exists(_ > c)))
+        }
+      masked.indices
+        .sortBy(i => (ver(masked(i)), Option(value(masked(i)))))(newestFirst)
+        .take(p.flatMap(_.maxVersions).getOrElse(maxVersions))
+        .filter(i => hideAll || tombF.forall(t =>
+          value(masked(i)) != null && value(masked(i)) != t))
+        .sorted.map(masked)
+    }
+  }
+
+  /** MAJOR COMPACTION with GARBAGE COLLECTION — HBase's major
+    * compaction as one [[rewrite]] of every live file with [[GcKeep]]
+    * as its keep (newest `maxVersions` per cell key, tombstones and
+    * TTL-expired versions dropped; the TTL clock is the store's newest
+    * version, from the manifests — only legacy entries without one are
+    * read, in one aggregate), published as one `batch_major_*` dir
+    * replacing every committed dir. No shuffle. Unbucketed, the tasks
+    * are [[minorCompact]]'s rowkey ranges; with `buckets` = n (the
+    * descriptor's count: compaction keeps the salt layout, so SPJ
+    * survives it) one task per bucket b merges the files tagged
+    * `b of n` and every file not tagged with n, filtered to bucket b. */
   def majorCompact(spark: org.apache.spark.sql.SparkSession,
                    store: String,
                    ttlMicros: Option[Long] = None,
@@ -3144,107 +3173,36 @@ object GraftCellMaintenance {
       p.ttlMicros.foreach(v => require(v >= 0,
         s"family.$f.ttl_micros must be >= 0, got $v"))
     }
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val cells = spark.read.format("graftcell").load(store)
-
-    // per-family policy columns: a foldable literal map keyed by
-    // family, table-level fallback — one codegen'd lookup per row, no
-    // extra shuffle or join anywhere in the plan
-    def famExpr[T](pick: FamilyPolicy => Option[T],
-                   table: Option[T],
-                   asLit: T => org.apache.spark.sql.Column)
-        : org.apache.spark.sql.Column = {
-      val m = familyPolicies.collect {
-        case (f, p) if pick(p).isDefined => f -> pick(p).get
-      }
-      val dflt = table.map(asLit).getOrElse(lit(null))
-      if (m.isEmpty) dflt
-      else {
-        val entries = m.toSeq.sortBy(_._1)
-          .flatMap { case (f, v) => Seq(lit(f), asLit(v)) }
-        when(col("family").isNull, dflt)
-          .otherwise(coalesce(element_at(map(entries: _*), col("family")),
-                              dflt))
-      }
-    }
-    val ttlExpr = famExpr[Long](_.ttlMicros, ttlMicros, lit(_))
-    val tombExpr = famExpr[String](_.tombstone, tombstone, lit(_))
-    val maxVExpr = famExpr[Int](_.maxVersions, Some(maxVersions), lit(_))
-    val dmExpr = famExpr[String](_.deleteMarkers, deleteMarkers, lit(_))
-
+    CellRetire.repair(store)
+    val dirs = CellFooterCache.committedDirs(store)
+    val files = CellFooterCache.filesOf(store)
     val anyTtl = ttlMicros.isDefined ||
       familyPolicies.values.exists(_.ttlMicros.isDefined)
-    val live =
-      if (!anyTtl) cells
-      else {
-        // the deterministic compaction clock stays GLOBAL (store-max
-        // version), the horizon offset is per family
-        val horizon = cells.agg(max(col("version")).as("__maxv"))
-        cells.crossJoin(broadcast(horizon))
-          .filter(ttlExpr.isNull ||
-                  col("version") >= col("__maxv") - ttlExpr)
-          .drop("__maxv")
-      }
-    // version desc resolves to the newest write; the value-desc
-    // tiebreak makes a same-version conflict (two puts at one cell
-    // version — HBase resolves by memstore sequence id, which a
-    // rebuilt store no longer has) DETERMINISTIC: max value wins,
-    // whatever the partitioning or arrival order. The GC property
-    // test exercises exactly this edge on seeded random stores.
-    // HIDE-ALL-OLDER delete markers (r19 — HBase's KEEP_DELETED_CELLS
-    // divergence closed as a per-family descriptor knob): under
-    // `delete_markers = 'hide-all-older'` a tombstone marker at
-    // version V masks EVERY version ≤ V of its cell key (HBase's
-    // DeleteColumn semantics) and compaction drops marker + masked
-    // versions TOGETHER, with VERSIONS => n retention ranking only the
-    // surviving puts. The DEFAULT stays the engine's property-pinned
-    // delete-if-current rule (r14) below — markers rank like puts and
-    // consume a retained slot — so the long-pinned single-version GC
-    // oracles are untouched; the knob is opt-in per family (or
-    // table-level). Same one window shuffle: the marker ceiling is a
-    // second window function over the SAME partition key, so Catalyst
-    // plans both over one Exchange.
-    val hideAll = coalesce(dmExpr, lit("current")) === "hide-all-older"
-    val isMarker = tombExpr.isNotNull && col("value") <=> tombExpr
-    val anyHideAll = deleteMarkers.contains("hide-all-older") ||
-      familyPolicies.values.exists(_.deleteMarkers.contains("hide-all-older"))
-    val wKey = Window.partitionBy("rowkey", "family", "qualifier")
-    val masked =
-      if (!anyHideAll) live
-      else live
-        .withColumn("__mceil",
-          max(when(isMarker, col("version"))).over(wKey))
-        .filter(!hideAll ||
-                (!isMarker &&
-                 (col("__mceil").isNull || col("version") > col("__mceil"))))
-        .drop("__mceil")
-    val w = wKey.orderBy(col("version").desc, col("value").desc)
-    // maxVersions = the HBase table descriptor's VERSIONS => n: keep
-    // the n NEWEST versions per cell key (default 1 = latest only)
-    val latest = masked.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= coalesce(maxVExpr, lit(1))).drop("__rn")
-    // Tombstone semantics are the engine's property-pinned
-    // delete-if-current rule (r14): markers participate in the
-    // newest-wins rank (version desc, value desc) and are then
-    // physically dropped. With maxVersions > 1 a marker therefore
-    // consumes one retained slot and puts ranked below it remain —
-    // deliberately NOT HBase's hide-all-older markers (those are the
-    // opt-in knob above); retention (VERSIONS => n) and deletion stay
-    // orthogonal knobs.
-    val anyTomb = tombstone.isDefined ||
-      familyPolicies.values.exists(_.tombstone.isDefined)
-    val kept =
-      if (!anyTomb) latest
-      else latest.filter(hideAll || tombExpr.isNull ||
-                         col("value") =!= tombExpr)
-    // BUCKET-PRESERVING compaction (the HBase invariant: compaction
-    // never changes the salt/region layout): the procedure passes the
-    // table descriptor's bucket count, so a compacted bucketed table
-    // KEEPS its storage-partitioned joins (spec-pinned: zero-exchange
-    // join after CALL compact). Without it, one maintenance pass would
-    // silently demote every future join to a full shuffle.
-    overwrite(kept, store, buckets, codecProps)
+    val unknown = files.filter(m => m.rowCount > 0 && m.maxVer.isEmpty)
+    val maxVer = if (!anyTtl) None else (files.flatMap(_.maxVer) ++ (
+      if (unknown.isEmpty) Nil
+      else spark.sparkContext.parallelize(unknown.map(_.path), unknown.size)
+        .flatMap { f =>
+          val st = new CellRowStream(Seq(f))
+          try Iterator.continually(st.advance()).takeWhile(identity)
+                .filterNot(_ => st.verNull).map(_ => st.ver).maxOption
+          finally st.close()
+        }.collect())).maxOption
+    val keep = Some(new GcKeep(ttlMicros, tombstone, maxVersions,
+      deleteMarkers, familyPolicies, maxVer))
+    val tasks = buckets match {
+      case Some(n) =>
+        (0 until n).flatMap { b =>
+          val in = files.filter(m =>
+            GraftBucket.parse(m.path).forall { case (id, bn) => bn != n || id == b })
+          if (in.isEmpty) None
+          else Some(CellRewriteTask(chains(in), bucket = Some((b, n)),
+                                    keep = keep))
+        }
+      case None => rangeTasks(spark, files, keep)
+    }
+    rewrite(spark, store, "major", tasks, CellCodecs.of(codecProps),
+            replacedDirs = dirs)
   }
 }
 
@@ -3765,6 +3723,22 @@ final case class CellFileMeta(path: String, bytes: Long, rowCount: Long,
                               // legacy (keep the file)
                               valueBloom: Option[Array[Byte]] = None)
 
+/** The one atomic JSON writer of the store's metadata files (manifests,
+  * snapshot manifests, catalog markers): write `value` to `tmp`, then
+  * rename it over `dest` in one step, so a reader sees the old file or
+  * the new one, never a torn one. */
+private[cell] object CellJson {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  def writeAtomic(tmp: java.io.File, dest: java.io.File, value: AnyRef): Unit = {
+    java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(value))
+    java.nio.file.Files.move(tmp.toPath, dest.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    ()
+  }
+}
+
 /** PERSISTED per-dir manifest (`_manifest.json` inside each committed
   * batch dir) — the metadata a real 100 TB deployment keeps next to the
   * data so the driver NEVER opens parquet footers at plan time. The
@@ -3782,10 +3756,8 @@ final case class CellFileMeta(path: String, bytes: Long, rowCount: Long,
   * parquet stager's `region=k` dirs) — the manifest is an accelerator,
   * never a correctness dependency: stats only ever SKIP files, and
   * [[CellFooterCache.footerOpens]] counts the fallback so the spec can
-  * pin "zero footer opens on a manifest-bearing store". In-place file
-  * rewrites (DELETE) update affected manifests from the rewriting
-  * tasks' returned stats; wholesale dir deletes (compaction, truncate)
-  * take the manifest down with the dir. */
+  * pin "zero footer opens on a manifest-bearing store". A retired dir
+  * takes its manifest down with it. */
 object CellManifest {
   val NAME = "_manifest.json"
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -3851,12 +3823,8 @@ object CellManifest {
     val arr = root.putArray("files")
     metas.sortBy(m => new java.io.File(m.path).getName)
       .foreach(m => encodeMeta(arr.addObject(), m))
-    val tmp = new java.io.File(dir, NAME + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(root))
-    java.nio.file.Files.move(tmp.toPath, new java.io.File(dir, NAME).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    CellJson.writeAtomic(new java.io.File(dir, NAME + ".tmp"),
+                         new java.io.File(dir, NAME), root)
   }
 
   def read(dir: java.io.File): Option[Data] = {
@@ -4973,8 +4941,8 @@ class GraftCellWrite(path: String, queryId: String, truncate: Boolean,
     * table's FunctionCatalog, so this path engages only for
     * catalog-routed writes — exactly where the descriptor lives. */
   override def requiredDistribution(): Distribution = buckets match {
-    // PATH-mode bucket writes (option-driven — majorCompact preserving
-    // a bucketed layout) declare NOTHING: there is no FunctionCatalog
+    // PATH-mode bucket writes (option-driven — rebucket's re-clustered
+    // overwrite) declare NOTHING: there is no FunctionCatalog
     // to resolve the transform through, the caller pre-arranged the
     // clustering, and a declared rowkey range shuffle here would
     // destroy it. The writer's roll-on-bucket-change keeps files pure
@@ -5087,12 +5055,10 @@ class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // the TRUNCATE overwrite (major compaction, rebucket, every
-    // mode("overwrite") write) replaces every live dir in the same
-    // publish: readers switch at the rename, snapshot-pinned files
-    // move to the archive (r17: snapshots survive compaction, as in
-    // HBase), and every retirement lands in the travel log superseded
-    // by this commit
+    // the TRUNCATE overwrite (rebucket, every mode("overwrite") write)
+    // replaces every live dir in the same publish: readers switch at
+    // the rename, snapshot-pinned files move to the archive, and every
+    // retirement lands in the travel log superseded by this commit
     val live = if (truncate) CellFooterCache.committedDirs(path) else Nil
     GraftCellMaintenance.publishReplacement(path, s"batch_$queryId",
       CellFilesCommitted.all(messages), replacedDirs = live)
@@ -5264,9 +5230,9 @@ class CellParquetWriterBuilder(path: Path)
 
 /** ONE region file being written — the HBase `StoreFileWriter` analog
   * and the only place that holds the parquet builder settings and the
-  * per-file manifest stats. Connector writes ([[CellDataWriter]]),
-  * DELETE rewrites ([[CellDeleteRewrite]]) and split/merge
-  * ([[CellRegionRewrite]]) all write through it. The stats are exact,
+  * per-file manifest stats. Every write goes through it, by way of
+  * [[CellDataWriter]] (connector writes and every
+  * [[GraftCellMaintenance.rewrite]]). The stats are exact,
   * tracked while writing (not footer-derived): min/max of rowkey,
   * family, qualifier and value in unsigned byte order — the order of
   * parquet UTF8 statistics and of UTF8String comparison — the version
@@ -5359,7 +5325,8 @@ private[cell] final class CellFileWriter(path: String,
   * non-overlapping by construction: footer pruning granularity is then
   * a policy knob (`option("maxRowsPerFile", n)`), not a side effect of
   * the shuffle partition count. Each file goes through one
-  * [[CellFileWriter]]. */
+  * [[CellFileWriter]]; each range of a rewrite ([[CellRegionRewrite]])
+  * writes through one of these. */
 class CellDataWriter(tmpDir: String, partitionId: Int,
                      maxRowsPerFile: Long = -1L,
                      buckets: Option[Int] = None,

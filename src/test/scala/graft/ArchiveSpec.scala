@@ -134,9 +134,9 @@ class ArchiveSpec extends AnyFunSuite {
     // The publish and CALL repair finish a commit through the same
     // code, so they must leave the same store. Pre-state: a data-less
     // marker dir (an earlier truncate) and two generations pinned by a
-    // snapshot, {a} and {b, c}. Three replacing publishes: an
-    // overwrite and a minor compaction replace all three dirs, the
-    // marker included; a ranged DELETE replaces both data files
+    // snapshot, {a} and {b, c}. Four replacing publishes: an
+    // overwrite, a minor and a major compaction replace all three dirs,
+    // the marker included; a ranged DELETE replaces both data files
     // (emptying {a}, keeping c of {b, c}) and leaves the marker live.
     // For each, copy "<t>i" runs it straight through; copy "<t>r" is
     // planted in the state it leaves right after its rename — the new
@@ -197,7 +197,7 @@ class ArchiveSpec extends AnyFunSuite {
       assert(before.size == 3)
       val filesBefore = CellFooterCache.filesOf(inl).map(_.path)
       assert(filesBefore.size == 2, s"one file per generation: $filesBefore")
-      // the intent each publish writes: overwrite and minor compaction
+      // the intent each publish writes: overwrite and compaction
       // list the replaced dirs (their files follow); DELETE lists only
       // its victims, and a victim dir drops once it holds no data
       val intentDirs = if (replacesMarker) before else Nil
@@ -238,7 +238,7 @@ class ArchiveSpec extends AnyFunSuite {
       assert(got("hbck") == ((expectLive, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)),
         s"$t: hbck must be clean: ${got("hbck")}")
       // what the publish replaced retired with it: the pinned
-      // generations (and, for overwrite and minor compaction, the
+      // generations (and, for overwrite and compaction, the
       // data-less marker) moved to the archive; the publish's dir (and,
       // for DELETE, the marker) is live
       assert(got("live dirs") == (before.diff(expectReplaced) ++ dest).sorted)
@@ -258,6 +258,12 @@ class ArchiveSpec extends AnyFunSuite {
       assert(!Option(new java.io.File(st).list).get.exists(n =>
         n.startsWith("_tmp_") || n.startsWith("_stage_")),
         "minor compaction must leave no tmp store or stage dir")
+    }
+    crashCompare("maj", Seq("a", "b", "c"), replacesMarker = true) { st =>
+      GraftCellMaintenance.majorCompact(s, st)
+      assert(!Option(new java.io.File(st).list).get.exists(n =>
+        n.startsWith("_tmp_") || n.startsWith("_stage_")),
+        "major compaction must leave no tmp or stage dir")
     }
     crashCompare("del", Seq("c"), replacesMarker = false) { st =>
       new graft.sources.cell.GraftCellTable(st).deleteWhere(

@@ -1270,10 +1270,78 @@ class CellConnectorSpec extends AnyFunSuite {
       .filter(col("count") > 1).count() == 0L)
   }
 
+  /** The window plan majorCompact ran before compaction became a
+    * per-group merge — kept as the reference its GC must equal: TTL
+    * against the store-max version (broadcast single-row horizon), then
+    * the hide-all-older marker ceiling, then `row_number` over
+    * (version DESC, value DESC) per cell key, then "current" markers
+    * dropped; per-family policies through a literal map with a
+    * table-level fallback. */
+  private def referenceGc(cells: org.apache.spark.sql.DataFrame,
+      ttlMicros: Option[Long], tombstone: Option[String],
+      maxVersions: Int,
+      familyPolicies: Map[String,
+        graft.sources.cell.GraftCellMaintenance.FamilyPolicy],
+      deleteMarkers: Option[String]): org.apache.spark.sql.DataFrame = {
+    import graft.sources.cell.GraftCellMaintenance.FamilyPolicy
+    import org.apache.spark.sql.expressions.Window
+    def famExpr[T](pick: FamilyPolicy => Option[T], table: Option[T],
+                   asLit: T => org.apache.spark.sql.Column)
+        : org.apache.spark.sql.Column = {
+      val m = familyPolicies.collect {
+        case (f, p) if pick(p).isDefined => f -> pick(p).get
+      }
+      val dflt = table.map(asLit).getOrElse(lit(null))
+      if (m.isEmpty) dflt
+      else {
+        val entries = m.toSeq.sortBy(_._1)
+          .flatMap { case (f, v) => Seq(lit(f), asLit(v)) }
+        when(col("family").isNull, dflt)
+          .otherwise(coalesce(element_at(map(entries: _*), col("family")),
+                              dflt))
+      }
+    }
+    val ttlExpr = famExpr[Long](_.ttlMicros, ttlMicros, lit(_))
+    val tombExpr = famExpr[String](_.tombstone, tombstone, lit(_))
+    val maxVExpr = famExpr[Int](_.maxVersions, Some(maxVersions), lit(_))
+    val dmExpr = famExpr[String](_.deleteMarkers, deleteMarkers, lit(_))
+    val anyTtl = ttlMicros.isDefined ||
+      familyPolicies.values.exists(_.ttlMicros.isDefined)
+    val live =
+      if (!anyTtl) cells
+      else cells.crossJoin(broadcast(cells.agg(max(col("version")).as("__maxv"))))
+        .filter(ttlExpr.isNull || col("version") >= col("__maxv") - ttlExpr)
+        .drop("__maxv")
+    val hideAll = coalesce(dmExpr, lit("current")) === "hide-all-older"
+    val isMarker = tombExpr.isNotNull && col("value") <=> tombExpr
+    val anyHideAll = deleteMarkers.contains("hide-all-older") ||
+      familyPolicies.values.exists(_.deleteMarkers.contains("hide-all-older"))
+    val wKey = Window.partitionBy("rowkey", "family", "qualifier")
+    val masked =
+      if (!anyHideAll) live
+      else live
+        .withColumn("__mceil", max(when(isMarker, col("version"))).over(wKey))
+        .filter(!hideAll || (!isMarker &&
+          (col("__mceil").isNull || col("version") > col("__mceil"))))
+        .drop("__mceil")
+    val w = wKey.orderBy(col("version").desc, col("value").desc)
+    val latest = masked.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= coalesce(maxVExpr, lit(1))).drop("__rn")
+    val anyTomb = tombstone.isDefined ||
+      familyPolicies.values.exists(_.tombstone.isDefined)
+    if (!anyTomb) latest
+    else latest.filter(hideAll || tombExpr.isNull || col("value") =!= tombExpr)
+  }
+
   test("majorCompact ≡ reference GC model on seeded random stores (incl. version ties)") {
     import graft.sources.cell.{CellFooterCache, GraftCellMaintenance}
+    import graft.sources.cell.GraftCellMaintenance.FamilyPolicy
+    import scala.collection.JavaConverters._
     import s.implicits._
     val TOMB = "__T__"
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("rowkey", "family", "qualifier", "version", "value")
+        .collect().map(_.toString).toSeq.sorted
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
       // random versions over a SMALL key space so version stacking,
@@ -1291,6 +1359,8 @@ class CellConnectorSpec extends AnyFunSuite {
         part.toDF("rowkey", "family", "qualifier", "version", "value")
           .write.format("graftcell").mode("append").save(store))
       val ttl = 30000L // ~60% of the version span: expiry really fires
+      val ref = rowsOf(referenceGc(s.read.format("graftcell").load(store),
+        Some(ttl), Some(TOMB), 1, Map.empty, None))
       GraftCellMaintenance.majorCompact(s, store, Some(ttl), Some(TOMB))
       // driver-side reference model: TTL filter on the full-store max,
       // then max-(version, value) per cell key, then drop markers
@@ -1303,8 +1373,139 @@ class CellConnectorSpec extends AnyFunSuite {
         .as[(String, String, String, Long, String)].collect().toSeq.sorted
       assert(got == want, s"seed $seed: GC mismatch " +
         s"(got ${got.size} cells, want ${want.size})")
+      assert(rowsOf(s.read.format("graftcell").load(store)) == ref,
+        s"seed $seed: majorCompact differs from the window plan")
       CellFooterCache.invalidate(store)
     }
+
+    // Against the window plan on richer stores: NULL versions, values
+    // and families, same-version ties, three overlapping batches,
+    // maxVersions 2, hide-all-older and per-family policies, and a
+    // 4-bucket layout that also holds one untagged file.
+    def randomCells(rnd: scala.util.Random): Seq[org.apache.spark.sql.Row] =
+      Seq.fill(500 + rnd.nextInt(200)) {
+        def sometimesNull[T](p: Double)(v: => T): Any =
+          if (rnd.nextDouble() < p) null else v
+        org.apache.spark.sql.Row(s"r${rnd.nextInt(30)}",
+          sometimesNull(0.1)(Seq("d", "a", "h")(rnd.nextInt(3))),
+          s"q${rnd.nextInt(3)}",
+          sometimesNull(0.05)(1000000L + rnd.nextInt(40) * 1000L),
+          sometimesNull(0.05)(
+            if (rnd.nextDouble() < 0.12) TOMB else s"v${rnd.nextInt(6)}"))
+      }.distinct
+    val policies: Seq[(Option[Long], Int, Option[String], Map[String, FamilyPolicy])] = Seq(
+      (Some(25000L), 2, None, Map.empty),
+      (Some(30000L), 2, Some("hide-all-older"), Map.empty),
+      (None, 2, None, Map(
+        "a" -> FamilyPolicy(deleteMarkers = Some("hide-all-older"),
+                            maxVersions = Some(3)),
+        "h" -> FamilyPolicy(ttlMicros = Some(10000L), tombstone = Some("v0")))),
+      (Some(35000L), 1, Some("hide-all-older"), Map(
+        "d" -> FamilyPolicy(deleteMarkers = Some("current"),
+                            maxVersions = Some(2), ttlMicros = Some(0L)))))
+    for ((seed, (ttl, maxV, dm, fams)) <- (11 to 14).zip(policies);
+         bucketed <- Seq(false, true)) {
+      val rnd = new scala.util.Random(seed)
+      val cells = randomCells(rnd)
+      val store =
+        java.nio.file.Files.createTempDirectory("graft_gcref_").toString
+      cells.grouped(cells.size / 3 + 1).foreach(part =>
+        s.createDataFrame(part.asJava, GraftCell.SCHEMA)
+          .write.format("graftcell").mode("append").save(store))
+      val buckets = if (bucketed) Some(4) else None
+      if (bucketed) {
+        GraftCellMaintenance.rebucket(s, store, 4)
+        val parts = s.conf.get("spark.sql.shuffle.partitions")
+        s.conf.set("spark.sql.shuffle.partitions", "1")
+        try s.createDataFrame(randomCells(rnd).take(60).asJava, GraftCell.SCHEMA)
+          .write.format("graftcell").mode("append").save(store)
+        finally s.conf.set("spark.sql.shuffle.partitions", parts)
+        val untagged = CellFooterCache.filesOf(store)
+          .filter(m => graft.sources.cell.GraftBucket.parse(m.path).isEmpty)
+        assert(untagged.size == 1, s"one untagged file: ${untagged.map(_.path)}")
+      }
+      val want = rowsOf(referenceGc(s.read.format("graftcell").load(store),
+        ttl, Some(TOMB), maxV, fams, dm))
+      GraftCellMaintenance.majorCompact(s, store, ttl, Some(TOMB), maxV,
+        buckets, fams, deleteMarkers = dm)
+      val got = rowsOf(s.read.format("graftcell").load(store))
+      assert(got == want, s"seed $seed bucketed=$bucketed: majorCompact " +
+        s"differs from the window plan (got ${got.size}, want ${want.size})\n" +
+        s"only got: ${got.diff(want).take(5)}\nonly want: ${want.diff(got).take(5)}")
+      if (bucketed) assert(CellFooterCache.filesOf(store).forall(m =>
+        graft.sources.cell.GraftBucket.parse(m.path).exists(_._2 == 4)),
+        "bucketed compaction must leave only 4-bucket-tagged files")
+      CellFooterCache.invalidate(store)
+    }
+  }
+
+  test("compaction is one shuffle-free job whose layout depends only on the data") {
+    import graft.sources.cell.{CellFooterCache, GraftCellMaintenance}
+    val collector = RunCollector(s)
+    // three overlapping batches hashed over one key space
+    def staged(): String = {
+      val store =
+        java.nio.file.Files.createTempDirectory("graft_cmpctr_").toString
+      (0 until 3).foreach { i =>
+        s.range(0, 3000).select(
+            format_string("%06d", pmod(col("id") * 7919 + i, lit(100000)))
+              .as("rowkey"),
+            lit("d").as("family"), lit("q").as("qualifier"),
+            (col("id") + i * 10000L).as("version"),
+            sha1(col("id").cast("string")).as("value"))
+          .write.format("graftcell").mode("append").save(store)
+      }
+      store
+    }
+    def layout(store: String): Seq[(Seq[Byte], Seq[Byte], Long)] =
+      CellFooterCache.filesOf(store)
+        .map(m => (m.minKey.get.toSeq, m.maxKey.get.toSeq, m.rowCount))
+        .sortBy(_.toString)
+    def copyOf(store: String): String = {
+      val twin =
+        java.nio.file.Files.createTempDirectory("graft_cmpctr_twin_").toString
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(store), new java.io.File(twin))
+      twin
+    }
+    def oneJobNoShuffle(what: String, stats: RunStats): Unit =
+      assert(stats.jobs == 1 && stats.shuffleWriteBytes == 0L,
+        s"$what: ${stats.jobs} jobs, ${stats.shuffleWriteBytes} shuffle bytes")
+
+    val minor = staged()
+    val minorTwin = copyOf(minor)
+    val (_, minorStats) = collector.measure(
+      GraftCellMaintenance.minorCompact(s, minor, Long.MaxValue))
+    oneJobNoShuffle("minorCompact", minorStats)
+    GraftCellMaintenance.minorCompact(s, minorTwin, Long.MaxValue)
+    assert(CellFooterCache.filesOf(minor).size > 1)
+    assert(layout(minor) == layout(minorTwin),
+      "two identical stores must compact (minor) to the same layout")
+
+    val major = staged()
+    val majorTwin = copyOf(major)
+    val (_, majorStats) = collector.measure(
+      GraftCellMaintenance.majorCompact(s, major, ttlMicros = Some(20000L),
+                                        tombstone = Some("x")))
+    oneJobNoShuffle("majorCompact", majorStats)
+    GraftCellMaintenance.majorCompact(s, majorTwin, ttlMicros = Some(20000L),
+                                      tombstone = Some("x"))
+    assert(layout(major) == layout(majorTwin),
+      "two identical stores must compact (major) to the same layout")
+
+    val bucketed = staged()
+    GraftCellMaintenance.rebucket(s, bucketed, 4)
+    s.range(0, 500).select(format_string("%06d", col("id") * 13).as("rowkey"),
+        lit("d").as("family"), lit("q").as("qualifier"),
+        (col("id") + 50000L).as("version"), lit("late").as("value"))
+      .write.format("graftcell").mode("append").save(bucketed)
+    val (_, bucketStats) = collector.measure(
+      GraftCellMaintenance.majorCompact(s, bucketed, buckets = Some(4)))
+    oneJobNoShuffle("bucketed majorCompact", bucketStats)
+    val tags = CellFooterCache.filesOf(bucketed)
+      .map(m => graft.sources.cell.GraftBucket.parse(m.path))
+    assert(tags.sorted == (0 until 4).map(b => Some((b, 4))),
+      s"one tagged file per bucket: $tags")
   }
 
   test("conditional MERGE (checkAnd*): stale puts and absent deletes no-op") {
