@@ -413,20 +413,26 @@ object Scale {
     }
   }
 
-  /** Compaction of a 2,000,000-cell base plus six 40,000-cell batches
-    * hashed over its key space (minor merges the six batches), each run
-    * on a fresh store: min-of-2 seconds with that run's jobs, shuffle
-    * bytes and published files. SEEKSCALE.md "CompactScale". */
+  /** Compaction and rebucketing of a 2,000,000-cell base plus six
+    * 40,000-cell batches hashed over its key space (minor merges the
+    * six batches; `4 -> 8` first rebuckets the store to 4, untimed),
+    * each run on a fresh store: min-of-2 seconds with that run's jobs,
+    * shuffle bytes and published files. SEEKSCALE.md "CompactScale". */
   private def compact(spark: SparkSession, root: String,
                       sfDir: String): Unit = {
     header("verb", "seconds (min of 2)", "jobs", "shuffle bytes",
            "files published", "cells after")
-    Seq[(String, (String, Long) => Unit)](
-      "minorCompact" -> ((st, base) =>
+    def rebucket(n: Int)(st: String): Unit =
+      GraftCellMaintenance.rebucket(spark, st, n)
+    Seq[(String, String => Unit, (String, Long) => Unit)](
+      ("minorCompact", _ => (), (st, base) =>
         GraftCellMaintenance.minorCompact(spark, st, base - 1)),
-      "majorCompact" -> ((st, _) => GraftCellMaintenance.majorCompact(spark, st))
-    ).foreach { case (verb, run) =>
-      val store = s"$root/$verb"
+      ("majorCompact", _ => (), (st, _) =>
+        GraftCellMaintenance.majorCompact(spark, st)),
+      ("rebucket none -> 4", _ => (), (st, _) => rebucket(4)(st)),
+      ("rebucket 4 -> 8", rebucket(4), (st, _) => rebucket(8)(st))
+    ).foreach { case (verb, prep, run) =>
+      val store = s"$root/${verb.filter(_.isLetterOrDigit)}"
       val (stats, published) = (1 to 2).map { _ =>
         fresh(store)
         cells(spark, 0L, 2000000L).write.format("graftcell").mode("append")
@@ -439,6 +445,7 @@ object Scale {
             (col("version") + 3000000L + b * 40000L).as("version"),
             col("value"))
           .write.format("graftcell").mode("append").save(store))
+        prep(store)
         val before = CellFooterCache.committedDirs(store)
         val (_, st) = RunCollector(spark).measure(run(store, base))
         (st, CellFooterCache.committedDirs(store).diff(before)

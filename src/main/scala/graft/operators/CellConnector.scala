@@ -1575,8 +1575,8 @@ object CellConnector extends QueryModule {
       // create-time-fixed (ALTER refused — the files on disk are
       // hashed against it), so changing a table's bucket count meant
       // CTAS to a new table. `CALL rebucket(t, n)` rewrites the layout
-      // in ONE publish (content verbatim — same truncate-overwrite
-      // protocol as compaction, archived generations preserved) and
+      // in ONE publish (content verbatim — the same shuffle-free
+      // rewrite as compaction, archived generations preserved) and
       // repoints the descriptor through the catalog's sanctioned path.
       // Crash between the two steps = tag/descriptor mismatch = the
       // scan degrades to unkeyed (a shuffle, never a wrong join);
@@ -1800,8 +1800,8 @@ object CellConnector extends QueryModule {
       // through manifests/snapshots/clone and keeps split/merge/DELETE
       // rewrites codec-faithful. The descriptor travels through
       // maintenance like the r17 family policies: CALL compact /
-      // compact_minor / rebucket pass the codec properties as write
-      // options, so the compacted generation re-encodes per family.
+      // compact_minor / rebucket pass the codec properties to the
+      // rewrite, so the compacted generation re-encodes per family.
       // The key: dual-family insert (d → ZSTD via the table default,
       // audit → GZIP override) → CALL compact → readback is
       // byte-identical to the rebuild (codecs change encoding, never

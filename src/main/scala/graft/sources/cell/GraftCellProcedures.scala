@@ -76,12 +76,10 @@ object GraftCellProcedures {
   }
 
   /** The compression descriptor subset of a table's properties —
-    * passed as write options so maintenance rewrites re-encode with
-    * the declared codecs (r18). */
+    * passed to the maintenance rewrites so they re-encode with the
+    * declared codecs (r18). */
   private def codecPropsOf(props: Map[String, String]): Map[String, String] =
-    props.filter { case (k, _) =>
-      k == "compression" ||
-      (k.startsWith("family.") && k.endsWith(".compression")) }
+    props.filter { case (k, _) => CellCodecs.isProp(k) }
 
   /** One class per procedure; `bind` ignores the input schema (all
     * parameters are declared IN scalars — Spark coerces and fills

@@ -980,33 +980,15 @@ class GraftCellTable(path: String,
             "graftcell: cannot write through a snapshot read option")
     require(info.options().get("sinceSnapshot") == null,
             "graftcell: cannot write through a sinceSnapshot read option")
-    // `option("buckets", n)` is the PATH-mode bucket request (no
-    // catalog ⇒ no FunctionCatalog ⇒ the bucket transform could not
-    // resolve in a declared distribution): the writer still tags and
-    // rolls bucket-pure files — roll-on-bucket-change guarantees
-    // purity whatever the arrangement — but the CALLER owns the
-    // clustering (rebucket pre-shuffles; an unarranged write just
-    // rolls more files, never mis-tags). A catalog table's descriptor
-    // wins; asking for a different count through the option is a lie
-    // and is refused.
-    val optBuckets = Option(info.options().get("buckets")).map(_.toInt)
-    require(buckets.isEmpty || optBuckets.forall(buckets.contains),
-      s"graftcell: write option buckets=${optBuckets.get} contradicts " +
-      s"the table descriptor buckets=${buckets.get}")
-    // compression descriptor (r18): table properties first, write
-    // options overlay (the path-mode maintenance rewrites pass the
-    // catalog's descriptor through options — asCaseSensitiveMap so
-    // family names keep their case)
-    val optMap: Map[String, String] = {
-      val b = Map.newBuilder[String, String]
-      info.options().asCaseSensitiveMap()
-        .forEach((k, v) => b += (k -> v))
-      b.result()
-    }
+    // the bucket count and the codecs are the table's descriptor, so a
+    // write option naming one fails instead of being ignored
+    val refused = info.options().keySet().asScala
+      .filter(k => k == "buckets" || CellCodecs.isProp(k))
+    require(refused.isEmpty, s"graftcell: ${refused.mkString(", ")} cannot " +
+      "be a write option; declare it on a catalog table with TBLPROPERTIES")
     new GraftCellWriteBuilder(path, info.queryId(),
       Option(info.options().get("maxRowsPerFile")).map(_.toLong).getOrElse(-1L),
-      buckets.orElse(optBuckets), declareTransform = buckets.isDefined,
-      codecs = CellCodecs.of(tableProps ++ optMap))
+      buckets, CellCodecs.of(tableProps))
   }
 }
 
@@ -1913,13 +1895,15 @@ object GraftCellMaintenance {
     * one task per entry of `tasks` ([[CellRegionRewrite]]) writing
     * `part-<id>-<seq>` files (one id per task range) into a hidden
     * `_tmp_<tag>_*` dir, then ONE [[publishReplacement]] of a fresh
-    * `batch_<tag>_*` dir. Returns the published files. */
+    * `batch_<tag>_*` dir. With no task and nothing replaced it commits
+    * nothing. Returns the published files. */
   private[cell] def rewrite(spark: org.apache.spark.sql.SparkSession,
                             store: String, tag: String,
                             tasks: Seq[CellRewriteTask], codecs: CellCodecs,
                             replaced: Seq[String] = Nil,
                             replacedDirs: Seq[String] = Nil)
       : Seq[CellFileMeta] = {
+    if (tasks.isEmpty && replaced.isEmpty && replacedDirs.isEmpty) return Nil
     val tmp = tmpDir(store, tag)
     try {
       val tmpPath = tmp.getPath
@@ -1985,6 +1969,21 @@ object GraftCellMaintenance {
       else Some(CellRewriteTask(chains(in), Seq(r), keep = keep))
     }
   }
+
+  /** The bucketed plan: one task per bucket b of `n`, tagging its
+    * outputs `b of n`, over every file that can hold bucket b's rows —
+    * untagged files, and files tagged `id of m` with id ≡ b (mod
+    * gcd(m, n)): [[GraftBucket.of]] floor-mods one hash, so a row of
+    * bucket id of m is in bucket b of n only then. A file tagged with
+    * n feeds one task; the reader filters the rest to bucket b. */
+  private def bucketTasks(files: Seq[CellFileMeta], n: Int,
+                          keep: Option[CellKeep]): Seq[CellRewriteTask] =
+    (0 until n).flatMap { b =>
+      val in = files.filter(f => GraftBucket.parse(f.path).forall {
+        case (id, m) => (id - b) % BigInt(m).gcd(n).toInt == 0 })
+      if (in.isEmpty) None
+      else Some(CellRewriteTask(chains(in), bucket = Some((b, n)), keep = keep))
+    }
 
   /** REGION SPLIT as an ADMIN op (r16 — the HBase shell `split 't',
     * 'key'`): every region file whose [min,max] straddles `splitKey`
@@ -3023,29 +3022,25 @@ object GraftCellMaintenance {
           (col("l_value") <=> col("r_value"))).as("matching"))
   }
 
-  /** REBUCKET (r17): one-publish rewrite to a new bucket count, content
-    * VERBATIM. Every old file feeds every new bucket, so unlike
-    * compaction it keeps one shuffle on the GraftBucket arithmetic
-    * (sorted by bucket, then cell key) and a truncate overwrite whose
-    * `buckets` option rolls tagged bucket-pure files. The procedure
-    * repoints the descriptor AFTER this commits; a crash in between
-    * leaves files the scan reads as UNKEYED until a re-run. */
+  /** REBUCKET (r17): rewrite to a new bucket count, content VERBATIM,
+    * as one [[rewrite]] with [[bucketTasks]] (no shuffle): one
+    * bucket-pure, cell-key-sorted `-b<b>of<n>` file per non-empty
+    * bucket, with `codecProps`' codecs, published as one
+    * `batch_rebucket_*` dir replacing every committed dir. An untagged
+    * file is read by every task, a file tagged `id of m` by n /
+    * gcd(m, n) of them. The procedure repoints the descriptor AFTER
+    * this commits; a crash in between leaves files the scan reads as
+    * UNKEYED until a re-run. */
   def rebucket(spark: org.apache.spark.sql.SparkSession,
                store: String, n: Int,
                codecProps: Map[String, String] = Map.empty): Unit = {
     require(n >= 1 && n <= 4096,
       s"graftcell: rebucket count must be in [1, 4096], got $n")
-    import org.apache.spark.sql.functions._
-    val bucketOf = udf((k: String) =>
-      GraftBucket.of(if (k == null) null else
-        k.getBytes(java.nio.charset.StandardCharsets.UTF_8), n))
-    spark.read.format("graftcell").load(store)
-      .repartition(n, bucketOf(col("rowkey")))
-      .sortWithinPartitions(bucketOf(col("rowkey")), col("rowkey"),
-        col("family"), col("qualifier"), col("version"))
-      .write.format("graftcell").option("buckets", n)
-      .options(codecProps).mode("overwrite").save(store)
-    CellFooterCache.invalidate(store)
+    CellRetire.repair(store)
+    val dirs = CellFooterCache.committedDirs(store)
+    rewrite(spark, store, "rebucket",
+      bucketTasks(CellFooterCache.filesOf(store), n, keep = None),
+      CellCodecs.of(codecProps), replacedDirs = dirs)
   }
 
   /** MINOR COMPACTION — HBase's size-tiered minor compaction: merge
@@ -3149,8 +3144,8 @@ object GraftCellMaintenance {
     * replacing every committed dir. No shuffle. Unbucketed, the tasks
     * are [[minorCompact]]'s rowkey ranges; with `buckets` = n (the
     * descriptor's count: compaction keeps the salt layout, so SPJ
-    * survives it) one task per bucket b merges the files tagged
-    * `b of n` and every file not tagged with n, filtered to bucket b. */
+    * survives it) one task per bucket, as in [[rebucket]]
+    * ([[bucketTasks]]). */
   def majorCompact(spark: org.apache.spark.sql.SparkSession,
                    store: String,
                    ttlMicros: Option[Long] = None,
@@ -3190,17 +3185,8 @@ object GraftCellMaintenance {
         }.collect())).maxOption
     val keep = Some(new GcKeep(ttlMicros, tombstone, maxVersions,
       deleteMarkers, familyPolicies, maxVer))
-    val tasks = buckets match {
-      case Some(n) =>
-        (0 until n).flatMap { b =>
-          val in = files.filter(m =>
-            GraftBucket.parse(m.path).forall { case (id, bn) => bn != n || id == b })
-          if (in.isEmpty) None
-          else Some(CellRewriteTask(chains(in), bucket = Some((b, n)),
-                                    keep = keep))
-        }
-      case None => rangeTasks(spark, files, keep)
-    }
+    val tasks = buckets.fold(rangeTasks(spark, files, keep))(
+      bucketTasks(files, _, keep))
     rewrite(spark, store, "major", tasks, CellCodecs.of(codecProps),
             replacedDirs = dirs)
   }
@@ -4903,7 +4889,6 @@ private[cell] final class CellResidual(p: CellInputPartition) {
 class GraftCellWriteBuilder(path: String, queryId: String,
                             maxRowsPerFile: Long = -1L,
                             buckets: Option[Int] = None,
-                            declareTransform: Boolean = true,
                             codecs: CellCodecs = CellCodecs.DEFAULT)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
@@ -4913,13 +4898,12 @@ class GraftCellWriteBuilder(path: String, queryId: String,
   }
   override def build(): org.apache.spark.sql.connector.write.Write =
     new GraftCellWrite(path, queryId, doTruncate, maxRowsPerFile, buckets,
-                       declareTransform, codecs)
+                       codecs)
 }
 
 class GraftCellWrite(path: String, queryId: String, truncate: Boolean,
                      maxRowsPerFile: Long = -1L,
                      buckets: Option[Int] = None,
-                     declareTransform: Boolean = true,
                      codecs: CellCodecs = CellCodecs.DEFAULT)
     extends org.apache.spark.sql.connector.write.Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
@@ -4938,43 +4922,25 @@ class GraftCellWrite(path: String, queryId: String, truncate: Boolean,
     * `KeyGroupedPartitioning`, which is what lets two co-bucketed
     * stores JOIN WITH NO SHUFFLE ON EITHER SIDE (Spark's storage-
     * partitioned join). Catalyst resolves the transform through the
-    * table's FunctionCatalog, so this path engages only for
-    * catalog-routed writes — exactly where the descriptor lives. */
+    * table's FunctionCatalog; `buckets` comes only from a catalog
+    * table's descriptor, so the transform always resolves (a
+    * path-addressed write never buckets — `rebucket` is a
+    * [[GraftCellMaintenance.rewrite]], not a write). */
   override def requiredDistribution(): Distribution = buckets match {
-    // PATH-mode bucket writes (option-driven — rebucket's re-clustered
-    // overwrite) declare NOTHING: there is no FunctionCatalog
-    // to resolve the transform through, the caller pre-arranged the
-    // clustering, and a declared rowkey range shuffle here would
-    // destroy it. The writer's roll-on-bucket-change keeps files pure
-    // either way.
-    case Some(n) if declareTransform =>
-      Distributions.clustered(Array(E.bucket(n, "rowkey")))
-    case Some(_) => Distributions.unspecified()
+    case Some(n) => Distributions.clustered(Array(E.bucket(n, "rowkey")))
     case None    => Distributions.ordered(Array(asc("rowkey")))
   }
   override def requiredOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     val cellKey = Array(asc("rowkey"), asc("family"), asc("qualifier"),
                         asc("version"))
-    buckets match {
-      case Some(n) if declareTransform =>
-        E.sort(E.bucket(n, "rowkey"), SortDirection.ASCENDING) +: cellKey
-      // path mode can't declare bucket(n, rowkey) (no FunctionCatalog
-      // to resolve it) and a plain rowkey sort would interleave
-      // buckets into a file-per-row roll storm — the caller owns the
-      // arrangement, and CellDataWriter verifies it (verifyOrder)
-      case Some(_) => Array.empty
-      case None => cellKey
-    }
+    buckets.fold(cellKey)(n =>
+      E.sort(E.bucket(n, "rowkey"), SortDirection.ASCENDING) +: cellKey)
   }
-
-  // path-mode bucketed writes carry no Spark-enforced ordering, so the
-  // writer checks sortedness itself (see CellDataWriter.checkOrder)
-  private def verifyOrder = buckets.isDefined && !declareTransform
 
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
     new GraftCellBatchWrite(path, queryId, truncate, maxRowsPerFile, buckets,
-                            verifyOrder, codecs)
+                            codecs)
 
   /** Streaming write — the replication PRODUCER: each micro-batch epoch
     * publishes one `batch_<queryId>_ep<epoch>` dir through the same
@@ -4989,13 +4955,12 @@ class GraftCellWrite(path: String, queryId: String, truncate: Boolean,
     * micro-batch). */
   override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
     new GraftCellStreamingWrite(path, queryId, maxRowsPerFile, buckets,
-                                verifyOrder, codecs)
+                                codecs)
 }
 
 class GraftCellStreamingWrite(path: String, queryId: String,
                               maxRowsPerFile: Long = -1L,
                               buckets: Option[Int] = None,
-                              verifyOrder: Boolean = false,
                               codecs: CellCodecs = CellCodecs.DEFAULT)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
@@ -5008,7 +4973,7 @@ class GraftCellStreamingWrite(path: String, queryId: String,
       : StreamingDataWriterFactory = {
     new java.io.File(path).mkdirs()
     new CellDataWriterFactory(new java.io.File(path, s"_tmp_$queryId").getPath,
-                              maxRowsPerFile, buckets, verifyOrder, codecs)
+                              maxRowsPerFile, buckets, codecs)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -5041,7 +5006,6 @@ object CellFilesCommitted {
 class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
                           maxRowsPerFile: Long = -1L,
                           buckets: Option[Int] = None,
-                          verifyOrder: Boolean = false,
                           codecs: CellCodecs = CellCodecs.DEFAULT)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
@@ -5051,12 +5015,12 @@ class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     tmpDir.mkdirs()
     new CellDataWriterFactory(tmpDir.getPath, maxRowsPerFile, buckets,
-                              verifyOrder, codecs)
+                              codecs)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // the TRUNCATE overwrite (rebucket, every mode("overwrite") write)
-    // replaces every live dir in the same publish: readers switch at
+    // the TRUNCATE overwrite (every mode("overwrite") write) replaces
+    // every live dir in the same publish: readers switch at
     // the rename, snapshot-pinned files move to the archive, and every
     // retirement lands in the travel log superseded by this commit
     val live = if (truncate) CellFooterCache.committedDirs(path) else Nil
@@ -5073,9 +5037,9 @@ class GraftCellBatchWrite(path: String, queryId: String, truncate: Boolean,
   * column-family descriptor): a table-level default plus per-family
   * overrides, persisted as TBLPROPERTIES (`compression`,
   * `family.<f>.compression`) and honored by every write path —
-  * inserts, DML rewrites, and (via write options) the path-mode
-  * maintenance rewrites, so the declared codecs TRAVEL THROUGH
-  * COMPACTION like the r17 family policies. */
+  * inserts, DML rewrites, and the maintenance rewrites the procedures
+  * pass them to, so the declared codecs TRAVEL THROUGH COMPACTION like
+  * the r17 family policies. */
 final case class CellCodecs(
     default: org.apache.parquet.hadoop.metadata.CompressionCodecName,
     perFamily: Map[String,
@@ -5098,8 +5062,12 @@ object CellCodecs {
 
   private val FamRe = raw"family\.([A-Za-z0-9_-]+)\.compression".r
 
-  /** Resolve from table properties (catalog descriptor) and/or write
-    * options (path-mode maintenance). */
+  /** Is `key` a compression property (`compression`,
+    * `family.<f>.compression`)? */
+  def isProp(key: String): Boolean =
+    key == "compression" || FamRe.matches(key)
+
+  /** Resolve from table properties (the catalog descriptor). */
   def of(props: Map[String, String]): CellCodecs = {
     val default = props.get("compression")
       .map(codec(_, "compression"))
@@ -5138,21 +5106,18 @@ object GraftCellCodecTag {
   * write gets one tmp dir per epoch, `<tmpDir>_ep<epoch>`. */
 class CellDataWriterFactory(tmpDir: String, maxRowsPerFile: Long = -1L,
                             buckets: Option[Int] = None,
-                            verifyOrder: Boolean = false,
                             codecs: CellCodecs = CellCodecs.DEFAULT)
     extends org.apache.spark.sql.connector.write.DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new CellDataWriter(tmpDir, partitionId, maxRowsPerFile, buckets,
-                       verifyOrder, codecs)
+    new CellDataWriter(tmpDir, partitionId, maxRowsPerFile, buckets, codecs)
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
     val tmp = s"${tmpDir}_ep$epochId"
     new java.io.File(tmp).mkdirs()
-    new CellDataWriter(tmp, partitionId, maxRowsPerFile, buckets,
-                       verifyOrder, codecs)
+    new CellDataWriter(tmp, partitionId, maxRowsPerFile, buckets, codecs)
   }
 }
 
@@ -5330,7 +5295,6 @@ private[cell] final class CellFileWriter(path: String,
 class CellDataWriter(tmpDir: String, partitionId: Int,
                      maxRowsPerFile: Long = -1L,
                      buckets: Option[Int] = None,
-                     verifyOrder: Boolean = false,
                      codecs: CellCodecs = CellCodecs.DEFAULT)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
   import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -5392,66 +5356,7 @@ class CellDataWriter(tmpDir: String, partitionId: Int,
       else codecSinks.getOrElseUpdate(codec, new Sink(codec))
     }
 
-  // PATH-mode bucketed writes declare no ordering (no FunctionCatalog
-  // to resolve bucket(n, rowkey) through), yet the scan reports every
-  // region file as cell-key-sorted — so the writer itself verifies the
-  // caller's arrangement and fails loudly on the first out-of-order
-  // row instead of publishing a file the scan would let Spark elide
-  // sorts over (silently wrong merges). Catalog routes declare the
-  // ordering, so Spark sorts and this stays off the hot path. The
-  // check runs on the INPUT stream (before codec routing): a sorted
-  // input keeps every sink subsequence sorted. The sortedness claim
-  // resets at each BUCKET boundary (rowkeys legitimately restart when
-  // the leading sort key advances), matching the per-region-file claim
-  // the scan reports. DELIBERATE r18 tightening (noted per ADVICE): it
-  // no longer ALSO resets at maxRowsPerFile rolls — per-family codec
-  // routing splits one input stream across codec-keyed sinks, so input
-  // rolls stopped aligning with sink-file boundaries and a
-  // sorted-within-each-roll-but-not-monotone input could publish an
-  // unsorted sink file under the per-roll claim. Bucketed path-mode
-  // callers must sort the whole task partition, not just each roll.
-  private var prevBucket = -1
-  private var prevKey: Array[Byte] = _
-  private var prevFam: Array[Byte] = _
-  private var prevQual: Array[Byte] = _
-  private var prevVer: java.lang.Long = _
-  private var verifySeen = false
-  private def checkOrder(row: InternalRow): Unit = {
-    def bytesAt(i: Int): Array[Byte] =
-      if (row.isNullAt(i)) null else row.getUTF8String(i).getBytes
-    val kb = bytesAt(0); val fb = bytesAt(1); val qb = bytesAt(2)
-    val vv: java.lang.Long = if (row.isNullAt(3)) null else row.getLong(3)
-    buckets.foreach { n =>
-      val b = GraftBucket.of(kb, n)
-      if (b != prevBucket) verifySeen = false
-      prevBucket = b
-    }
-    if (verifySeen) {
-      var c = GraftCell.compareNullsFirst(kb, prevKey)
-      if (c == 0) c = GraftCell.compareNullsFirst(fb, prevFam)
-      if (c == 0) c = GraftCell.compareNullsFirst(qb, prevQual)
-      if (c == 0) c = (prevVer, vv) match {
-        case (null, null) => 0
-        case (null, _)    => 1
-        case (_, null)    => -1
-        case (p, v)       => java.lang.Long.compare(v, p)
-      }
-      if (c < 0) throw new IllegalStateException(
-        "graftcell: out-of-order row in a bucketed path-mode write " +
-        "(option(\"buckets\", n) callers must pre-sort each partition " +
-        "by (bucket, rowkey, family, qualifier, version); the scan " +
-        s"reports region files as sorted): rowkey=${
-          if (kb == null) "NULL" else new String(kb, "UTF-8")} after ${
-          if (prevKey == null) "NULL" else new String(prevKey, "UTF-8")}")
-    }
-    prevKey = kb; prevFam = fb; prevQual = qb; prevVer = vv
-    verifySeen = true
-  }
-
-  override def write(row: InternalRow): Unit = {
-    if (verifyOrder) checkOrder(row)
-    sinkFor(row).write(row)
-  }
+  override def write(row: InternalRow): Unit = sinkFor(row).write(row)
 
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
     defaultSink.roll()

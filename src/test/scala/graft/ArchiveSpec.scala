@@ -134,10 +134,11 @@ class ArchiveSpec extends AnyFunSuite {
     // The publish and CALL repair finish a commit through the same
     // code, so they must leave the same store. Pre-state: a data-less
     // marker dir (an earlier truncate) and two generations pinned by a
-    // snapshot, {a} and {b, c}. Four replacing publishes: an
-    // overwrite, a minor and a major compaction replace all three dirs,
-    // the marker included; a ranged DELETE replaces both data files
-    // (emptying {a}, keeping c of {b, c}) and leaves the marker live.
+    // snapshot, {a} and {b, c}. Five replacing publishes: an
+    // overwrite, a minor and a major compaction and a rebucket replace
+    // all three dirs, the marker included; a ranged DELETE replaces
+    // both data files (emptying {a}, keeping c of {b, c}) and leaves
+    // the marker live.
     // For each, copy "<t>i" runs it straight through; copy "<t>r" is
     // planted in the state it leaves right after its rename — the new
     // batch dir carrying the retire intent the publish writes, nothing
@@ -264,6 +265,12 @@ class ArchiveSpec extends AnyFunSuite {
       assert(!Option(new java.io.File(st).list).get.exists(n =>
         n.startsWith("_tmp_") || n.startsWith("_stage_")),
         "major compaction must leave no tmp or stage dir")
+    }
+    crashCompare("rb", Seq("a", "b", "c"), replacesMarker = true) { st =>
+      GraftCellMaintenance.rebucket(s, st, 2)
+      assert(!Option(new java.io.File(st).list).get.exists(n =>
+        n.startsWith("_tmp_") || n.startsWith("_stage_")),
+        "rebucket must leave no tmp or stage dir")
     }
     crashCompare("del", Seq("c"), replacesMarker = false) { st =>
       new graft.sources.cell.GraftCellTable(st).deleteWhere(

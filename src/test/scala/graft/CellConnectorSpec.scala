@@ -1381,7 +1381,10 @@ class CellConnectorSpec extends AnyFunSuite {
     // Against the window plan on richer stores: NULL versions, values
     // and families, same-version ties, three overlapping batches,
     // maxVersions 2, hide-all-older and per-family policies, and a
-    // 4-bucket layout that also holds one untagged file.
+    // 4-bucket compaction of a store rebucketed to 4 plus one untagged
+    // file. In the last case the store is rebucketed to 2, so each
+    // tagged input carries a foreign count and must feed the two
+    // buckets ≡ its id (mod 2).
     def randomCells(rnd: scala.util.Random): Seq[org.apache.spark.sql.Row] =
       Seq.fill(500 + rnd.nextInt(200)) {
         def sometimesNull[T](p: Double)(v: => T): Any =
@@ -1403,8 +1406,10 @@ class CellConnectorSpec extends AnyFunSuite {
       (Some(35000L), 1, Some("hide-all-older"), Map(
         "d" -> FamilyPolicy(deleteMarkers = Some("current"),
                             maxVersions = Some(2), ttlMicros = Some(0L)))))
-    for ((seed, (ttl, maxV, dm, fams)) <- (11 to 14).zip(policies);
-         bucketed <- Seq(false, true)) {
+    val cases = (11 to 14).zip(policies).flatMap { case (seed, p) =>
+      Seq((seed, p, None), (seed, p, Some(4))) } :+ ((15, policies(1), Some(2)))
+    for ((seed, (ttl, maxV, dm, fams), from) <- cases) {
+      val bucketed = from.isDefined
       val rnd = new scala.util.Random(seed)
       val cells = randomCells(rnd)
       val store =
@@ -1413,8 +1418,8 @@ class CellConnectorSpec extends AnyFunSuite {
         s.createDataFrame(part.asJava, GraftCell.SCHEMA)
           .write.format("graftcell").mode("append").save(store))
       val buckets = if (bucketed) Some(4) else None
-      if (bucketed) {
-        GraftCellMaintenance.rebucket(s, store, 4)
+      from.foreach { m =>
+        GraftCellMaintenance.rebucket(s, store, m)
         val parts = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", "1")
         try s.createDataFrame(randomCells(rnd).take(60).asJava, GraftCell.SCHEMA)
@@ -1423,13 +1428,16 @@ class CellConnectorSpec extends AnyFunSuite {
         val untagged = CellFooterCache.filesOf(store)
           .filter(m => graft.sources.cell.GraftBucket.parse(m.path).isEmpty)
         assert(untagged.size == 1, s"one untagged file: ${untagged.map(_.path)}")
+        assert(CellFooterCache.filesOf(store).count(f => graft.sources.cell
+          .GraftBucket.parse(f.path).exists(_._2 == m)) > 1,
+          s"the inputs must carry $m-bucket tags")
       }
       val want = rowsOf(referenceGc(s.read.format("graftcell").load(store),
         ttl, Some(TOMB), maxV, fams, dm))
       GraftCellMaintenance.majorCompact(s, store, ttl, Some(TOMB), maxV,
         buckets, fams, deleteMarkers = dm)
       val got = rowsOf(s.read.format("graftcell").load(store))
-      assert(got == want, s"seed $seed bucketed=$bucketed: majorCompact " +
+      assert(got == want, s"seed $seed from=$from: majorCompact " +
         s"differs from the window plan (got ${got.size}, want ${want.size})\n" +
         s"only got: ${got.diff(want).take(5)}\nonly want: ${want.diff(got).take(5)}")
       if (bucketed) assert(CellFooterCache.filesOf(store).forall(m =>
@@ -1493,8 +1501,17 @@ class CellConnectorSpec extends AnyFunSuite {
     assert(layout(major) == layout(majorTwin),
       "two identical stores must compact (major) to the same layout")
 
+    def tagsOf(store: String) = CellFooterCache.filesOf(store)
+      .map(m => graft.sources.cell.GraftBucket.parse(m.path)).sorted
     val bucketed = staged()
-    GraftCellMaintenance.rebucket(s, bucketed, 4)
+    val (_, rebucketStats) = collector.measure(
+      GraftCellMaintenance.rebucket(s, bucketed, 4))
+    oneJobNoShuffle("rebucket", rebucketStats)
+    val filled = s.read.format("graftcell").load(bucketed)
+      .select("rowkey").collect().map(r => graft.sources.cell.GraftBucket.of(
+        r.getString(0).getBytes("UTF-8"), 4)).distinct.sorted.toSeq
+    assert(tagsOf(bucketed) == filled.map(b => Some((b, 4))),
+      s"rebucket: one tagged file per non-empty bucket: ${tagsOf(bucketed)}")
     s.range(0, 500).select(format_string("%06d", col("id") * 13).as("rowkey"),
         lit("d").as("family"), lit("q").as("qualifier"),
         (col("id") + 50000L).as("version"), lit("late").as("value"))
@@ -1502,10 +1519,21 @@ class CellConnectorSpec extends AnyFunSuite {
     val (_, bucketStats) = collector.measure(
       GraftCellMaintenance.majorCompact(s, bucketed, buckets = Some(4)))
     oneJobNoShuffle("bucketed majorCompact", bucketStats)
-    val tags = CellFooterCache.filesOf(bucketed)
-      .map(m => graft.sources.cell.GraftBucket.parse(m.path))
-    assert(tags.sorted == (0 until 4).map(b => Some((b, 4))),
-      s"one tagged file per bucket: $tags")
+    assert(tagsOf(bucketed) == (0 until 4).map(b => Some((b, 4))),
+      s"one tagged file per bucket: ${tagsOf(bucketed)}")
+  }
+
+  test("a rewrite with nothing to do commits nothing") {
+    import graft.sources.cell.{CellFooterCache, GraftCellMaintenance}
+    val store =
+      java.nio.file.Files.createTempDirectory("graft_noop_rw_").toString
+    GraftCellMaintenance.majorCompact(s, store)
+    GraftCellMaintenance.majorCompact(s, store, buckets = Some(4))
+    GraftCellMaintenance.rebucket(s, store, 4)
+    assert(CellFooterCache.committedDirs(store).isEmpty,
+      s"no-op rewrites published: ${CellFooterCache.committedDirs(store)}")
+    assert(new java.io.File(store).list().isEmpty,
+      s"no-op rewrites left: ${new java.io.File(store).list().toSeq}")
   }
 
   test("conditional MERGE (checkAnd*): stale puts and absent deletes no-op") {

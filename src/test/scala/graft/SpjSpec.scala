@@ -433,40 +433,27 @@ class SpjSpec extends AnyFunSuite {
     assert(exchanges(ranPlan(joined("spj_rb_a", "spj_rb_b"))) == 0)
   }
 
-  test("path-mode bucketed writes verify the caller's sort: out-of-order " +
-       "rows fail loudly instead of publishing a mis-advertised file (r17)") {
-    // option("buckets", n) declares no Spark-enforced ordering (no
-    // FunctionCatalog to resolve the transform), yet the scan reports
-    // every region file as cell-key-sorted — so the writer itself must
-    // reject a same-bucket out-of-order adjacency (roll-on-change
-    // already isolates DIFFERENT buckets into different files).
+  test("bucket count and codecs are table properties: a write option " +
+       "naming one fails with the TBLPROPERTIES to use") {
     import scala.collection.JavaConverters._
     import graft.sources.cell.GraftCell
-    val n = 8
-    val keys = (1 to 200).map(i => f"k$i%03d")
-    val byBucket = keys.groupBy(k => GraftBucket.of(k.getBytes("UTF-8"), n))
-    val (_, sameBucket) = byBucket.find(_._2.size >= 2).get
-    val hi = sameBucket.max; val lo = sameBucket.min
-    def df(rows: Seq[String]) = s.createDataFrame(
-      rows.map(k => org.apache.spark.sql.Row(k, "f", "q", 1L, s"v$k")).asJava,
-      GraftCell.SCHEMA).coalesce(1)
     val dest = java.nio.file.Files
-      .createTempDirectory("graft_order_spec_").toString
-    val e = intercept[Exception] {
-      df(Seq(hi, lo)) // descending within one bucket, one task
-        .write.format("graftcell").option("buckets", n)
-        .mode("append").save(s"$dest/bad")
-    }
+      .createTempDirectory("graft_layout_opts_").toString
+    val df = s.createDataFrame(
+      Seq(org.apache.spark.sql.Row("k1", "f", "q", 1L, "v")).asJava,
+      GraftCell.SCHEMA)
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(e).exists(c =>
-      Option(c.getMessage).exists(_.contains("out-of-order"))),
-      s"expected the writer's out-of-order guard, got: $e")
-    // the same rows pre-sorted write fine and come back tagged + exact
-    df(Seq(lo, hi)).write.format("graftcell").option("buckets", n)
-      .mode("append").save(s"$dest/good")
-    val back = s.read.format("graftcell").load(s"$dest/good")
-      .selectExpr("rowkey").collect().map(_.getString(0)).toSet
-    assert(back == Set(lo, hi))
+    Seq("buckets" -> "8", "compression" -> "zstd",
+        "family.f.compression" -> "gzip").foreach { case (k, v) =>
+      val e = intercept[Exception] {
+        df.write.format("graftcell").option(k, v).mode("append").save(dest)
+      }
+      assert(causes(e).exists(c => Option(c.getMessage).exists(m =>
+        m.contains(k) && m.contains("TBLPROPERTIES"))),
+        s"option $k: expected the TBLPROPERTIES refusal, got: $e")
+    }
+    assert(graft.sources.cell.CellFooterCache.committedDirs(dest).isEmpty,
+      "a refused write must commit nothing")
   }
 }
