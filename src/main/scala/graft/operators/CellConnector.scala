@@ -276,7 +276,9 @@ object CellConnector extends QueryModule {
         .write.format("graftcell").mode("append").save(path)
     }
 
-  /** Drain a streaming DF to completion (AvailableNow, memory sink). */
+  /** Drain a streaming DF to completion (AvailableNow, memory sink). The
+    * throwaway checkpoint is deleted once the query terminates: the
+    * drained rows live in the sink and nothing reads it back. */
   private def drain(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val s = df.sparkSession
@@ -286,7 +288,8 @@ object CellConnector extends QueryModule {
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", cp).start()
-    q.awaitTermination()
+    try q.awaitTermination()
+    finally FileUtils.deleteQuietly(new java.io.File(cp))
     s.table(name)
   }
 
@@ -711,7 +714,8 @@ object CellConnector extends QueryModule {
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", cp).start()
-        q.awaitTermination()
+        try q.awaitTermination()
+        finally FileUtils.deleteQuietly(new java.io.File(cp))
         ()
       }
       s.sql("""SELECT * FROM graftcat.events_apply

@@ -42,16 +42,19 @@ object Joins extends QueryModule {
     // staging path also carries this JVM's pid: the catalog is in-memory
     // (per-process), so two concurrent JVMs (sbt test + Bench) would
     // otherwise both see tableExists=false and race overwriting the same
-    // directory, corrupting the bucketed files mid-read.
+    // directory, corrupting the bucketed files mid-read. Being per-process,
+    // the directory is deleted when this JVM exits.
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(3).map("%02x".format(_)).mkString
     val tbl = short + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + h
-    if (!s.catalog.tableExists(tbl))
-      df.write.mode("overwrite")
-        .option("path",
-                s"/tmp/graft_bkt_${ProcessHandle.current().pid()}_$tbl")
+    if (!s.catalog.tableExists(tbl)) {
+      val path = s"/tmp/graft_bkt_${ProcessHandle.current().pid()}_$tbl"
+      sys.addShutdownHook(org.apache.commons.io.FileUtils
+        .deleteQuietly(new java.io.File(path)): Unit)
+      df.write.mode("overwrite").option("path", path)
         .bucketBy(8, key).sortBy(key)
         .saveAsTable(tbl)
+    }
     tbl
   }
 

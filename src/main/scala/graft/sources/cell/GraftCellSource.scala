@@ -499,7 +499,10 @@ object GraftCell {
 
   /** POINT SETS for bucket pruning on BUCKETED stores (HBase
     * salted-scan semantics: a get touches only its salt's store
-    * files). Each returned set is a NECESSARY condition "any matching
+    * files) and for rowkey-bloom file pruning (a file survives a set
+    * iff some key of it lies inside the file's [min,max] and its
+    * bloom, if any, admits that key). Each returned set is a
+    * NECESSARY condition "any matching
     * row's rowkey ∈ set" derived from the conjunction: `rowkey = k`
     * and `rowkey IN (...)` contribute their keys; an `Or` contributes
     * the UNION of one necessary set from each side (so a multiget OR
@@ -631,10 +634,10 @@ object GraftCell {
       cands.exists(CellValueBloom.mayContain(bloom.get, _)))
 
   /** Full file-level pruning over a footer entry: rowkey interval +
-    * per-key IN-lists (multi-get) + version TimeRange + per-disjunct
-    * OR recursion (which, unlike the byte-level overload above, sees
-    * the VERSION stats too — so `version > x OR rowkey < 'c'` prunes
-    * on both columns per disjunct). */
+    * per-key IN-lists (multi-get) + rowkey bloom + version TimeRange +
+    * per-disjunct OR recursion (which, unlike the byte-level overload
+    * above, sees the VERSION stats too — so `version > x OR rowkey <
+    * 'c'` prunes on both columns per disjunct). */
   def fileMayMatch(m: CellFileMeta, filters: Seq[Filter]): Boolean = {
     val flat = conjuncts(filters)
     fileMayMatch(m.minKey, m.maxKey, flat) &&
@@ -650,6 +653,12 @@ object GraftCell {
       mayOverlap(m.minVal, m.maxVal, colRange("value", flat)) &&
       // r19: VALUE bloom — point evidence the range stats can't give
       bloomMayMatch(m.valueBloom, valuePoints(flat)) &&
+      // ROWKEY bloom — the HBase ROW bloom: some in-range key admitted
+      pointSets(flat).forall(_.exists { k =>
+        mayOverlap(m.minKey, m.maxKey,
+                   KeyRange(Some(Bound(k, true)), Some(Bound(k, true)))) &&
+          m.rowkeyBloom.forall(CellValueBloom.mayContain(_, k))
+      }) &&
       flat.forall {
         case Or(l, r) =>
           fileMayMatch(m, Seq(l)) || fileMayMatch(m, Seq(r))
@@ -658,14 +667,18 @@ object GraftCell {
   }
 
   /** PRECOMPILED file pruner for a fixed filter set: folds the ranges
-    * once and sorts each rowkey IN-list once, so each file tests in
-    * O(log k) per IN-list instead of O(k) — the difference between a
-    * runtime DPP IN-list of 100k build-side keys costing k·files
-    * comparisons (quadratic blowup found by the round-15 semi-join
-    * probe: 195 s for a 100k-key DPP over 400k rows) and costing
-    * files·log k. Pruning semantics are IDENTICAL to
-    * [[fileMayMatch]]: a file survives an IN-list iff at least one
-    * listed key falls inside its [min,max]; missing stats keep. */
+    * once and sorts and hashes each rowkey point list (`=` or IN) once,
+    * so each file finds its in-range keys in O(log k) instead of O(k) —
+    * the difference between a runtime DPP IN-list of 100k build-side
+    * keys costing k·files comparisons (quadratic blowup found by the
+    * round-15 semi-join probe: 195 s for a 100k-key DPP over 400k rows)
+    * and costing files·log k. A file with a rowkey bloom then probes
+    * only its in-range slice and stops at the first admitted key — at
+    * ≈1% false positives that is about a hundred probes however long
+    * the slice. Pruning semantics are IDENTICAL to [[fileMayMatch]]: a
+    * file survives a point list iff at least one listed key falls
+    * inside its [min,max] and its bloom, if any, admits that key;
+    * missing stats keep. */
   final class FilePruner(filters: Seq[Filter]) {
     private val flat = conjuncts(filters)
     private val range = keyRange(flat)
@@ -674,13 +687,13 @@ object GraftCell {
     private val qualRange = colRange("qualifier", flat)
     private val valRange = colRange("value", flat)
     private val valPoints = valuePoints(flat)
-    private val sortedInLists: Seq[Array[Array[Byte]]] = flat.collect {
-      case In("rowkey", vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        val a = vs.map(v => utf8(v.asInstanceOf[String]))
+    // each point list sorted, with each key's bloom hash alongside
+    private val keyPoints: Seq[(Array[Array[Byte]], Array[Long])] =
+      pointSets(flat).map { ks =>
+        val a = ks.toArray
         java.util.Arrays.sort(a, UnsignedBytesOrd)
-        a
-    }
+        (a, a.map(CellValueBloom.hash))
+      }
     // Or disjuncts prune as the UNION of their sides, each side its own
     // sub-pruner compiled once (r16 — the MultiRowRangeFilter): a file
     // survives an Or iff EITHER disjunct's full pruning (rowkey range,
@@ -695,14 +708,16 @@ object GraftCell {
       mayOverlap(m.minQual, m.maxQual, qualRange) &&
       mayOverlap(m.minVal, m.maxVal, valRange) &&
       bloomMayMatch(m.valueBloom, valPoints) &&
-      sortedInLists.forall(keys => anyKeyIn(keys, m.minKey, m.maxKey)) &&
+      keyPoints.forall { case (keys, hashes) => anyKeyIn(keys, hashes, m) } &&
       orPruners.forall { case (l, r) => l.mayMatch(m) || r.mayMatch(m) }
-    private def anyKeyIn(sorted: Array[Array[Byte]],
-                         min: Option[Array[Byte]],
-                         max: Option[Array[Byte]]): Boolean =
-      (min, max) match {
-        case (Some(mn), Some(mx)) =>
-          // first key ≥ min, then check it is ≤ max
+    // the in-range slice runs from the first key ≥ min to the last key
+    // ≤ max; a missing bound leaves that side open (ONE-SIDED stats
+    // prune against the present bound, ADVICE r15), so a file with no
+    // stats and no bloom keeps on the first key
+    private def anyKeyIn(sorted: Array[Array[Byte]], hashes: Array[Long],
+                         m: CellFileMeta): Boolean = {
+      var i = m.minKey match {
+        case Some(mn) =>
           var lo = 0
           var hi = sorted.length
           while (lo < hi) {
@@ -710,19 +725,19 @@ object GraftCell {
             if (JArrays.compareUnsigned(sorted(mid), mn) < 0) lo = mid + 1
             else hi = mid
           }
-          lo < sorted.length && JArrays.compareUnsigned(sorted(lo), mx) <= 0
-        // ONE-SIDED stats prune against the present bound (ADVICE r15:
-        // this used to keep unconditionally while fileMayMatch pruned —
-        // now both paths are identical): a key ≥ min exists iff the
-        // LARGEST listed key clears the floor; a key ≤ max exists iff
-        // the SMALLEST clears the ceiling. `sorted` is never empty
-        // (the In collector requires vs.nonEmpty).
-        case (Some(mn), None) =>
-          JArrays.compareUnsigned(sorted(sorted.length - 1), mn) >= 0
-        case (None, Some(mx)) =>
-          JArrays.compareUnsigned(sorted(0), mx) <= 0
-        case (None, None) => true // no stats ⇒ keep (skip only on evidence)
+          lo
+        case None => 0
       }
+      val mx = m.maxKey.orNull
+      val bloom = m.rowkeyBloom.orNull
+      while (i < sorted.length &&
+             (mx == null || JArrays.compareUnsigned(sorted(i), mx) <= 0)) {
+        if (bloom == null || CellValueBloom.mayContainHash(bloom, hashes(i)))
+          return true
+        i += 1
+      }
+      false
+    }
   }
 
   /** Compile a filter for per-row evaluation: IN-lists become hash
@@ -3581,27 +3596,35 @@ class CellAggReaderFactory extends PartitionReaderFactory {
     }
 }
 
-/** Per-file VALUE BLOOM (r19 — VERDICT r18 #7): point evidence for
-  * `value = k` probes, generalizing the rowkey bloom machinery to the
-  * value column at FILE granularity. The 64-byte truncated value
-  * RANGE stats (r18) prune era bands; a point probe inside a band
-  * needs membership evidence, which ranges cannot give — the manifest
-  * carries a fixed 512-byte bloom (4096 bits, k=3, FNV-1a + avalanche
-  * finalizer: deterministic across JVMs and partitionings) per region
-  * file, built exactly while writing. A SATURATED bloom (> half bits
-  * set, ≈ >950 distinct values) is stored as None — no evidence, keep
-  * the file — so high-cardinality value columns cost nothing and prune
-  * nothing, while the time-batched / enum-valued stores that motivate
-  * SingleColumnValueFilter probes skip whole files. Evidence-only like
-  * every pruning layer: the reader still evaluates exactly. */
+/** Per-file manifest BLOOMS: point evidence the range stats cannot
+  * give, checked at plan time so a file that cannot hold the probe is
+  * never opened. K=3 probes of a 64-bit FNV-1a + avalanche-finalizer
+  * hash (deterministic across JVMs and partitionings) into a bitset of
+  * `bloom.length * 8` bits, built exactly while writing. Two sizes:
+  *  - the VALUE bloom (r19): fixed 512 bytes ([[empty]]). A SATURATED
+  *    one (> half bits set, ≈ >950 distinct values) is stored as None
+  *    — no evidence, keep the file — so high-cardinality value columns
+  *    cost nothing and prune nothing, while the time-batched /
+  *    enum-valued stores that motivate SingleColumnValueFilter probes
+  *    skip whole files;
+  *  - the ROWKEY bloom — HBase's per-store-file ROW bloom: sized from
+  *    the file's distinct-key count ([[sized]]), [[BITS_PER_KEY]] bits
+  *    a key (≈1.1% false positives), and absent above [[MAX_KEYS]]
+  *    keys, whose large rolled files min/max already prune.
+  * Evidence-only like every pruning layer: the reader still evaluates
+  * exactly. */
 object CellValueBloom {
   val BYTES = 512
-  private val BITS = BYTES * 8
   private val K = 3
+  /** Rowkey bloom density: (1 - e^(-3/12))^3 ≈ 1.1% false positives. */
+  val BITS_PER_KEY = 12
+  /** Above this many distinct rowkeys a file stores no rowkey bloom
+    * (it would cost 96 KB, 128 KB base64, per manifest entry). */
+  val MAX_KEYS = 65536
 
   /** 64-bit FNV-1a with a splitmix-style finalizer (FNV alone clusters
     * low bits on short ASCII values). */
-  private def hash(b: Array[Byte]): Long = {
+  def hash(b: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
     var i = 0
     while (i < b.length) { h ^= (b(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
@@ -3609,28 +3632,39 @@ object CellValueBloom {
     h *= 0xc4ceb9fe1a85ec53L; h ^= h >>> 33
     h
   }
-  private def bit(h: Long, i: Int): Int = {
+  private def bit(h: Long, i: Int, bits: Int): Int = {
     val x = h + i.toLong * 0x9e3779b97f4a7c15L
-    ((x ^ (x >>> 32)).toInt & Int.MaxValue) % BITS
+    ((x ^ (x >>> 32)).toInt & Int.MaxValue) % bits
   }
 
+  /** An empty value bloom. */
   def empty(): Array[Byte] = new Array[Byte](BYTES)
 
-  def add(bloom: Array[Byte], value: Array[Byte]): Unit = {
-    val h = hash(value)
+  /** An empty bloom sized for `keys` distinct keys. */
+  def sized(keys: Int): Array[Byte] =
+    new Array[Byte](math.max(1, (keys * BITS_PER_KEY + 7) / 8))
+
+  def add(bloom: Array[Byte], value: Array[Byte]): Unit =
+    addHash(bloom, hash(value))
+
+  def addHash(bloom: Array[Byte], h: Long): Unit = {
+    val bits = bloom.length * 8
     var i = 0
     while (i < K) {
-      val p = bit(h, i)
+      val p = bit(h, i, bits)
       bloom(p >> 3) = (bloom(p >> 3) | (1 << (p & 7))).toByte
       i += 1
     }
   }
 
-  def mayContain(bloom: Array[Byte], value: Array[Byte]): Boolean = {
-    val h = hash(value)
+  def mayContain(bloom: Array[Byte], value: Array[Byte]): Boolean =
+    mayContainHash(bloom, hash(value))
+
+  def mayContainHash(bloom: Array[Byte], h: Long): Boolean = {
+    val bits = bloom.length * 8
     var i = 0
     while (i < K) {
-      val p = bit(h, i)
+      val p = bit(h, i, bits)
       if ((bloom(p >> 3) & (1 << (p & 7))) == 0) return false
       i += 1
     }
@@ -3644,7 +3678,7 @@ object CellValueBloom {
     while (i < bloom.length) {
       set += java.lang.Integer.bitCount(bloom(i) & 0xff); i += 1
     }
-    if (set * 2 <= BITS) Some(bloom) else None
+    if (set * 2 <= bloom.length * 8) Some(bloom) else None
   }
 }
 
@@ -3701,7 +3735,13 @@ final case class CellFileMeta(path: String, bytes: Long, rowCount: Long,
                               // [[CellValueBloom]]) — point evidence
                               // for value probes; None = saturated or
                               // legacy (keep the file)
-                              valueBloom: Option[Array[Byte]] = None)
+                              valueBloom: Option[Array[Byte]] = None,
+                              // per-file ROWKEY bloom (see
+                              // [[CellValueBloom]]) — point evidence
+                              // for `rowkey =` / `IN` plans; None =
+                              // over the key cap, footer-derived or
+                              // legacy (keep the file)
+                              rowkeyBloom: Option[Array[Byte]] = None)
 
 /** The one atomic JSON writer of the store's metadata files (manifests,
   * snapshot manifests, catalog markers): write `value` to `tmp`, then
@@ -3766,6 +3806,7 @@ object CellManifest {
     m.maxVal.foreach(k => o.put("maxVal", b64e.encodeToString(k)))
     m.nullFams.foreach(n => o.put("nullFams", n))
     m.valueBloom.foreach(b => o.put("valueBloom", b64e.encodeToString(b)))
+    m.rowkeyBloom.foreach(b => o.put("rowkeyBloom", b64e.encodeToString(b)))
     o.put("messageType", m.messageType)
     ()
   }
@@ -3790,7 +3831,8 @@ object CellManifest {
       Option(o.get("minVal")).map(n => b64d.decode(n.asText())),
       Option(o.get("maxVal")).map(n => b64d.decode(n.asText())),
       Option(o.get("nullFams")).map(_.asLong()),
-      Option(o.get("valueBloom")).map(n => b64d.decode(n.asText())))
+      Option(o.get("valueBloom")).map(n => b64d.decode(n.asText())),
+      Option(o.get("rowkeyBloom")).map(n => b64d.decode(n.asText())))
 
   /** Persist `dir`'s manifest. Entries store file NAMES only and are
     * sorted by name, so `metas` may point into any dir (a tmp write
@@ -5195,21 +5237,24 @@ class CellParquetWriterBuilder(path: Path)
   * tracked while writing (not footer-derived): min/max of rowkey,
   * family, qualifier and value in unsigned byte order — the order of
   * parquet UTF8 statistics and of UTF8String comparison — the version
-  * TimeRange, the NULL rowkey and family counts, and the value bloom.
-  * A rowkey BLOOM FILTER is written into the file so point gets (`eq`/
-  * `in` pushed to parquet) can skip row groups whose [min,max]
-  * straddles the key but which provably don't contain it. */
+  * TimeRange, the NULL rowkey and family counts, the value bloom, and
+  * the manifest rowkey bloom: one hash per rowkey CHANGE (rows arrive
+  * rowkey-sorted, so one per distinct key), sized at `finish`. A
+  * parquet rowkey BLOOM FILTER is also written into the file so point
+  * gets (`eq`/`in` pushed to parquet) can skip row groups whose
+  * [min,max] straddles the key but which provably don't contain it. */
 private[cell] final class CellFileWriter(path: String,
     codec: org.apache.parquet.hadoop.metadata.CompressionCodecName) {
   import CellWriteSupport._
   private val writer = new CellParquetWriterBuilder(new Path(path))
     .withConf(new Configuration())
     .withCompressionCodec(codec)
+    // row-group point skipping blooms, both NDV-capped (an 8 KB
+    // bitset), so a small file whose column falls back to PLAIN
+    // encoding does not grow by parquet's default megabyte; above 4096
+    // distinct values the FPP degrades gracefully (still sound)
     .withBloomFilterEnabled("rowkey", true)
-    // value bloom for row-group point skipping — NDV-capped (~5 KB)
-    // unlike the rowkey bloom's default sizing, so every small file
-    // doesn't grow by a megabyte of bitset; above 4096 distinct values
-    // the FPP degrades gracefully (still sound)
+    .withBloomFilterNDV("rowkey", 4096)
     .withBloomFilterEnabled("value", true)
     .withBloomFilterNDV("value", 4096)
     .build()
@@ -5223,13 +5268,17 @@ private[cell] final class CellFileWriter(path: String,
   private var nullKeys = 0L
   private var nullFams = 0L
   private val valueBloom = CellValueBloom.empty()
+  // rowkey hashes, one per key change; null once past the key cap
+  private var keyHashes = new Array[Long](64)
+  private var nKeys = 0
+  private var lastKey: Array[Byte] = null
 
   def rowCount: Long = rows
 
   def write(row: InternalRow): Unit = {
     writer.write(row)
     rows += 1
-    if (row.isNullAt(K_IDX)) nullKeys += 1 else track(row, K_IDX)
+    if (row.isNullAt(K_IDX)) nullKeys += 1 else keyHash(track(row, K_IDX))
     if (row.isNullAt(F_IDX)) nullFams += 1 else track(row, F_IDX)
     if (!row.isNullAt(Q_IDX)) track(row, Q_IDX)
     if (!row.isNullAt(VAL_IDX))
@@ -5254,6 +5303,27 @@ private[cell] final class CellFileWriter(path: String,
     b
   }
 
+  private def keyHash(k: Array[Byte]): Unit =
+    if (keyHashes != null && (lastKey == null || !JArrays.equals(k, lastKey))) {
+      lastKey = k.clone()
+      if (nKeys == CellValueBloom.MAX_KEYS) keyHashes = null
+      else {
+        if (nKeys == keyHashes.length)
+          keyHashes = JArrays.copyOf(keyHashes, nKeys * 2)
+        keyHashes(nKeys) = CellValueBloom.hash(k)
+        nKeys += 1
+      }
+    }
+
+  private def rowkeyBloom: Option[Array[Byte]] =
+    if (keyHashes == null || nKeys == 0) None
+    else {
+      val bloom = CellValueBloom.sized(nKeys)
+      var i = 0
+      while (i < nKeys) { CellValueBloom.addHash(bloom, keyHashes(i)); i += 1 }
+      Some(bloom)
+    }
+
   /** Close; None (file deleted) when no row was written. */
   def finish(): Option[CellFileMeta] = {
     writer.close()
@@ -5269,7 +5339,8 @@ private[cell] final class CellFileWriter(path: String,
       Option(mins(VAL_IDX)).map(GraftCell.truncStatMin),
       Option(maxs(VAL_IDX)).flatMap(GraftCell.truncStatMax),
       nullFams = Some(nullFams),
-      valueBloom = CellValueBloom.finish(valueBloom)))
+      valueBloom = CellValueBloom.finish(valueBloom),
+      rowkeyBloom = rowkeyBloom))
   }
 
   /** Close and delete the file. */

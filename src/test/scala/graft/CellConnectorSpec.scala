@@ -20,8 +20,8 @@ class CellConnectorSpec extends AnyFunSuite {
     * every field the footer re-derivation can produce (row count,
     * bytes, rowkey/family/qualifier/version bounds, NULL rowkey and
     * family counts, truncated value bounds, message type) and, where a
-    * value bloom is present, that it admits every non-null value the
-    * file holds. */
+    * value or rowkey bloom is present, that it admits every non-null
+    * value or rowkey the file holds. */
   private def assertFooterTruth(
       metas: Seq[graft.sources.cell.CellFileMeta]): Unit = {
     import graft.sources.cell.{CellFooterCache, CellValueBloom}
@@ -53,6 +53,13 @@ class CellConnectorSpec extends AnyFunSuite {
         val missed = values.filterNot(v => CellValueBloom.mayContain(bloom, b(v)))
         assert(missed.isEmpty,
                s"value bloom of ${m.path} rejects ${missed.toSeq}")
+      }
+      m.rowkeyBloom.foreach { bloom =>
+        val keys = s.read.parquet(m.path).select("rowkey").collect()
+          .flatMap(r => Option(r.getString(0)))
+        val missed = keys.filterNot(k => CellValueBloom.mayContain(bloom, b(k)))
+        assert(missed.isEmpty,
+               s"rowkey bloom of ${m.path} rejects ${missed.toSeq}")
       }
     }
   }
@@ -3341,6 +3348,109 @@ class CellConnectorSpec extends AnyFunSuite {
     assert(planned(gone) == 0,
       "the rewritten file's refreshed bloom must prune its old value")
     assert(gone.count() == 0L)
+  }
+
+  test("rowkey BLOOM plans only the files that can hold a point key: " +
+       "gets, multi-gets and point DELETEs on a hash-spread store") {
+    import org.apache.spark.sql.sources.{EqualTo, Filter, In}
+    import graft.sources.cell.{CellFooterCache, CellManifest,
+                               GraftCellMaintenance, GraftCellTable}
+    import scala.collection.JavaConverters._
+    val store = SparkFixture.scratchDir("graft_kbloom_spec_").toString + "/t"
+    // N appends of keys hashed over the whole key space: every file
+    // spans nearly every key, so min/max stats prune nothing
+    val appends = 6
+    def key(i: Int) =
+      f"${scala.util.hashing.MurmurHash3.stringHash(s"k$i")}%08x"
+    (0 until appends).foreach { a =>
+      s.createDataFrame((0 until 200).map { j =>
+        org.apache.spark.sql.Row(key(a * 200 + j), "d", "q", 1L, s"v$a")
+      }.asJava, GraftCell.SCHEMA)
+        .write.format("graftcell").mode("append").save(store)
+    }
+    val files = CellFooterCache.filesOf(store)
+    assert(files.size >= appends)
+    assert(files.forall(_.rowkeyBloom.nonEmpty),
+      "every connector-written file must carry a rowkey bloom")
+    assertFooterTruth(files)
+    def holder(k: String): String = s.read.format("graftcell").load(store)
+      .filter(col("rowkey") === k).select("_region_file")
+      .distinct().collect().map(_.getString(0)).toSeq match {
+        case Seq(f) => f
+        case fs     => fail(s"$k lives in $fs")
+      }
+    def planned(f: Filter): Set[String] = {
+      val pruner = new GraftCell.FilePruner(Seq(f))
+      CellFooterCache.filesOf(store).filter(pruner.mayMatch).map(_.path).toSet
+    }
+    val probes = Seq(3, 250, 611, 777, 1010, 1199).map(key)
+    // min/max alone would keep every file for every probe
+    probes.foreach { k =>
+      val inRange = files.count(m =>
+        GraftCell.fileMayMatch(m.minKey, m.maxKey, Seq(EqualTo("rowkey", k))))
+      assert(inRange == files.size, s"$k: min/max pruned $inRange/${files.size}")
+    }
+    // 1. a Get plans exactly its file, at plan time and in the scan
+    probes.foreach { k =>
+      assert(planned(EqualTo("rowkey", k)) == Set(holder(k)), k)
+    }
+    val get = s.read.format("graftcell").load(store)
+      .filter(col("rowkey") === probes.head)
+    val parts = get.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions
+    }.flatten.collect {
+      case p: graft.sources.cell.CellInputPartition => p.file
+    }
+    assert(parts.toSet == Set(holder(probes.head)), parts)
+    assert(get.count() == 1L)
+    // 2. a 4-key IN plans at most 4 files, each key's holder among them
+    val four = probes.take(4)
+    val multi = planned(In("rowkey", four.toArray[Any]))
+    assert(multi.size <= 4 && four.map(holder).toSet.subsetOf(multi), multi)
+    // an absent key inside every file's range plans (almost) nothing
+    assert(planned(EqualTo("rowkey", key(-1))).size <= 1)
+    // 3. a point DELETE rewrites only the file that holds its key
+    val victim = probes(1)
+    val victimFile = holder(victim)
+    val before = CellFooterCache.filesOf(store).map(_.path).toSet
+    new GraftCellTable(store).deleteWhere(
+      Array[Filter](EqualTo("rowkey", victim)))
+    CellFooterCache.invalidate(store)
+    val rewritten = CellFooterCache.filesOf(store)
+    val after = rewritten.map(_.path).toSet
+    assert(before -- after == Set(victimFile), s"retired ${before -- after}")
+    assert((after -- before).size == 1, s"published ${after -- before}")
+    assertFooterTruth(rewritten.filter(m => !before.contains(m.path)))
+    assert(s.read.format("graftcell").load(store)
+      .filter(col("rowkey") === victim).count() == 0L)
+    assert(planned(EqualTo("rowkey", probes(2))) == Set(holder(probes(2))))
+    val all = CellFooterCache.filesOf(store).map(_.path).toSet
+    // 4. a manifest without the field plans every file for a Get
+    val dirs = all.map(p => new java.io.File(p).getParentFile)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    dirs.foreach { d =>
+      val f = new java.io.File(d, CellManifest.NAME)
+      val root = mapper.readTree(f)
+      root.get("files").elements().asScala.foreach(
+        _.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          .remove("rowkeyBloom"))
+      mapper.writeValue(f, root)
+    }
+    CellFooterCache.invalidate(store)
+    assert(CellFooterCache.filesOf(store).forall(_.rowkeyBloom.isEmpty))
+    assert(planned(EqualTo("rowkey", probes(2))) == all)
+    // 5. metas re-derived from footers (CALL upgrade_manifests) carry
+    //    no bloom: every file is kept, and reads stay exact
+    dirs.foreach(d => new java.io.File(d, CellManifest.NAME).delete())
+    CellFooterCache.invalidate(store)
+    val (upgraded, _) = GraftCellMaintenance.upgradeManifests(s, store)
+    assert(upgraded == dirs.size.toLong)
+    CellFooterCache.invalidate(store)
+    assert(CellFooterCache.filesOf(store).forall(_.rowkeyBloom.isEmpty))
+    assert(planned(EqualTo("rowkey", probes(2))) == all)
+    assert(s.read.format("graftcell").load(store)
+      .filter(col("rowkey") === probes(2)).count() == 1L)
   }
 
   test("per-family compression descriptors (r18): codec-pure files with " +

@@ -115,9 +115,10 @@ class PropertySpec extends AnyFunSuite {
     // file) must be SEMANTICS-IDENTICAL to the reference per-key path
     // it replaced — same survivors on every (filter set, footer stats)
     // pair, including missing stats, empty envelopes, inclusive
-    // boundaries, and nested Ands. Also pins the compiled row
-    // evaluator to the reference eval on random rows.
-    import graft.sources.cell.{CellFileMeta, GraftCell}
+    // boundaries, nested Ands, and rowkey blooms built from each
+    // file's keys. Also pins the compiled row evaluator to the
+    // reference eval on random rows.
+    import graft.sources.cell.{CellFileMeta, CellValueBloom, GraftCell}
     import org.apache.spark.sql.sources._
     import org.apache.spark.unsafe.types.UTF8String
     val keyGen = Gen.listOfN(3, Gen.oneOf("0", "1", "5", "7", "9", "a", "z"))
@@ -162,8 +163,15 @@ class PropertySpec extends AnyFunSuite {
                                 1 -> "minOnly", 1 -> "maxOnly")
       vlo <- Gen.chooseNum(0L, 100L); vhi <- Gen.chooseNum(0L, 100L)
       haveVer <- Gen.frequency(4 -> true, 1 -> false)
+      // the file's rowkeys: its bounds plus the in-range draws; a
+      // rowkey bloom, when present, is built from exactly these
+      draws <- Gen.listOfN(8, keyGen)
+      haveBloom <- Gen.frequency(3 -> true, 1 -> false)
     } yield {
       val (mn, mx) = if (lo <= hi) (lo, hi) else (hi, lo)
+      val held = Seq(mn, mx) ++ draws.filter(k => k >= mn && k <= mx)
+      val bloom = CellValueBloom.sized(held.distinct.size)
+      held.foreach(k => CellValueBloom.add(bloom, k.getBytes("UTF-8")))
       val minKey = if (keySides == "both" || keySides == "minOnly")
         Some(mn.getBytes("UTF-8")) else None
       val maxKey = if (keySides == "both" || keySides == "maxOnly")
@@ -185,7 +193,8 @@ class PropertySpec extends AnyFunSuite {
             qmn.getBytes("UTF-8"))) else None,
         if (keySides != "none")
           graft.sources.cell.GraftCell.truncStatMax(qmx.getBytes("UTF-8"))
-        else None)
+        else None,
+        rowkeyBloom = if (haveBloom) Some(bloom) else None)
     }
     val caseGen = for {
       nf <- Gen.chooseNum(0, 4)
@@ -229,8 +238,10 @@ class PropertySpec extends AnyFunSuite {
     // (value set, predicate): if ANY value satisfies the predicate,
     // the file's truncated [minVal, maxVal] must keep it. Lengths
     // straddle the 64-byte cap and include 0xFF-heavy tails (the
-    // prefixStop saturation edge).
-    import graft.sources.cell.{CellFileMeta, GraftCell}
+    // prefixStop saturation edge). The same strings are the file's
+    // rowkeys, with exact bounds and a rowkey bloom built from them,
+    // probed by `rowkey =` and `rowkey IN`.
+    import graft.sources.cell.{CellFileMeta, CellValueBloom, GraftCell}
     import org.apache.spark.sql.sources._
     import org.apache.spark.unsafe.types.UTF8String
     val valGen = for {
@@ -241,23 +252,29 @@ class PropertySpec extends AnyFunSuite {
       vs <- Gen.listOfN(8, valGen)
       probe <- Gen.oneOf(valGen, Gen.oneOf(vs).flatMap(v =>
         Gen.oneOf(v, v.take(math.max(1, v.length / 2)))))
+      other <- valGen
       pred <- Gen.oneOf[Filter](
         EqualTo("value", probe), GreaterThanOrEqual("value", probe),
-        LessThan("value", probe), StringStartsWith("value", probe.take(2)))
+        LessThan("value", probe), StringStartsWith("value", probe.take(2)),
+        EqualTo("rowkey", probe), In("rowkey", Array[Any](other, probe)))
     } yield (vs, pred)
     forAllSeeded(caseGen, samples = 120) { case (vs, pred) =>
       val ord: Ordering[Array[Byte]] = Ordering.comparatorToOrdering(
         java.util.Arrays.compareUnsigned(_: Array[Byte], _: Array[Byte]))
       val bytes = vs.map(_.getBytes("UTF-8"))
-      val meta = CellFileMeta("f", 1L, vs.size.toLong, None, None, "t",
+      val bloom = CellValueBloom.sized(bytes.size)
+      bytes.foreach(CellValueBloom.add(bloom, _))
+      val meta = CellFileMeta("f", 1L, vs.size.toLong,
+        Some(bytes.min(ord)), Some(bytes.max(ord)), "t",
         minVal = Some(GraftCell.truncStatMin(bytes.min(ord))),
-        maxVal = GraftCell.truncStatMax(bytes.max(ord)))
+        maxVal = GraftCell.truncStatMax(bytes.max(ord)),
+        rowkeyBloom = Some(bloom))
       val anyMatch = vs.exists(v =>
         GraftCell.eval(pred, _ => UTF8String.fromString(v)))
       val kept = GraftCell.fileMayMatch(meta, Seq(pred))
       assert(!anyMatch || kept,
-        s"unsound truncation prune: $pred matches a value in " +
-        s"${vs.map(_.take(8))}")
+        s"unsound prune: $pred matches a value in ${vs.map(_.take(8))}")
+      assert(new GraftCell.FilePruner(Seq(pred)).mayMatch(meta) == kept)
     }
   }
 
